@@ -44,9 +44,15 @@ object DistPathBench {
       val r = f
       (r, (System.nanoTime() - t0) / 1e9)
     }
+    // restores each property's previous value (or absence), so a
+    // budget set on the command line still governs the fast-path runs
     def withBudgets0[T](f: => T): T = {
+      val prev = budgetKeys.map(k => k -> Option(System.getProperty(k)))
       budgetKeys.foreach(k => System.setProperty(k, "0"))
-      try f finally budgetKeys.foreach(System.clearProperty)
+      try f finally prev.foreach {
+        case (k, Some(v)) => System.setProperty(k, v)
+        case (k, None) => System.clearProperty(k)
+      }
     }
 
     // shared inputs, materialized OUTSIDE every timed region so both
@@ -63,14 +69,20 @@ object DistPathBench {
       .localCheckpoint()
     val nVecs = vecs.count()
 
+    // each run returns a value checksum of its answer (row counts are
+    // equal by construction, so they would not catch a divergence)
     def pr(): Long =
       Graph.pageRank(edges, iterations = 3, damping = 0.85,
-        deterministic = true).count()
+          deterministic = true)
+        .agg(sum(round(col("pr") * 1e9).cast("long"))).collect()(0)
+        .getLong(0)
     def cc(): Long =
-      Dedup.connectedComponents(edges, col("src"), col("dst")).count()
+      Dedup.connectedComponents(edges, col("src"), col("dst"))
+        .agg(sum(col("comp"))).collect()(0).getLong(0)
     def km(): Long =
-      KMeans.fit(vecs, col("doc_id"), col("v"), k = 16,
-        iters = 2).count()
+      KMeans.fit(vecs, col("doc_id"), col("v"), k = 16, iters = 2)
+        .select(col("c")).collect()
+        .map(r => java.lang.Double.doubleToLongBits(r.getDouble(0))).sum
 
     // budget-0 FIRST (cold-ish), then the fast path, then checksums
     // to pin that both modes computed the same answer
@@ -81,7 +93,7 @@ object DistPathBench {
     val (kmD, tKmDist) = time(withBudgets0(km()))
     val (kmF, tKmFast) = time(km())
     require(prD == prF && ccD == ccF && kmD == kmF,
-      s"budget-0 row counts diverged: pr $prD/$prF cc $ccD/$ccF " +
+      s"budget-0 checksums diverged: pr $prD/$prF cc $ccD/$ccF " +
         s"km $kmD/$kmF")
 
     println(f"[distpath] edges=$nEdges vecs=$nVecs  " +

@@ -178,8 +178,7 @@ private[graft] object QueriesLlmA {
     //     Output keeps to the DETERMINISTIC portable columns (md5
     //     checksum/fingerprint, byte length, decode ok) so the whole
     //     row is oracle-checkable; the stub decode's fake width/height
-    //     stay out of the compare (native xxhash fingerprint and stub
-    //     decode are spec-covered) ---
+    //     stay out of the compare (the stub decode is spec-covered) ---
     "q30_fingerprint_media" -> { (spark, dir) =>
       val docs = tbl(spark, dir, "documents")
       val payload = encode(col("text"), "UTF-8") // opaque binary payload
@@ -187,8 +186,7 @@ private[graft] object QueriesLlmA {
           docs.select(col("doc_id"), col("text")), payload,
           lit("text/plain"))
         .select(col("doc_id"),
-                TextAnalysis.fingerprintPortable(col("text"))
-                  .as("fingerprint"),
+                TextAnalysis.fingerprint(col("text")).as("fingerprint"),
                 md5(payload).as("checksum_md5"),
                 col("media_meta.n_bytes").as("n_bytes"),
                 col("decoded.ok").as("decode_ok"))
@@ -278,8 +276,8 @@ private[graft] object QueriesLlmA {
     // --- LLM end-to-end corpus prep: score -> quality floor -> exact
     //     fingerprint dedup -> minhash near-dup removal. The SQL-
     //     expressible stage counts (quality survivors via the full
-    //     composite score formula, exact-dedup survivors via the
-    //     portable fingerprint) are oracled exactly; the LSH removal
+    //     composite score formula, exact-dedup survivors via the md5
+    //     content fingerprint) are oracled exactly; the LSH removal
     //     stage is bounded (can only shrink the corpus, and near-dups
     //     at jaccard>=0.8 are <10% of these corpora) ---
     "q70_corpus_prep" -> { (spark, dir) =>
@@ -288,7 +286,7 @@ private[graft] object QueriesLlmA {
       // (scoreCorpus -> exactByKey -> removeNearDups) lets the query
       // count each stage without re-running the whole preparation
       val scored = graft.llm.Pipelines.scoreCorpus(docs, col("text"),
-          minQuality = 0.3, portableFingerprint = true)
+          minQuality = 0.3)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val exact = Dedup.exactByKey(scored, Seq(col("fingerprint")),
           col("doc_id"))
@@ -430,7 +428,7 @@ private[graft] object QueriesLlmA {
     //     re-ingests must vanish, then the batch dedups internally ---
     "q82_incremental_dedup" -> { (spark, dir) =>
       val docs = tbl(spark, dir, "documents")
-        .withColumn("fp", TextAnalysis.fingerprintPortable(col("text")))
+        .withColumn("fp", TextAnalysis.fingerprint(col("text")))
       val old = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
       val replayed = docs.filter(pmod(col("doc_id"), lit(50)) === 0)
         .withColumn("doc_id", col("doc_id") + 100000L)
@@ -1579,29 +1577,15 @@ private[graft] object QueriesLlmA {
       SELECT count(*) AS n_exact, TRUE AS recall_floor_met FROM s""",
 
 
-    // deterministic portable columns only: md5 fingerprint over word
-    // 3-gram shingles (min of lowercase hex = engine-neutral string
-    // min), md5 payload checksum, UTF-8 byte length, decode-ok flag
+    // deterministic portable columns only: md5 content fingerprint,
+    // md5 payload checksum, UTF-8 byte length, decode-ok flag
     "q30_fingerprint_media" -> """
-      WITH tk AS (
-        SELECT doc_id, text,
-               list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                           x -> length(x) > 0) AS toks
-        FROM documents),
-      sh AS (SELECT doc_id, text,
-               CASE WHEN len(toks) >= 3 THEN
-                      list_transform(
-                        generate_series(1, len(toks) - 2),
-                        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                    WHEN len(toks) > 0 THEN [array_to_string(toks, ' ')]
-                    ELSE [] END AS s
-             FROM tk)
       SELECT doc_id,
-             list_min(list_transform(s, g -> md5(g))) AS fingerprint,
+             md5(text) AS fingerprint,
              md5(text) AS checksum_md5,
              CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
              octet_length(encode(text)) > 0 AS decode_ok
-      FROM sh ORDER BY doc_id""",
+      FROM documents ORDER BY doc_id""",
 
 
     // word-3-gram Jaccard via the same inverted-index shape: count shared
@@ -1700,7 +1684,7 @@ private[graft] object QueriesLlmA {
 
     // the composite quality score replicated term by term (UNROUNDED
     // ratios feed the score; only the final score rounds to 6), then
-    // exact-dedup survivors = distinct portable fingerprints (+1 if a
+    // exact-dedup survivors = distinct md5(text) fingerprints (+1 if a
     // null-fingerprint group survives — exactByKey keeps one row of it)
     "q70_corpus_prep" -> """
       WITH t AS (
@@ -1722,7 +1706,7 @@ private[graft] object QueriesLlmA {
                 CAST(list_sum(list_transform(toks, x -> length(x)))
                   AS DOUBLE) / len(toks) ELSE 0.0 END AS mwl
             FROM t),
-      q AS (SELECT doc_id, text, toks,
+      q AS (SELECT doc_id, text,
               round((least(length(text) / 500.0, 1.0)
                 + CASE WHEN pr < 0.1 THEN 1.0
                        ELSE greatest(1.0 - (pr - 0.1) * 5, 0.0) END
@@ -1730,17 +1714,8 @@ private[graft] object QueriesLlmA {
                 + CASE WHEN mwl BETWEEN 3.0 AND 10.0 THEN 1.0
                        ELSE 0.5 END) / 4, 6) AS quality
             FROM r),
-      pass AS (SELECT doc_id, text, toks FROM q WHERE quality >= 0.3),
-      sh AS (SELECT doc_id,
-               CASE WHEN len(toks) >= 3 THEN
-                      list_transform(generate_series(1, len(toks) - 2),
-                        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                    WHEN len(toks) > 0 THEN [array_to_string(toks, ' ')]
-                    ELSE [] END AS s
-             FROM pass),
-      fp AS (SELECT doc_id,
-               list_min(list_transform(s, g -> md5(g))) AS f
-             FROM sh)
+      pass AS (SELECT doc_id, text FROM q WHERE quality >= 0.3),
+      fp AS (SELECT doc_id, md5(text) AS f FROM pass)
       SELECT (SELECT count(*) FROM pass) AS n_quality,
              count(DISTINCT f)
                + max(CASE WHEN f IS NULL THEN 1 ELSE 0 END) AS n_exact,
@@ -1914,23 +1889,11 @@ private[graft] object QueriesLlmA {
       GROUP BY doc_id ORDER BY doc_id""",
 
 
-    // portable md5 fingerprints as in q70; known-store filter via
+    // md5(text) fingerprints as in q70; known-store filter via
     // NOT EXISTS (null fingerprints never match, like the anti-join);
     // batch-internal dedup = row_number over the fingerprint
     "q82_incremental_dedup" -> """
-      WITH t AS (SELECT doc_id,
-          list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                      x -> length(x) > 0) AS toks
-        FROM documents),
-      sh AS (SELECT doc_id,
-               CASE WHEN len(toks) >= 3 THEN
-                      list_transform(generate_series(1, len(toks) - 2),
-                        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                    WHEN len(toks) > 0 THEN [array_to_string(toks, ' ')]
-                    ELSE [] END AS s
-             FROM t),
-      fp AS (SELECT doc_id, list_min(list_transform(s, g -> md5(g))) AS f
-             FROM sh),
+      WITH fp AS (SELECT doc_id, md5(text) AS f FROM documents),
       known AS (SELECT DISTINCT f FROM fp WHERE doc_id % 2 = 0),
       inc AS (SELECT doc_id, f FROM fp WHERE doc_id % 2 = 1
               UNION ALL

@@ -270,10 +270,10 @@ private[graft] object QueriesStreaming {
     "q87_stream_dedup_store" -> { (spark, dir) =>
       val stream = EventStream.readTable(spark, dir, "documents")
         .filter(pmod(col("doc_id"), lit(2)) === 1)
-        .withColumn("fp", TextAnalysis.fingerprintPortable(col("text")))
+        .withColumn("fp", TextAnalysis.fingerprint(col("text")))
       val store = tbl(spark, dir, "documents")
         .filter(pmod(col("doc_id"), lit(2)) === 0)
-        .select(TextAnalysis.fingerprintPortable(col("text")).as("fp"))
+        .select(TextAnalysis.fingerprint(col("text")).as("fp"))
         .distinct()
       val survivors = EventStream.dedupAgainstStore(stream, col("fp"),
         store)
@@ -895,7 +895,7 @@ private[graft] object QueriesStreaming {
     // --- STREAMING CURATION PIPELINE end-to-end (the composed
     //     flagship of the streaming surface): documents arrive as 3
     //     chronological micro-batches; each batch flows through the
-    //     bit-exact quality classifier, survivors dedup by portable
+    //     bit-exact quality classifier, survivors dedup by md5
     //     content fingerprint in KEYED STATE (min-id keeper, copy
     //     count — update mode), and the final state censuses per
     //     language. Stream/batch parity: the oracle replays
@@ -924,8 +924,8 @@ private[graft] object QueriesStreaming {
             obs.checkpoint("raw", stream), col("text"))
           .filter(col("keep")))
       val agg = kept.groupBy(
-          graft.llm.TextAnalysis.fingerprintPortable(col("text"))
-            .as("fp"), col("lang"))
+          graft.llm.TextAnalysis.fingerprint(col("text")).as("fp"),
+          col("lang"))
         .agg(min(col("doc_id")).as("keeper_id"),
           count(lit(1)).as("n_copies"))
       // update mode emits one row per (fp, lang) per changing batch;
@@ -957,8 +957,8 @@ private[graft] object QueriesStreaming {
       def curate(d: org.apache.spark.sql.DataFrame) =
         graft.llm.QualityModel.classify(d, col("text"))
           .filter(col("keep"))
-          .groupBy(graft.llm.TextAnalysis
-            .fingerprintPortable(col("text")).as("fp"), col("lang"))
+          .groupBy(graft.llm.TextAnalysis.fingerprint(col("text"))
+            .as("fp"), col("lang"))
           .agg(min(col("doc_id")).as("keeper_id"),
             count(lit(1)).as("n_copies"))
       val store = Scratch.dir("graft_q283").toString + "/store"
@@ -1424,23 +1424,11 @@ private[graft] object QueriesStreaming {
       FROM events GROUP BY 1 ORDER BY 1""",
 
 
-    // portable md5 fingerprints (q70's CTE); survivors = odd-id docs
+    // md5(text) fingerprints (as in q70); survivors = odd-id docs
     // whose fingerprint does not appear among even-id docs (NOT EXISTS
     // = anti-join null semantics)
     "q87_stream_dedup_store" -> """
-      WITH t AS (SELECT doc_id,
-          list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                      x -> length(x) > 0) AS toks
-        FROM documents),
-      sh AS (SELECT doc_id,
-               CASE WHEN len(toks) >= 3 THEN
-                      list_transform(generate_series(1, len(toks) - 2),
-                        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                    WHEN len(toks) > 0 THEN [array_to_string(toks, ' ')]
-                    ELSE [] END AS s
-             FROM t),
-      fp AS (SELECT doc_id, list_min(list_transform(s, g -> md5(g))) AS f
-             FROM sh),
+      WITH fp AS (SELECT doc_id, md5(text) AS f FROM documents),
       surv AS (SELECT o.doc_id, o.f FROM fp o
                WHERE o.doc_id % 2 = 1
                  AND NOT EXISTS (SELECT 1 FROM fp k
@@ -1665,8 +1653,8 @@ private[graft] object QueriesStreaming {
 
 
     // batch replay of the whole curation pipeline: classifier scores
-    // (q97 prefix), keep >= 0.5, portable min-md5-shingle fingerprint
-    // (q30 recipe), min-id/count per (fp, lang), per-lang census —
+    // (q97 prefix), keep >= 0.5, md5(text) fingerprint (q30 recipe),
+    // min-id/count per (fp, lang), per-lang census —
     // shared by the STREAMED (q282) and INCREMENTAL (q283) twins:
     // both must converge to this full-rebuild answer
     "q282_stream_curate" -> curateCensusSql,

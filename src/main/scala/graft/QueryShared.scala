@@ -198,23 +198,7 @@ private[graft] object QueryShared {
       kept AS (SELECT d.doc_id, d.lang, d.text
                FROM documents d JOIN s ON d.doc_id = s.doc_id
                WHERE s.score >= 0.5),
-      tk2 AS (SELECT doc_id, lang,
-                     list_filter(string_split_regex(lower(trim(text)),
-                       '\\s+'), x -> length(x) > 0) AS toks
-              FROM kept),
-      sh2 AS (SELECT doc_id, lang,
-                     CASE WHEN len(toks) >= 3 THEN
-                            list_transform(
-                              generate_series(1, len(toks) - 2),
-                              i -> toks[i] || ' ' || toks[i+1] ||
-                                   ' ' || toks[i+2])
-                          WHEN len(toks) > 0 THEN
-                            [array_to_string(toks, ' ')]
-                          ELSE [] END AS sg
-              FROM tk2),
-      fp AS (SELECT doc_id, lang,
-                    list_min(list_transform(sg, g -> md5(g))) AS fp
-             FROM sh2),
+      fp AS (SELECT doc_id, lang, md5(text) AS fp FROM kept),
       g AS (SELECT fp, lang, min(doc_id) AS keeper,
                    CAST(count(*) AS BIGINT) AS n
             FROM fp GROUP BY 1, 2)

@@ -39,9 +39,6 @@ object GraftExtensions {
     ("graft_lsh_buckets",
       "multi-table random-hyperplane LSH bucket ids (planes=4, tables=8)",
       es => LshBuckets(es.head, 4, 8)),
-    ("graft_md5_fingerprint",
-      "min md5-hex of word 3-gram shingles (portable fingerprint)",
-      es => Md5Fingerprint(es.head, 3)),
     ("graft_pq_encode",
       "product-quantization codes vs a codebook (m=8 subspaces)",
       es => PqEncode(es.head, es(1), 8)),

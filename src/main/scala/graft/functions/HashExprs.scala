@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expressions for the dedup/fingerprint hot path
+/** Native Catalyst expressions for the dedup/similarity hot path
   * (SURVEY.md §2m / the builder's preference order: a custom `Expression`
   * with `doGenCode` where built-in composition is too slow — here the
   * built-in form is an interpreted higher-order-function chain).
@@ -132,35 +132,6 @@ case class TextStats(child: Expression) extends HashCallExpr {
   override protected def withNewChildInternal(c: Expression): TextStats =
     copy(child = c)
   override def prettyName: String = "graft_text_stats"
-}
-
-/** text -> min md5-hex of word n-gram shingles (portable fingerprint);
-  * null for token-less text. */
-case class Md5Fingerprint(child: Expression, n: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(v: Any): Any =
-    HashOps.md5Fingerprint(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = ${childGen.isNull};
-        org.apache.spark.unsafe.types.UTF8String ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} =
-            graft.functions.HashOps.md5Fingerprint(${childGen.value}, $n);
-          if (${ev.value} == null) { ${ev.isNull} = true; }
-        }"""
-    ev.copy(code = code)
-  }
-  override protected def withNewChildInternal(c: Expression): Md5Fingerprint =
-    copy(child = c)
-  override def prettyName: String = "graft_md5_fingerprint"
 }
 
 /** array<float|double> -> array<long> of multi-table LSH bucket ids

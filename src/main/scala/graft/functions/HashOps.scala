@@ -209,60 +209,6 @@ object HashOps {
     if (d > 0) dot / d else Double.NaN
   }
 
-  /** Min md5-hex over word n-gram shingles of the lowercased ws tokens
-    * — the PORTABLE fingerprint kernel. Equals
-    * `list_min(list_transform(shingles, md5))` in any engine with md5
-    * (lowercase hex compares identically as ASCII), but one fused loop
-    * instead of an interpreted HOF + per-shingle expression chain.
-    * Null for token-less text. */
-  def md5Fingerprint(text: UTF8String, n: Int): UTF8String = {
-    val s = text.toLowerCase.toString
-    val toks = new scala.collection.mutable.ArrayBuffer[String]()
-    val len = s.length
-    var i = 0
-    while (i < len) {
-      while (i < len && isWs(s.charAt(i))) i += 1
-      val start = i
-      while (i < len && !isWs(s.charAt(i))) i += 1
-      if (i > start) toks += s.substring(start, i)
-    }
-    if (toks.isEmpty) return null
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hexd = "0123456789abcdef"
-    def hexOf(b: Array[Byte]): String = {
-      val out = new Array[Char](32)
-      var k = 0
-      while (k < 16) {
-        out(2 * k) = hexd.charAt((b(k) >> 4) & 0xF)
-        out(2 * k + 1) = hexd.charAt(b(k) & 0xF)
-        k += 1
-      }
-      new String(out)
-    }
-    val utf8 = java.nio.charset.StandardCharsets.UTF_8
-    var min: String = null
-    if (toks.length >= n) {
-      val sb = new java.lang.StringBuilder
-      var p = 0
-      while (p <= toks.length - n) {
-        sb.setLength(0)
-        var j = 0
-        while (j < n) {
-          if (j > 0) sb.append(' ')
-          sb.append(toks(p + j)); j += 1
-        }
-        md.reset()
-        val h = hexOf(md.digest(sb.toString.getBytes(utf8)))
-        if (min == null || h.compareTo(min) < 0) min = h
-        p += 1
-      }
-    } else {
-      md.reset()
-      min = hexOf(md.digest(toks.mkString(" ").getBytes(utf8)))
-    }
-    UTF8String.fromString(min)
-  }
-
   /** Hashed bag-of-words: per-token md5 slot counts in one fused loop —
     * the native form of graft.llm.Featurize.hashedBow's relational
     * construction (explode → groupBy → sparse→dense fold), bit-identical

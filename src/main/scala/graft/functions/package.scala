@@ -25,8 +25,6 @@ package object functions {
     toCol(CosineSim(toExpr(a), toExpr(b)))
   def lsh_buckets(vec: Column, planes: Int, tables: Int): Column =
     toCol(LshBuckets(toExpr(vec), planes, tables))
-  def md5_fingerprint(text: Column, n: Int = 3): Column =
-    toCol(Md5Fingerprint(toExpr(text), n))
   def pq_encode(vec: Column, cents: Column, m: Int): Column =
     toCol(PqEncode(toExpr(vec), toExpr(cents), m))
   def adc_score(codes: Column, lut: Column): Column =

@@ -632,8 +632,7 @@ object Dedup {
     // past it the checkpointed distributed loop runs unchanged — at
     // 100 TB a hot pair set simply stays on the cluster.
     val budget = java.lang.Long.getLong("spark.graft.cc.localEdgeBudget",
-      sys.env.get("SPARK_GRAFT_CC_LOCAL_EDGES").map(_.toLong)
-        .getOrElse(2000000L))
+      2000000L)
     val nEdges = edges.count() // cheap: counts the checkpointed blocks
     if (nEdges <= budget && maxIter >= 25) {
       val rows = edges.collect()

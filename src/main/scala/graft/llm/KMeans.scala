@@ -82,9 +82,7 @@ object KMeans {
     // gate inspects the actual data, not an assumption). KMeansSpec
     // pins local ≡ distributed incl. zero vectors and empty cells.
     val localBudget = java.lang.Long.getLong(
-      "spark.graft.kmeans.localVecBudget",
-      sys.env.get("SPARK_GRAFT_KMEANS_LOCAL_VECS").map(_.toLong)
-        .getOrElse(500000L))
+      "spark.graft.kmeans.localVecBudget", 500000L)
     // BYTE-aware companion budget: the collect pulls rows×dims
     // doubles, so a row count alone under-gates high-dim corpora (a
     // 1024-dim corpus of 490k rows is ~4 GB — it must stay
@@ -92,9 +90,7 @@ object KMeans {
     // collect, not after). Default 16M cells ≡ the old behaviour at
     // the 32-dim bench corpora (500k × 32), ~128 MB of payload.
     val cellBudget = java.lang.Long.getLong(
-      "spark.graft.kmeans.localCellBudget",
-      sys.env.get("SPARK_GRAFT_KMEANS_LOCAL_CELLS").map(_.toLong)
-        .getOrElse(16000000L))
+      "spark.graft.kmeans.localCellBudget", 16000000L)
     val preGate = c.schema("vec_id").dataType ==
       org.apache.spark.sql.types.LongType && {
       // ONE pre-collect aggregate probes row count AND the widest

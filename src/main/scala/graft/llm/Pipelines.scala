@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * raw documents
   *   -> language id + quality scoring        (projection, no shuffle)
   *   -> quality floor filter                 (pushable predicate)
-  *   -> exact dedup on content fingerprint   (one hash shuffle)
+  *   -> exact dedup on md5(text)             (one hash shuffle)
   *   -> near-dup removal via MinHash LSH     (band equi-join)
   *   -> partitioned write by language        (rollover-style sink)
   * }}}
@@ -19,17 +19,12 @@ import org.apache.spark.sql.functions._
 object Pipelines {
 
   /** Score + filter + dedup a document frame. Returns the surviving
-    * documents with `lang_pred`, `quality`, `fingerprint` columns.
-    * `portableFingerprint` switches the exact-dedup key to the
-    * md5-based [[TextAnalysis.fingerprintPortable]] so the stage is
-    * differentially verifiable; the default stays the faster native
-    * hash. */
+    * documents with `lang_pred`, `quality`, `fingerprint` columns. */
   def prepareCorpus(docs: DataFrame, id: Column, text: Column,
                     minQuality: Double = 0.3,
-                    nearDupJaccard: Double = 0.8,
-                    portableFingerprint: Boolean = false): DataFrame = {
-    val scored = scoreCorpus(docs, text, minQuality, portableFingerprint)
-    // exact dedup: identical fingerprint keeps lowest id. Persisted —
+                    nearDupJaccard: Double = 0.8): DataFrame = {
+    val scored = scoreCorpus(docs, text, minQuality)
+    // exact dedup: identical text keeps lowest id. Persisted —
     // it feeds BOTH the near-dup pair mining and the final anti-join,
     // and recomputing it re-runs the whole scoring projection.
     val exact = Dedup.exactByKey(scored, Seq(col("fingerprint")), id)
@@ -55,11 +50,10 @@ object Pipelines {
                      outPath: String,
                      minQuality: Double = 0.3,
                      nearDupJaccard: Double = 0.8,
-                     abortBelowKeptFrac: Double = 0.0,
-                     portableFingerprint: Boolean = false): DataFrame = {
+                     abortBelowKeptFrac: Double = 0.0): DataFrame = {
     val po = new PipelineObserver
     val raw = po.checkpoint("raw", docs)
-    val scored = scoreCorpus(raw, text, minQuality, portableFingerprint)
+    val scored = scoreCorpus(raw, text, minQuality)
     val q = po.checkpoint("quality_floor", scored)
     // persist ABOVE the checkpoint: near-dup removal consumes this
     // frame twice (pair mining + survivor anti-join); the cache makes
@@ -82,21 +76,17 @@ object Pipelines {
     po.metricsDF(docs.sparkSession)
   }
 
-  /** Stage 1: language id + quality + content fingerprint, quality
-    * floor applied. Pure projection + pushable filter — callers that
-    * also need audit counts persist THIS frame and reuse it instead of
+  /** Stage 1: language id + quality + content fingerprint
+    * ([[TextAnalysis.fingerprint]], md5 of the text), quality floor
+    * applied. Pure projection + pushable filter — callers that also
+    * need audit counts persist THIS frame and reuse it instead of
     * re-running the pipeline. */
   def scoreCorpus(docs: DataFrame, text: Column,
-                  minQuality: Double = 0.3,
-                  portableFingerprint: Boolean = false): DataFrame = {
-    val fp =
-      if (portableFingerprint) TextAnalysis.fingerprintPortable(text)
-      else TextAnalysis.fingerprint(text)
+                  minQuality: Double = 0.3): DataFrame =
     TextAnalysis.withLangId(docs, text, "lang_pred")
       .withColumn("quality", TextAnalysis.qualityScore(text))
-      .withColumn("fingerprint", fp)
+      .withColumn("fingerprint", TextAnalysis.fingerprint(text))
       .filter(col("quality") >= minQuality)
-  }
 
   /** Stage 3: near-dup removal with TRANSITIVE cluster semantics:
     * pairs -> connected components -> keep the min-id member per
@@ -297,12 +287,10 @@ object Pipelines {
         size(col("clean")).cast("long").as("n_kept"))
   }
 
-  /** (id, fp) content-fingerprint frame for [[snapshotDiff]] — md5 of
-    * the raw text (portable: Spark md5(binary) = DuckDB md5(varchar)
-    * over the same UTF-8 bytes). */
+  /** (id, fp) content-fingerprint frame for [[snapshotDiff]] — fp is
+    * [[TextAnalysis.fingerprint]], the md5 of the raw text. */
   def withFingerprint(df: DataFrame, id: Column, text: Column): DataFrame =
-    df.select(id.as("id"),
-      md5(text.cast(org.apache.spark.sql.types.BinaryType)).as("fp"))
+    df.select(id.as("id"), TextAnalysis.fingerprint(text).as("fp"))
 
   /** Corpus snapshot diff — the incremental-refresh primitive: given
     * two (id, fp) fingerprint frames (see [[withFingerprint]]), emit

@@ -322,22 +322,12 @@ object TextAnalysis {
   def shingleHashes(text: Column, n: Int = 3): Column =
     graft.functions.shingle_hashes(text, n)
 
-  /** Document fingerprint: winnowing-style min-hash of word shingles —
-    * equal fingerprints => near-identical prefix content. Deterministic
-    * (xxhash64 with fixed seed). */
-  def fingerprint(text: Column, n: Int = 3): Column =
-    array_min(shingleHashes(text, n))
-
-  /** Portable fingerprint: min md5 hex of the word n-gram shingles.
-    * Same near-dup semantics as [[fingerprint]] but computable in any
-    * engine with md5 (string min over lowercase hex is engine-neutral),
-    * so it can be differentially verified. Backed by the native
-    * fused-loop kernel (graft.functions.Md5Fingerprint) — the HOF
-    * formulation (shingle strings -> md5 column fn -> array_min) was
-    * 13× slower; prefer the xxhash [[fingerprint]] when portability is
-    * not needed. */
-  def fingerprintPortable(text: Column, n: Int = 3): Column =
-    graft.functions.md5_fingerprint(text, n)
+  /** Document fingerprint: md5 hex of the text's UTF-8 bytes — the
+    * exact-dedup key (equal fingerprints => byte-identical text; null
+    * only for null text). Portable: Spark md5(binary) = DuckDB
+    * md5(varchar) over the same bytes, so the dedup stages that key
+    * on it are differentially verifiable. */
+  def fingerprint(text: Column): Column = md5(text.cast(BinaryType))
 
   /** Collocation mining: adjacent-token pairs ranked by LIFT,
     * `lift(a,b) = c_ab · N / (c_a · c_b)` — how much more often the

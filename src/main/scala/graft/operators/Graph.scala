@@ -53,9 +53,7 @@ object Graph {
     * Same discipline as Bpe.trainLocal and the connectedComponents
     * fast path. 4M edges ≈ 64 MB on the driver. */
   private[graft] def localEdgeBudget: Long =
-    java.lang.Long.getLong("spark.graft.graph.localEdgeBudget",
-      sys.env.get("SPARK_GRAFT_GRAPH_LOCAL_EDGES").map(_.toLong)
-        .getOrElse(4000000L))
+    java.lang.Long.getLong("spark.graft.graph.localEdgeBudget", 4000000L)
 
   private def isLong(df: DataFrame, c: String): Boolean =
     df.schema(c).dataType == org.apache.spark.sql.types.LongType

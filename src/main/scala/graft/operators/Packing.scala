@@ -32,15 +32,17 @@ import org.apache.spark.sql.functions._
   */
 object Packing {
 
-  /** Rank-spaced id-axis cut points for ~256 balanced order-range
-    * buckets: the 255 interior percentile_approx values of the id
-    * column — one distributed aggregate, a 255-long bounded scalar
-    * pull. Exposed for the balance law in PackingSpec. */
+  /** The 255 interior percentile_approx values of `doc_id`: the cut
+    * points of ~256 rank-balanced order-range buckets. */
+  private def cutsAgg: Column =
+    percentile_approx(col("doc_id"),
+      lit((1 to 255).map(_ / 256.0).toArray), lit(10000))
+
+  /** Rank-spaced id-axis cut points ([[cutsAgg]]) — one distributed
+    * aggregate, a 255-long bounded scalar pull. Exposed for the
+    * balance law in PackingSpec. */
   private[graft] def rankCuts(base: DataFrame): Seq[Long] =
-    base.agg(percentile_approx(col("doc_id"),
-        lit((1 to 255).map(_ / 256.0).toArray),
-        lit(10000)).as("cuts"))
-      .collect()(0).getSeq[Long](0)
+    base.agg(cutsAgg.as("cuts")).collect()(0).getSeq[Long](0)
 
   /** (doc_id, n_tok, s, e): absolute token span per doc in pinned
     * doc_id order, starting at `baseOffset`. Zero-token docs are
@@ -54,9 +56,7 @@ object Packing {
     // (they were two sequential driver round-trips; every spans
     // consumer pays this once per call)
     val probe = base0.agg(max(col("doc_id")).as("__mx"),
-        percentile_approx(col("doc_id"),
-          lit((1 to 255).map(_ / 256.0).toArray),
-          lit(10000)).as("__cuts"))
+        cutsAgg.as("__cuts"))
       .collect()(0)
     if (probe.isNullAt(0))
       return base0.select(col("doc_id"), col("n_tok"),

@@ -43,14 +43,16 @@ class PipelinesSpec extends SparkSpec {
       .map(r => r._2 -> r).toMap
     // stage metrics must agree with the recomputed stage outputs
     // (same fixture as the prepareCorpus case): 5 raw -> 4 past
-    // quality -> 2 past the fingerprint dedup (the winnowing min-hash
-    // fingerprint collapses doc 3, a prefix of doc 1, along with the
-    // exact copy doc 2) -> 2 survivors
+    // quality -> 3 past the exact md5(text) dedup (only doc 2, a
+    // byte-identical copy of doc 1, goes; doc 3 is a prefix of doc 1,
+    // different content) -> 2 past near-dup removal (MinHash LSH
+    // clusters doc 3 with doc 1, which keeps the lower id)
     assert(m("quality_floor")._3 === 5L && m("quality_floor")._4 === 4L)
-    assert(m("exact_dedup")._3 === 4L && m("exact_dedup")._4 === 2L)
-    assert(m("near_dedup")._3 === 2L && m("near_dedup")._4 === 2L)
-    // the written corpus is the survivors
-    assert(spark.read.parquet(out + "/corpus").count() === 2L)
+    assert(m("exact_dedup")._3 === 4L && m("exact_dedup")._4 === 3L)
+    assert(m("near_dedup")._3 === 3L && m("near_dedup")._4 === 2L)
+    // the written corpus is the survivors {1, 4}
+    assert(spark.read.parquet(out + "/corpus").select("doc_id").as[Long]
+      .collect().toSet === Set(1L, 4L))
     // breaker: quality keeps 4/5 = 0.8 — a floor of 0.9 aborts at the
     // FIRST stage under the floor, which is quality_floor
     val ex = intercept[CurationAborted] {

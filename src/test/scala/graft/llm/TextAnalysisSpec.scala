@@ -72,11 +72,21 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("fingerprint: equal for equal text, stable across runs") {
-    val f1 = one[Long](1L, TextAnalysis.fingerprint($"text"))
-    val f1b = one[Long](1L, TextAnalysis.fingerprint($"text"))
+    val f1 = one[String](1L, TextAnalysis.fingerprint($"text"))
+    val f1b = one[String](1L, TextAnalysis.fingerprint($"text"))
     assert(f1 === f1b)
-    val f4 = one[Long](2L, TextAnalysis.fingerprint($"text"))
+    val f4 = one[String](2L, TextAnalysis.fingerprint($"text"))
     assert(f1 !== f4)
+    // exact content key: Spark md5 of the text's UTF-8 bytes
+    assert(f1 === one[String](1L, md5($"text".cast("binary"))))
+    // a strict prefix is different content, so a different key (a
+    // min-shingle key would collide: both texts share every shingle)
+    val pre = Seq("the quick brown fox jumps over the lazy dog",
+        "the quick brown fox jumps over the lazy")
+      .toDF("text").select(TextAnalysis.fingerprint($"text"))
+      .as[String].collect()
+    assert(pre.length === 2)
+    assert(pre(0) !== pre(1))
   }
 
   test("native text_stats fast path agrees with the column-math forms") {

@@ -1,51 +1,30 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.jx.Runner
 import graft.tables.Catalog
 
 /** CLI entry for ad-hoc JX queries — the Spark analog of POSTing a JX JSON
   * query to the reference's query service.
   *
-  * Usage: runMain graft.JxMain <sfDir> '<jx-query-json>'|@<file>
-  * Prints the result table (up to 50 rows) and, with --plan, the
-  * formatted physical plan.
+  * Usage: runMain graft.JxMain <sfDir> '<jx-query-json>'|@<file> [--plan]
+  * Prints the JSON answer [[Service.query]] gives for the request (same
+  * default limit and format checks) and, with --plan, the formatted
+  * physical plan of the query.
   */
 object JxMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: JxMain <sfDir> <jx-query-json> [--plan]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = MainSession.start()
     try {
       val json =
         if (args(1).startsWith("@"))
           new String(java.nio.file.Files.readAllBytes(
             java.nio.file.Paths.get(args(1).drop(1))), "UTF-8")
         else args(1)
-      val runner = new Runner(spark, new Catalog(spark, args(0)))
-      val q = graft.jx.QueryParser.parse(json)
-      graft.jx.Formats.shaped(runner, q) match {
-        case df: org.apache.spark.sql.DataFrame =>
-          df.show(50, truncate = false)
-          if (args.contains("--plan")) df.explain("formatted")
-        case t: graft.jx.Formats.JxTable =>
-          println(t.header.mkString(" | "))
-          t.data.take(50).foreach(r => println(r.mkString(" | ")))
-        case c: graft.jx.Formats.JxCube =>
-          println(s"edges: ${c.edgeNames.mkString(", ")}")
-          c.domains.zip(c.edgeNames).foreach { case (d, n) =>
-            println(s"  $n: ${d.mkString(", ")}") }
-          c.data.foreach { case (name, cube) =>
-            println(s"  $name: $cube") }
-      }
+      println(Service.query(spark, args(0), json))
+      if (args.contains("--plan"))
+        new Runner(spark, new Catalog(spark, args(0))).run(json)
+          .explain("formatted")
     } finally spark.stop()
   }
 }

@@ -1,0 +1,42 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** Session set-up and between-query cleanup shared by the command-line
+  * mains (Bench, Verify, JxMain, PlanAudit, PlanDump), so each of them
+  * runs the engine under the settings the Verify oracle compare checks.
+  */
+object MainSession {
+
+  /** A `local[n]` session, n = `SPARK_GRAFT_CPUS` (default 4), with one
+    * shuffle partition per core, UTC timestamps, ANSI off (JX: errors ->
+    * null, never throw), AQE on, no UI and WARN logging. `extra` confs
+    * are set at build time, where static confs must be set. */
+  def start(extra: (String, String)*): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.ansi.enabled", "false")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .config(extra.toMap)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Release what the last query left behind, once its result has been
+    * consumed: persisted intermediates (so cached blocks don't pile up
+    * across hundreds of queries), the streaming queries' memory-sink
+    * temp views (which `clearCache` does not release) and the scratch
+    * dirs the query registered. */
+  def cleanup(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.catalog.listTables().collect()
+      .filter(_.name.startsWith("graft_stream_"))
+      .foreach(t => spark.catalog.dropTempView(t.name))
+    Scratch.sweep()
+  }
+}

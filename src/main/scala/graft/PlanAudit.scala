@@ -44,15 +44,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = MainSession.start()
     println(f"${"query"}%-26s ${tokens.map(_.take(9)).mkString(" ")} GLOBWIN")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       censusOne(spark, sfDir, name, fn) match {
@@ -62,10 +54,7 @@ object PlanAudit {
           println(f"$name%-26s ${c.counts.map(n => f"$n%9d").mkString(" ")} " +
             f"${c.globalWins}%7d")
       }
-      spark.catalog.clearCache()
-      spark.catalog.listTables().collect()
-        .filter(_.name.startsWith("graft_stream_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
+      MainSession.cleanup(spark)
     }
     spark.stop()
   }

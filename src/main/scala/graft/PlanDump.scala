@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev harness: write `.explain("formatted")` for named queries to
   * files — the before/after plan evidence the optimization rounds
@@ -14,16 +13,7 @@ object PlanDump {
     val suffix = args(1)
     val prefixes = args(2).split(",").toSeq.filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = MainSession.start()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => prefixes.exists(n.startsWith) }
@@ -39,10 +29,7 @@ object PlanDump {
         val p = java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt")
         java.nio.file.Files.writeString(p, txt)
         println(s"[plandump] wrote $p (${txt.length} chars)")
-        spark.catalog.clearCache()
-        spark.catalog.listTables().collect()
-          .filter(_.name.startsWith("graft_stream_"))
-          .foreach(t => spark.catalog.dropTempView(t.name))
+        MainSession.cleanup(spark)
       }
     spark.stop()
   }

@@ -1240,7 +1240,7 @@ private[graft] object QueriesLlmB {
       // the rename bijection keeps each page's own structure (orig ↔
       // truncated variant still J ≥ 0.5) while zeroing cross-doc
       // Jaccard, so the only edges are the CONSTRUCTED ones and the
-      // census discriminates (the ScaleBench corpus discipline)
+      // census discriminates
       val base = tbl(spark, dir, "documents")
         .filter(pmod(col("doc_id"), lit(20)) === 0)
         .select(col("doc_id"),

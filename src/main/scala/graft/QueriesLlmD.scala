@@ -262,13 +262,6 @@ private[graft] object QueriesLlmD {
     ChainSelection(stageRows, sel)
   }
 
-  /** [[trainingBuildChain]] exposed for the StreamBuildProfile dev
-    * harness (phase timing) — not a query surface. */
-  private[graft] def profileChain(kept0: DataFrame, corpusIds: DataFrame,
-                                  comps: DataFrame, contamIds: DataFrame,
-                                  docHash: DataFrame): DataFrame =
-    trainingBuildChain(kept0, corpusIds, comps, contamIds, docHash)
-
   private def trainingBuildChain(kept0: DataFrame,
                                  corpusIds: DataFrame,
                                  comps: DataFrame,
@@ -404,9 +397,9 @@ private[graft] object QueriesLlmD {
     * `doc_id < 1000000` eval/takedown guards are only coherent when
     * NO real doc_id equals a variant id. Check the collision itself
     * (one id-pruned equi-join count), not `max(doc_id) < 1000000`: a
-    * plain max-id bound would false-fail the ScaleBench slot corpora,
-    * whose ids exceed 1M BY DESIGN with variant bands kept disjoint
-    * inside each 10M slot (r13 advice, made scale-corpus-safe). */
+    * plain max-id bound would false-fail corpora scaled up from
+    * disjoint copies, whose ids exceed 1M BY DESIGN with variant bands
+    * kept disjoint inside each 10M id slot (r13 advice). */
   private def requireNoVariantCollision(docs0: DataFrame): Unit = {
     val ids = docs0.select(col("doc_id"))
     val n = ids.join(

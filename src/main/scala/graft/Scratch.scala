@@ -7,9 +7,9 @@ package graft
   * DataFrame that lazily re-reads the files they just wrote (e.g. a
   * persisted minhash index), so the dir has to outlive the query
   * function. Every dir is registered here and swept (a) explicitly by
-  * the Verify/Bench mains after the last result is consumed and (b) by
-  * a JVM shutdown hook as a backstop — so a full 240-query sweep
-  * leaves /tmp as it found it.
+  * the mains ([[MainSession.cleanup]]) after each result is consumed
+  * and (b) by a JVM shutdown hook as a backstop — so a full 240-query
+  * sweep leaves /tmp as it found it.
   */
 object Scratch {
   private val dirs =
@@ -37,21 +37,5 @@ object Scratch {
       catch { case _: Throwable => () }
       p = dirs.poll()
     }
-  }
-
-  /** [[sweep]], but keep the dir whose string path is `keep`
-    * registered and on disk — for a bench that sweeps per-query
-    * scratch while its own synthesized input dir must survive the
-    * whole run. */
-  def sweepExcept(keep: String): Unit = {
-    var kept: java.nio.file.Path = null
-    var p = dirs.poll()
-    while (p != null) {
-      if (p.toString == keep) kept = p
-      else try org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
-      catch { case _: Throwable => () }
-      p = dirs.poll()
-    }
-    if (kept != null) dirs.add(kept)
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,16 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false") // JX: errors -> null, never throw
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MainSession.start()
     new java.io.File(outDir).mkdirs()
     val attempted = SparkEntry.queries
       .filter { case (name, _) =>
@@ -38,16 +28,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // operators may persist intermediates (e.g. minhash signatures);
-      // drop them so cached blocks don't accumulate across 70+ queries,
-      // and release streaming memory-sink temp views (clearCache won't)
-      spark.catalog.clearCache()
-      spark.catalog.listTables().collect()
-        .filter(_.name.startsWith("graft_stream_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      // the result parquet is fully written at this point, so any
-      // scratch dirs the query persisted are safe to delete
-      Scratch.sweep()
+      // the result parquet is fully written at this point, so the
+      // query's cached blocks, stream views and scratch dirs can go
+      MainSession.cleanup(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

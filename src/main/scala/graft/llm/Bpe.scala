@@ -109,18 +109,7 @@ object Bpe {
   def train(spark: SparkSession, docs: DataFrame, text: Column,
             numMerges: Int, checkpointEvery: Int = 8,
             batchSize: Int = 1)
-      : Seq[(String, String, Long)] =
-    trainWithStats(spark, docs, text, numMerges, checkpointEvery,
-      batchSize)._1
-
-  /** [[train]] plus the driver-round count: (merges, rounds). Rounds
-    * = distributed pair-count sweeps, the per-merge driver-loop cost
-    * that batching cuts (~batchSize× on merge-rich corpora) — the
-    * measured number behind the batching claim (BpeBench). */
-  def trainWithStats(spark: SparkSession, docs: DataFrame, text: Column,
-                     numMerges: Int, checkpointEvery: Int = 8,
-                     batchSize: Int = 1)
-      : (Seq[(String, String, Long)], Int) = {
+      : Seq[(String, String, Long)] = {
     require(batchSize >= 1, "batchSize must be >= 1")
     var words = wordFreqs(docs, text)
       .select(col("word"), col("freq"),
@@ -134,10 +123,8 @@ object Bpe {
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(String, String, Long)]
     var sinceCp = 0
-    var rounds = 0
     var done = false
     while (merges.size < numMerges && !done) {
-      rounds += 1
       val m = math.min(batchSize, numMerges - merges.size)
       val counts = pairCounts(words, col("symbols"), col("freq"))
         .filter(col("pair_freq") >= 2)
@@ -167,7 +154,7 @@ object Bpe {
       }
     }
     Dedup.unpersistCheckpoint(lastCp)
-    (merges.toSeq, rounds)
+    merges.toSeq
   }
 
   /** PRODUCTION-RULE-COUNT training: the merge LOOP runs on the
@@ -176,9 +163,9 @@ object Bpe {
     * distributed trainer cuts driver rounds ~batchSize×, but its
     * provably-exact acceptance rule stops at the first symbol
     * conflict — on a natural Zipfian vocabulary that is ~2 accepted
-    * rules per round (measured: 1000 rules = 494 rounds = 277 s,
-    * BpeBench zipf), so ROUND COUNT, not data, dominates at real
-    * rule counts. This is also how production BPE trainers work
+    * rules per round (measured: 1000 rules = 494 rounds = 277 s on
+    * a 10k-word Zipf vocabulary), so ROUND COUNT, not data, dominates
+    * at real rule counts. This is also how production BPE trainers work
     * (SentencePiece/HF: aggregate word counts, then train in
     * memory): the word table is sublinear in the corpus by Heaps'
     * law, the loop is O(rules · vocab symbols), and the merge table
@@ -199,7 +186,7 @@ object Bpe {
     val n = wfDf.count()
     require(n <= maxWords,
       s"trainLocal: $n distinct words exceeds the $maxWords driver " +
-        "budget — use the distributed trainer (train/trainWithStats)")
+        "budget — use the distributed trainer (train)")
     val words: Array[(Array[String], Long)] = wfDf.collect()
       .map(r => (r.getString(0).split("").filter(_.nonEmpty),
         r.getLong(1)))
@@ -336,14 +323,13 @@ object Bpe {
     * (checkpointEvery), applied at inference. Consumers broadcast-join
     * the result back onto word occurrences (the q404/q405 plan): no
     * shuffle, and hot-word skew structurally cannot exist under a
-    * broadcast hash join. Returns (word, wn); BpeBench measures the
-    * build/encode walls at ~1k rules.
+    * broadcast hash join. Returns (word, wn).
     *
     * RETENTION CONTRACT (r14 advice): the returned frame is backed by
     * the FINAL localCheckpoint, whose blocks the caller cannot
     * release — intermediate chunk checkpoints are unpersisted here,
     * but each call pins one vocab-sized block set until session end.
-    * That is the right trade for the staged/bench call sites (the
+    * That is the right trade for the staged call sites (the
     * vocab is Heaps-bounded and served all session); a long-lived
     * caller building MANY distinct vocabs should route through
     * [[graft.operators.Staged]] (the q404 discipline: parquet-backed,

@@ -28,27 +28,6 @@ object Dedup {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  private val Salt = 0x9E3779B97F4A7C15L
-
-  /** MinHash signature from two precomputed per-shingle hash arrays —
-    * double-hashing style: the expensive string hashing happens TWICE
-    * per shingle, not `numHashes` times; the i-th pseudo-permutation is
-    * rotate-xor math over the cached arrays (overflow-free, ANSI-safe). */
-  def minhashSignature(h1s: Column, h2s: Column, numHashes: Int): Column = {
-    def rotl(c: Column, bits: Column): Column =
-      call_function("shiftleft", c, bits)
-        .bitwiseOR(call_function("shiftrightunsigned", c, lit(64) - bits))
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(zip_with(h1s, h2s,
-        (a, b) => rotl(a, pmod(i, lit(64))).bitwiseXOR(b))))
-  }
-
-  /** Convenience single-expression form (recomputes shingle hashes per
-    * permutation — prefer the staged pipeline in [[minhashPairs]]). */
-  def minhashSignature(shingles: Column): Column =
-    minhashSignature(transform(shingles, s => xxhash64(s)),
-      transform(shingles, s => xxhash64(s, lit(Salt))), 64)
-
   /** Near-duplicate pairs via MinHash + LSH banding, exact-verified.
     *
     * @param df        input with an id and a text column
@@ -205,16 +184,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
-
-  /** The candidate stage of [[prefixFilterJaccardPairs]] alone, from a
-    * raw (id, s) shingle frame — exposed so benches can MEASURE the
-    * prefix filter's candidate count against the naive postings-join
-    * bound (DedupBench's boilerplate-skew evidence). */
-  def prefixFilterCandidates(shingled: DataFrame,
-                             threshold: Double): DataFrame =
-    prefixCandidates(shingled
-      .select(col("id"), array_distinct(col("s")).as("s"))
-      .filter(size(col("s")) > 0), threshold)
 
   /** PPJoin candidate generation over a prepared distinct-shingle
     * frame: df-ascending prefix ordering (hot shingles sort LAST per
@@ -902,11 +871,6 @@ object Dedup {
   /** Portable simhash: bit-majority over [[md5TokenHashes]]. */
   def simhash64Portable(text: Column): Column =
     simhash64FromHashes(md5TokenHashes(text))
-
-  /** Staged SimHash (kept for API compatibility — the native expression
-    * is already single-pass, no staging needed). */
-  def withSimhash(df: DataFrame, text: Column, out: String): DataFrame =
-    df.withColumn(out, simhash64(text))
 
   /** Hamming distance between two 64-bit simhashes. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

@@ -193,9 +193,7 @@ object Graph {
     * "survives the hub nodes of a production graph". Every triangle
     * {u,x,y} closes exactly once (at its minimum-(deg,id) corner);
     * per-node counts union the three corners. All joins remain node-
-    * id equi-joins AQE can skew-split. The naive two-join form is
-    * kept as [[triangleCountsNaive]] — GraphBench measures both on a
-    * skewed star+clique graph. */
+    * id equi-joins AQE can skew-split. */
   def triangleCounts(edges: DataFrame): DataFrame = {
     val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val canon = edges.select(
@@ -440,8 +438,8 @@ object Graph {
     * by (common-neighbors desc, x, y) for a deterministic surface.
     *
     * Scale shape: wedge generation is one adjacency self-join keyed
-    * by the shared neighbor — Σ deg² pairs, the same volume bound as
-    * [[triangleCountsNaive]]. `maxWedgeDegree` is the skew escape
+    * by the shared neighbor — Σ deg² pairs, the volume of a naive
+    * lowest-id triangle enumeration. `maxWedgeDegree` is the skew escape
     * hatch: hub nodes above the cap are excluded as WEDGE CENTERS
     * (standard candidate-generation practice — a 10⁶-degree hub
     * certifies no meaningful similarity and would alone contribute
@@ -547,27 +545,6 @@ object Graph {
           org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField("jac_den",
           org.apache.spark.sql.types.LongType, nullable = false))))
-  }
-
-  /** The naive lowest-id two-join triangle formulation (wedge volume
-    * Σ deg²) — kept as the differential/bench baseline for
-    * [[triangleCounts]]; identical output. */
-  def triangleCountsNaive(edges: DataFrame): DataFrame = {
-    val canon = edges.select(
-        least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val wedges = canon.select(col("a"), col("b").as("x"))
-      .join(canon.select(col("a"), col("b").as("y")), Seq("a"))
-      .filter(col("x") < col("y"))
-    val tris = wedges.join(
-      canon.select(col("a").as("x"), col("b").as("y")), Seq("x", "y"))
-    val perCorner = tris.select(col("a").as("node"))
-      .unionAll(tris.select(col("x").as("node")))
-      .unionAll(tris.select(col("y").as("node")))
-    perCorner.groupBy(col("node")).agg(count(lit(1)).as("triangles"))
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) over an

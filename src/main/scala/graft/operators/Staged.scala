@@ -237,11 +237,11 @@ object Staged {
   }
 
   /** Drop every staged artifact — live AND trashed — deleting files
-    * (the root survives for reuse). For harnesses that MEASURE build
-    * cost (ScaleBench) — a staged hit on repeat 2 would report the
-    * parquet-read wall as the query's cost and hide the mining
-    * exponent. Production runs and Verify/Bench never call this;
-    * unlike eviction, clear() genuinely invalidates held frames. */
+    * (the root survives for reuse). For callers that MEASURE build
+    * cost or need a known start (the specs) — a staged hit on repeat 2
+    * would report the parquet-read wall as the query's cost and hide
+    * the mining exponent. Production runs and Verify/Bench never call
+    * this; unlike eviction, clear() genuinely invalidates held frames. */
   def clear(): Unit = {
     lru.synchronized(lru.clear())
     current.clear()

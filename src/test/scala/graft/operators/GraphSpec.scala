@@ -85,6 +85,34 @@ class GraphSpec extends SparkSpec {
     assert(o4 === Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
   }
 
+  test("triangleCounts on a hub-skewed star + cliques graph ≡ a " +
+      "brute-force driver count, on the fast path and distributed") {
+    // hub 0 joined to leaves 1..400; leaves 1..40 also form ten
+    // 4-cliques (each clique edge closes a triangle with the hub), and
+    // five 4-cliques at 1000+ stay clear of the hub. Some edges are
+    // given in both directions, as raw co-occurrence input would be.
+    val star = (1L to 400L).map(l => (0L, l))
+    def cliques(base: Long, n: Int) = for {
+      c <- 0 until n; i <- 0 until 4; j <- (i + 1) until 4
+    } yield (base + 4 * c + i, base + 4 * c + j)
+    val und = star ++ cliques(1L, 10) ++ cliques(1000L, 5)
+    val edges = (und ++ und.filter(_._2 % 3 == 0).map(_.swap))
+      .toDF("src", "dst")
+    val nbrs = (und ++ und.map(_.swap)).groupBy(_._1)
+      .map { case (v, es) => v -> es.map(_._2).toSet }
+    val expected = nbrs.map { case (v, ns) =>
+      v -> ns.toSeq.combinations(2)
+        .count { case Seq(x, y) => nbrs(x)(y) }.toLong
+    }.filter(_._2 > 0)
+    assert(expected(0L) === 60L) // 6 clique edges × 10 cliques
+    assert(expected(1L) === 6L && expected(1000L) === 3L)
+    def run() = Graph.triangleCounts(edges).as[(Long, Long)].collect()
+    val local = run()
+    assert(local.length === local.map(_._1).distinct.length)
+    assert(local.toMap === expected)
+    assert(distributed(run()).toMap === expected)
+  }
+
   test("labelPropagation: two cliques joined by a bridge settle on " +
       "their min ids; tie-break picks the smaller label") {
     // cliques {1,2,3} and {10,11,12}, bridge 3-10

@@ -822,7 +822,7 @@ private[graft] object QueriesLlmA {
       val vecsCp = vecs.localCheckpoint()
       val means = graft.llm.KMeans.fit(vecsCp, col("doc_id"), col("v"),
         k = 16, iters = 2)
-      graft.llm.Lifecycle.release(vecsCp)
+      graft.operators.Lifecycle.release(vecsCp)
       graft.llm.SemDedup.duplicatesFitted(vecs, col("doc_id"), col("v"),
           means, threshold = 0.95)
         .groupBy(col("cell"))
@@ -915,8 +915,8 @@ private[graft] object QueriesLlmA {
       val idx = Scratch.dir("graft_q111").toString + "/sem_idx"
       graft.llm.Similarity.ivfWriteIndexFitted(histV, col("doc_id"),
         col("v"), idx, means)
-      graft.llm.Lifecycle.release(histV)
-      graft.llm.Lifecycle.release(means)
+      graft.operators.Lifecycle.release(histV)
+      graft.operators.Lifecycle.release(means)
       graft.llm.SemDedup.incrementalDuplicates(spark,
           vecs.filter(!isHist), col("doc_id"), col("v"), idx,
           threshold = 0.95)

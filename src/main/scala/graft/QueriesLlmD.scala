@@ -131,6 +131,13 @@ private[graft] object QueriesLlmD {
       .localCheckpoint() // cluster assignment + contamination /
     // takedown flags: feeds the cluster sets, their one-agg census,
     // and the kept join
+    // stage 1's census reads off the kept⨝cluster join below, which
+    // would silently drop a kept doc that is absent from the corpus
+    require(kept0.select(col("doc_id"))
+        .join(asgAll.select(col("doc_id")), Seq("doc_id"), "left_anti")
+        .isEmpty,
+      "chainToSelection: a kept doc is absent from corpusIds, so " +
+        "m1_n_docs would undercount")
     val contamClusters = asgAll.filter(col("__ci"))
       .select(col("cluster")).distinct()
       .withColumn("__cc", lit(true))
@@ -167,8 +174,8 @@ private[graft] object QueriesLlmD {
     val isTrain = !col("drp") && col("sp") === "train"
     // stages 1-4: thirteen conditional aggregates, ONE pass. The
     // kept⨝cluster join is row-preserving (corpus ids are distinct
-    // and kept ⊆ corpus), so stage 1's census reads off the same
-    // frame.
+    // and kept ⊆ corpus, checked above), so stage 1's census reads
+    // off the same frame.
     val wide14 = annotated.agg(
       count(lit(1)).as("m1_n_docs"),
       sum(col("n_tok")).as("m1_n_tokens"),

@@ -435,14 +435,14 @@ private[graft] object QueriesStreaming {
       val tmp = Scratch.dir("graft_q113").toString
       graft.llm.Similarity.ivfWriteIndexFitted(histV, col("doc_id"),
         col("v"), tmp + "/idx", means)
-      graft.llm.Lifecycle.release(means)
+      graft.operators.Lifecycle.release(means)
       val newV = vecs.filter(!isHist)
       // sequenced names + stamped ascending mtimes pin the batch
       // order without sleeping a wall-clock second between writes
       EventStream.writeOrderedBatches(Seq(
         newV.filter(pmod(col("doc_id"), lit(2)) === 0),
         newV.filter(pmod(col("doc_id"), lit(2)) === 1)), tmp + "/src")
-      graft.llm.Lifecycle.release(vecs)
+      graft.operators.Lifecycle.release(vecs)
       val schema = spark.read.parquet(tmp + "/src").schema
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(tmp + "/src")

@@ -243,8 +243,8 @@ private[graft] object QueriesWarehouseA {
         // the index (and its centroid sidecar) is on disk now — the
         // fit and the checkpointed corpus can be freed; queries
         // re-derive their 4 vectors from the tiny filtered base table
-        graft.llm.Lifecycle.release(vecsCp)
-        graft.llm.Lifecycle.release(means)
+        graft.operators.Lifecycle.release(vecsCp)
+        graft.operators.Lifecycle.release(means)
       } + "/ivf_fitted"
       val queries = graft.llm.Featurize.hashedBow(
         docs.filter(col("doc_id") < 4), col("doc_id"), col("text"),

@@ -17,47 +17,14 @@ import graft.tables.Catalog
   * service-level default limit (ActiveData defaults to 10 —
   * SURVEY.md §2g O2) is applied here, NOT in the engine, exactly like
   * the reference.
+  *
+  * Requests take no lock: each renders its whole result before
+  * returning, so no frame it planned outlives it.
   */
 object Service {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   val DefaultLimit = 10000L
-
-  /** Staged-artifact epoch length: every `sweepEvery` requests the
-    * service reclaims the disk behind EVICTED staged artifacts
-    * ([[graft.operators.Staged.sweepTrash]] — deferred-delete
-    * eviction parks dirs instead of deleting them so pre-eviction
-    * frames stay readable). A request boundary is a safe epoch
-    * boundary for the service's OWN frames: every query() call
-    * renders its full result to JSON before returning, so no frame
-    * from a prior request is still lazily readable here. Caller-held
-    * frames (registered `views`) are only guaranteed across requests
-    * WITHIN an epoch — a caller keeping a staged-backed view alive
-    * across `sweepEvery` requests must re-derive it (the documented
-    * epoch contract; r13 verdict ask).
-    *
-    * CONCURRENCY: the render-before-return argument covers serial
-    * requests only — under concurrent query() calls, the request
-    * that crosses the boundary could otherwise delete an evicted
-    * artifact dir an IN-FLIGHT sibling's pre-eviction frame is still
-    * lazily reading (r14 advice). `epochLatch` closes that window:
-    * every request holds the READ side for its whole duration; the
-    * sweep takes the WRITE side, so it waits for all in-flight
-    * requests to render and blocks new ones until the disk is
-    * reclaimed — the sweep runs only between requests, by
-    * construction, at any concurrency. */
-  @volatile var sweepEvery: Int = 64
-  private val reqCount =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-  private val epochLatch =
-    new java.util.concurrent.locks.ReentrantReadWriteLock()
-  /** Test hook: the spec holds the read side to stand in for an
-    * in-flight request and asserts the boundary sweep queues behind
-    * it instead of deleting dirs that request may still read. */
-  private[graft] def epochGate = epochLatch
-  /** Test hook: pin the epoch phase so a spec can assert exactly
-    * which request crosses the boundary. */
-  private[graft] def resetEpoch(): Unit = reqCount.set(0L)
 
   def query(spark: SparkSession, dir: String, json: String): String =
     query(spark, dir, json, Map.empty)
@@ -70,29 +37,6 @@ object Service {
     * ad-hoc queries without a parquet round-trip. */
   def query(spark: SparkSession, dir: String, json: String,
             views: Map[String, org.apache.spark.sql.DataFrame]): String = {
-    // epoch boundary: BEFORE the request plans anything, so the sweep
-    // can never invalidate a frame this request is about to read.
-    // The write lock drains every in-flight reader first (their
-    // frames finish rendering), then the sweep runs exclusively; the
-    // write→read downgrade below is the JDK-supported direction, so
-    // the boundary request swaps to a plain reader without a gap a
-    // second sweeper could slip into.
-    if (reqCount.incrementAndGet() % sweepEvery.max(1) == 0) {
-      epochLatch.writeLock().lock()
-      try graft.operators.Staged.sweepTrash()
-      finally {
-        epochLatch.readLock().lock() // downgrade: hold read before
-        epochLatch.writeLock().unlock() //   releasing write
-      }
-    } else epochLatch.readLock().lock()
-    try queryLocked(spark, dir, json, views)
-    finally epochLatch.readLock().unlock()
-  }
-
-  private def queryLocked(spark: SparkSession, dir: String,
-                          json: String,
-                          views: Map[String, org.apache.spark.sql.DataFrame])
-      : String = {
     val q0 = QueryParser.parse(json)
     // service-level default limit for un-limited NON-EDGES queries.
     // The reference applies its default to setop queries only, but an

@@ -77,45 +77,42 @@ object MozLog {
     *  - `status`: worst-status rollup across subtests + test_end;
     *  - `ok`: test_end met its expectation (default OK) and no subtest
     *    failed.
-    * One shuffle on the test key. */
+    * One groupBy on the test key: every field is a conditional
+    * aggregate over that test's test_status or test_end lines, so the
+    * parse runs once and nothing is cached or joined. Tests without a
+    * test_end produce no document. */
   def testDocs(events: Dataset[Line]): DataFrame = {
-    // the parsed lines feed BOTH join sides (test_status aggregation +
-    // test_end extraction); persist so the flatMap parse of the raw log
-    // runs once, not per consumer (plan audit showed the whole parse
-    // subtree duplicated). Parsed lines are a few small columns — at
-    // scale this spills to executor disk like any shuffle block.
-    val df = events.toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val subtests = df.filter(col("action") === "test_status")
+    val isStatus = col("action") === "test_status"
+    val isEnd = col("action") === "test_end"
+    val endStruct = struct(statusPriority(col("e.status")).as("p"),
+      col("e.status").as("s"))
+    events.toDF()
+      .filter(isStatus || isEnd)
       .groupBy(col("test"))
       .agg(
         array_join(transform(
-            array_sort(collect_list(struct(col("time"), col("subtest")))),
+            array_sort(collect_list(
+              when(isStatus, struct(col("time"), col("subtest"))))),
             s => s.getField("subtest")), ",").as("subtests_csv"),
-        count(lit(1)).as("n_subtests"),
-        sum(when(col("status") =!= coalesce(col("expected"), lit("PASS")),
-          1L).otherwise(0L)).as("n_failed"),
-        max(struct(statusPriority(col("status")).as("p"),
-          col("status").as("s"))).as("__worst_sub"))
-    val ends = df.filter(col("action") === "test_end")
-      .groupBy(col("test"))
-      .agg(max(struct(col("time"), col("status"), col("expected")))
-        .as("e"))
-      .select(col("test"), col("e.status").as("end_status"),
-        col("e.expected").as("end_expected"))
-    val endStruct = struct(statusPriority(col("end_status")).as("p"),
-      col("end_status").as("s"))
-    ends.join(subtests, Seq("test"), "left")
+        count(when(isStatus, lit(1))).as("n_subtests"),
+        sum(when(isStatus &&
+            col("status") =!= coalesce(col("expected"), lit("PASS")), 1L)
+          .otherwise(0L)).as("n_failed"),
+        max(when(isStatus, struct(statusPriority(col("status")).as("p"),
+          col("status").as("s")))).as("__worst_sub"),
+        max(when(isEnd, struct(col("time"), col("status"),
+          col("expected")))).as("e"))
+      .filter(col("e").isNotNull)
       .select(
         col("test"),
-        coalesce(col("n_subtests"), lit(0L)).as("n_subtests"),
-        coalesce(col("n_failed"), lit(0L)).as("n_failed"),
-        col("end_status"),
+        col("n_subtests"),
+        col("n_failed"),
+        col("e.status").as("end_status"),
         when(col("__worst_sub").isNull, endStruct)
           .otherwise(greatest(col("__worst_sub"), endStruct))
           .getField("s").as("status"),
-        ((col("end_status") <=> coalesce(col("end_expected"), lit("OK"))) &&
-          coalesce(col("n_failed"), lit(0L)) === 0L).as("ok"),
-        coalesce(col("subtests_csv"), lit("")).as("subtests_csv"))
+        ((col("e.status") <=> coalesce(col("e.expected"), lit("OK"))) &&
+          col("n_failed") === 0L).as("ok"),
+        col("subtests_csv"))
   }
 }

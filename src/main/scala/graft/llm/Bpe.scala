@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.operators.Lifecycle
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -146,14 +147,14 @@ object Bpe {
         words =
           if (sinceCp >= checkpointEvery) {
             val cp = next.localCheckpoint()
-            Dedup.unpersistCheckpoint(lastCp)
+            Lifecycle.release(lastCp)
             lastCp = cp
             sinceCp = 0
             cp
           } else next
       }
     }
-    Dedup.unpersistCheckpoint(lastCp)
+    Lifecycle.release(lastCp)
     merges.toSeq
   }
 
@@ -325,15 +326,12 @@ object Bpe {
     * shuffle, and hot-word skew structurally cannot exist under a
     * broadcast hash join. Returns (word, wn).
     *
-    * RETENTION CONTRACT (r14 advice): the returned frame is backed by
-    * the FINAL localCheckpoint, whose blocks the caller cannot
-    * release — intermediate chunk checkpoints are unpersisted here,
-    * but each call pins one vocab-sized block set until session end.
-    * That is the right trade for the staged call sites (the
-    * vocab is Heaps-bounded and served all session); a long-lived
-    * caller building MANY distinct vocabs should route through
-    * [[graft.operators.Staged]] (the q404 discipline: parquet-backed,
-    * LRU-evicted) rather than calling this repeatedly. */
+    * RETENTION: the returned frame is backed by the FINAL
+    * localCheckpoint (intermediate chunk checkpoints are released
+    * here); its vocab-sized blocks go with the frame, or the caller
+    * frees them with [[graft.operators.Lifecycle.release]] when done.
+    * Callers that serve one vocab to many queries stage it through
+    * [[graft.operators.Staged]] (the q404 discipline: parquet-backed). */
   def vocabLengths(spark: SparkSession, docs: DataFrame, text: Column,
                    merges: Seq[(String, String, Long)],
                    chunkRules: Int = 16): DataFrame = {
@@ -348,7 +346,7 @@ object Bpe {
       val next = words
         .withColumn("__sym", applyMerges(col("__sym"), chunk))
         .localCheckpoint()
-      Dedup.unpersistCheckpoint(lastCp)
+      Lifecycle.release(lastCp)
       lastCp = next
       words = next
     }

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.operators.Lifecycle
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -55,9 +56,11 @@ object Dedup {
     val rows = numHashes / bands
     // staged: token hashes -> arithmetic shingle hashes (no n-gram
     // strings) -> signature by integer double-hashing. The signature
-    // table is PERSISTED: it is read by both sides of the band self-join
-    // and again for candidate verification — without the cache the whole
-    // pipeline would recompute 4x. At 100 TB this cache is
+    // table is CHECKPOINTED: it is read by both sides of the band
+    // self-join and again for candidate verification — without it the
+    // whole pipeline would recompute 4x — and the returned pairs read
+    // it after this call, so it is a checkpoint, not a persist (free it
+    // with [[Lifecycle.release]] on the pairs). At 100 TB it is
     // signatures-only (numHashes longs + shingle hashes per doc), a
     // small fraction of corpus size, spilling to executor disk.
     val withSig = shingled
@@ -65,10 +68,10 @@ object Dedup {
       .withColumn("sig",
         graft.functions.minhash_sig(col("sh"), numHashes))
       .select("id", "sh", "sig")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     // band hash = hash of the signature slice; explode to (id, band, bh).
-    // Only (id, band, bh) is shuffled — shingle arrays stay in the cache
-    // and are joined back for the (small) candidate set only.
+    // Only (id, band, bh) is shuffled — shingle arrays stay in the
+    // checkpoint and are joined back for the (small) candidate set only.
     val banded = withSig.select(
       col("id"),
       posexplode(array((0 until bands).map { b =>
@@ -172,10 +175,12 @@ object Dedup {
     * shorten it. */
   def prefixFilterJaccardPairs(shingled: DataFrame,
                                threshold: Double): DataFrame = {
+    // read by the candidate census and both verify joins of the
+    // returned frame: checkpointed, so it outlives the call uncached
     val sh = shingled
       .select(col("id"), array_distinct(col("s")).as("s"))
       .filter(size(col("s")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     val cand = prefixCandidates(sh, threshold)
     cand
       .join(sh.select(col("id").as("id_a"), col("s").as("sa")), Seq("id_a"))
@@ -279,11 +284,12 @@ object Dedup {
   private def pairIntersections(shingled: DataFrame, maxDf: Int)
       : (DataFrame, DataFrame) = {
     // the shingle-set table feeds two passes (hot-shingle census + index
-    // build); persist it — per doc it is one hash per distinct shingle,
-    // a small fraction of text bytes, spilling to executor disk at scale
+    // build) of the frames returned here; checkpoint it — per doc it is
+    // one hash per distinct shingle, a small fraction of text bytes,
+    // spilling to executor disk at scale
     val sh = shingled
       .filter(size(col("s")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     val ex = sh.select(col("id"), explode(col("s")).as("g"))
     // hot-shingle census: shingles with df > maxDf. Partial aggregation
     // makes the count shuffle tiny, and the hot set itself (boilerplate
@@ -634,7 +640,7 @@ object Dedup {
             org.apache.spark.sql.types.LongType, nullable = false),
           org.apache.spark.sql.types.StructField("comp",
             org.apache.spark.sql.types.LongType, nullable = false))))
-      unpersistCheckpoint(edges)
+      Lifecycle.release(edges)
       return out
     }
     var labels = edges.select(col("x").as("id")).distinct()
@@ -668,12 +674,12 @@ object Dedup {
       // `next` is materialized (eager checkpoint) and `changed` counted:
       // the previous generation's checkpoint blocks are dead — free them
       // now instead of waiting for GC/ContextCleaner
-      unpersistCheckpoint(labels)
+      Lifecycle.release(labels)
       labels = next
       converged = changed == 0
       iter += 1
     }
-    unpersistCheckpoint(edges)
+    Lifecycle.release(edges)
     if (!converged)
       System.err.println(
         s"[graft] connectedComponents: NOT converged after $maxIter " +
@@ -681,17 +687,6 @@ object Dedup {
           "incompletely merged; increase maxIter")
     labels
   }
-
-  /** Free the executor blocks behind a localCheckpoint'ed frame (its
-    * logical plan is a LogicalRDD over the persisted RDD — unpersist
-    * that RDD directly; Dataset.unpersist only consults the SQL cache
-    * manager and would miss it). No-op for non-checkpointed frames. */
-  private[llm] def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Persist the MinHash SIGNATURE INDEX of a corpus: one (id, sig) row
     * per doc, `numHashes` longs each — the only state incremental
@@ -734,14 +729,14 @@ object Dedup {
         xxhash64(concat_ws(",",
           (0 until rows).map(r => col("sig")(b * rows + r)): _*))
       }: _*)).as(Seq("band", "bh")))
-    // new batch signatures: persisted — read by the band join and again
-    // for the candidate estimate
+    // new batch signatures: checkpointed — the returned frame reads
+    // them in the band join and again for the candidate estimate
     val newSig = newDocs.select(id.as("new_id"),
         TextAnalysis.shingleHashes(text, shingleN).as("sh"))
       .filter(size(col("sh")) > 0)
       .select(col("new_id"),
         graft.functions.minhash_sig(col("sh"), numHashes).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     val index = spark.read.parquet(indexPath)
     val cand = banded(newSig, "new_id")
       .join(banded(index.select(col("id").as("old_id"), col("sig")),

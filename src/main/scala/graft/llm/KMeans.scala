@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.operators.Lifecycle
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -143,7 +144,7 @@ object KMeans {
         .select(col("cell"), col("dim"),
           coalesce(col("c"), col("c_prev")).as("c"))
         .localCheckpoint()
-      if (lastCp != null) Dedup.unpersistCheckpoint(lastCp)
+      if (lastCp != null) Lifecycle.release(lastCp)
       lastCp = means
       cents = centroidRow(means)
     }

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.operators.Lifecycle
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -24,11 +25,13 @@ object Pipelines {
                     minQuality: Double = 0.3,
                     nearDupJaccard: Double = 0.8): DataFrame = {
     val scored = scoreCorpus(docs, text, minQuality)
-    // exact dedup: identical text keeps lowest id. Persisted —
-    // it feeds BOTH the near-dup pair mining and the final anti-join,
-    // and recomputing it re-runs the whole scoring projection.
+    // exact dedup: identical text keeps lowest id. Checkpointed — it
+    // feeds BOTH the near-dup pair mining and the returned anti-join,
+    // so recomputing it would re-run the whole scoring projection; a
+    // checkpoint (unlike a persist) leaves no cache entry a later read
+    // of the same path could match, and its blocks go with the frame.
     val exact = Dedup.exactByKey(scored, Seq(col("fingerprint")), id)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     removeNearDups(exact, id, text, nearDupJaccard)
   }
 
@@ -61,17 +64,19 @@ object Pipelines {
     val exact = po.checkpoint("exact_dedup",
         Dedup.exactByKey(q, Seq(col("fingerprint")), id))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize the cache with ONE full scan before the iterative
-    // near-dup consumer touches it: an Observation latches the FIRST
-    // execution containing its node, and connected-components'
-    // convergence checks short-circuit (take/limit) — a partial scan
-    // would latch partial counts for every checkpoint below the cache.
-    // This is the same materialization scan the first consumer would
-    // trigger anyway, so no extra pass over the corpus.
-    exact.count()
-    val fin = po.checkpoint("near_dedup",
-      removeNearDups(exact, id, text, nearDupJaccard))
-    fin.write.mode("overwrite").parquet(outPath)
+    try {
+      // materialize the cache with ONE full scan before the iterative
+      // near-dup consumer touches it: an Observation latches the FIRST
+      // execution containing its node, and connected-components'
+      // convergence checks short-circuit (take/limit) — a partial scan
+      // would latch partial counts for every checkpoint below the
+      // cache. This is the same materialization scan the first
+      // consumer would trigger anyway, so no extra pass over the corpus.
+      exact.count()
+      val fin = po.checkpoint("near_dedup",
+        removeNearDups(exact, id, text, nearDupJaccard))
+      fin.write.mode("overwrite").parquet(outPath)
+    } finally exact.unpersist()
     po.assertKeptFloor(abortBelowKeptFrac)
     po.metricsDF(docs.sparkSession)
   }
@@ -97,7 +102,10 @@ object Pipelines {
                      nearDupJaccard: Double = 0.8): DataFrame = {
     val pairs = Dedup.minhashPairs(deduped, id, text,
       threshold = nearDupJaccard)
-    Dedup.clusterSurvivors(deduped, id, pairs, col("id_a"), col("id_b"))
+    // components are computed eagerly, so the pairs (and the signature
+    // checkpoint behind them) are dead once clusterSurvivors returns
+    try Dedup.clusterSurvivors(deduped, id, pairs, col("id_a"), col("id_b"))
+    finally Lifecycle.release(pairs)
   }
 
   /** Write the prepared corpus partitioned by predicted language —

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.operators.Lifecycle
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
@@ -36,7 +37,7 @@ import org.apache.spark.sql.types.BinaryType
   *     recall trade, deterministic and oracle-replayable).
   *
   * Every `duplicates*` call runs a cheap cell-balance guard (a k-row
-  * aggregate over the already-persisted assignment) and warns on
+  * aggregate over the already-checkpointed assignment) and warns on
   * stderr when the worst cell exceeds ~4/k of the corpus.
   *
   * Determinism contract (what the DuckDB oracle replays): assignment
@@ -86,20 +87,19 @@ object SemDedup {
     * best (max) cosine to any lower-id cell-mate above the threshold.
     * Output is small (duplicates only), inputs never leave their cell.
     *
-    * The assignment is persisted (both sides of the self-join read it;
-    * uncached it would recompute the featurize/assign chain per side)
-    * and stays cached for the session — free it with
-    * [[Lifecycle.release]] on the returned frame once materialized.
+    * The assignment is localCheckpointed (both sides of the self-join
+    * read it; uncached it would recompute the featurize/assign chain
+    * per side); its blocks go with the returned frame, or free them
+    * with [[Lifecycle.release]] on it once materialized.
     * Construction also runs the cell-balance guard: one k-row
-    * aggregate (which doubles as a cache warm-up), warning on stderr
+    * aggregate over the checkpoint, warning on stderr
     * when the worst cell exceeds `maxCellFraction` (default ~4/k) —
     * the signal to switch to [[duplicatesFitted]] or
     * [[splitOversizedCells]]. */
   def duplicatesAssigned(assigned0: DataFrame, threshold: Double,
                          maxCellFraction: Option[Double] = None)
       : DataFrame = {
-    val assigned = assigned0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val assigned = assigned0.localCheckpoint()
     warnOnImbalance(cellHistogram(assigned), maxCellFraction)
     val a = assigned.select(col("cell"), col("vec_id").as("kept_id"),
       col("cv").as("va"))
@@ -166,7 +166,7 @@ object SemDedup {
     val fresh = newEmb.select(id.as("vec_id"),
       vec.cast("array<double>").as("cv"))
     val assigned = Similarity.assignCells(fresh, cents, "cv", "cell", 1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     warnOnImbalance(cellHistogram(assigned), None)
     pairsAgainstIndex(index, assigned, threshold)
   }
@@ -250,14 +250,16 @@ object SemDedup {
         // which GROWS with stream lifetime (only THIS batch's ids can
         // be this batch's dups, so the historical dups are irrelevant
         // to the anti join)
-        val dupsB = pairsAgainstIndex(index, assigned, threshold)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        dupsB.write.mode("append").parquet(dupsOutDir)
-        val survivors = assigned.join(dupsB.select(col("dup_id")),
-          col("vec_id") === col("dup_id"), "left_anti")
-        appendToIndex(survivors, indexPath)
-        dupsB.unpersist(blocking = false)
-        assigned.unpersist(blocking = false)
+        try {
+          val dupsB = pairsAgainstIndex(index, assigned, threshold)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try {
+            dupsB.write.mode("append").parquet(dupsOutDir)
+            val survivors = assigned.join(dupsB.select(col("dup_id")),
+              col("vec_id") === col("dup_id"), "left_anti")
+            appendToIndex(survivors, indexPath)
+          } finally dupsB.unpersist(blocking = false)
+        } finally assigned.unpersist(blocking = false)
         ()
       }
       .option("checkpointLocation", checkpointDir)

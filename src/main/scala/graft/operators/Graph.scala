@@ -252,9 +252,13 @@ object Graph {
     val perCorner = tris.select(col("u").as("node"))
       .unionAll(tris.select(col("x").as("node")))
       .unionAll(tris.select(col("y").as("node")))
-    val counts = perCorner.groupBy(col("node"))
+    // the result outlives the call: checkpoint it, then drop the caches
+    val out = perCorner.groupBy(col("node"))
       .agg(count(lit(1)).as("triangles"))
-    counts
+      .localCheckpoint()
+    oriented.unpersist(blocking = false)
+    canon.unpersist(blocking = false)
+    out
   }
 
   /** Local clustering coefficient per node: 2·triangles / (d·(d−1))
@@ -489,8 +493,11 @@ object Graph {
       .join(deg.select(col("n").as("y"), col("d").as("dy")), Seq("y"))
       .select(col("x"), col("y"), col("cn").as("jac_num"),
         (col("dx") + col("dy") - col("cn")).as("jac_den"))
-    candidates.orderBy(col("jac_num").desc, col("x"), col("y"))
+    val out = candidates.orderBy(col("jac_num").desc, col("x"), col("y"))
       .limit(topK)
+      .localCheckpoint()
+    canon.unpersist(blocking = false)
+    out
   }
 
   /** [[linkPrediction]] replayed on the driver: wedge counts from
@@ -604,15 +611,18 @@ object Graph {
         .select(col("node"), col("__m.label").as("label"))
         .persist(mad)
       pending += labels
-      if (i % MatEvery == 0 || i == rounds) {
+      if (i % MatEvery == 0) {
         next.count()
         pending.foreach(_.unpersist(blocking = false))
         pending.clear()
       }
       labels = next
     }
+    // the result outlives the call: checkpoint it, then drop the caches
+    val out = labels.localCheckpoint()
+    (pending :+ labels).foreach(_.unpersist(blocking = false))
     adj.unpersist(blocking = false)
-    labels
+    out
   }
 
   /** [[labelPropagation]] replayed on the driver over collected
@@ -816,14 +826,15 @@ object Graph {
       }
       pr = next
     }
-    pr.count()
-    pending.foreach(_.unpersist(blocking = false))
+    // the result outlives the call: checkpoint it, then drop the caches
+    val out = pr.localCheckpoint()
+    (pending :+ pr).foreach(_.unpersist(blocking = false))
     e.unpersist(blocking = false)
     deg.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     nodesR.foreach(_.unpersist(blocking = false))
     if (dangling != null) dangling.unpersist(blocking = false)
-    pr
+    out
   }
 
   /** The deterministic [[pageRank]] loop replayed on the driver over
@@ -992,10 +1003,10 @@ object Graph {
           .join(bad, col("src") === col("__bad"), "left_anti")
           .join(bad, col("dst") === col("__bad"), "left_anti")
           .localCheckpoint()
-        unpersistCheckpoint(e)
+        Lifecycle.release(e)
         e = next
       }
-      unpersistCheckpoint(bad)
+      Lifecycle.release(bad)
       round += 1
     }
     if (!converged)
@@ -1004,11 +1015,4 @@ object Graph {
     val out = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     out
   }
-
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 }

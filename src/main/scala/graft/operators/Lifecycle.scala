@@ -1,25 +1,23 @@
-package graft.llm
+package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
-/** Caller-facing release hook for the cached/checkpointed state some
-  * operators in this package leave behind by design:
+/** The one release hook for intermediate state. The rule the operators
+  * follow: a method that `persist`s a frame unpersists it before it
+  * returns; a frame that must outlive the call is `localCheckpoint`ed
+  * instead — a checkpoint has no cache-manager entry, so no later plan
+  * over the same source can match it, and its blocks go with the frame.
   *
-  *  - [[SemDedup.duplicates]] persists its (id, vector, cell)
-  *    assignment so the within-cell self-join reads one materialized
-  *    frame instead of recomputing the featurize/assign chain per side;
-  *  - [[KMeans.fit]] returns a localCheckpoint-backed centroid table
-  *    (the checkpoint is what cuts the iterative lineage).
-  *
-  * Both are correct lifecycles for a single query, but a LONG-RUNNING
-  * session that calls these repeatedly accumulates executor blocks
-  * unless someone frees them. `Dataset.unpersist` alone is not enough:
-  * it consults only the SQL cache manager and misses checkpoint RDDs.
-  * [[release]] walks the frame's plan and frees BOTH kinds — call it
-  * once the result has been materialized (written, collected) and is
-  * no longer needed.
+  * Checkpoint-backed results ([[graft.llm.KMeans.fit]]'s centroid
+  * table, [[graft.llm.SemDedup.duplicates]] over its checkpointed
+  * assignment, the pair miners in [[graft.llm.Dedup]]) hold executor
+  * blocks until the frame is garbage-collected; a long-running caller
+  * that is done with one frees them now with [[release]]. Iterative
+  * operators use it to drop each superseded round's checkpoint.
+  * `Dataset.unpersist` alone is not enough: it consults only the SQL
+  * cache manager and misses checkpoint RDDs.
   */
 object Lifecycle {
 

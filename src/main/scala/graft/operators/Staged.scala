@@ -1,13 +1,14 @@
 package graft.operators
 
+import java.nio.file.{Files, Path}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Cross-query artifact staging: build an expensive intermediate ONCE
   * per parameter key, persist it as parquet, and serve every later
   * request in the same JVM from the file — the pattern q109 (IVF
   * index), q320 (span-index manifest), and the near-dup pair miners
-  * hand-rolled individually, published as one auditable helper (r10
-  * verdict ask #7).
+  * hand-rolled individually, published as one auditable helper.
   *
   * The staging root is deliberately NOT a [[graft.Scratch]] dir:
   * Verify and Bench call `Scratch.sweep()` after EVERY query, and
@@ -17,41 +18,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Contract: `key` must encode EVERY parameter the artifact depends
   * on — including the input data directory — exactly like a
-  * content-addressed manifest. At 100 TB this is the "never rebuild
-  * what a sibling query already mined" discipline: the second
-  * consumer of a pair set / fitted index / span manifest pays a
-  * parquet scan, not a corpus re-mine.
+  * content-addressed manifest. The second consumer of a pair set /
+  * fitted index / span manifest pays a parquet scan, not a corpus
+  * re-mine.
   *
-  * Lifecycle (r11 verdict ask #5):
+  * Lifecycle:
+  *  - One dir per key (`root/<sanitized key>`); its success marker
+  *    (`_SUCCESS` for frames, `_STAGED_DONE` for paths) means
+  *    "built". A key is built once and served until [[clear]] or JVM
+  *    exit — the key set is bounded by the queries that stage.
   *  - Builds are ATOMIC: every build writes into a fresh `.tmp`
   *    sibling and renames into place only on success, so a builder
   *    that throws partway leaves no dirty dir for the retry to
-  *    append into — the retry starts from nothing.
+  *    append into — the retry starts from nothing. A dir whose marker
+  *    was lost is rebuilt the same way, in place.
   *  - Locking is PER KEY: two unrelated staged lookups never
   *    serialize on each other; only concurrent requests for the SAME
   *    key wait for the single build.
-  *  - The cache is BOUNDED: a long-lived service process accretes one
-  *    dir per (corpus, params) forever without a budget. An
-  *    access-ordered LRU evicts the least-recently-served artifacts
-  *    above [[maxArtifacts]]; an evicted key simply rebuilds on next
-  *    request (into a FRESH generation dir — physical dirs are never
-  *    reused).
-  *  - Eviction is DEFERRED-DELETE (r12 verdict ask): evicting an
-  *    artifact only forgets it and moves its dir onto an in-memory
-  *    trash list — the parquet files stay on disk, so a DataFrame a
-  *    caller obtained BEFORE the eviction keeps reading correctly for
-  *    the life of the JVM (a lazy plan holds file paths, not data).
-  *    Disk is reclaimed by the JVM-exit hook, or — for a long-lived
-  *    service — by calling [[sweepTrash]] at an epoch boundary where
-  *    no pre-eviction frames can still be live.
   */
 object Staged {
-  @volatile private var rootDir: java.nio.file.Path = _
-
-  /** Artifact-count budget for the JVM-lifetime cache; above it the
-    * least-recently-served artifacts are deleted. Generous default:
-    * the full 355-query sweep stages ~a dozen artifacts. */
-  @volatile var maxArtifacts: Int = 64
+  @volatile private var rootDir: Path = _
 
   /** Per-key build locks: unrelated staged lookups proceed in
     * parallel; same-key requests serialize on the one build. */
@@ -61,61 +47,17 @@ object Staged {
   /** Cumulative wall spent INSIDE staged builds this JVM. Harnesses
     * (Bench) snapshot it around a timed run to report one-time
     * artifact-build walls separately from query cost — a first
-    * consumer paying a staged build must never read as a slow query
-    * (the r11 q206 mis-adjudication). */
+    * consumer paying a staged build must never read as a slow query. */
   private val buildNanosTotal =
     new java.util.concurrent.atomic.AtomicLong(0L)
   def buildNanos: Long = buildNanosTotal.get
 
-  /** Access-ordered LRU over LOGICAL artifact names (guarded by its
-    * own monitor — held only for map ops, never across a Spark
-    * build). */
-  private val lru =
-    new java.util.LinkedHashMap[String, java.lang.Long](16, 0.75f, true)
-
-  /** Logical name → live physical generation dir. Each (re)build gets
-    * a fresh `__gN` suffix so an evicted-then-rebuilt key can never
-    * write over files a pre-eviction reader still references. */
-  private val current =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  private val genCounter =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Evicted generation dirs awaiting reclaim — files still on disk,
-    * deliberately. Swept by [[sweepTrash]] / [[clear]] / JVM exit. */
-  private val trash =
-    java.util.Collections.synchronizedList(
-      new java.util.ArrayList[java.nio.file.Path]())
-
-  /** Above this many unreclaimed trash dirs a loud stderr warning
-    * fires (once per crossing): deferred-delete means [[maxArtifacts]]
-    * bounds the LIVE set but not disk — a long-lived service that
-    * churns artifacts without ever reaching an epoch boundary is
-    * leaking disk by policy, and should wire [[sweepTrash]] into its
-    * request loop (graft.Service does, every `sweepEvery` requests). */
-  @volatile var trashWarnThreshold: Int = 256
-  private val trashWarned =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  /** Park a dead generation dir for deferred reclaim. */
-  private def toTrash(dir: java.nio.file.Path): Unit = {
-    trash.add(dir)
-    if (trash.size > trashWarnThreshold &&
-        trashWarned.compareAndSet(false, true))
-      System.err.println(
-        s"[graft] Staged: ${trash.size} evicted artifact dirs await " +
-          "sweepTrash() — disk is unreclaimed until an epoch boundary " +
-          "(or JVM exit); call Staged.sweepTrash() when no pre-eviction " +
-          "frames can still be read")
-  }
-
-  private def root: java.nio.file.Path = synchronized {
+  private def root: Path = synchronized {
     if (rootDir == null) {
-      rootDir = java.nio.file.Files.createTempDirectory("graft_staged")
+      rootDir = Files.createTempDirectory("graft_staged")
       val p = rootDir
       Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
+        try FileUtils.deleteDirectory(p.toFile)
         catch { case _: Throwable => () }))
     }
     rootDir
@@ -135,156 +77,69 @@ object Staged {
     s"${safe.take(120)}_$h"
   }
 
-  private def lockFor(dirName: String): Object =
-    locks.computeIfAbsent(dirName, _ => new Object)
-
-  /** Record a serve of `dirName` and evict over-budget artifacts
-    * (oldest-served first). Eviction NEVER deletes files — it drops
-    * the name→dir mapping and parks the generation dir on the trash
-    * list, so frames planned before the eviction stay readable
-    * (deferred delete; see [[sweepTrash]]). The map drop happens
-    * under the evictee's key lock so it can't race a same-key build. */
-  private def touchAndEvict(dirName: String): Unit = {
-    val victims = lru.synchronized {
-      lru.put(dirName, java.lang.Long.valueOf(System.nanoTime()))
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (lru.size > maxArtifacts) {
-        val it = lru.keySet.iterator
-        out += it.next(); it.remove()
+  /** The artifact dir for `key`, built by `buildInto(tmp)` unless its
+    * `marker` is present: the build writes a fresh tmp sibling that
+    * replaces the target (and any marker-less leftover) by an atomic
+    * rename; a failed build leaves nothing behind. */
+  private def getOrBuildDir(key: String, marker: String)
+                           (buildInto: Path => Unit): Path = {
+    val name = sanitize(key)
+    val target = root.resolve(name)
+    locks.computeIfAbsent(name, _ => new Object).synchronized {
+      if (!Files.exists(target.resolve(marker))) {
+        val t0 = System.nanoTime()
+        val tmp = target.resolveSibling(name + ".tmp")
+        FileUtils.deleteDirectory(tmp.toFile)
+        try {
+          buildInto(tmp)
+          FileUtils.deleteDirectory(target.toFile)
+          try Files.move(tmp, target,
+            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+          catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
+            Files.move(tmp, target)
+          }
+        } finally {
+          // failed build: leave NOTHING — the retry must start clean
+          FileUtils.deleteDirectory(tmp.toFile)
+          buildNanosTotal.addAndGet(System.nanoTime() - t0)
+        }
       }
-      out.toSeq
     }
-    victims.foreach { v =>
-      lockFor(v).synchronized {
-        val dir = current.remove(v)
-        if (dir != null) toTrash(dir)
-      }
-    }
+    target
   }
 
-  /** Reclaim the disk behind every EVICTED artifact. Safe only when
-    * no DataFrame obtained before the evictions can still be acted
-    * on — a long-lived service calls this at an epoch boundary.
-    * Production call site: [[graft.Service.query]] invokes it every
-    * `Service.sweepEvery` requests, at the START of a request (every
-    * prior request has fully rendered its result, so no service-owned
-    * frame can still lazily read an evicted dir; caller-registered
-    * views are guaranteed within an epoch only — the documented
-    * contract). Harnesses and short-lived processes never need to
-    * call this (the JVM-exit hook removes the whole root). */
-  def sweepTrash(): Unit = {
-    val drained = trash.synchronized {
-      val out = new java.util.ArrayList[java.nio.file.Path](trash)
-      trash.clear(); out
-    }
-    trashWarned.set(false)
-    drained.forEach { p =>
-      try org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
-      catch { case _: Throwable => () }
-    }
-  }
-
-  /** Build into a fresh tmp sibling and atomically rename into place;
-    * a stale partial target (failed pre-atomic-era build or evicted
-    * leftovers) is deleted first. Must hold the key lock. */
-  private def atomicBuild(target: java.nio.file.Path)
-                         (buildInto: java.nio.file.Path => Unit): Unit = {
-    val t0 = System.nanoTime()
-    val tmp = target.resolveSibling(
-      target.getFileName.toString + ".tmp")
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-    try {
-      buildInto(tmp)
-      org.apache.commons.io.FileUtils.deleteDirectory(target.toFile)
-      try java.nio.file.Files.move(tmp, target,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-        java.nio.file.Files.move(tmp, target)
-      }
-    } finally {
-      // failed build: leave NOTHING — the retry must start clean
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-      buildNanosTotal.addAndGet(System.nanoTime() - t0)
-    }
-  }
-
-  /** DataFrame-shaped artifact: build + persist on first request for
+  /** DataFrame-shaped artifact: build + write on first request for
     * `key`, read-from-parquet on every request. The returned frame is
     * always the parquet read, so first and later callers get the
     * identical (materialized, re-scannable) plan shape. */
   def getOrBuild(spark: SparkSession, key: String)
                 (build: => DataFrame): DataFrame = {
-    val dirName = sanitize(key)
-    val p = lockFor(dirName).synchronized {
-      val live = current.get(dirName)
-      if (live != null &&
-          java.nio.file.Files.exists(live.resolve("_SUCCESS"))) live
-      else {
-        // a live dir that lost its marker (externally damaged or
-        // interrupted build) is superseded, not reused — trash it so
-        // the rebuild doesn't leak it until JVM exit (r13 advice)
-        if (live != null) toTrash(live)
-        val fresh = root.resolve(
-          s"${dirName}__g${genCounter.incrementAndGet()}")
-        atomicBuild(fresh)(tmp =>
-          build.write.mode("overwrite").parquet(tmp.toString))
-        current.put(dirName, fresh)
-        fresh
-      }
-    }
-    touchAndEvict(dirName)
-    spark.read.parquet(p.toString)
-  }
-
-  /** Drop every staged artifact — live AND trashed — deleting files
-    * (the root survives for reuse). For callers that MEASURE build
-    * cost or need a known start (the specs) — a staged hit on repeat 2
-    * would report the parquet-read wall as the query's cost and hide
-    * the mining exponent. Production runs and Verify/Bench never call
-    * this; unlike eviction, clear() genuinely invalidates held frames. */
-  def clear(): Unit = {
-    lru.synchronized(lru.clear())
-    current.clear()
-    trash.synchronized(trash.clear())
-    synchronized {
-      if (rootDir != null) {
-        Option(rootDir.toFile.listFiles()).toSeq.flatten.foreach(f =>
-          try org.apache.commons.io.FileUtils.deleteDirectory(f)
-          catch { case _: Throwable => () })
-      }
-    }
+    val dir = getOrBuildDir(key, "_SUCCESS")(tmp =>
+      build.write.mode("overwrite").parquet(tmp.toString))
+    spark.read.parquet(dir.toString)
   }
 
   /** Path-shaped artifact (multi-file indexes with sidecars — the
     * q109 IVF shape): `buildTo(path)` must write the artifact under
     * the given directory; the dir appears at the returned path only
-    * after `buildTo` completes (tmp-dir build + atomic rename), so a
-    * builder that throws partway never leaves a partial artifact for
-    * the retry to mistake for progress. Returns the artifact path;
-    * builds only on the first request for `key`. */
-  def getOrBuildPath(key: String)(buildTo: String => Unit): String = {
-    val dirName = sanitize(key)
-    val p = lockFor(dirName).synchronized {
-      val live = current.get(dirName)
-      if (live != null &&
-          java.nio.file.Files.exists(live.resolve("_STAGED_DONE")))
-        live
-      else {
-        // marker-less live dir: superseded — trash, never leak
-        if (live != null) toTrash(live)
-        val fresh = root.resolve(
-          s"${dirName}__g${genCounter.incrementAndGet()}")
-        atomicBuild(fresh) { tmp =>
-          java.nio.file.Files.createDirectories(tmp)
-          buildTo(tmp.toString)
-          java.nio.file.Files.write(tmp.resolve("_STAGED_DONE"),
-            Array.emptyByteArray)
-        }
-        current.put(dirName, fresh)
-        fresh
-      }
-    }
-    touchAndEvict(dirName)
-    p.toString
+    * after `buildTo` completes. Returns the artifact path; builds only
+    * on the first request for `key`. */
+  def getOrBuildPath(key: String)(buildTo: String => Unit): String =
+    getOrBuildDir(key, "_STAGED_DONE") { tmp =>
+      Files.createDirectories(tmp)
+      buildTo(tmp.toString)
+      Files.write(tmp.resolve("_STAGED_DONE"), Array.emptyByteArray)
+    }.toString
+
+  /** Drop every staged artifact, deleting its files (the root survives
+    * for reuse). For callers that MEASURE build cost or need a known
+    * start (the specs) — a staged hit on repeat 2 would report the
+    * parquet-read wall as the query's cost. Frames read from a
+    * cleared artifact are invalid afterwards. */
+  def clear(): Unit = synchronized {
+    if (rootDir != null)
+      Option(rootDir.toFile.listFiles()).toSeq.flatten.foreach(f =>
+        try FileUtils.deleteDirectory(f)
+        catch { case _: Throwable => () })
   }
 }

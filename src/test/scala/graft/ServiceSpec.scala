@@ -300,133 +300,35 @@ class ServiceSpec extends SparkSpec {
       r2.get("data").get(4).get("pr").asDouble)
   }
 
-  test("staged-artifact epoch sweep: a long request sequence reclaims " +
-      "the disk behind EVICTED staged artifacts at the sweepEvery " +
-      "boundary, while a view over a LIVE staged artifact keeps " +
-      "serving across it (r13 verdict ask)") {
+  test("a registered view over a staged artifact keeps serving " +
+      "across requests") {
     import org.apache.spark.sql.functions._
     val Staged = graft.operators.Staged
-    val savedMax = Staged.maxArtifacts
-    val savedEvery = Service.sweepEvery
     try {
       Staged.clear()
-      Staged.maxArtifacts = 1
-      Service.sweepEvery = 4
-      Service.resetEpoch() // earlier tests advanced the counter
-      // the view's backing artifact — will be evicted by churn below,
-      // then REBUILT by the last touch so it is live at the boundary
-      def viewFrame = Staged.getOrBuild(spark, "svc-epoch/view") {
+      var builds = 0
+      def viewFrame = Staged.getOrBuild(spark, "svc-staged/view") {
+        builds += 1
         catalog.table("region")
           .select(col("r_regionkey"), col("r_name"))
       }
-      val view = viewFrame
-      // churn two throwaway artifacts through the budget-1 cache:
-      // each displaces the previous — both end up on the trash list
-      val deadDirs = Seq("a", "b").map { k =>
-        val f = Staged.getOrBuild(spark, s"svc-epoch/churn-$k") {
-          spark.range(3).select(col("id"))
-        }
-        f.inputFiles.head
-          .replaceFirst("/[^/]*$", "").replaceFirst("^file:", "")
-      }
-      val live = viewFrame // re-touch: view artifact is live again
-      val liveDir = live.inputFiles.head
-        .replaceFirst("/[^/]*$", "").replaceFirst("^file:", "")
-      // deferred delete: evicted dirs still on disk before the epoch
-      assert(deadDirs.forall(d => java.nio.file.Files.exists(
-        java.nio.file.Paths.get(d))))
-      val views = Map("staged_view" -> live)
+      val views = Map("staged_view" -> viewFrame)
       val json = """{"from": "staged_view", "select": ["r_name"],
                      "sort": ["r_regionkey"]}"""
-      // requests 1..3: inside the epoch — trash untouched
-      (1 to 3).foreach { _ =>
+      val answers = (1 to 5).map { i =>
+        // other staged artifacts are built between requests
+        Staged.getOrBuild(spark, s"svc-staged/other-$i") {
+          spark.range(3).select(col("id"))
+        }
         val r = mapper.readTree(
           Service.query(spark, TestSpark.sfDir, json, views))
         assert(r.get("data").size === 5)
+        r.toString
       }
-      assert(deadDirs.forall(d => java.nio.file.Files.exists(
-        java.nio.file.Paths.get(d))),
-        "sweep must not fire before the epoch boundary")
-      // request 4: the epoch boundary — evicted dirs reclaimed, the
-      // live artifact untouched, the view still serves
-      val r4 = mapper.readTree(
-        Service.query(spark, TestSpark.sfDir, json, views))
-      assert(r4.get("data").size === 5)
-      assert(deadDirs.forall(d => !java.nio.file.Files.exists(
-        java.nio.file.Paths.get(d))),
-        "epoch boundary must reclaim evicted artifact dirs")
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(liveDir)),
-        "the sweep must never touch a LIVE artifact")
-      val r5 = mapper.readTree(
-        Service.query(spark, TestSpark.sfDir, json, views))
-      assert(r5.get("data").size === 5,
-        "a live-artifact view must keep serving across the epoch")
-    } finally {
-      Staged.maxArtifacts = savedMax
-      Service.sweepEvery = savedEvery
-      Staged.clear()
-    }
-  }
-
-  test("epoch sweep latch: the boundary sweep queues behind an " +
-      "in-flight request's read hold — an evicted dir a concurrent " +
-      "pre-eviction frame may still read is never deleted mid-flight " +
-      "(r14 advice)") {
-    import org.apache.spark.sql.functions._
-    val Staged = graft.operators.Staged
-    val savedMax = Staged.maxArtifacts
-    val savedEvery = Service.sweepEvery
-    try {
-      Staged.clear()
-      Staged.maxArtifacts = 1
-      Service.sweepEvery = 1 // every request is a boundary
-      Service.resetEpoch()
-      // churn two artifacts through the budget-1 cache so one
-      // evicted dir sits on the trash list
-      val dead = {
-        val f = Staged.getOrBuild(spark, "svc-latch/dead") {
-          spark.range(3).select(col("id"))
-        }
-        Staged.getOrBuild(spark, "svc-latch/live") {
-          spark.range(4).select(col("id"))
-        }
-        java.nio.file.Paths.get(f.inputFiles.head
-          .replaceFirst("/[^/]*$", "").replaceFirst("^file:", ""))
-      }
-      assert(java.nio.file.Files.exists(dead))
-      // stand in for an in-flight request: hold the read side
-      Service.epochGate.readLock().lock()
-      val result = new java.util.concurrent.atomic.AtomicReference[String]()
-      val t = new Thread(() => result.set(Service.query(spark,
-        TestSpark.sfDir,
-        """{"from": "region", "select": ["r_name"],
-            "sort": ["r_regionkey"]}""")))
-      try {
-        t.start()
-        // the boundary request must QUEUE on the write lock while a
-        // reader is in flight — deterministic via the lock's queue
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        while (!Service.epochGate.hasQueuedThreads &&
-            System.nanoTime() < deadline)
-          java.util.concurrent.locks.LockSupport.parkNanos(1000000L)
-        assert(Service.epochGate.hasQueuedThreads,
-          "boundary request must block on the write lock while a " +
-            "request holds the read side")
-        assert(java.nio.file.Files.exists(dead),
-          "the sweep must not delete an evicted dir while a request " +
-            "is in flight")
-      } finally Service.epochGate.readLock().unlock()
-      t.join(30000)
-      assert(result.get != null, "queued request must complete " +
-        "after the in-flight reader drains")
-      assert(mapper.readTree(result.get).get("data").size === 5)
-      assert(!java.nio.file.Files.exists(dead),
-        "the sweep must reclaim the evicted dir once it runs")
-    } finally {
-      Staged.maxArtifacts = savedMax
-      Service.sweepEvery = savedEvery
-      Staged.clear()
-    }
+      assert(answers.distinct.size === 1,
+        "every request must return the same rows")
+      assert(viewFrame.count() === 5L)
+      assert(builds === 1, "the view's artifact is built once")
+    } finally Staged.clear()
   }
 }

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.SparkSpec
+import graft.operators.Lifecycle
 import org.apache.spark.sql.functions._
 
 class SemDedupSpec extends SparkSpec {
@@ -191,9 +192,9 @@ class SemDedupSpec extends SparkSpec {
     val dups = SemDedup.duplicates(e, $"vec_id", $"embedding",
       nlist = 2, threshold = 0.9)
     dups.collect()
-    assert(cachedRdds > before, "duplicates must persist its assignment")
+    assert(cachedRdds > before, "duplicates must checkpoint its assignment")
     Lifecycle.release(dups)
-    assert(cachedRdds === before, "release must drop the assignment cache")
+    assert(cachedRdds === before, "release must drop the assignment checkpoint")
     val means = KMeans.fit(e, $"vec_id", $"embedding", k = 2, iters = 2)
     means.collect()
     assert(cachedRdds > before, "fit returns a checkpoint-backed frame")

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.SparkSpec
+import graft.operators.Lifecycle
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {

@@ -101,103 +101,28 @@ class StagedSpec extends SparkSpec {
     assert(back.count() === 4L)
   }
 
-  test("the artifact cache is bounded: above maxArtifacts the least-" +
-      "recently-served artifacts are evicted and rebuild on demand") {
-    val saved = Staged.maxArtifacts
-    try {
-      Staged.clear() // deterministic start: budget applies to THIS set
-      Staged.maxArtifacts = 2
-      var builds = Map.empty[String, Int].withDefaultValue(0)
-      def get(k: String) = Staged.getOrBuild(spark, s"lru/$k") {
-        builds += k -> (builds(k) + 1); spark.range(3).select($"id")
-      }
-      get("a"); get("b")
-      get("a") // refresh a: LRU order is now  b < a
-      get("c") // over budget: evicts b, keeps a + c
-      assert(get("a").count() === 3L)
-      assert(builds("a") === 1, "a was touched — must not have been evicted")
-      get("b")
-      assert(builds("b") === 2, "b was least-recently-served — evicted, rebuilt")
-    } finally {
-      Staged.maxArtifacts = saved
-      Staged.clear()
-    }
-  }
-
-  test("a live dir that lost its success marker is trashed when the " +
-      "rebuild supersedes it — reclaimed by sweepTrash, never leaked " +
-      "(r13 advice)") {
+  test("a dir that lost its success marker is rebuilt in place") {
     try {
       Staged.clear()
       var builds = 0
       def get = Staged.getOrBuild(spark, "markerless/key") {
         builds += 1; spark.range(3).select($"id")
       }
-      val first = get
-      val firstDir = first.inputFiles.head
+      val firstDir = get.inputFiles.head
         .replaceFirst("/[^/]*$", "").replaceFirst("^file:", "")
-      // externally damage the live generation: drop its marker
+      // externally damage the artifact: drop its marker
       java.nio.file.Files.delete(
         java.nio.file.Paths.get(firstDir, "_SUCCESS"))
       val second = get
-      assert(builds === 2, "a marker-less live dir must rebuild")
+      assert(builds === 2, "a marker-less dir must rebuild")
       val secondDir = second.inputFiles.head
         .replaceFirst("/[^/]*$", "").replaceFirst("^file:", "")
-      assert(secondDir !== firstDir,
-        "rebuild must land in a fresh generation dir")
-      // deferred delete: the damaged dir's files are still readable
-      // by a pre-damage frame until the epoch boundary...
+      assert(secondDir === firstDir, "the rebuild replaces the key's dir")
       assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(firstDir)))
-      assert(first.count() === 3L)
-      // ...and the sweep reclaims it instead of leaking to JVM exit
-      Staged.sweepTrash()
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(firstDir)),
-        "superseded marker-less dir must be swept, not leaked")
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(secondDir)))
+        java.nio.file.Paths.get(secondDir, "_SUCCESS")))
       assert(second.count() === 3L)
+      get
+      assert(builds === 2, "the rebuilt artifact is served again")
     } finally Staged.clear()
-  }
-
-  test("eviction is deferred-delete: a frame obtained BEFORE the " +
-      "eviction stays readable, the rebuild lands in a fresh " +
-      "generation dir, and sweepTrash reclaims the old one") {
-    val saved = Staged.maxArtifacts
-    try {
-      Staged.clear()
-      Staged.maxArtifacts = 1
-      var vBuilds = 0
-      def victim = Staged.getOrBuild(spark, "defer/victim") {
-        vBuilds += 1; spark.range(6).select($"id")
-      }
-      val held = victim // live lazy plan over generation 1's files
-      val heldPath = held.inputFiles.head
-        .replaceFirst("/[^/]*$", "").replaceFirst("^file:", "")
-      // budget 1: requesting another key evicts the victim
-      Staged.getOrBuild(spark, "defer/usurper") {
-        spark.range(2).select($"id")
-      }
-      assert(held.count() === 6L,
-        "a pre-eviction frame must stay readable (deferred delete)")
-      // re-request rebuilds into a NEW generation; the held frame
-      // still reads its own files
-      val back = victim
-      assert(vBuilds === 2, "evicted key rebuilds on demand")
-      val backPath = back.inputFiles.head
-        .replaceFirst("/[^/]*$", "").replaceFirst("^file:", "")
-      assert(backPath !== heldPath,
-        "rebuild must land in a fresh generation dir")
-      assert(held.count() === 6L && back.count() === 6L)
-      // epoch boundary: sweepTrash reclaims evicted generations only
-      Staged.sweepTrash()
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(heldPath)),
-        "sweepTrash must delete the evicted generation")
-    } finally {
-      Staged.maxArtifacts = saved
-      Staged.clear()
-    }
   }
 }

@@ -20,13 +20,16 @@ object ExprParser {
 
   def parse(json: String): Expr = fromNode(mapper.readTree(json))
 
-  def fromNode(n: JsonNode): Expr = n.getNodeType match {
-    case JsonNodeType.STRING  => Var(n.asText)
-    case JsonNodeType.NUMBER  => Lit(num(n))
-    case JsonNodeType.BOOLEAN => Lit(java.lang.Boolean.valueOf(n.asBoolean))
-    case JsonNodeType.NULL | JsonNodeType.MISSING => Lit(null)
-    case JsonNodeType.OBJECT  => fromObject(n)
-    case t => throw new IllegalArgumentException(s"bad expression node: $t")
+  def fromNode(n: JsonNode): Expr = {
+    if (n == null) throw new IllegalArgumentException("missing expression")
+    n.getNodeType match {
+      case JsonNodeType.STRING  => Var(n.asText)
+      case JsonNodeType.NUMBER  => Lit(num(n))
+      case JsonNodeType.BOOLEAN => Lit(java.lang.Boolean.valueOf(n.asBoolean))
+      case JsonNodeType.NULL | JsonNodeType.MISSING => Lit(null)
+      case JsonNodeType.OBJECT  => fromObject(n)
+      case t => throw new IllegalArgumentException(s"bad expression node: $t")
+    }
   }
 
   private def num(n: JsonNode): Any =

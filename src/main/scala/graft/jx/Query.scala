@@ -88,10 +88,25 @@ final case class WindowClause(
     range: Option[(Option[Long], Option[Long])],
     where: Option[Expr])
 
+/** JSON -> [[JxQuery]]. Malformed input — unparseable JSON, a missing
+  * or wrongly typed clause, an unknown operator — fails with an
+  * `IllegalArgumentException` naming the problem (unknown tables fail
+  * the same way, at resolution in `Catalog`). */
 object QueryParser {
   private val mapper = new ObjectMapper()
 
-  def parse(json: String): JxQuery = fromNode(mapper.readTree(json))
+  def parse(json: String): JxQuery = fromNode(
+    try mapper.readTree(json)
+    catch {
+      case e: com.fasterxml.jackson.core.JsonProcessingException =>
+        throw new IllegalArgumentException(
+          s"malformed JX JSON: ${e.getOriginalMessage}", e)
+    })
+
+  /** A required field of a JSON object. */
+  private def field(n: JsonNode, name: String): JsonNode =
+    Option(n.get(name)).getOrElse(
+      throw new IllegalArgumentException(s"missing '$name' in: $n"))
 
   def fromNode(q: JsonNode): JxQuery = {
     val fromNodeV = Option(q.get("from")).getOrElse(
@@ -106,7 +121,11 @@ object QueryParser {
     val edges = Option(q.get("edges")).map(parseEdges).getOrElse(Nil)
     val windows = Option(q.get("window")).map(parseWindows).getOrElse(Nil)
     val sort = Option(q.get("sort")).map(parseSort).getOrElse(Nil)
-    val limit = Option(q.get("limit")).map(_.asLong)
+    val limit = Option(q.get("limit")).map { n =>
+      if (n.isIntegralNumber && n.asLong >= 0) n.asLong
+      else throw new IllegalArgumentException(
+        s"limit must be a non-negative integer, got: $n")
+    }
     val format = Option(q.get("format")).map(_.asText).getOrElse("list")
     val approx = Option(q.get("approx")).exists(_.asBoolean)
     JxQuery(from, select, selectAll, where, groupby, edges, windows, sort,
@@ -195,28 +214,27 @@ object QueryParser {
     }
     typ match {
       case "set" =>
-        val parts = d.get("partitions").elements.asScala.toSeq
+        val parts = field(d, "partitions").elements.asScala.toSeq
         if (parts.forall(p => p.isObject && p.has("where")))
           DomainSpec.PredicateDomain(parts.map { p =>
-            (p.get("name").asText, ExprParser.fromNode(p.get("where")))
+            (field(p, "name").asText, ExprParser.fromNode(p.get("where")))
           })
         else
           DomainSpec.SetDomain(parts.map(scalarValue))
       case "time" =>
-        val iv = d.get("interval")
+        val iv = field(d, "interval")
+        val (min, max) = (dateText(field(d, "min")), dateText(field(d, "max")))
         intervalMonths(iv) match {
-          case Some(m) => DomainSpec.TimeDomain(
-            dateText(d.get("min")), dateText(d.get("max")), 0L, m)
-          case None => DomainSpec.TimeDomain(
-            dateText(d.get("min")), dateText(d.get("max")),
-            intervalSeconds(iv))
+          case Some(m) => DomainSpec.TimeDomain(min, max, 0L, m)
+          case None => DomainSpec.TimeDomain(min, max, intervalSeconds(iv))
         }
       case "duration" =>
-        DomainSpec.DurationDomain(durationSeconds(d.get("min")),
-          durationSeconds(d.get("max")), durationSeconds(d.get("interval")))
+        DomainSpec.DurationDomain(durationSeconds(field(d, "min")),
+          durationSeconds(field(d, "max")),
+          durationSeconds(field(d, "interval")))
       case "range" =>
-        DomainSpec.RangeDomain(d.get("min").asDouble, d.get("max").asDouble,
-                               d.get("interval").asDouble)
+        DomainSpec.RangeDomain(field(d, "min").asDouble,
+          field(d, "max").asDouble, field(d, "interval").asDouble)
       case "default" =>
         DomainSpec.DefaultDomain(
           Option(d.get("limit")).map(_.asInt).getOrElse(1000))
@@ -282,7 +300,7 @@ object QueryParser {
 
   private def parseWindows(n: JsonNode): Seq[WindowClause] = nodes(n).map {
     w =>
-      val name = w.get("name").asText
+      val name = field(w, "name").asText
       val value = Option(w.get("value")).map(ExprParser.fromNode)
       val agg = Option(w.get("aggregate")).map(_.asText)
       val edges = Option(w.get("edges")).map(nodes(_).map(ExprParser.fromNode))

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.operators.Lifecycle
+import graft.operators.{Lifecycle, Local}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -71,40 +71,24 @@ object KMeans {
     require(iters > 0, "k-means needs at least one Lloyd round")
     val c = emb.select(id.as("vec_id"), vec.cast("array<double>").as("cv"))
     // DRIVER FAST PATH (guide §1.2 — a bounded fit loop pays 2+ jobs
-    // per Lloyd round regardless of data size): under the row budget
-    // the (id, vector) table is pulled once and the loop replays
-    // in-memory. BIT-IDENTICAL only when every vector element is
-    // integer-valued (|x| < 2^40): per-(cell, dim) avg() sums are
-    // then EXACT doubles in any order, and the row-local cosine
-    // assignment replays the same fused loop — exactly the property
-    // the oracles already rely on (the q107 lloydRoundSql precedent).
-    // Non-integer embeddings or a big corpus fall through to the
-    // distributed loop unchanged (checked AFTER the collect, so the
-    // gate inspects the actual data, not an assumption). KMeansSpec
-    // pins local ≡ distributed incl. zero vectors and empty cells.
-    val localBudget = java.lang.Long.getLong(
-      "spark.graft.kmeans.localVecBudget", 500000L)
-    // BYTE-aware companion budget: the collect pulls rows×dims
-    // doubles, so a row count alone under-gates high-dim corpora (a
-    // 1024-dim corpus of 490k rows is ~4 GB — it must stay
-    // distributed, and the dimension check has to run BEFORE the
-    // collect, not after). Default 16M cells ≡ the old behaviour at
-    // the 32-dim bench corpora (500k × 32), ~128 MB of payload.
-    val cellBudget = java.lang.Long.getLong(
-      "spark.graft.kmeans.localCellBudget", 16000000L)
-    val preGate = c.schema("vec_id").dataType ==
-      org.apache.spark.sql.types.LongType && {
-      // ONE pre-collect aggregate probes row count AND the widest
-      // vector (same job count as the old bare count())
-      val g = c.agg(count(lit(1)), max(size(col("cv"))))
-        .collect()(0)
-      val n = g.getLong(0)
-      val dims = if (g.isNullAt(1)) 0L else g.getInt(1).toLong
-      n > 0 && n <= localBudget && dims > 0 &&
-        n <= cellBudget / dims
-    }
-    if (preGate) {
-      val raw = c.collect()
+    // per Lloyd round regardless of data size): the (id, vector) table
+    // is pulled in ONE job under the driver byte budget (rows × dims
+    // doubles are what the bytes count, so a high-dim corpus is gated
+    // by its real size) and the loop replays in-memory. BIT-IDENTICAL
+    // only when every vector element is integer-valued: per-(cell,
+    // dim) avg() sums are then EXACT doubles in any order, and the
+    // row-local cosine assignment replays the same fused loop —
+    // exactly the property the oracles already rely on (the q107
+    // lloydRoundSql precedent). Non-integer embeddings or a corpus
+    // past the budget fall through to the distributed loop unchanged
+    // (checked AFTER the collect, so the gate inspects the actual
+    // data, not an assumption). KMeansSpec pins local ≡ distributed
+    // incl. zero vectors and empty cells.
+    val collected =
+      if (c.schema("vec_id").dataType != org.apache.spark.sql.types.LongType)
+        None
+      else Local.collectWithin(c)
+    collected.foreach { raw =>
       val clean = !raw.exists(r => r.isNullAt(0) || r.isNullAt(1) ||
         r.getAs[scala.collection.Seq[Any]](1).exists(_ == null))
       if (clean && raw.nonEmpty) {
@@ -120,7 +104,7 @@ object KMeans {
           .map(math.abs).foldLeft(0.0)(math.max)
         val d0 = rows.head._2.length
         if (integral && rows.length.toDouble * maxAbs < 9.0e15 &&
-            rows.forall(_._2.length == d0))
+            d0 > 0 && rows.forall(_._2.length == d0))
           return fitLocal(emb.sparkSession, rows, k, iters)
       }
     }

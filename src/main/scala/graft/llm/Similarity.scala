@@ -182,16 +182,21 @@ object Similarity {
     * and [[SemDedup.incrementalDuplicates]]. */
   private[llm] def indexCentroids(spark: org.apache.spark.sql.SparkSession,
                                   path: String, index: DataFrame,
-                                  nlist: Int): DataFrame =
-    try spark.read.parquet(path + "/_centroids")
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        System.err.println(
-          s"[graft] no _centroids sidecar under $path — rebuilding " +
-            "the lowest-id quantizer with a full-index scan (rewrite " +
-            "the index to restore partition-pruned probe cost)")
-        centroids(index.select(col("vec_id"), col("cv")), nlist)
+                                  nlist: Int): DataFrame = {
+    // test for the sidecar instead of letting the read fail: a failed
+    // read is a failed query every execution listener reports
+    val sidecar = new org.apache.hadoop.fs.Path(path, "_centroids")
+    if (sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(sidecar))
+      spark.read.parquet(sidecar.toString)
+    else {
+      System.err.println(
+        s"[graft] no _centroids sidecar under $path — rebuilding " +
+          "the lowest-id quantizer with a full-index scan (rewrite " +
+          "the index to restore partition-pruned probe cost)")
+      centroids(index.select(col("vec_id"), col("cv")), nlist)
     }
+  }
 
   /** Single-row DF holding the ordered centroid (id, vector) structs —
     * the deterministic coarse quantizer shared by the IVF paths (and by

@@ -40,23 +40,34 @@ object Graph {
     * [[pageRank]] loop. */
   private val MatEvery = 6
 
-  /** Edge budget for the DRIVER fast paths of the bounded-round graph
-    * loops (guide §1.2: the fastest distributed algorithm for a small
-    * graph is none at all — a fixed-round loop pays 2+ Spark jobs per
-    * round regardless of data size). At or below the budget the
-    * deduped edge list is pulled once and the loop runs in-memory,
-    * producing BIT-IDENTICAL output (integer ops replay exactly;
-    * the deterministic PageRank fold is the same sorted left fold the
-    * engine's aggregate() runs — GraphSpec pins local ≡ distributed
-    * for every loop); above it the checkpointed distributed loop runs
-    * unchanged — at 100 TB a real graph simply stays on the cluster.
-    * Same discipline as Bpe.trainLocal and the connectedComponents
-    * fast path. 4M edges ≈ 64 MB on the driver. */
-  private[graft] def localEdgeBudget: Long =
-    java.lang.Long.getLong("spark.graft.graph.localEdgeBudget", 4000000L)
-
   private def isLong(df: DataFrame, c: String): Boolean =
     df.schema(c).dataType == org.apache.spark.sql.types.LongType
+
+  /** The DRIVER fast paths of the bounded-round graph loops (guide
+    * §1.2: the fastest distributed algorithm for a small graph is none
+    * at all — a fixed-round loop pays 2+ Spark jobs per round
+    * regardless of data size) pull their edge list with
+    * [[Local.collectWithin]]: ONE job that returns the (c1, c2) long
+    * pairs if they fit [[Local.budget]] bytes, else `None` (also for
+    * non-long columns), and the loop runs in-memory, producing
+    * BIT-IDENTICAL output (integer ops replay exactly; the
+    * deterministic PageRank fold is the same sorted left fold the
+    * engine's aggregate() runs — GraphSpec pins local ≡ distributed
+    * for every loop). Past the budget the distributed loop runs
+    * unchanged — at 100 TB a real graph simply stays on the cluster.
+    * Same discipline as Bpe.trainLocal and the connectedComponents
+    * fast path. */
+  private def edgesWithin(df: DataFrame, c1: String, c2: String)
+      : Option[Array[(Long, Long)]] =
+    if (!isLong(df, c1) || !isLong(df, c2)) None
+    else Local.collectWithin(df.select(col(c1), col(c2)))
+      .map(_.map(r => (r.getLong(0), r.getLong(1))))
+
+  /** Cap on the driver-side wedge probes of the triangle and
+    * link-prediction fast paths: one per 4 bytes of the byte budget
+    * (16M at the 64 MiB default, about 7 per edge that fits). Past it
+    * the distributed join, which spreads the wedges, runs instead. */
+  private def wedgeCap: Long = Local.budget / 4
 
   private def longLongSchema(n1: String, n2: String)
       : org.apache.spark.sql.types.StructType =
@@ -125,7 +136,7 @@ object Graph {
     // distributed join (which spreads the wedges) handles it
     val wedgeVol = out.valuesIterator.map { vs =>
       vs.length.toLong * vs.length.toLong }.sum
-    if (wedgeVol > 4L * localEdgeBudget) return None
+    if (wedgeVol > wedgeCap) return None
     val tri = mutable.HashMap.empty[Long, Long]
     def bump(nd: Long): Unit = tri.update(nd, tri.getOrElse(nd, 0L) + 1L)
     out.foreach { case (u, vs) =>
@@ -196,32 +207,25 @@ object Graph {
     * id equi-joins AQE can skew-split. */
   def triangleCounts(edges: DataFrame): DataFrame = {
     val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val canon = edges.select(
+    val canonical = edges.select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-      .persist(mad)
     // DRIVER FAST PATH: the degree-oriented enumeration is exact
     // integer counting — a driver replay (same orientation, same
     // wedge bound Σ min-deg² ≈ O(m^1.5)) is identical by construction
-    // (GraphSpec law). One count job against the persisted canon
-    // decides; past the budget the join pipeline runs unchanged.
-    if (isLong(canon, "a") && isLong(canon, "b") &&
-        canon.count() <= localEdgeBudget) {
-      val rows = canon.collect().map(r => (r.getLong(0), r.getLong(1)))
-      triangleCountsLocalMap(rows) match {
-        case Some(tri) =>
-          canon.unpersist(blocking = false)
-          val nodes = tri.keys.toArray
-          java.util.Arrays.sort(nodes)
-          return rowsToDf(edges.sparkSession,
-            nodes.toSeq.map(nd =>
-              org.apache.spark.sql.Row(nd, tri(nd))),
-            longLongSchema("node", "triangles"))
-        case None => () // wedge volume too big: distributed path below
+    // (GraphSpec law). Past the budget or the wedge cap the join
+    // pipeline runs unchanged.
+    edgesWithin(canonical, "a", "b").flatMap(triangleCountsLocalMap)
+      .foreach { tri =>
+        val nodes = tri.keys.toArray
+        java.util.Arrays.sort(nodes)
+        return rowsToDf(edges.sparkSession,
+          nodes.toSeq.map(nd => org.apache.spark.sql.Row(nd, tri(nd))),
+          longLongSchema("node", "triangles"))
       }
-    }
+    val canon = canonical.persist(mad)
     val deg = canon.select(col("a").as("node"))
       .unionAll(canon.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))
@@ -279,40 +283,30 @@ object Graph {
     // pinned-order IEEE division, all replayed locally (GraphSpec
     // law) — 2.0 * tri.toDouble / (d*(d-1)).toDouble matches the
     // distributed cast-then-divide exactly.
-    if (isLong(canon, "a") && isLong(canon, "b")) {
-      val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val probe = canon.persist(mad)
-      if (probe.count() <= localEdgeBudget) {
-        val rows = probe.collect().map(r => (r.getLong(0), r.getLong(1)))
-        triangleCountsLocalMap(rows) match {
-          case Some(tri) =>
-            probe.unpersist(blocking = false)
-            val dl = degLocal(rows)
-            val nodes = dl.keys.toArray
-            java.util.Arrays.sort(nodes)
-            return rowsToDf(edges.sparkSession,
-              nodes.toSeq.map { nd =>
-                val d = dl(nd)
-                val t = tri.getOrElse(nd, 0L)
-                val coeff =
-                  if (d >= 2) (2.0 * t.toDouble) / (d * (d - 1)).toDouble
-                  else 0.0
-                org.apache.spark.sql.Row(nd, d, t, coeff)
-              },
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("node",
-                  org.apache.spark.sql.types.LongType, nullable = false),
-                org.apache.spark.sql.types.StructField("d",
-                  org.apache.spark.sql.types.LongType, nullable = false),
-                org.apache.spark.sql.types.StructField("triangles",
-                  org.apache.spark.sql.types.LongType, nullable = false),
-                org.apache.spark.sql.types.StructField("coeff",
-                  org.apache.spark.sql.types.DoubleType,
-                  nullable = false))))
-          case None => () // wedge volume too big: distributed below
-        }
-      }
-      probe.unpersist(blocking = false)
+    edgesWithin(canon, "a", "b").foreach { rows =>
+      triangleCountsLocalMap(rows).foreach { tri =>
+        val dl = degLocal(rows)
+        val nodes = dl.keys.toArray
+        java.util.Arrays.sort(nodes)
+        return rowsToDf(edges.sparkSession,
+          nodes.toSeq.map { nd =>
+            val d = dl(nd)
+            val t = tri.getOrElse(nd, 0L)
+            val coeff =
+              if (d >= 2) (2.0 * t.toDouble) / (d * (d - 1)).toDouble
+              else 0.0
+            org.apache.spark.sql.Row(nd, d, t, coeff)
+          },
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("node",
+              org.apache.spark.sql.types.LongType, nullable = false),
+            org.apache.spark.sql.types.StructField("d",
+              org.apache.spark.sql.types.LongType, nullable = false),
+            org.apache.spark.sql.types.StructField("triangles",
+              org.apache.spark.sql.types.LongType, nullable = false),
+            org.apache.spark.sql.types.StructField("coeff",
+              org.apache.spark.sql.types.DoubleType, nullable = false))))
+      } // wedge volume too big: distributed below
     }
     val deg = canon.select(col("a").as("node"))
       .unionAll(canon.select(col("b").as("node")))
@@ -346,22 +340,20 @@ object Graph {
       : DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
     val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).distinct().persist(mad)
-    val seed = seeds.select(col("node")).distinct()
-      .withColumn("hop", lit(0)).persist(mad)
-    seed.count()
+    val distinctEdges = edges.select(col("src"), col("dst")).distinct()
+    val seedNodes = seeds.select(col("node")).distinct()
     // DRIVER FAST PATH: min-hop BFS is pure integer frontier
     // expansion — exact on the driver (GraphSpec law). Long node ids
     // only (the pipeline-staleness caller uses string ids and falls
     // through to the distributed loop).
-    if (isLong(e, "src") && isLong(e, "dst") && isLong(seed, "node") &&
-        e.count() <= localEdgeBudget) {
-      val eRows = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val sRows = seed.collect().map(_.getLong(0))
-      e.unpersist(blocking = false)
-      seed.unpersist(blocking = false)
-      return bfsHopsLocal(edges.sparkSession, eRows, sRows, maxHops)
-    }
+    if (isLong(seedNodes, "node"))
+      for (eRows <- edgesWithin(distinctEdges, "src", "dst");
+           sRows <- Local.collectWithin(seedNodes))
+        return bfsHopsLocal(edges.sparkSession, eRows,
+          sRows.map(_.getLong(0)), maxHops)
+    val e = distinctEdges.persist(mad)
+    val seed = seedNodes.withColumn("hop", lit(0)).persist(mad)
+    seed.count()
     // visited = lazy union of MATERIALIZED per-hop frontier caches —
     // each round costs exactly ONE action (the frontier count that
     // doubles as the lineage barrier); the anti-join unions k cached
@@ -453,31 +445,27 @@ object Graph {
   def linkPrediction(edges: DataFrame, topK: Int,
                      maxWedgeDegree: Option[Long] = None): DataFrame = {
     val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val canon = edges.select(
+    val canonical = edges.select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-      .persist(mad)
     // DRIVER FAST PATH: exact integer cn/jaccard with a total-order
     // top-K (jac_num desc, x, y) — a driver replay is identical
-    // (GraphSpec law). Guarded TWICE: the edge budget, and the actual
+    // (GraphSpec law). Guarded TWICE: the byte budget, and the actual
     // wedge volume Σ d·(d−1)/2 over wedge centers (known exactly once
     // degrees are in hand) — a hub-heavy uncapped graph falls through
     // to the distributed join, which AQE can skew-split.
-    if (isLong(canon, "a") && isLong(canon, "b") &&
-        canon.count() <= localEdgeBudget) {
-      val rows = canon.collect().map(r => (r.getLong(0), r.getLong(1)))
+    edgesWithin(canonical, "a", "b").foreach { rows =>
       val dl = degLocal(rows)
       val wedgeVol = dl.valuesIterator
         .filter(d => maxWedgeDegree.forall(d <= _))
         .map(d => d * (d - 1) / 2).sum
-      if (wedgeVol <= 4L * localEdgeBudget) {
-        canon.unpersist(blocking = false)
+      if (wedgeVol <= wedgeCap)
         return linkPredictionLocal(edges.sparkSession, rows, dl, topK,
           maxWedgeDegree)
-      }
     }
+    val canon = canonical.persist(mad)
     val adj = canon.select(col("a").as("n"), col("b").as("nbr"))
       .unionAll(canon.select(col("b").as("n"), col("a").as("nbr")))
     val deg = adj.groupBy(col("n")).agg(count(lit(1)).as("d"))
@@ -580,18 +568,10 @@ object Graph {
       .distinct()
     // DRIVER FAST PATH: the loop is pure integer arithmetic with
     // pinned tie-breaks (plurality count, min label), so a driver
-    // replay is exact by construction (GraphSpec law). One count job
-    // against the persisted canonical edges decides; past the budget
-    // the persisted probe is dropped and the distributed loop runs
-    // unchanged off the lazy plan.
-    if (isLong(canon, "a") && isLong(canon, "b")) {
-      val probe = canon.persist(mad)
-      if (probe.count() <= localEdgeBudget) {
-        val rows = probe.collect().map(r => (r.getLong(0), r.getLong(1)))
-        probe.unpersist(blocking = false)
-        return labelPropagationLocal(edges.sparkSession, rows, rounds)
-      }
-      probe.unpersist(blocking = false)
+    // replay is exact by construction (GraphSpec law). Past the budget
+    // the distributed loop runs unchanged off the lazy plan.
+    edgesWithin(canon, "a", "b").foreach { rows =>
+      return labelPropagationLocal(edges.sparkSession, rows, rounds)
     }
     val adj = canon.select(col("a").as("node"), col("b").as("nbr"))
       .unionAll(canon.select(col("b").as("node"), col("a").as("nbr")))
@@ -698,32 +678,30 @@ object Graph {
                restart: Option[DataFrame] = None): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = (if (weighted) edges.select(col("src"), col("dst"), col("w"))
-             else edges.select(col("src"), col("dst"), lit(1L).as("w")))
-      .persist(mad)
+    val edgeList =
+      if (weighted) edges.select(col("src"), col("dst"), col("w"))
+      else edges.select(col("src"), col("dst"), lit(1L).as("w"))
     // DRIVER FAST PATH (deterministic mode only — its value-sorted
     // fold IS the replayable reduction; the plain-sum scale mode has
     // no driver-reproducible ordering, so it always stays
-    // distributed): under [[localEdgeBudget]] the edge list is pulled
-    // once and the fixed-round loop replays in-memory with the exact
-    // IEEE op sequence of the distributed plan — bit-identical by
-    // construction, pinned by GraphSpec's local≡distributed laws.
-    // The count is one cheap job against the just-persisted blocks;
-    // past the budget the loop below runs unchanged.
-    if (deterministic && isLong(e, "src") && isLong(e, "dst") &&
-        e.schema("w").dataType == org.apache.spark.sql.types.LongType &&
+    // distributed): under [[Local.budget]] the edge list is pulled in
+    // one job and the fixed-round loop replays in-memory with the
+    // exact IEEE op sequence of the distributed plan — bit-identical
+    // by construction, pinned by GraphSpec's local≡distributed laws.
+    // Past the budget the loop below runs unchanged.
+    if (deterministic && isLong(edgeList, "src") &&
+        isLong(edgeList, "dst") && isLong(edgeList, "w") &&
         restart.forall(s => s.schema.head.dataType ==
-          org.apache.spark.sql.types.LongType) &&
-        e.count() <= localEdgeBudget) {
-      val rows = e.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2)))
-      e.unpersist(blocking = false)
-      val seedArr = restart.map(s =>
-        s.select(col(s.columns.head)).distinct().collect()
-          .map(_.getLong(0)))
-      return pageRankLocalDet(edges.sparkSession, rows, iterations,
-        damping, danglingMass, seedArr)
-    }
+          org.apache.spark.sql.types.LongType))
+      Local.collectWithin(edgeList).foreach { rs =>
+        val rows = rs.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        val seedArr = restart.map(s =>
+          s.select(col(s.columns.head)).distinct().collect()
+            .map(_.getLong(0)))
+        return pageRankLocalDet(edges.sparkSession, rows, iterations,
+          damping, danglingMass, seedArr)
+      }
+    val e = edgeList.persist(mad)
     // deg/nodes/N are referenced EVERY round — stage them once so no
     // iteration re-shuffles the edge list for its side frames
     val deg = e.groupBy(col("src")).agg(sum(col("w")).as("outdeg"))
@@ -928,18 +906,10 @@ object Graph {
     require(k >= 1 && rounds >= 1, "need k >= 1 and rounds >= 1")
     var e = edges.select(col("src"), col("dst"))
     // DRIVER FAST PATH: peeling is integer degree censuses + set
-    // filters — exact on the driver (GraphSpec law). One count job
-    // against the persisted probe decides; past the budget the lazy
-    // round-chained plan below runs unchanged.
-    if (isLong(e, "src") && isLong(e, "dst")) {
-      val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val probe = e.persist(mad)
-      if (probe.count() <= localEdgeBudget) {
-        val rows = probe.collect().map(r => (r.getLong(0), r.getLong(1)))
-        probe.unpersist(blocking = false)
-        return kCorePeelLocal(edges.sparkSession, rows, k, rounds)
-      }
-      probe.unpersist(blocking = false)
+    // filters — exact on the driver (GraphSpec law). Past the budget
+    // the lazy round-chained plan below runs unchanged.
+    edgesWithin(e, "src", "dst").foreach { rows =>
+      return kCorePeelLocal(edges.sparkSession, rows, k, rounds)
     }
     for (_ <- 1 to rounds) {
       val bad = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))

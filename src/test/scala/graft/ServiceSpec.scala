@@ -38,6 +38,35 @@ class ServiceSpec extends SparkSpec {
     assert(data.get(3).asLong === 0L) // dense empty partition
   }
 
+  test("malformed JX ends in IllegalArgumentException: truncated " +
+      "JSON, wrongly typed clauses, unknown operator, unknown table") {
+    val bad = Seq(
+      "truncated JSON" -> """{"from": "orders", "where": {"eq":""",
+      "empty body" -> "",
+      "not an object" -> """["orders"]""",
+      "text limit" -> """{"from": "orders", "limit": "x"}""",
+      "negative limit" -> """{"from": "orders", "limit": -1}""",
+      "array where" -> """{"from": "orders", "where": []}""",
+      "number groupby" -> """{"from": "orders", "groupby": 5}""",
+      "number sort" -> """{"from": "orders", "sort": 5}""",
+      "domain without bounds" -> """{"from": "orders", "edges": [{"name":
+          "p", "value": "o_totalprice", "domain": {"type": "range"}}],
+          "format": "cube"}""",
+      "unknown operator" ->
+        """{"from": "orders", "where": {"frobnicate": ["o_orderkey", 1]}}""",
+      "unknown table" -> """{"from": "no_such_table"}""")
+    val wrong = bad.flatMap { case (what, json) =>
+      try {
+        Service.query(spark, TestSpark.sfDir, json)
+        Some(s"$what: answered")
+      } catch {
+        case _: IllegalArgumentException => None
+        case e: Throwable => Some(s"$what: ${e.getClass.getName}")
+      }
+    }
+    assert(wrong.isEmpty, wrong.mkString("; "))
+  }
+
   test("service default limit bounds unlimited setop queries") {
     val r = q("""{"from": "lineitem", "select": ["l_orderkey"]}""")
     assert(r.get("data").size <= Service.DefaultLimit)

@@ -216,10 +216,10 @@ class DedupSpec extends SparkSpec {
   test("connectedComponents: driver fast path ≡ distributed loop (same labels)") {
     // chains, a cycle, crossing merges and singleton edges — enough
     // structure that a wrong union order would show. The local path
-    // runs by default (edge count under budget); forcing the budget
-    // to 0 through the system property exercises the distributed
-    // pointer-jump loop on the SAME input, and the labels must match
-    // exactly (both compute min-reachable-id per node).
+    // runs by default (pairs under the byte budget); forcing the
+    // budget to 0 through the system property exercises the
+    // distributed pointer-jump loop on the SAME input, and the labels
+    // must match exactly (both compute min-reachable-id per node).
     val pairs = (Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), // cycle
         (7L, 9L), (9L, 8L), (30L, 31L)) ++
       (100L until 140L).map(i => (i, i + 1)) ++ // long chain
@@ -227,7 +227,7 @@ class DedupSpec extends SparkSpec {
       .toDF("a", "b")
     val local = Dedup.connectedComponents(pairs, col("a"), col("b"))
       .as[(Long, Long)].collect().toMap
-    val key = "spark.graft.cc.localEdgeBudget"
+    val key = "spark.graft.localBytes"
     System.setProperty(key, "0")
     try {
       val dist = Dedup.connectedComponents(pairs, col("a"), col("b"))
@@ -243,6 +243,68 @@ class DedupSpec extends SparkSpec {
     val out = Dedup.clusterSurvivors(df, col("id"),
       pairs, col("a"), col("b")).as[Long].collect().sorted
     assert(out.toSeq === Seq(1L, 4L, 5L, 7L, 8L))
+  }
+
+  test("clusterSurvivors under the byte budget runs at most 2 Spark " +
+      "jobs, the caller's collect included; budget 0 keeps the survivors") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val mark = "graft.spec.jobs"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(mark)))
+          .foreach(seen.add)
+    }
+    def tagged[A](tag: String)(f: => A): A = {
+      sc.setLocalProperty(mark, tag)
+      try f finally sc.setLocalProperty(mark, null)
+    }
+    val df = (1L to 40L).toDF("id")
+    val pairs = Seq((1L, 2L), (3L, 2L), (3L, 1L), (6L, 5L), (20L, 21L))
+      .toDF("a", "b")
+    def survivors = Dedup.clusterSurvivors(df, col("id"), pairs,
+      col("a"), col("b")).as[Long].collect().sorted.toSeq
+    sc.addSparkListener(listener)
+    try {
+      val local = tagged("local")(survivors)
+      // listener events arrive in order: once the sentinel job's start
+      // is seen, every job of the call above has been counted
+      tagged("sentinel")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains("sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains("sentinel"), "listener never saw the sentinel")
+      val jobs = seen.asScala.count(_ == "local")
+      assert(jobs <= 2, s"clusterSurvivors + collect ran $jobs jobs")
+      assert(local === (1L to 40L).filterNot(Set(2L, 3L, 6L, 21L)))
+      val key = "spark.graft.localBytes"
+      System.setProperty(key, "0")
+      val dist = try survivors finally System.clearProperty(key)
+      assert(dist === local)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("clusterSurvivors with more driver-held losers than fit an " +
+      "in-list anti-joins them: same survivors as the distributed path") {
+    // one star around 1 with 1500 leaves: 1500 losers, past the
+    // in-list size (a star keeps the distributed loop to a few rounds)
+    val df = (0L to 1505L).toDF("id")
+    val pairs = (2L to 1501L).map(i => (i, 1L)).toDF("a", "b")
+    def frame = Dedup.clusterSurvivors(df, col("id"), pairs,
+      col("a"), col("b"))
+    def survivors = frame.as[Long].collect().sorted.toSeq
+    val localFrame = frame
+    assert(localFrame.queryExecution.analyzed.collectFirst {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j.joinType
+    }.contains(org.apache.spark.sql.catalyst.plans.LeftAnti))
+    val local = localFrame.as[Long].collect().sorted.toSeq
+    assert(local === Seq(0L, 1L) ++ (1502L to 1505L))
+    val key = "spark.graft.localBytes"
+    System.setProperty(key, "0")
+    val dist = try survivors finally System.clearProperty(key)
+    assert(dist === local)
   }
 
   test("clusterSurvivors with no pairs is the identity") {

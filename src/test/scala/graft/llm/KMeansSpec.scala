@@ -77,9 +77,9 @@ class KMeansSpec extends SparkSpec {
     def m = meansMap(KMeans.fit(iv, $"vec_id", $"embedding",
       k = 2, iters = 3))
     val local = m
-    System.setProperty("spark.graft.kmeans.localVecBudget", "0")
+    System.setProperty("spark.graft.localBytes", "0")
     val dist = try m
-      finally System.clearProperty("spark.graft.kmeans.localVecBudget")
+      finally System.clearProperty("spark.graft.localBytes")
     assert(local.keySet === dist.keySet)
     local.foreach { case (k2, v) =>
       assert(java.lang.Double.doubleToLongBits(v) ===
@@ -102,13 +102,14 @@ class KMeansSpec extends SparkSpec {
       (3L, Seq(0L, 10L, 2L)), (5L, Seq(2L, 8L, 1L)),
       (6L, Seq(0L, 0L, 0L))
     ).toDF("vec_id", "embedding")
-    // 7 rows × 3 dims = 21 collected cells: a budget of 20 must
-    // refuse the collect even though the ROW budget (500k) is nowhere
-    // near — the dimension check runs BEFORE any driver pull
-    System.setProperty("spark.graft.kmeans.localCellBudget", "20")
+    // 7 rows × 3 dims = 168 bytes of doubles alone: a byte budget of
+    // 167 must refuse the collect although 7 rows are nowhere near any
+    // row count — the budget counts every dimension's bytes, and no
+    // more than the budget ever reaches the driver
+    System.setProperty("spark.graft.localBytes", "167")
     val dist = try KMeans.fit(iv, $"vec_id", $"embedding",
         k = 2, iters = 3)
-      finally System.clearProperty("spark.graft.kmeans.localCellBudget")
+      finally System.clearProperty("spark.graft.localBytes")
     // the distributed loop returns a checkpoint-backed frame (a
     // LogicalRDD); the driver fast path returns a LocalRelation —
     // the plan shape IS the proof no collect happened

@@ -179,8 +179,29 @@ class SimilaritySpec extends SparkSpec {
     // simulate a pre-sidecar index (or a deleted sidecar)
     val sc = new java.io.File(path, "_centroids")
     sc.listFiles().foreach(_.delete()); assert(sc.delete())
-    val probed = Similarity.ivfProbeIndexed(spark, path,
-      qs, col("vec_id"), col("embedding"), k = 3, nlist = 8, nprobe = 2)
+    // the missing sidecar is detected without running a failing query
+    val failed = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+                    qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "graft_sentinel"))
+          flushed.countDown()
+      def onFailure(f: String,
+                    qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = failed.incrementAndGet()
+    }
+    spark.listenerManager.register(listener)
+    val probed = try {
+      val p = Similarity.ivfProbeIndexed(spark, path,
+        qs, col("vec_id"), col("embedding"), k = 3, nlist = 8, nprobe = 2)
+      // events arrive in order: the sentinel's success follows them all
+      spark.range(1).toDF("graft_sentinel").collect()
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      p
+    } finally spark.listenerManager.unregister(listener)
+    assert(failed.get === 0, "probing for the sidecar ran a failing query")
     val direct = Similarity.ivfTopK(emb, col("vec_id"), col("embedding"),
       qs, col("vec_id"), col("embedding"), k = 3, nlist = 8, nprobe = 2)
     assert(probed.select("query_id", "vec_id").as[(Long, Long)]

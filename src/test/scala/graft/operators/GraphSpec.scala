@@ -285,13 +285,13 @@ class GraphSpec extends SparkSpec {
     assert(m(Graph.kCorePeelConverged(chainOnly, k = 2)).isEmpty)
   }
 
-  /** Run `f` with the driver fast path DISABLED (edge budget 0), so
+  /** Run `f` with the driver fast path DISABLED (byte budget 0), so
     * the distributed loop is exercised; the default call takes the
     * local path on these small fixtures. */
   private def distributed[A](f: => A): A = {
-    System.setProperty("spark.graft.graph.localEdgeBudget", "0")
+    System.setProperty("spark.graft.localBytes", "0")
     try f
-    finally System.clearProperty("spark.graft.graph.localEdgeBudget")
+    finally System.clearProperty("spark.graft.localBytes")
   }
 
   /** Sorted row images with doubles compared by BIT PATTERN — the

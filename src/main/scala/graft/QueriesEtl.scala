@@ -144,7 +144,7 @@ private[graft] object QueriesEtl {
         events.withColumn("day", to_date(col("ts")))
           .repartition(col("event_type"), col("day")), out,
         Seq("event_type", "day"))
-      spark.read.parquet(out)
+      graft.sources.Sinks.read(spark, out)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"),
              countDistinct(col("day")).as("n_days"))
@@ -161,7 +161,7 @@ private[graft] object QueriesEtl {
         .toString
       graft.sources.Sinks.writeRollover(events, out, col("ts"),
         retainDays = 10, now = new java.sql.Timestamp(1706659200000L))
-      spark.read.parquet(out)
+      graft.sources.Sinks.read(spark, out)
         .groupBy(col("__date"))
         .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
         .orderBy(col("__date"))

@@ -517,7 +517,7 @@ private[graft] object QueriesStreaming {
     // --- q143's loop closed as a STREAM: the change log drains as
     //     three time-ordered micro-batches (file mtimes pin the
     //     order), each advancing the parquet-persisted dimension via
-    //     mergeType2 with the materialize-then-swap discipline; the
+    //     mergeType2 and committed over the old one; the
     //     oracle is STILL the full rebuild — three chained merges must
     //     reproduce the batch dimension bit-for-bit ---
     "q144_stream_scd2" -> { (spark, dir) =>

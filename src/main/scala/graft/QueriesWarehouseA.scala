@@ -275,7 +275,7 @@ private[graft] object QueriesWarehouseA {
 
     // --- sink compaction: the documents table written as 32 tiny
     //     files (a micro-batch sink's droppings), compacted to
-    //     ~1000-row files with an atomic directory swap. The oracled
+    //     ~1000-row files in one manifest commit. The oracled
     //     invariant is CONTENT IDENTITY — the compacted table must
     //     hash-match the original source rows; the file-count
     //     collapse itself is asserted in SinksSpec ---
@@ -285,7 +285,7 @@ private[graft] object QueriesWarehouseA {
       val tmp = Scratch.dir("graft_q128").toString + "/frag"
       docs.repartition(32).write.parquet(tmp)
       graft.sources.Sinks.compact(spark, tmp, targetRowsPerFile = 1000)
-      spark.read.parquet(tmp).orderBy(col("doc_id"))
+      graft.sources.Sinks.read(spark, tmp).orderBy(col("doc_id"))
     },
 
 
@@ -326,7 +326,7 @@ private[graft] object QueriesWarehouseA {
       graft.sources.Sinks.deleteByKey(spark, tmp, "doc_id",
         docs.filter(pmod(col("doc_id"), lit(7)) === 3)
           .select(col("doc_id")))
-      spark.read.parquet(tmp).orderBy(col("doc_id"))
+      graft.sources.Sinks.read(spark, tmp).orderBy(col("doc_id"))
     },
 
 

@@ -37,14 +37,21 @@ object MozLog {
     Set("suite_start", "test_start", "test_status", "test_end", "suite_end")
 
   /** Typed flatMap parse: JSON line -> zero-or-one [[Line]].
-    * `from_json` does the decode (null struct on malformed JSON); the
-    * flatMap applies the per-action ADT validation — unknown actions,
-    * a test_status without test+status, or a test_end without a test
-    * drop the line. */
+    * `from_json` does the decode; a line it cannot decode whole
+    * (malformed JSON, or a field of the wrong type such as a string
+    * `time`) lands in the corrupt-record column and is dropped rather
+    * than kept with that field null. The flatMap applies the
+    * per-action ADT validation — unknown actions, a test_status
+    * without test+status, or a test_end without a test drop the
+    * line. */
   def parse(lines: DataFrame, line: Column): Dataset[Line] = {
     val spark = lines.sparkSession
     import spark.implicits._
-    lines.select(from_json(line, LineSchema).as("j")).select("j.*")
+    val corrupt = "_corrupt_record"
+    lines.select(from_json(line, LineSchema.add(corrupt, StringType),
+        Map("columnNameOfCorruptRecord" -> corrupt)).as("j"))
+      .filter(col(s"j.$corrupt").isNull)
+      .select(LineSchema.fieldNames.map(n => col(s"j.$n")).toIndexedSeq: _*)
       .as[Line]
       .flatMap { l =>
         if (l.action == null || !KnownActions(l.action)) None

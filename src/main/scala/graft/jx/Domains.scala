@@ -24,6 +24,12 @@ import org.apache.spark.sql.types._
 object Domains {
   import DomainSpec._
 
+  /** Dense-cube cell caps (see [[denseCube]]): above `MaxCubeCells`
+    * the query fails; above `BroadcastCubeCells` the dense join
+    * shuffles the sparse side instead of broadcasting it. */
+  val MaxCubeCells = 100000L
+  val BroadcastCubeCells = 32768L
+
   /** Bucket expression + ordered domain DataFrame for one edge.
     * Domain DF columns: value (named edge.name) + __ord for output order.
     * `membershipFromDomain` marks data-driven domains (DefaultDomain):
@@ -246,27 +252,22 @@ object Domains {
     // their product crosses the broadcast threshold do we pay a count()
     // of each (tiny) domain to get the true product — a DefaultDomain
     // bound is its limit, but the real domain may be far smaller.
-    // Above `spark.graft.cube.maxCells` the query fails loudly (the
+    // Above `MaxCubeCells` the query fails loudly (the
     // Formats.toCube:53 precedent); between the broadcast threshold and
     // the cap, the dense join runs as a shuffle join instead of the
     // unconditional broadcast(sparse).
-    val capCells = spark.conf.getOption("spark.graft.cube.maxCells")
-      .map(_.toLong).getOrElse(100000L)
-    val bcastCells = spark.conf.getOption("spark.graft.cube.broadcastCells")
-      .map(_.toLong).getOrElse(32768L)
     def cellProduct(size: (EdgeClause, EdgePlan) => BigInt): BigInt =
       edges.zip(plans).map { case (e, p) =>
         size(e, p) + (if (e.allowNulls) 1 else 0) }.product
     val staticBound = cellProduct((_, p) => BigInt(p.maxCardinality))
     val cells =
-      if (staticBound <= bcastCells) staticBound
+      if (staticBound <= BroadcastCubeCells) staticBound
       else cellProduct((_, p) => BigInt(p.domain.count()))
-    if (cells > capCells) throw new IllegalArgumentException(
+    if (cells > MaxCubeCells) throw new IllegalArgumentException(
       s"dense cube would materialize $cells cells " +
         s"(domain cardinality product over ${names.mkString(", ")}), " +
-        s"above spark.graft.cube.maxCells=$capCells — narrow the edge " +
-        "domains (smaller default-domain limits, coarser ranges) or " +
-        "raise the cap")
+        s"above the cap of $MaxCubeCells cells — narrow the edge " +
+        "domains (smaller default-domain limits, coarser ranges)")
     val joinCond = names.map(n => domainAll(n) <=> sparse(s"__bucket_$n"))
       .reduce(_ && _)
     // the hashed (right) side is the POST-AGGREGATION sparse cube, whose
@@ -277,7 +278,7 @@ object Domains {
     // Catalyst's size ESTIMATE for the sparse side is a few KB per
     // column and would auto-broadcast a 10^5-row sparse cube anyway
     val dense =
-      if (cells <= bcastCells)
+      if (cells <= BroadcastCubeCells)
         domainAll.join(broadcast(sparse), joinCond, "left")
       else domainAll.join(sparse.hint("merge"), joinCond, "left")
 

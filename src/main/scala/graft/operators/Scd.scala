@@ -135,47 +135,31 @@ object Scd {
     * the dimension is always current after every batch and the raw
     * log is never re-read — the streaming half of the CDC loop,
     * mirroring [[graft.llm.SemDedup.streamingDedup]]'s
-    * state-on-disk discipline. The merged frame is fully materialized
-    * into a scratch directory BEFORE the old dimension is swapped out
-    * (two atomic renames, the [[graft.sources.Sinks.compact]] swap),
-    * closing the read-your-own-input hazard. Batch ordering is the
-    * source's: a time-split file source with `maxFilesPerTrigger=1`
-    * satisfies the strictly-later contract per entity. Returns the
-    * final dimension. */
+    * state-on-disk discipline. Each batch's merged frame is written
+    * and then committed over the old dimension in one
+    * [[graft.sources.Sinks.replace]]; the old files stay on disk while
+    * the merge still reads them, closing the read-your-own-input
+    * hazard. Batch ordering is the source's: a time-split file source
+    * with `maxFilesPerTrigger=1` satisfies the strictly-later contract
+    * per entity. Returns the final dimension. */
   def streamingMergeType2(spark: org.apache.spark.sql.SparkSession,
                           stream: DataFrame, entity: Column, ts: Column,
                           attr: Column, dimPath: String,
                           checkpointDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import graft.sources.{Sinks, TableLog}
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val exists = Files.isDirectory(Paths.get(dimPath))
         val merged =
-          if (exists)
-            mergeType2(spark.read.parquet(dimPath), batch, entity, ts,
-              attr)
+          if (TableLog.live(dimPath).nonEmpty)
+            mergeType2(Sinks.read(spark, dimPath), batch, entity, ts, attr)
           else buildType2(batch, entity, ts, attr)
-        val tmp = dimPath + ".__next"
-        merged.write.mode("overwrite").parquet(tmp)
-        if (exists) {
-          val old = dimPath + ".__old"
-          Files.move(Paths.get(dimPath), Paths.get(old),
-            StandardCopyOption.ATOMIC_MOVE)
-          Files.move(Paths.get(tmp), Paths.get(dimPath),
-            StandardCopyOption.ATOMIC_MOVE)
-          org.apache.commons.io.FileUtils.deleteDirectory(
-            new java.io.File(old))
-        } else {
-          Files.move(Paths.get(tmp), Paths.get(dimPath),
-            StandardCopyOption.ATOMIC_MOVE)
-        }
-        ()
+        Sinks.replace(merged, dimPath)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(dimPath)
+    Sinks.read(spark, dimPath)
   }
 
   /** Enrich fact rows with the dimension state in force at the fact's

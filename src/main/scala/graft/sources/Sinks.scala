@@ -1,6 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.nio.file.Paths
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sink layer (SURVEY.md §2a). The reference's sinks are S3 gzipped
@@ -16,14 +18,20 @@ import org.apache.spark.sql.functions._
   *    directories, and "too-old" docs are filtered at write;
   *  - split -> cache once, write N times (each sink sees identical data
   *    without recomputing the pipeline).
+  *
+  * Every write to a sink table is one [[TableLog]] commit: the new files
+  * are staged, moved in, and published with the next manifest, so a
+  * reader through [[graft.tables.Catalog]] or [[read]] sees the table
+  * before or after the write and nothing in between, and picks up the
+  * new generation by itself.
   */
 object Sinks {
 
-  /** S2: write as partitioned columnar blocks. */
+  /** S2: append partitioned columnar blocks. */
   def writeBlocks(df: DataFrame, path: String, partitionCols: Seq[String],
                   format: String = "parquet"): Unit =
-    df.write.mode("append").partitionBy(partitionCols: _*)
-      .format(format).save(path)
+    append(path)(dst =>
+      df.write.partitionBy(partitionCols: _*).format(format).save(dst))
 
   /** S6: time-rolled sink — route rows to `date=YYYY-MM-DD` partitions,
     * dropping docs older than `retainDays` relative to `now`. */
@@ -31,53 +39,74 @@ object Sinks {
                     retainDays: Int, now: java.sql.Timestamp): Unit = {
     val cutoff = new java.sql.Timestamp(
       now.getTime - retainDays * 86400000L)
-    df.filter(ts >= lit(cutoff))
+    append(path)(dst => df.filter(ts >= lit(cutoff))
       .withColumn("__date", date_format(ts, "yyyy-MM-dd"))
-      .write.mode("append").partitionBy("__date").parquet(path)
+      .write.partitionBy("__date").parquet(dst))
   }
 
-  /** S7: fan one computed frame out to several sinks, computing it once. */
+  /** Replace a sink table's content with `df` in one commit; the old
+    * files stay readable by requests already planned over them. */
+  def replace(df: DataFrame, path: String): Unit = {
+    val added = TableLog.stage(path)(dst => df.write.parquet(dst))
+    TableLog.commit(path)(_ => added)
+  }
+
+  private def append(path: String)(write: String => Unit): Unit = {
+    val added = TableLog.stage(path)(write)
+    TableLog.commit(path)(_ ++ added)
+  }
+
+  /** S7: fan one computed frame out to several sinks, computing it
+    * once; each sink commits on its own. */
   def split(df: DataFrame, sinks: Seq[DataFrame => Unit]): Unit = {
     val cached = df.persist()
     try sinks.foreach(_(cached))
     finally cached.unpersist()
   }
 
+  /** The sink table at `path` as of its newest commit (a directory no
+    * commit has touched reads as Spark lists it). */
+  def read(spark: SparkSession, path: String): DataFrame =
+    TableLog.read(spark, path, TableLog.generation(path), "parquet", Map.empty)
+
   /** Compaction — the operational answer to the small-files problem
     * every appending sink (micro-batch streams, per-block writers)
-    * accumulates: rewrite a parquet directory into
-    * ceil(rows / targetRowsPerFile) files and atomically swap it in
-    * (write to `<path>.__compact`, move the old dir aside, rename —
-    * the window without a live dir is two renames). Content is
-    * UNCHANGED — that is the oracled invariant (q128 reads the
-    * compacted table back against the original's oracle) — only the
-    * file layout changes: fewer, larger files mean fewer scan tasks,
-    * fewer open/seek round-trips, and healthier row-group sizes at
-    * 100 TB. Returns (filesBefore, filesAfter). */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
+    * accumulates: the live parquet files whose footer row count is
+    * below `targetRowsPerFile` are bin-packed into
+    * ceil(rows / targetRowsPerFile) files per partition directory, and
+    * one commit swaps them for the packed ones. Files at or above the
+    * target keep their paths, so the cost follows the new small files,
+    * not the table's history. Content is UNCHANGED — the oracled
+    * invariant (q128 reads the compacted table back against the
+    * original's oracle); fewer, larger files mean fewer scan tasks and
+    * healthier row-group sizes. Returns the live file counts
+    * (before, after). */
+  def compact(spark: SparkSession, path: String,
               targetRowsPerFile: Long): (Int, Int) = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    def parquetFiles(p: String): Int = {
-      val d = Paths.get(p)
-      if (!Files.isDirectory(d)) 0
-      else Files.list(d).filter(f =>
-        f.toString.endsWith(".parquet")).count().toInt
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sessionState.newHadoopConf()
+    def rows(f: String): Long = {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(Paths.get(path, f).toUri), conf))
+      try reader.getRecordCount finally reader.close()
     }
-    val before = parquetFiles(path)
-    val df = spark.read.parquet(path)
-    val n = df.count()
-    val files = math.max(1L, (n + targetRowsPerFile - 1)
-      / targetRowsPerFile).toInt
-    val tmp = path + ".__compact"
-    df.repartition(files).write.mode("overwrite").parquet(tmp)
-    val old = path + ".__old"
-    Files.move(Paths.get(path), Paths.get(old),
-      StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), Paths.get(path),
-      StandardCopyOption.ATOMIC_MOVE)
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(old))
-    (before, parquetFiles(path))
+    val live = TableLog.live(path)
+    val small = live.map(f => f -> rows(f)).filter(_._2 < targetRowsPerFile)
+      .toMap
+    def packedCount(fs: Seq[String]): Int = math.max(1L,
+      (fs.map(small).sum + targetRowsPerFile - 1) / targetRowsPerFile).toInt
+    // pack a directory's small files only where that lowers the count
+    val packs = small.keys.toSeq.groupBy(dirOf)
+      .filter { case (_, fs) => packedCount(fs) < fs.size }
+    if (packs.isEmpty) (live.size, live.size)
+    else {
+      val packed = packs.values.flatten.toSet
+      val added = rewrite(spark, path, packed.toSeq)((dir, df) =>
+        df.repartition(packedCount(packs(dir))))
+      TableLog.commit(path)(_.filterNot(packed) ++ added)
+      (live.size, live.size - packed.size + added.size)
+    }
   }
 
   /** Copy-on-write DELETE by key — the right-to-be-forgotten /
@@ -89,45 +118,47 @@ object Sinks {
     * allows — [[graft.operators.ZOrder]] writes exactly that layout);
     * untouched files are never read in full, never rewritten. At
     * 100 TB with clustered keys, deleting a user costs a handful of
-    * file rewrites, not a table rewrite.
-    *
-    * The swap (write rewritten files to a scratch dir, unlink the hit
-    * files, move the replacements in under fresh names) has a brief
-    * non-transactional window — a production lakehouse closes it with
-    * a manifest/snapshot commit (Iceberg/Delta-style), which is
-    * metadata-layer machinery out of this engine's scope; the content
-    * invariant itself is oracled end-to-end (q136).
-    * Returns (filesRewritten, rowsDeleted). */
-  def deleteByKey(spark: org.apache.spark.sql.SparkSession, path: String,
+    * file rewrites, not a table rewrite. One commit swaps the hit
+    * files for their rewrites; the content invariant is oracled
+    * end-to-end (q136). Returns (filesRewritten, rowsDeleted). */
+  def deleteByKey(spark: SparkSession, path: String,
                   keyCol: String, victims: DataFrame): (Int, Long) = {
-    import java.nio.file.{Files, Paths}
+    val root = Paths.get(path).toAbsolutePath.normalize
     val vict = victims.select(col(keyCol)).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val t = spark.read.parquet(path)
+      val hits = read(spark, path)
         .withColumn("__file", col("_metadata.file_path"))
-      val hits = t.join(broadcast(vict), Seq(keyCol), "left_semi")
-      val hitFiles = hits.select(col("__file")).distinct()
-        .collect().map(_.getString(0)).sorted
+        .join(broadcast(vict), Seq(keyCol), "left_semi")
+      val hitFiles = hits.select(col("__file")).distinct().collect()
+        .map(r => root.relativize(
+          Paths.get(new java.net.URI(r.getString(0)))).toString)
+        .sorted.toSeq
       if (hitFiles.isEmpty) (0, 0L)
       else {
         val deleted = hits.count()
-        val survivors = spark.read
-          .parquet(hitFiles.toIndexedSeq: _*)
-          .join(broadcast(vict), Seq(keyCol), "left_anti")
-        val tmp = path + ".__cow"
-        survivors.write.mode("overwrite").parquet(tmp)
-        hitFiles.foreach(u => Files.delete(Paths.get(new java.net.URI(u))))
-        val stamp = java.util.UUID.randomUUID().toString.take(8)
-        Files.list(Paths.get(tmp)).filter(_.toString.endsWith(".parquet"))
-          .forEach { f =>
-            Files.move(f,
-              Paths.get(path, s"cow-$stamp-${f.getFileName.toString}"))
-          }
-        org.apache.commons.io.FileUtils.deleteDirectory(
-          new java.io.File(tmp))
+        val added = rewrite(spark, path, hitFiles)((_, df) =>
+          df.join(broadcast(vict), Seq(keyCol), "left_anti"))
+        val hit = hitFiles.toSet
+        TableLog.commit(path)(_.filterNot(hit) ++ added)
         (hitFiles.length, deleted)
       }
     } finally { vict.unpersist(); () }
   }
+
+  private def dirOf(f: String): String =
+    Option(Paths.get(f).getParent).fold("")(_.toString)
+
+  /** Stage `f(dir, rows)` for each partition directory's share of
+    * `files`, read without its partition columns and written back under
+    * the same directory, so partition values stay in the path. */
+  private def rewrite(spark: SparkSession, path: String, files: Seq[String])(
+      f: (String, DataFrame) => DataFrame): Vector[String] =
+    TableLog.stage(path) { dst =>
+      files.groupBy(dirOf).foreach { case (dir, fs) =>
+        val in = TableLog.scan(spark, Paths.get(path, dir).toString,
+          fs.map(x => Paths.get(x).getFileName.toString))
+        f(dir, in).write.parquet(Paths.get(dst, dir).toString)
+      }
+    }
 }

@@ -12,12 +12,18 @@ import org.apache.spark.sql.functions._
   * columns — yields the EXPLODED nested level (one row per array element),
   * like JX `from: "task.artifacts"`. Parent scalar columns are retained
   * (prefixed) so nested queries can still reference ancestors.
+  *
+  * A sink table (one with a [[graft.sources.TableLog]]) resolves to
+  * exactly the files of its newest manifest, so a query sees one
+  * commit's table, never files a later commit dropped or has not yet
+  * published; any other table reads as Spark lists its directory.
   */
 final class Catalog(spark: SparkSession, dir: String) {
   import org.apache.spark.sql.types._
+  import Catalog.Resolved
 
-  private val cache = scala.collection.mutable.Map[String, DataFrame]()
   private val sessionCache = Catalog.resolvedFor(spark)
+  private val views = scala.collection.mutable.LinkedHashMap[String, DataFrame]()
 
   /** Formats a table file/dir may use (S1: the reference reads JSON-lines
     * blocks; parquet is the columnar at-rest form we prefer). */
@@ -48,71 +54,79 @@ final class Catalog(spark: SparkSession, dir: String) {
     * a registered name is resolved whole. Registered views are
     * visible to `meta.columns` / `meta.tables` introspection with a
     * `virtual` marker (MetaColumns). */
-  def register(name: String, df: DataFrame): Unit = {
-    registered += name
-    cache.put(name, df)
-  }
+  def register(name: String, df: DataFrame): Unit = views.put(name, df)
 
-  private val registered = scala.collection.mutable.LinkedHashSet[String]()
+  /** Names registered via [[register]], in registration order. */
+  def registeredViews: Seq[String] = views.keys.toSeq
 
-  /** Names registered via [[register]], in registration order —
-    * distinct from base tables resolved into the same cache. */
-  def registeredViews: Seq[String] = registered.toSeq
-
-  def table(name: String): DataFrame = cache.getOrElseUpdate(name, {
+  def table(name: String): DataFrame = views.getOrElse(name, name match {
     // virtual metadata tables, queryable like any other (JX
     // `from: "meta.columns"` — SURVEY.md §2 dynamic schema); they
     // reflect THIS instance's registered views, so never the shared
     // session cache
-    if (name == "meta.columns")
-      return graft.meta.MetaColumns.table(spark, this)
-    if (name == "meta.tables")
-      return graft.meta.MetaColumns.tables(spark, this)
-    // BASE-table resolution is shared SESSION-wide (guide §6: file
-    // listing / footer reads are driver-side, single-threaded work):
-    // resolving a table costs a directory listing + TWO parquet
-    // footer opens (nano-timestamp detection + schema inference) +
-    // an InMemoryFileIndex build — ~0.13 s per call, and a 414-query
-    // sweep re-resolves the same handful of static files thousands
-    // of times. The cache holds the LAZY plan (file paths + schema),
-    // never data: every action still scans parquet. Registered
-    // views stay per-instance (the getOrElseUpdate above); a fresh
-    // data dir is a fresh key, so tests writing their own tmp dirs
-    // are unaffected.
-    sessionCache.computeIfAbsent(s"$dir $name", _ => {
-      val parts = name.split('.').toList
-      // longest prefix that is a base table
-      val baseNames = baseTables.toSet
-      val (base, nested) = (1 to parts.length).reverse
-        .map(i => (parts.take(i).mkString("."), parts.drop(i)))
-        .find { case (b, _) => baseNames.contains(b) }
-        .getOrElse(throw new IllegalArgumentException(
-          s"unknown table: $name (have: ${baseTables.mkString(", ")})"))
-      val path = pathOf(base)
-      val df =
-        if (path.endsWith(".json") || path.endsWith(".jsonl"))
-          spark.read.json(path) // schema inferred from data (JSON-lines S1)
-        else if (path.endsWith(".csv"))
-          spark.read.option("header", "true").option("inferSchema", "true")
-            .csv(path)
-        else if (path.endsWith(".orc")) spark.read.orc(path)
-        else readParquet(path)
-      nested.foldLeft(df)(explodeLevel)
-    })
+    case "meta.columns" => graft.meta.MetaColumns.table(spark, this)
+    case "meta.tables"  => graft.meta.MetaColumns.tables(spark, this)
+    case _              => base(name)
   })
+
+  /** BASE-table resolution is shared SESSION-wide (guide §6: file
+    * listing / footer reads are driver-side, single-threaded work):
+    * resolving a table costs a directory listing, a parquet footer
+    * open (nano-timestamp detection), schema inference and a file
+    * index build, and a 414-query sweep re-resolves the same handful
+    * of static files thousands of times. The cache holds one entry per
+    * table: the LAZY plan (file paths + schema, never data) and the
+    * [[graft.sources.TableLog]] generation it was resolved at. A sink
+    * table is re-resolved as soon as a newer manifest exists, so
+    * readers follow commits without any writer telling them; checking
+    * costs one directory read per call (a failed one for a table no
+    * commit has touched). */
+  private def base(name: String): DataFrame =
+    sessionCache.compute(s"$dir $name", (_, old) =>
+      if (old != null &&
+          old.generation == graft.sources.TableLog.generation(old.path)) old
+      else resolve(name)).df
+
+  private def resolve(name: String): Resolved = {
+    val parts = name.split('.').toList
+    // longest prefix that is a base table
+    val baseNames = baseTables.toSet
+    val (base, nested) = (1 to parts.length).reverse
+      .map(i => (parts.take(i).mkString("."), parts.drop(i)))
+      .find { case (b, _) => baseNames.contains(b) }
+      .getOrElse(throw new IllegalArgumentException(
+        s"unknown table: $name (have: ${baseTables.mkString(", ")})"))
+    val path = pathOf(base)
+    val gen = graft.sources.TableLog.generation(path)
+    def read(format: String, options: (String, String)*) =
+      graft.sources.TableLog.read(spark, path, gen, format, options.toMap)
+    val df =
+      if (path.endsWith(".json") || path.endsWith(".jsonl"))
+        read("json") // schema inferred from data (JSON-lines S1)
+      else if (path.endsWith(".csv"))
+        read("csv", "header" -> "true", "inferSchema" -> "true")
+      else if (path.endsWith(".orc")) read("orc")
+      else readParquet(path, gen, read("parquet"))
+    Resolved(path, gen, nested.foldLeft(df)(explodeLevel))
+  }
 
   /** Read parquet, transparently handling TIMESTAMP(NANOS) columns (which
     * Spark's vectorized reader rejects): such columns are read as long
     * nanos via the legacy flag and converted to TimestampType (micros).
-    * Column detection is from the parquet footer — no per-table
-    * hardcoding, works for any source file. */
-  private def readParquet(path: String): DataFrame = {
-    val nanos = nanoTimestampCols(path)
-    if (nanos.isEmpty) spark.read.parquet(path)
+    * Column detection is from the parquet footer of one live file — no
+    * per-table hardcoding, works for any source file. */
+  private def readParquet(path: String, gen: Long,
+                          read: => DataFrame): DataFrame = {
+    val f = new java.io.File(path)
+    val first =
+      if (!f.isDirectory) Some(f)
+      else graft.sources.TableLog.files(path, gen)
+        .find(_.endsWith(".parquet")).map(new java.io.File(f, _))
+    val nanos = first.fold(Seq.empty[String])(nanoTimestampCols)
+    if (nanos.isEmpty) read
     else {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(path)
-      nanos.foldLeft(raw) { (d, c) =>
+      nanos.foldLeft(read) { (d, c) =>
         // integer `div`, not `/`: long / long is DOUBLE division in Spark
         // and rounds the microsecond (53-bit mantissa) — truncation must
         // match the engines that read the nanos natively.
@@ -126,17 +140,11 @@ final class Catalog(spark: SparkSession, dir: String) {
   }
 
   /** Names of top-level TIMESTAMP(NANOS) columns per the parquet footer. */
-  private def nanoTimestampCols(path: String): Seq[String] = {
+  private def nanoTimestampCols(file: java.io.File): Seq[String] = {
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-    val f = new java.io.File(path)
-    val file =
-      if (f.isDirectory)
-        f.listFiles().find(_.getName.endsWith(".parquet"))
-          .getOrElse(return Nil)
-      else f
     val conf = spark.sessionState.newHadoopConf()
     val reader = ParquetFileReader.open(
       HadoopInputFile.fromPath(
@@ -153,13 +161,10 @@ final class Catalog(spark: SparkSession, dir: String) {
     } finally reader.close()
   }
 
-  /** Resolved plans are invalidated when a base table's FILE SET or
-    * mtime changes (a sink overwriting a dir it later re-reads):
-    * callers that rewrite a table under a live Catalog call this. */
-  def invalidate(name: String): Unit = {
-    cache.remove(name)
-    sessionCache.remove(s"$dir $name")
-  }
+  /** Drop the session's resolved plan of `name`. No longer needed for
+    * correctness: a sink table's commits are picked up by themselves
+    * (see [[base]]). Kept only for the callers that still make it. */
+  def invalidate(name: String): Unit = sessionCache.remove(s"$dir $name")
 
   /** Explode one nested array-of-struct level, keeping parent scalars. */
   private def explodeLevel(df: DataFrame, field: String): DataFrame = {
@@ -176,22 +181,25 @@ final class Catalog(spark: SparkSession, dir: String) {
 }
 
 object Catalog {
+  /** A base table's plan, resolved at `generation` of the table at
+    * `path` (-1: no manifest). */
+  private[graft] final case class Resolved(path: String, generation: Long,
+                                           df: DataFrame)
+
   /** Session-wide resolved-plan cache, keyed "(dir) (name)" inside a
     * weak per-session map (a stopped session's plans must be GC-able
     * — a DataFrame pins its SparkSession). Shared across Catalog
-    * INSTANCES because every query helper constructs a fresh Catalog:
-    * the instance-local cache alone made each `tbl()` call re-pay
-    * resolution. */
+    * INSTANCES because every query helper constructs a fresh Catalog. */
   private val perSession = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())
+      java.util.concurrent.ConcurrentHashMap[String, Resolved]]())
 
-  private[tables] def resolvedFor(spark: SparkSession)
-      : java.util.concurrent.ConcurrentHashMap[String, DataFrame] =
+  private[graft] def resolvedFor(spark: SparkSession)
+      : java.util.concurrent.ConcurrentHashMap[String, Resolved] =
     perSession.synchronized {
       var m = perSession.get(spark)
       if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+        m = new java.util.concurrent.ConcurrentHashMap[String, Resolved]()
         perSession.put(spark, m)
       }
       m

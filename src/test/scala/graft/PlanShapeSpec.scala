@@ -259,9 +259,10 @@ class PlanShapeSpec extends SparkSpec {
   test("dense-cube guard: a product between the broadcast threshold " +
       "and the cap plans a NON-broadcast dense join and stays dense") {
     import org.apache.spark.sql.functions._
-    // 250 x 250 = 62,500 cells: above the default broadcastCells
-    // (32,768), under maxCells (100,000) — the sparse side must not
-    // be broadcast, and the result must still be the full dense cube
+    // 250 x 250 = 62,500 cells: above Domains.BroadcastCubeCells
+    // (32,768), under Domains.MaxCubeCells (100,000) — the sparse side
+    // must not be broadcast, and the result must still be the full
+    // dense cube
     val wide = spark.range(62500L).select(
       (col("id") % 250).as("a"), expr("id div 250").as("b"))
     val parts = (0 until 250).mkString("[", ",", "]")
@@ -276,7 +277,7 @@ class PlanShapeSpec extends SparkSpec {
     val df = graft.jx.Runner.runOn(wide, q)
     assert(!df.queryExecution.executedPlan.toString
       .contains("BroadcastHashJoin"),
-      "above spark.graft.cube.broadcastCells the dense join must " +
+      "above Domains.BroadcastCubeCells the dense join must " +
         "shuffle the sparse side, not broadcast it")
     assert(df.count() === 62500L)
   }

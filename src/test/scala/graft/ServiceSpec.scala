@@ -153,8 +153,9 @@ class ServiceSpec extends SparkSpec {
             "select": [{"name": "n", "aggregate": "count"}]}""",
         Map("wide_guard" -> wide))
     }
-    assert(ex.getMessage.contains("spark.graft.cube.maxCells"),
-      s"guard must name the cap conf key, got: ${ex.getMessage}")
+    assert(ex.getMessage.contains(
+        s"cap of ${graft.jx.Domains.MaxCubeCells} cells"),
+      s"guard must name the cell cap, got: ${ex.getMessage}")
   }
 
   test("registered LLM-output views are queryable through the service") {

@@ -90,17 +90,17 @@ class SinksSpec extends SparkSpec {
       concat(lit("v"), $"id").as("payload"))
     rows.repartition(32).write.parquet(out)
     val before = rows.collect().map(_.toString).sorted
+    val oldFiles = TableLog.live(out).toSet
     val (nBefore, nAfter) = Sinks.compact(spark, out,
       targetRowsPerFile = 500)
     assert(nBefore === 32 && nAfter === 2,
       s"expected 32 -> 2 files, got $nBefore -> $nAfter")
-    val after = spark.read.parquet(out).collect()
+    val after = Sinks.read(spark, out).collect()
       .map(_.toString).sorted
     assert(after.toSeq === before.toSeq, "content must be unchanged")
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(out + ".__old")))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(out + ".__compact")))
+    val live = TableLog.live(out)
+    assert(live.size === 2 && live.forall(f => !oldFiles.contains(f)),
+      s"the old layout must leave the live set, got $live")
   }
 
   test("deleteByKey: only victim-bearing files are rewritten; " +
@@ -112,10 +112,7 @@ class SinksSpec extends SparkSpec {
     val rows = spark.range(1000).select($"id",
       concat(lit("v"), $"id").as("payload"))
     rows.repartitionByRange(10, $"id").write.parquet(out)
-    def listing() = java.nio.file.Files.list(
-        java.nio.file.Paths.get(out))
-      .filter(_.toString.endsWith(".parquet"))
-      .toArray.map(_.toString).toSet
+    def listing() = TableLog.live(out).toSet
     val before = listing()
     val victims = spark.range(100, 150).toDF("id")
     val (rewritten, deleted) =
@@ -126,9 +123,9 @@ class SinksSpec extends SparkSpec {
     val after = listing()
     // untouched files survive with identical paths
     assert((before -- after).size === rewritten)
-    assert(after.count(_.contains("cow-")) > 0)
+    assert((after -- before).nonEmpty, "the rewritten files must be live")
     // content = source minus victims
-    val got = spark.read.parquet(out).select($"id").as[Long]
+    val got = Sinks.read(spark, out).select($"id").as[Long]
       .collect().sorted.toSeq
     assert(got === ((0L until 100L) ++ (150L until 1000L)).toSeq)
     // deleting a key that is absent is a no-op

@@ -8,8 +8,10 @@ Usage: python3 tools/check.py [sfdir] [outdir]
   3. compares to the Spark parquet output: columns sorted by name, rows
      sorted by all columns, exact value match (floats compared to 1e-9
      after the queries' own rounding).
+  An oracle query that fails itself prints `FAIL <q>: oracle error: ...`.
+  DuckDB spills its temp files into <outdir>/.duckdb_tmp.
 """
-import json, math, sys
+import glob, json, math, os, sys
 import duckdb
 
 sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -18,7 +20,9 @@ outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
-con = duckdb.connect()
+# DuckDB spills to temp files under the output dir, not the cwd
+con = duckdb.connect(
+    config={"temp_directory": os.path.join(outdir, ".duckdb_tmp")})
 for t in TABLES:
     con.execute(
         f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
@@ -58,8 +62,6 @@ def val_eq(a, b):
 
 def rows_eq(a, b):
     return len(a) == len(b) and all(val_eq(x, y) for x, y in zip(a, b))
-
-import glob, os
 
 # manifest of queries Verify ATTEMPTED (written before any runs): a
 # query that crashed inside Verify leaves no output dir — with the
@@ -104,11 +106,18 @@ for name, sql in sorted(oracle.items()):
             f"SELECT * FROM '{outdir}/{name}/*.parquet'")
         spark_cols = [d[0] for d in spark_rel.description]
         spark_rows = spark_rel.fetchall()
+    except Exception as e:
+        print(f"FAIL {name}: {e}")
+        fails += 1
+        continue
+    try:
         duck_rel = con.execute(sql)
         duck_cols = [d[0] for d in duck_rel.description]
         duck_rows = duck_rel.fetchall()
     except Exception as e:
-        print(f"FAIL {name}: {e}")
+        # the oracle itself failed (e.g. DuckDB out of memory): still a
+        # failure, reported apart from an engine-side mismatch
+        print(f"FAIL {name}: oracle error: {e}")
         fails += 1
         continue
     s_rows, s_cols = canon(spark_rows, spark_cols)
@@ -132,7 +141,5 @@ for name, sql in sorted(oracle.items()):
         fails += 1
     else:
         print(f"PASS {name} ({len(s_rows)} rows)")
-
-def _dummy(): pass
 
 sys.exit(1 if fails else 0)

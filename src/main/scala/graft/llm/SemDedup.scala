@@ -125,15 +125,6 @@ object SemDedup {
     emb.join(dups, id === col("dup_id"), "left_anti")
   }
 
-  /** Fitted-quantizer survivors — [[semanticDedup]] with a
-    * [[KMeans.fit]] centroid table. */
-  def semanticDedupFitted(emb: DataFrame, id: Column, vec: Column,
-                          means: DataFrame, threshold: Double): DataFrame = {
-    val dups = duplicatesFitted(emb, id, vec, means, threshold)
-      .select(col("dup_id"))
-    emb.join(dups, id === col("dup_id"), "left_anti")
-  }
-
   /** INCREMENTAL semantic dedup against a PERSISTED assignment index —
     * the semantic-side twin of [[Dedup.incrementalNearDups]], and the
     * incremental-corpus shape SemDeDup actually runs in production:

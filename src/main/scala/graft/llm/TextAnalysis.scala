@@ -40,13 +40,6 @@ object TextAnalysis {
         n.cast(DoubleType)).otherwise(lit(null))
   }
 
-  def upperRatio(text: Column): Column = {
-    val n = length(text)
-    when(n > 0,
-      length(regexp_replace(text, "[^A-Z]", "")).cast(DoubleType) /
-        n.cast(DoubleType)).otherwise(lit(null))
-  }
-
   val EnStopwords: Seq[String] = Seq(
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it", "that",
     "for", "on", "with", "as", "was", "at", "by", "be", "this")

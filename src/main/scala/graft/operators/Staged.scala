@@ -110,13 +110,15 @@ object Staged {
 
   /** DataFrame-shaped artifact: build + write on first request for
     * `key`, read-from-parquet on every request. The returned frame is
-    * always the parquet read, so first and later callers get the
-    * identical (materialized, re-scannable) plan shape. */
+    * always the parquet read ([[graft.sources.TableLog.read]] of the
+    * artifact dir: its listing and first footer, no schema job), so
+    * first and later callers get the identical (materialized,
+    * re-scannable) plan shape. */
   def getOrBuild(spark: SparkSession, key: String)
                 (build: => DataFrame): DataFrame = {
     val dir = getOrBuildDir(key, "_SUCCESS")(tmp =>
       build.write.mode("overwrite").parquet(tmp.toString))
-    spark.read.parquet(dir.toString)
+    graft.sources.TableLog.read(spark, dir.toString)._1
   }
 
   /** Path-shaped artifact (multi-file indexes with sidecars — the

@@ -65,9 +65,9 @@ object Sinks {
   }
 
   /** The sink table at `path` as of its newest commit (a directory no
-    * commit has touched reads as Spark lists it). */
+    * commit has touched reads as its listing), by [[TableLog.read]]. */
   def read(spark: SparkSession, path: String): DataFrame =
-    TableLog.read(spark, path, TableLog.generation(path), "parquet", Map.empty)
+    TableLog.read(spark, path)._1
 
   /** Compaction — the operational answer to the small-files problem
     * every appending sink (micro-batch streams, per-block writers)
@@ -112,9 +112,10 @@ object Sinks {
   /** Copy-on-write DELETE by key — the right-to-be-forgotten /
     * retention-enforcement primitive: remove every row whose `keyCol`
     * appears in `victims` by REWRITING ONLY THE FILES THAT CONTAIN A
-    * VICTIM. `_metadata.file_path` locates the hit files with one
-    * victim-broadcast semi-join (footer-driven scan of the key column
-    * only, row groups pruned by parquet min/max stats where the layout
+    * VICTIM. `_metadata.file_path` locates the hit files, and their
+    * deleted-row counts, with one victim-broadcast semi-join grouped
+    * by file in one job (footer-driven scan of the key column only,
+    * row groups pruned by parquet min/max stats where the layout
     * allows — [[graft.operators.ZOrder]] writes exactly that layout);
     * untouched files are never read in full, never rewritten. At
     * 100 TB with clustered keys, deleting a user costs a handful of
@@ -130,13 +131,13 @@ object Sinks {
       val hits = read(spark, path)
         .withColumn("__file", col("_metadata.file_path"))
         .join(broadcast(vict), Seq(keyCol), "left_semi")
-      val hitFiles = hits.select(col("__file")).distinct().collect()
-        .map(r => root.relativize(
+      val perFile = hits.groupBy(col("__file")).count().collect()
+      val hitFiles = perFile.map(r => root.relativize(
           Paths.get(new java.net.URI(r.getString(0)))).toString)
         .sorted.toSeq
       if (hitFiles.isEmpty) (0, 0L)
       else {
-        val deleted = hits.count()
+        val deleted = perFile.map(_.getLong(1)).sum
         val added = rewrite(spark, path, hitFiles)((_, df) =>
           df.join(broadcast(vict), Seq(keyCol), "left_anti"))
         val hit = hitFiles.toSet
@@ -156,8 +157,8 @@ object Sinks {
       f: (String, DataFrame) => DataFrame): Vector[String] =
     TableLog.stage(path) { dst =>
       files.groupBy(dirOf).foreach { case (dir, fs) =>
-        val in = TableLog.scan(spark, Paths.get(path, dir).toString,
-          fs.map(x => Paths.get(x).getFileName.toString))
+        val in = TableLog.scan(spark, Paths.get(path, dir),
+          fs.map(Paths.get(path, _)))
         f(dir, in).write.parquet(Paths.get(dst, dir).toString)
       }
     }

@@ -5,18 +5,30 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit,
+  TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileFormat,
   HadoopFsRelation, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.functions.{expr, timestamp_micros}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
-/** The commit log of a sink table: the one place that decides which
-  * files make up a table now (the Spark form of the reference's atomic
+/** The commit log of a sink table, and the one reader of every table:
+  * this object decides which files make up a table and which schema
+  * they are read with (the Spark form of the reference's atomic
   * Elasticsearch alias switch, SURVEY.md §2a S5/S6; Delta and Iceberg
-  * keep the same kind of snapshot log).
+  * keep the same kind of snapshot log). [[read]] turns a table path
+  * into a frame for [[graft.tables.Catalog]], [[Sinks.read]] and
+  * [[graft.operators.Staged]]; `EventStream.readTable` takes its schema
+  * from the same footer step.
   *
   * A table is its data files plus `<table>/_graft_log/<n>`: manifest
   * `n` lists the live files, one path relative to the table per line.
@@ -31,8 +43,9 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
   * A file a commit drops stays on disk for [[GraceMillis]] after that
   * commit, so a request still reading the older manifest finishes; a
   * later commit deletes it, together with the manifests only it
-  * depended on. A table no commit has touched yet (plain Spark output)
-  * is bootstrapped from its directory listing as manifest 0.
+  * depended on. A table no commit has touched yet (plain Spark output,
+  * or a single file) reads as its directory listing; its first commit
+  * bootstraps that listing as manifest 0.
   *
   * One writer per table; there is no time travel. */
 object TableLog {
@@ -132,30 +145,39 @@ object TableLog {
       }
   }
 
-  /** Read generation `g` of the table at `root` (`g < 0`: the
-    * directory as Spark lists it). */
-  def read(spark: SparkSession, root: String, g: Long, format: String,
-           options: Map[String, String]): DataFrame =
-    if (g < 0) spark.read.format(format).options(options).load(root)
-    else scan(spark, root, files(root, g), format, options)
+  /** The table at `path` as of its newest commit, and that commit's
+    * generation (-1: no manifest): the one place that turns a table
+    * path into a frame. Its files are the newest manifest's list, else
+    * the directory's [[listed]] files, else `path` when it is one file.
+    * A parquet schema comes from the footer of the first file by path,
+    * the file Spark's non-merging inference opens, read on the driver:
+    * resolving starts no Spark job. json, csv and orc infer theirs. */
+  def read(spark: SparkSession, path: String, format: String = "parquet",
+           options: Map[String, String] = Map.empty): (DataFrame, Long) = {
+    val root = Paths.get(path).toAbsolutePath.normalize
+    val g = generation(path)
+    val paths =
+      if (Files.isRegularFile(root)) Vector(root)
+      else files(path, g).map(root.resolve)
+    (scan(spark, root, paths, format, options), g)
+  }
 
-  /** Read exactly `files` (relative to `root`). The file index is built
-    * from the list, so the read lists nothing: Spark would start a
-    * listing job for more than
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` explicit
-    * paths. Partition columns come from `k=v` directories under `root`,
-    * as for a directory read. */
-  def scan(spark: SparkSession, root: String, files: Seq[String],
-           format: String = "parquet",
-           options: Map[String, String] = Map.empty): DataFrame = {
-    val base = new HPath("file", null,
-      Paths.get(root).toAbsolutePath.normalize.toString)
+  /** Read exactly `files` under `root` through a file index built from
+    * the list (Spark would list more than `spark.sql.sources
+    * .parallelPartitionDiscovery.threshold` explicit paths in a job).
+    * Partition columns come from `k=v` directories under `root`. */
+  private[sources] def scan(spark: SparkSession, root: Path, files: Seq[Path],
+                            format: String = "parquet",
+                            options: Map[String, String] = Map.empty)
+      : DataFrame = {
+    def hadoopPath(p: Path) =
+      new HPath("file", null, p.toAbsolutePath.normalize.toString)
     val statuses = files.map { f =>
-      val file = Paths.get(root, f).toFile
+      val file = f.toFile
       if (!file.isFile) throw new java.io.FileNotFoundException(
-        s"$file is listed by the table's manifest but missing")
+        s"$file is listed as part of the table but missing")
       new FileStatus(file.length, false, 1, 32L << 20, file.lastModified,
-        new HPath(base, f))
+        hadoopPath(f))
     }
     val fileFormat: FileFormat = format match {
       case "parquet" => new ParquetFileFormat
@@ -165,12 +187,68 @@ object TableLog {
       case other => throw new IllegalArgumentException(
         s"unsupported table format: $other")
     }
-    val index = new ListedFileIndex(spark, base, statuses, options)
-    val dataSchema = fileFormat.inferSchema(spark, options, statuses)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no schema: $root has no live $format files"))
-    spark.baseRelationToDataFrame(HadoopFsRelation(index,
-      index.partitionSchema, dataSchema, None, fileFormat, options)(spark))
+    def noSchema = new IllegalArgumentException(
+      s"no schema: $root has no live $format files")
+    val (dataSchema, nanos) =
+      if (format == "parquet")
+        footerSchema(spark, files.minByOption(_.toString).getOrElse(throw noSchema))
+      else (nullable(fileFormat.inferSchema(spark, options, statuses)
+        .getOrElse(throw noSchema)), Nil)
+    val index = new ListedFileIndex(spark, hadoopPath(root), statuses, options)
+    micros(spark.baseRelationToDataFrame(HadoopFsRelation(index,
+      index.partitionSchema, dataSchema, None, fileFormat, options)(spark)),
+      nanos)
+  }
+
+  /** The data schema of parquet `file` as Spark's inference reads it from
+    * one footer (TIMESTAMP(NANOS) as long nanos, every field nullable),
+    * and the names of its top-level TIMESTAMP(NANOS) columns. */
+  private[graft] def footerSchema(spark: SparkSession, file: Path)
+      : (StructType, Seq[String]) = {
+    val hpath = new HPath(file.toUri)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(hpath, spark.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val conf = spark.sessionState.conf.clone()
+    conf.setConfString(NanosAsLong, "true")
+    val schema = ParquetFileFormat.readSchemaFromFooter(
+      new Footer(hpath, footer), new ParquetToSparkSchemaConverter(conf))
+    val nanos = footer.getFileMetaData.getSchema.getFields.asScala.collect {
+      case f if Option(f.getLogicalTypeAnnotation).exists {
+        case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+        case _ => false
+      } => f.getName
+    }.toSeq
+    (nullable(schema), nanos)
+  }
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** `df` with its TIMESTAMP(NANOS) columns, which Spark's parquet
+    * reader rejects unless it reads them as long nanos, turned into
+    * microsecond timestamps. Integer `div`, not `/` (DOUBLE division
+    * rounds the microsecond): it truncates like a native nanos reader
+    * for post-epoch values; a pre-1970 one comes out 1 µs later. */
+  private[graft] def micros(df: DataFrame, nanos: Seq[String]): DataFrame =
+    if (nanos.isEmpty) df
+    else {
+      df.sparkSession.conf.set(NanosAsLong, "true")
+      nanos.foldLeft(df)((d, c) =>
+        d.withColumn(c, timestamp_micros(expr(s"`$c` div 1000"))))
+    }
+
+  /** `s` with every field, element and map value nullable, as Spark
+    * makes a file source's data schema. */
+  private def nullable(s: StructType): StructType =
+    StructType(s.fields.map(f =>
+      f.copy(dataType = nullableType(f.dataType), nullable = true)))
+
+  private def nullableType(t: DataType): DataType = t match {
+    case s: StructType => nullable(s)
+    case a: ArrayType => ArrayType(nullableType(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullableType(m.keyType),
+      nullableType(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
   /** A file index over a known file list (Spark's own

@@ -70,15 +70,14 @@ object EventStream {
   private def asEventTime(tsCol: String): Column =
     col(tsCol).cast(TimestampType)
 
-  /** Read a parquet table as a file stream, with the same schema (and
-    * TIMESTAMP(NANOS) normalization) as the batch Catalog read. */
   /** Write a sequence of frames as ONE parquet file each into `dir`,
     * with sequenced names AND strictly ascending mtimes — so a file
     * stream over `dir` with `maxFilesPerTrigger=1` replays them as
     * micro-batches in exactly this order. Replaces the sleep-between-
     * writes trick (the file source orders by (mtime, path); stamping
-    * both explicitly costs nothing and drops the wall time). */
-  /** `startIndex` lets a LATER call append more batches to the same
+    * both explicitly costs nothing and drops the wall time).
+    *
+    * `startIndex` lets a LATER call append more batches to the same
     * source dir (distinct file names) — the arrives-while-stopped half
     * of a checkpoint-resume drain. Appended stamps are FLOORED at
     * max(existing mtime) + 1 s (r10 advice): without the floor, a
@@ -111,31 +110,18 @@ object EventStream {
     }
   }
 
+  /** The single-file parquet table `dir/name.parquet` as a file stream,
+    * typed as the batch reader ([[graft.sources.TableLog.read]]) types
+    * it, from the same footer step and nanos conversion, then with
+    * [[normalizeEventTime]] (NTZ columns crash watermarks and windows). */
   def readTable(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(path).schema
-    val batchSchema =
-      new graft.tables.Catalog(spark, dir).table(name).schema
-    // the table is a single file; the file-stream source lists
-    // directories, so stream the parent dir with a glob filter
-    val stream = spark.readStream.schema(rawSchema)
+    val file = java.nio.file.Paths.get(dir, s"$name.parquet")
+    val (schema, nanos) = graft.sources.TableLog.footerSchema(spark, file)
+    // the file-stream source lists directories, so stream the parent
+    // dir with a glob filter
+    val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", s"$name.parquet").parquet(dir)
-    // convert nanos-long columns to the batch timestamp type, then
-    // normalize the event-time flavor (NTZ-written files otherwise
-    // crash every downstream watermark/window at plan time)
-    normalizeEventTime(
-      batchSchema.fields.foldLeft(stream) { (df, f) =>
-        (f.dataType, rawSchema(f.name).dataType) match {
-          case (TimestampType, LongType) =>
-            // integer `div` (see Catalog): long / long is double division
-            // and rounds the microsecond; `div` truncates toward zero,
-            // correct for post-epoch data only (same note as Catalog)
-            df.withColumn(f.name,
-              timestamp_micros(expr(s"`${f.name}` div 1000")))
-          case _ => df
-        }
-      })
+    normalizeEventTime(graft.sources.TableLog.micros(stream, nanos))
   }
 
   /** At-least-once replay suppression: drop duplicate keys, with a
@@ -172,14 +158,6 @@ object EventStream {
       .groupBy((window(col(tsCol), width) +: groupCols.map(col))
         .toIndexedSeq: _*)
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-
-  /** Sliding event-time aggregation. */
-  def slidingAgg(events: DataFrame, tsCol: String, width: String,
-                 slide: String, watermark: String): DataFrame =
-    events.withColumn(tsCol, asEventTime(tsCol))
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), width, slide))
-      .agg(count(lit(1)).as("n"))
 
   /** Session windows (gap-based), the streaming twin of
     * operators.Sessionize. */

@@ -13,10 +13,13 @@ import org.apache.spark.sql.functions._
   * like JX `from: "task.artifacts"`. Parent scalar columns are retained
   * (prefixed) so nested queries can still reference ancestors.
   *
-  * A sink table (one with a [[graft.sources.TableLog]]) resolves to
-  * exactly the files of its newest manifest, so a query sees one
-  * commit's table, never files a later commit dropped or has not yet
-  * published; any other table reads as Spark lists its directory.
+  * Every base table is read by [[graft.sources.TableLog.read]]: a
+  * table is a file list plus the schema of its first file's footer. A
+  * sink table resolves to exactly the files of its newest manifest, so
+  * a query sees one commit's table, never files a later commit dropped
+  * or has not yet published; a plain directory resolves to its listing
+  * and a single file to itself. TIMESTAMP(NANOS) columns, which
+  * Spark's reader rejects, read as microsecond timestamps.
   */
 final class Catalog(spark: SparkSession, dir: String) {
   import org.apache.spark.sql.types._
@@ -70,17 +73,18 @@ final class Catalog(spark: SparkSession, dir: String) {
   })
 
   /** BASE-table resolution is shared SESSION-wide (guide §6: file
-    * listing / footer reads are driver-side, single-threaded work):
-    * resolving a table costs a directory listing, a parquet footer
-    * open (nano-timestamp detection), schema inference and a file
-    * index build, and a 414-query sweep re-resolves the same handful
-    * of static files thousands of times. The cache holds one entry per
-    * table: the LAZY plan (file paths + schema, never data) and the
-    * [[graft.sources.TableLog]] generation it was resolved at. A sink
-    * table is re-resolved as soon as a newer manifest exists, so
-    * readers follow commits without any writer telling them; checking
-    * costs one directory read per call (a failed one for a table no
-    * commit has touched). */
+    * listing / footer reads are driver-side, single-threaded work): a
+    * 414-query sweep re-resolves the same handful of static files
+    * thousands of times. Resolving is one [[graft.sources.TableLog.read]]:
+    * the table's file list, one parquet footer open on the driver for
+    * the schema and its TIMESTAMP(NANOS) columns, and a file index over
+    * the list; it starts no Spark job for a parquet table. The cache
+    * holds one entry per table: the LAZY plan (file paths + schema,
+    * never data) and the generation it was resolved at. A sink table is
+    * re-resolved as soon as a newer manifest exists, so readers follow
+    * commits without any writer telling them; checking costs one
+    * directory read per call (a failed one for a table no commit has
+    * touched). */
   private def base(name: String): DataFrame =
     sessionCache.compute(s"$dir $name", (_, old) =>
       if (old != null &&
@@ -97,68 +101,17 @@ final class Catalog(spark: SparkSession, dir: String) {
       .getOrElse(throw new IllegalArgumentException(
         s"unknown table: $name (have: ${baseTables.mkString(", ")})"))
     val path = pathOf(base)
-    val gen = graft.sources.TableLog.generation(path)
-    def read(format: String, options: (String, String)*) =
-      graft.sources.TableLog.read(spark, path, gen, format, options.toMap)
-    val df =
+    val format =
       if (path.endsWith(".json") || path.endsWith(".jsonl"))
-        read("json") // schema inferred from data (JSON-lines S1)
-      else if (path.endsWith(".csv"))
-        read("csv", "header" -> "true", "inferSchema" -> "true")
-      else if (path.endsWith(".orc")) read("orc")
-      else readParquet(path, gen, read("parquet"))
+        "json" // schema inferred from data (JSON-lines S1)
+      else if (path.endsWith(".csv")) "csv"
+      else if (path.endsWith(".orc")) "orc"
+      else "parquet"
+    val options =
+      if (format == "csv") Map("header" -> "true", "inferSchema" -> "true")
+      else Map.empty[String, String]
+    val (df, gen) = graft.sources.TableLog.read(spark, path, format, options)
     Resolved(path, gen, nested.foldLeft(df)(explodeLevel))
-  }
-
-  /** Read parquet, transparently handling TIMESTAMP(NANOS) columns (which
-    * Spark's vectorized reader rejects): such columns are read as long
-    * nanos via the legacy flag and converted to TimestampType (micros).
-    * Column detection is from the parquet footer of one live file — no
-    * per-table hardcoding, works for any source file. */
-  private def readParquet(path: String, gen: Long,
-                          read: => DataFrame): DataFrame = {
-    val f = new java.io.File(path)
-    val first =
-      if (!f.isDirectory) Some(f)
-      else graft.sources.TableLog.files(path, gen)
-        .find(_.endsWith(".parquet")).map(new java.io.File(f, _))
-    val nanos = first.fold(Seq.empty[String])(nanoTimestampCols)
-    if (nanos.isEmpty) read
-    else {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      nanos.foldLeft(read) { (d, c) =>
-        // integer `div`, not `/`: long / long is DOUBLE division in Spark
-        // and rounds the microsecond (53-bit mantissa) — truncation must
-        // match the engines that read the nanos natively.
-        // NOTE: `div` truncates toward zero, which equals floor division
-        // only for POST-EPOCH timestamps; pre-1970 nanos would round up
-        // one microsecond vs a native nanos reader (use a pmod-adjusted
-        // floordiv if pre-epoch data ever enters scope)
-        d.withColumn(c, timestamp_micros(expr(s"`$c` div 1000")))
-      }
-    }
-  }
-
-  /** Names of top-level TIMESTAMP(NANOS) columns per the parquet footer. */
-  private def nanoTimestampCols(file: java.io.File): Seq[String] = {
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-    val conf = spark.sessionState.newHadoopConf()
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file.getAbsolutePath), conf))
-    try {
-      import scala.jdk.CollectionConverters._
-      reader.getFooter.getFileMetaData.getSchema.getFields.asScala.collect {
-        case field if Option(field.getLogicalTypeAnnotation).exists {
-          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            t.getUnit == TimeUnit.NANOS
-          case _ => false
-        } => field.getName
-      }.toSeq
-    } finally reader.close()
   }
 
   /** Drop the session's resolved plan of `name`. No longer needed for

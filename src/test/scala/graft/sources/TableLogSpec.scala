@@ -3,6 +3,8 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.FileTime
 
+import scala.jdk.CollectionConverters._
+
 import graft.{Scratch, SparkSpec}
 import graft.tables.Catalog
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -97,10 +99,12 @@ class TableLogSpec extends SparkSpec {
     assert(cached === 1)
   }
 
-  test("reading a manifest table starts no more Spark jobs than " +
-      "reading its directory, past the parallel-listing threshold") {
-    val out = Scratch.dir("graft_tablelog").toString + "/t"
-    rows(0, 400).repartition(40).write.parquet(out)
+  /** Spark jobs started by `run`'s tagged bodies, per tag: a listener
+    * counts the jobs each tag's thread-local property marks, and a
+    * sentinel job, which the listener bus delivers after every earlier
+    * job start, ends the count. */
+  private def jobsPerTag(run: (String => (=> Unit) => Unit) => Unit)
+      : Map[String, Int] = {
     val sc = spark.sparkContext
     val mark = "graft.spec.tablelog"
     val jobs = new java.util.concurrent.ConcurrentHashMap[String,
@@ -122,6 +126,20 @@ class TableLogSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     try {
+      run(tagged)
+      tagged("sentinel")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!sentinel && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(sentinel, "listener never saw the sentinel")
+    } finally sc.removeSparkListener(listener)
+    jobs.asScala.map { case (t, n) => t -> n.get }.toMap.withDefaultValue(0)
+  }
+
+  test("reading a manifest table starts no more Spark jobs than " +
+      "reading its directory, past the parallel-listing threshold") {
+    val out = Scratch.dir("graft_tablelog").toString + "/t"
+    rows(0, 400).repartition(40).write.parquet(out)
+    val n = jobsPerTag { tagged =>
       tagged("dir")(assert(spark.read.parquet(out).count() === 400L))
       val files = TableLog.live(out)
       assert(files.size === 40)
@@ -129,15 +147,38 @@ class TableLogSpec extends SparkSpec {
         files.map(f => s"$out/$f"): _*).count() === 400L))
       TableLog.commit(out)(identity)
       tagged("manifest")(assert(Sinks.read(spark, out).count() === 400L))
-      tagged("sentinel")(sc.parallelize(Seq(1), 1).count())
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!sentinel && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(sentinel, "listener never saw the sentinel")
-    } finally sc.removeSparkListener(listener)
-    def n(tag: String): Int = Option(jobs.get(tag)).fold(0)(_.get)
+    }
     info(s"jobs: dir ${n("dir")}, 40 paths ${n("paths")}, " +
       s"manifest ${n("manifest")}")
     assert(n("paths") > n("dir"), "40 explicit paths should list in a job")
     assert(n("manifest") <= n("dir"))
+  }
+
+  test("resolving a table through Catalog starts no Spark job: a single " +
+      "file, a plain directory, a manifest table, and a re-resolve after " +
+      "an append") {
+    val dir = Scratch.dir("graft_tablelog").toString
+    val staging = s"$dir/_one"
+    rows(0, 100).coalesce(1).write.parquet(staging)
+    val part = new java.io.File(staging).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    Files.move(part.toPath, Paths.get(dir, "single.parquet"))
+    rows(0, 200).repartition(8).write.parquet(s"$dir/plain.parquet")
+    Sinks.writeBlocks(rows(0, 300).repartition(3), s"$dir/sink.parquet", Nil)
+    def resolve(name: String) = new Catalog(spark, dir).table(name)
+    val n = jobsPerTag { tagged =>
+      tagged("single file")(resolve("single"))
+      tagged("plain directory")(resolve("plain"))
+      tagged("manifest table")(resolve("sink"))
+      Sinks.writeBlocks(rows(300, 50).coalesce(1), s"$dir/sink.parquet", Nil)
+      tagged("re-resolve after append")(resolve("sink"))
+    }
+    assert(resolve("single").count() === 100L)
+    assert(resolve("plain").count() === 200L)
+    assert(resolve("sink").count() === 350L)
+    val cases = Seq("single file", "plain directory", "manifest table",
+      "re-resolve after append")
+    info(cases.map(c => s"$c ${n(c)}").mkString("jobs: ", ", ", ""))
+    cases.foreach(c => assert(n(c) === 0, s"$c: resolving started a job"))
   }
 }

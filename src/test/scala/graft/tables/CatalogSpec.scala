@@ -1,14 +1,15 @@
 package graft.tables
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
-import graft.{Scratch, Service, SparkSpec}
+import graft.{Scratch, Service, SparkSpec, TestSpark}
 import graft.sources.TableLog
 import org.apache.spark.sql.functions._
 
-/** `Catalog.readParquet` reads TIMESTAMP(NANOS) columns, which Spark's
-  * reader rejects, as microsecond timestamps — from a plain parquet
-  * directory and from a sink table's manifest alike. */
+/** `Catalog` (through `TableLog.read`) resolves a table to the schema
+  * Spark's own inference gives it, and reads TIMESTAMP(NANOS) columns,
+  * which Spark's reader rejects, as microsecond timestamps — from a
+  * plain parquet directory and from a sink table's manifest alike. */
 class CatalogSpec extends SparkSpec {
 
   // 2024-01-01T00:00:00.123456789Z, 2024-01-02T12:00:00.000000999Z,
@@ -65,5 +66,53 @@ class CatalogSpec extends SparkSpec {
     // a file no manifest lists is not part of the table
     writeNanos(table.resolve("stray.parquet"))
     check(dir.toString)
+  }
+
+  test("every test-data table resolves to the schema Spark infers for " +
+      "it") {
+    for (sf <- Seq("sf0.01", "sf0.1")) {
+      val dir = Paths.get(TestSpark.sfDir).resolveSibling(sf).toString
+      val catalog = new Catalog(spark, dir)
+      assert(catalog.baseTables.size === 10, s"$dir: tables missing")
+      catalog.baseTables.foreach { t =>
+        assert(catalog.table(t).schema ===
+          spark.read.parquet(s"$dir/$t.parquet").schema, s"$sf/$t")
+      }
+    }
+  }
+
+  test("a Spark-written table with nested, decimal, date, timestamp, " +
+      "binary columns and a k=v partition resolves to Spark's schema and " +
+      "rows, as a plain directory and as a manifest table") {
+    val dir = Scratch.dir("graft_schema").toString
+    val path = s"$dir/t.parquet"
+    spark.range(0, 6).select(
+      col("id"),
+      struct(col("id").as("a"),
+        struct(concat(lit("c"), col("id")).as("c")).as("inner")).as("s"),
+      array(struct(col("id").as("x"), lit("y").as("y"))).as("arr"),
+      map(lit("k"), col("id")).as("m"),
+      (col("id") + lit(BigDecimal("12345.0123456789")))
+        .cast("decimal(38,10)").as("dec"),
+      expr("date_add(date'2024-01-02', cast(id as int))").as("d"),
+      expr("timestamp'2024-01-02 03:04:05.123456' + make_interval(0, 0, 0, " +
+        "cast(id as int))").as("ts"),
+      expr("timestamp_ntz'2024-01-02 03:04:05.123456'").as("ntz"),
+      expr("cast(concat('b', id) as binary)").as("bin"),
+      expr("id % 2").as("k"))
+      .write.partitionBy("k").parquet(path)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.toJSON.collect().sorted.toSeq
+    val expected = spark.read.parquet(path)
+    assert(expected.schema.fieldNames.last === "k")
+    def check(): Unit = {
+      val t = new Catalog(spark, dir).table("t")
+      assert(t.schema === expected.schema)
+      assert(rows(t) === rows(expected))
+    }
+    check()
+    TableLog.commit(path)(identity)
+    assert(TableLog.generation(path) === 1L)
+    check()
   }
 }

@@ -556,11 +556,9 @@ private[graft] object QueriesLlmD {
       // same variant-band collision guard as q403
       requireNoVariantCollision(docs.select(col("doc_id")))
       val src = Scratch.dir("graft_q407").toString + "/docs"
-      graft.streaming.EventStream.writeOrderedBatches(
+      val stream = graft.streaming.EventStream.replay(
         Seq(docs.filter(pmod(col("doc_id"), lit(2)) === 0),
           docs.filter(pmod(col("doc_id"), lit(2)) === 1)), src)
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
       val (cap, sh3, g8, evalg, docHash, _) =
         graft.streaming.EventStream.streamingTrainingArtifacts(spark,
           stream, Scratch.dir("graft_q407man").toString,
@@ -828,10 +826,10 @@ private[graft] object QueriesLlmD {
         val notices = tbl(spark, dir, "documents")
           .select(col("doc_id"))
           .filter(pmod(col("doc_id"), lit(m)) === 0)
-        sp.join(notices, Seq("doc_id"))
-          .write.mode("append").parquet(man)
+        graft.sources.Sinks.writeBlocks(sp.join(notices, Seq("doc_id")),
+          man, Nil)
       }
-      val removed = spark.read.parquet(man)
+      val removed = graft.sources.Sinks.read(spark, man)
         .dropDuplicates("doc_id")
       td.foldCensus(removed, frIdx, chDig, totals, L, MOD)
     },
@@ -858,10 +856,8 @@ private[graft] object QueriesLlmD {
       val b89 = ids.filter(pmod(col("doc_id"), lit(89)) === 0)
       val b101 = ids.filter(pmod(col("doc_id"), lit(101)) === 0)
       val src = Scratch.dir("graft_q414").toString + "/notices"
-      graft.streaming.EventStream.writeOrderedBatches(
+      val stream = graft.streaming.EventStream.replay(
         Seq(b89, b101, b89), src) // b89 redelivered
-      val stream = spark.readStream.schema(ids.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
       val removed = graft.streaming.EventStream
         .streamingTakedownManifest(spark, stream, sp,
           Scratch.dir("graft_q414man").toString + "/removed",
@@ -923,11 +919,9 @@ private[graft] object QueriesLlmD {
         .select(col("doc_id"), col("source"), col("text"))
       requireNoVariantCollision(docs.select(col("doc_id")))
       val src = Scratch.dir("graft_q411").toString + "/docs"
-      graft.streaming.EventStream.writeOrderedBatches(
+      val stream = graft.streaming.EventStream.replay(
         Seq(docs.filter(pmod(col("doc_id"), lit(2)) === 0),
           docs.filter(pmod(col("doc_id"), lit(2)) === 1)), src)
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
       val (cap, sh3, g8, evalg, _, score) =
         graft.streaming.EventStream.streamingTrainingArtifacts(spark,
           stream, Scratch.dir("graft_q411man").toString,
@@ -1095,10 +1089,8 @@ private[graft] object QueriesLlmD {
         .withColumn("text", col("text").substr(lit(1),
           greatest(length(col("text")) - 30, lit(1))))
       val src = Scratch.dir("graft_q406").toString + "/docs"
-      graft.streaming.EventStream.writeOrderedBatches(
+      val stream = graft.streaming.EventStream.replay(
         Seq(docs, recrawl), src)
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
       graft.streaming.EventStream.streamingCapManifest(spark, stream,
           Scratch.dir("graft_q406man").toString + "/manifest",
           Scratch.dir("graft_q406ck").toString, 15)

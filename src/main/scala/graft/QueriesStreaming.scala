@@ -35,13 +35,11 @@ private[graft] object QueriesStreaming {
         .select(col("doc_id"), col("text"))
       val mx = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
       val src = Scratch.dir("graft_q369").toString + "/docs"
-      EventStream.writeOrderedBatches(Seq(
+      val stream = EventStream.replay(Seq(
         docs.filter(col("doc_id") * 3 <= mx),
         docs.filter(col("doc_id") * 3 > mx &&
           col("doc_id") * 3 <= 2 * mx),
         docs.filter(col("doc_id") * 3 > 2 * mx)), src)
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
       EventStream.streamingPacking(spark, stream,
           Scratch.dir("graft_q369cen").toString + "/census",
           Scratch.dir("graft_q369ck").toString, 512L)
@@ -63,13 +61,11 @@ private[graft] object QueriesStreaming {
         .select(col("doc_id"), col("text"))
       val mx = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
       val src = Scratch.dir("graft_q381").toString + "/docs"
-      EventStream.writeOrderedBatches(Seq(
+      val stream = EventStream.replay(Seq(
         docs.filter(col("doc_id") * 3 <= mx),
         docs.filter(col("doc_id") * 3 > mx &&
           col("doc_id") * 3 <= 2 * mx),
         docs.filter(col("doc_id") * 3 > 2 * mx)), src)
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
       EventStream.streamingDigest(spark, stream,
           Scratch.dir("graft_q381man").toString + "/manifest",
           Scratch.dir("graft_q381ck").toString)
@@ -91,13 +87,11 @@ private[graft] object QueriesStreaming {
         .select(col("doc_id"), col("source"), col("text"))
       val mx = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
       val src = Scratch.dir("graft_q384").toString + "/docs"
-      EventStream.writeOrderedBatches(Seq(
+      val stream = EventStream.replay(Seq(
         docs.filter(col("doc_id") * 3 <= mx),
         docs.filter(col("doc_id") * 3 > mx &&
           col("doc_id") * 3 <= 2 * mx),
         docs.filter(col("doc_id") * 3 > 2 * mx)), src)
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
       val census = EventStream.streamingSourceCensus(spark, stream,
         Scratch.dir("graft_q384cen").toString + "/census",
         Scratch.dir("graft_q384ck").toString)
@@ -131,12 +125,10 @@ private[graft] object QueriesStreaming {
       val t1 = mx / 3
       val t2 = ((BigInt(mx) * 2) / 3).toLong
       val src = Scratch.dir("graft_q393").toString + "/docs"
-      EventStream.writeOrderedBatches(Seq(
+      val stream = EventStream.replay(Seq(
         docs.filter(col("doc_id") <= t1),
         docs.filter(col("doc_id") > t1 && col("doc_id") <= t2),
         docs.filter(col("doc_id") > t2)), src)
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
       EventStream.streamingCapManifest(spark, stream,
           Scratch.dir("graft_q393man").toString + "/manifest",
           Scratch.dir("graft_q393ck").toString, 15)
@@ -226,16 +218,12 @@ private[graft] object QueriesStreaming {
         val events = EventStream.normalizeEventTime(
             tbl(spark, dir, "events"))
           .select(col("ts"), col("event_type"), col("value"))
-        val src = Scratch.dir("graft_q66src")
-          .toString
-        events.coalesce(1).write.mode("append").parquet(src)
         // sentinel: 2024-03-01T00:00Z — far past every real event
-        spark.createDataFrame(Seq(
+        val sentinel = spark.createDataFrame(Seq(
             (new java.sql.Timestamp(1709251200000L), "sentinel", 0.0)))
           .toDF("ts", "event_type", "value")
-          .coalesce(1).write.mode("append").parquet(src)
-        val stream = spark.readStream.schema(events.schema)
-          .option("maxFilesPerTrigger", 1).parquet(src)
+        val stream = EventStream.replay(Seq(events, sentinel),
+          Scratch.dir("graft_q66src").toString)
         val agg = EventStream.tumblingAgg(stream, "ts", "1 day", "1 hour",
           "event_type")
         val out = Scratch.dir("graft_q66out")
@@ -332,24 +320,9 @@ private[graft] object QueriesStreaming {
     //     oracle is the plain single-copy aggregate ---
     "q93_stream_redelivery" -> rounded("sum_value" -> 4)({ (spark, dir) =>
       val events = tbl(spark, dir, "events")
-      val stage = Scratch.dir("graft_q93").toString
-      def stageBlock(df: DataFrame, name: String, modMs: Long): Unit = {
-        val tmp = s"$stage/_$name"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(s"$stage/$name.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(modMs) // file-source batch order = modTime
-      }
-      stageBlock(events, "block1", 1000000L)
-      stageBlock(events.filter(col("event_id") % 5 === 0), "block2",
-        2000000L)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(s"$stage/block1.parquet").schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "block*.parquet")
-        .parquet(stage)
+      val stream = EventStream.replay(
+        Seq(events, events.filter(col("event_id") % 5 === 0)),
+        Scratch.dir("graft_q93").toString)
       val deduped = EventStream.dedupByKey(stream, "ts", "1 day",
         "event_id")
       EventStream.runToCompletion(spark, deduped, mode = "append")
@@ -439,13 +412,10 @@ private[graft] object QueriesStreaming {
       val newV = vecs.filter(!isHist)
       // sequenced names + stamped ascending mtimes pin the batch
       // order without sleeping a wall-clock second between writes
-      EventStream.writeOrderedBatches(Seq(
+      val stream = EventStream.replay(Seq(
         newV.filter(pmod(col("doc_id"), lit(2)) === 0),
         newV.filter(pmod(col("doc_id"), lit(2)) === 1)), tmp + "/src")
       graft.operators.Lifecycle.release(vecs)
-      val schema = spark.read.parquet(tmp + "/src").schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(tmp + "/src")
       graft.llm.SemDedup.streamingDedup(spark, stream, col("doc_id"),
           col("v"), tmp + "/idx", tmp + "/dups", tmp + "/cp",
           threshold = 0.95)
@@ -531,10 +501,7 @@ private[graft] object QueriesStreaming {
         ev.filter(col("ts") >= cuts(0) && col("ts") < cuts(1)),
         ev.filter(col("ts") >= cuts(1)))
       // explicit mtime stamps pin batch order with no sleeps
-      EventStream.writeOrderedBatches(parts, tmp + "/src")
-      val schema = spark.read.parquet(tmp + "/src").schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(tmp + "/src")
+      val stream = EventStream.replay(parts, tmp + "/src")
       graft.operators.Scd.streamingMergeType2(spark, stream,
           col("user_id"), col("ts"), col("event_type"),
           tmp + "/dim", tmp + "/cp")
@@ -560,18 +527,14 @@ private[graft] object QueriesStreaming {
           col("event_type").isin("view", "purchase"))
         .select(col("ts"), col("event_type"), col("user_id"),
           col("event_id"))
-      val src = Scratch.dir("graft_q156src")
-        .toString
-      events.coalesce(1).write.mode("append").parquet(src)
       // sentinels: 2024-03-01T00:00Z, far past every real event; the
       // negative user ids can never join and are filtered from output
-      spark.createDataFrame(Seq(
+      val sentinels = spark.createDataFrame(Seq(
           (new java.sql.Timestamp(1709251200000L), "view", -1L, -1L),
           (new java.sql.Timestamp(1709251200000L), "purchase", -2L, -2L)))
         .toDF("ts", "event_type", "user_id", "event_id")
-        .coalesce(1).write.mode("append").parquet(src)
-      def stream = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
+      val stream = EventStream.replay(Seq(events, sentinels),
+        Scratch.dir("graft_q156src").toString)
       val views = stream.filter(col("event_type") === "view")
         .select(col("user_id").as("a_user"), col("ts").as("a_ts"),
           col("event_id").as("a_id"))
@@ -606,24 +569,9 @@ private[graft] object QueriesStreaming {
     "q172_stream_dedup_modern" -> rounded("sum_value" -> 4)({
       (spark, dir) =>
         val events = tbl(spark, dir, "events")
-        val stage = Scratch.dir("graft_q172").toString
-        def stageBlock(df: DataFrame, name: String, modMs: Long): Unit = {
-          val tmp = s"$stage/_$name"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dest = new java.io.File(s"$stage/$name.parquet")
-          java.nio.file.Files.move(part.toPath, dest.toPath)
-          dest.setLastModified(modMs)
-        }
-        stageBlock(events, "block1", 1000000L)
-        stageBlock(events.filter(col("event_id") % 5 === 0), "block2",
-          2000000L)
-        val stream = spark.readStream
-          .schema(spark.read.parquet(s"$stage/block1.parquet").schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("pathGlobFilter", "block*.parquet")
-          .parquet(stage)
+        val stream = EventStream.replay(
+          Seq(events, events.filter(col("event_id") % 5 === 0)),
+          Scratch.dir("graft_q172").toString)
         val deduped = EventStream.dedupByKeyWithinWatermark(stream,
           "ts", "1 day", "event_id")
         EventStream.runToCompletion(spark, deduped, mode = "append")
@@ -654,12 +602,10 @@ private[graft] object QueriesStreaming {
       val us = unix_micros(col("ts"))
       val src = Scratch.dir("graft_q178")
         .toString + "/ev"
-      EventStream.writeOrderedBatches(Seq(
+      val stream = EventStream.replay(Seq(
         events.filter(us <= cut1),
         events.filter(us > cut1 && us <= cut2),
         events.filter(us > cut2)), src)
-      val stream = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
       val updates = EventStream.streamingEwma(stream, "user_id", "ts",
         "event_id", "value")
       EventStream.runToCompletion(spark, updates, mode = "update")
@@ -710,16 +656,12 @@ private[graft] object QueriesStreaming {
           col("event_type").isin("view", "purchase"))
         .select(col("ts"), col("event_type"), col("user_id"),
           col("event_id"))
-      val src = Scratch.dir("graft_q189src")
-        .toString
-      events.coalesce(1).write.mode("append").parquet(src)
-      spark.createDataFrame(Seq(
+      val sentinels = spark.createDataFrame(Seq(
           (new java.sql.Timestamp(1709251200000L), "view", -1L, -1L),
           (new java.sql.Timestamp(1709251200000L), "purchase", -2L, -2L)))
         .toDF("ts", "event_type", "user_id", "event_id")
-        .coalesce(1).write.mode("append").parquet(src)
-      def stream = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
+      val stream = EventStream.replay(Seq(events, sentinels),
+        Scratch.dir("graft_q189src").toString)
       val views = stream.filter(col("event_type") === "view")
         .select(col("user_id").as("a_user"), col("ts").as("a_ts"),
           col("event_id").as("a_id"))
@@ -762,12 +704,10 @@ private[graft] object QueriesStreaming {
       val cut2 = lo + 2 * ((hi - lo) / 3)
       val src = Scratch.dir("graft_q211")
         .toString + "/ev"
-      EventStream.writeOrderedBatches(Seq(
+      val stream = EventStream.replay(Seq(
         events.filter(us <= cut1),
         events.filter(us > cut1 && us <= cut2),
         events.filter(us > cut2)), src)
-      val stream = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
       val updates = EventStream.streamingCusum(stream, "user_id", "ts",
         "event_id", "d")
       EventStream.runToCompletion(spark, updates, mode = "update")
@@ -801,12 +741,9 @@ private[graft] object QueriesStreaming {
         .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
           pmod(col("event_id"), lit(4)).cast("int").as("batch"))
       val tmp = Scratch.dir("graft_q233").toString
-      EventStream.writeOrderedBatches(
+      val stream = EventStream.replay(
         (0 until 4).map(b => ev.filter(col("batch") === b)),
         tmp + "/src")
-      val schema = spark.read.parquet(tmp + "/src").schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(tmp + "/src")
       val survivors = EventStream.dedupByKey(stream, "ts", "1 day",
         "event_id")
       val drained = EventStream.runToCompletion(spark, survivors,
@@ -838,12 +775,10 @@ private[graft] object QueriesStreaming {
       val cut1 = lo + (hi - lo) / 3
       val cut2 = lo + 2 * ((hi - lo) / 3)
       val src = Scratch.dir("graft_q253").toString + "/ev"
-      EventStream.writeOrderedBatches(Seq(
+      val stream = EventStream.replay(Seq(
         events.filter(us <= cut1),
         events.filter(us > cut1 && us <= cut2),
         events.filter(us > cut2)), src)
-      val stream = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
       val updates = EventStream.streamingTokenBucket(stream, "user_id",
         "ts", "event_id", capacity = 3L)
       EventStream.runToCompletion(spark, updates, mode = "update")
@@ -907,13 +842,11 @@ private[graft] object QueriesStreaming {
       val mx = docs.agg(max(col("doc_id")).as("m")).collect()(0)
         .getLong(0)
       val src = Scratch.dir("graft_q282").toString + "/docs"
-      EventStream.writeOrderedBatches(Seq(
+      val stream = EventStream.replay(Seq(
         docs.filter(col("doc_id") * 3 <= mx),
         docs.filter(col("doc_id") * 3 > mx &&
           col("doc_id") * 3 <= 2 * mx),
         docs.filter(col("doc_id") * 3 > 2 * mx)), src)
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
       // per-batch observability rides the drain (StreamObserve): a
       // quality stage eating a micro-batch below the floor stops the
       // stream and aborts loudly instead of censusing a gutted corpus
@@ -931,8 +864,8 @@ private[graft] object QueriesStreaming {
       // update mode emits one row per (fp, lang) per changing batch;
       // the LAST state has the max copy count (monotone) and its
       // keeper (min doc_id seen, which only moves when count does)
-      EventStream.runToCompletionObserved(spark, agg, obs,
-          mode = "update")
+      EventStream.runToCompletion(spark, agg, mode = "update",
+          observer = Some(obs))
         .groupBy(col("fp"), col("lang"))
         .agg(max(struct(col("n_copies"),
           (-col("keeper_id")).as("__nk"))).as("__f"))
@@ -964,7 +897,7 @@ private[graft] object QueriesStreaming {
       val store = Scratch.dir("graft_q283").toString + "/store"
       curate(docs.filter(col("doc_id") * 2 <= mx))
         .write.parquet(store)
-      spark.read.parquet(store)
+      graft.sources.Sinks.read(spark, store)
         .unionByName(curate(docs.filter(col("doc_id") * 2 > mx)))
         .groupBy(col("fp"), col("lang"))
         .agg(min(col("keeper_id")).as("keeper_id"),
@@ -997,12 +930,10 @@ private[graft] object QueriesStreaming {
       val cut1 = lo + (hi - lo) / 3
       val cut2 = lo + 2 * ((hi - lo) / 3)
       val src = Scratch.dir("graft_q308").toString + "/ev"
-      EventStream.writeOrderedBatches(Seq(
+      val stream = EventStream.replay(Seq(
         events.filter(us <= cut1),
         events.filter(us > cut1 && us <= cut2),
         events.filter(us > cut2)), src)
-      val stream = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
       val updates = EventStream.streamingTokenBucket(stream,
         "user_id", "ts", "event_id", capacity = 3L)
       val cp = Scratch.dir("graft_q308_cp").toString
@@ -1034,13 +965,11 @@ private[graft] object QueriesStreaming {
       val mx = docs.agg(max(col("doc_id")).as("m")).collect()(0)
         .getLong(0)
       val src = Scratch.dir("graft_q309").toString + "/docs"
-      EventStream.writeOrderedBatches(Seq(
+      val stream = EventStream.replay(Seq(
         docs.filter(col("doc_id") * 3 <= mx),
         docs.filter(col("doc_id") * 3 > mx &&
           col("doc_id") * 3 <= 2 * mx),
         docs.filter(col("doc_id") * 3 > 2 * mx)), src)
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
       val k = 16
       val staged = stream.select(
         pmod(col("doc_id"), lit(4)).as("shard"),
@@ -1082,12 +1011,10 @@ private[graft] object QueriesStreaming {
       val cut1 = lo + (hi - lo) / 3
       val cut2 = lo + 2 * ((hi - lo) / 3)
       val src = Scratch.dir("graft_q310").toString + "/ev"
-      EventStream.writeOrderedBatches(Seq(
+      val stream = EventStream.replay(Seq(
         events.filter(us <= cut1),
         events.filter(us > cut1 && us <= cut2),
         events.filter(us > cut2)), src)
-      val stream = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
       val updates = EventStream.streamingTokenBucket(stream,
         "user_id", "ts", "event_id", capacity = 3L)
       val cp = Scratch.dir("graft_q310_cp").toString
@@ -1133,9 +1060,7 @@ private[graft] object QueriesStreaming {
       val sentinel = spark.createDataFrame(Seq(
           (new java.sql.Timestamp(1709251200000L), "sentinel")))
         .toDF("ts", "event_type")
-      EventStream.writeOrderedBatches(Seq(events, sentinel), src)
-      val stream = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
+      val stream = EventStream.replay(Seq(events, sentinel), src)
       val lvl1 = stream.withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n1"))
@@ -1177,26 +1102,21 @@ private[graft] object QueriesStreaming {
         val src = Scratch.dir("graft_q313").toString + "/ev"
         val out = Scratch.dir("graft_q313out").toString
         val ckpt = Scratch.dir("graft_q313ck").toString
-        def drain(): DataFrame =
+        // each incarnation first sees `arrived` land behind what the
+        // source already holds
+        def drain(arrived: Seq[DataFrame]): DataFrame =
           EventStream.runToSink(spark,
-            EventStream.tumblingAgg(
-              spark.readStream.schema(events.schema)
-                .option("maxFilesPerTrigger", 1).parquet(src),
+            EventStream.tumblingAgg(EventStream.replay(arrived, src),
               "ts", "1 day", "1 hour", "event_type"),
             out, ckpt)
         // incarnation 1: only the first half exists
-        EventStream.writeOrderedBatches(
-          Seq(events.filter(us <= midUs)), src)
-        drain()
+        drain(Seq(events.filter(us <= midUs)))
         // stopped. The second half + flush sentinel arrive.
         val sentinel = spark.createDataFrame(Seq(
             (new java.sql.Timestamp(1709251200000L), "sentinel", 0.0)))
           .toDF("ts", "event_type", "value")
-        EventStream.writeOrderedBatches(
-          Seq(events.filter(us > midUs), sentinel), src,
-          startIndex = 8)
         // incarnation 2: same checkpoint, same sink
-        drain()
+        drain(Seq(events.filter(us > midUs), sentinel))
           .filter(col("event_type") =!= "sentinel")
           .select(col("window.start").as("day"), col("event_type"),
             col("n"), col("sum_value"))
@@ -1281,12 +1201,10 @@ private[graft] object QueriesStreaming {
         val cut1 = lo + (hi - lo) / 3
         val cut2 = lo + 2 * ((hi - lo) / 3)
         val src = Scratch.dir("graft_q350").toString + "/ev"
-        EventStream.writeOrderedBatches(Seq(
+        val stream = EventStream.replay(Seq(
           events.filter(us <= cut1),
           events.filter(us > cut1 && us <= cut2),
           events.filter(us > cut2)), src)
-        val stream = spark.readStream.schema(events.schema)
-          .option("maxFilesPerTrigger", 1).parquet(src)
         val ttlMs = 3650L * 24 * 3600 * 1000 // far past the data
         val counts = EventStream.runningCountsTws(stream, "user_id",
           "ts", watermark = "1 day", ttlMs = ttlMs)

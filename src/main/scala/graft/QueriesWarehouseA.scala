@@ -1515,8 +1515,10 @@ private[graft] object QueriesWarehouseA {
           if (current == null) delta
           else graft.operators.IncrementalAgg.merge(current, delta,
             keys = Seq("event_type", "day"), sums = Seq("n", "cents"))
-        merged.write.mode("overwrite").parquet(s"$store/v$i")
-        current = spark.read.parquet(s"$store/v$i")
+        // merged reads the table it replaces: the commit keeps the
+        // files it drops on disk while the merge still scans them
+        graft.sources.Sinks.replace(merged, store)
+        current = graft.sources.Sinks.read(spark, store)
       }
       current.orderBy(col("event_type"), col("day"))
     },

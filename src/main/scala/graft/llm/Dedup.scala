@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.operators.Lifecycle
+import graft.sources.Sinks
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -403,86 +404,62 @@ object Dedup {
     * the history-only pass. That makes incremental ≡ batch an exact
     * theorem at minDocs = 2 (q320's oracle IS the full rebuild).
     *
-    * MANIFEST CONTRACT (r10 advice fix): `indexPath` holds a VERSIONED
-    * span-index manifest — `indexPath/v0` is the history-only index,
-    * `indexPath/v1` the MERGED index after this call (history ∪ fresh,
+    * MANIFEST CONTRACT: `indexPath` is a span-index table (a
+    * [[graft.sources.TableLog]] table, local path) — this call commits
+    * the history-only index, then the MERGED index (history ∪ fresh,
     * df SUMS, keeper MINS, UNFILTERED — df=1 singletons must survive,
     * because a singleton can reach df ≥ 2 in a later batch). The next
-    * batch folds from the latest version alone via [[spanRemovalFold]]
-    * — history is never re-tokenized again. Versions are append-only
-    * because the returned DataFrame lazily re-reads the files it was
-    * planned over: overwriting `indexPath` in place would corrupt the
-    * not-yet-consumed result (and at 100 TB, version dirs double as
-    * the manifest's snapshot history). */
+    * batch folds from the table's newest commit alone via
+    * [[spanRemovalFold]] — history is never re-tokenized again. Each
+    * commit replaces the table's content, and the returned DataFrame
+    * lazily re-reads the files it was planned over: a file a commit
+    * drops stays on disk for `TableLog.GraceMillis`, so the
+    * not-yet-consumed result still reads it. */
   def spanRemovalIncremental(hist: DataFrame, fresh: DataFrame,
                              id: Column, text: Column,
                              indexPath: String,
                              n: Int = 20): DataFrame = {
     // one history pass: the same span index serves the history
-    // marking AND persists as manifest v0
+    // marking AND persists as the first commit
     val (bh, sh) = spanStarts(hist, id, text, n)
-    sh.select(col("doc_id"), col("g")).distinct()
+    Sinks.replace(sh.select(col("doc_id"), col("g")).distinct()
       .groupBy(col("g"))
-      .agg(count(lit(1)).as("__df"), min(col("doc_id")).as("__keeper"))
-      .write.mode("overwrite").parquet(s"$indexPath/v0")
-    val idx = bh.sparkSession.read.parquet(s"$indexPath/v0")
+      .agg(count(lit(1)).as("__df"), min(col("doc_id")).as("__keeper")),
+      indexPath)
+    val idx = Sinks.read(bh.sparkSession, indexPath)
     val histMarked = sh
       .join(idx.filter(col("__df") >= 2), Seq("g"))
       .filter(col("doc_id") =!= col("__keeper"))
     val histRows = removalRows(bh, histMarked, n)
-    histRows.unionByName(
-      foldAgainstManifest(fresh, id, text, indexPath,
-        prevVersion = 0, n))
+    histRows.unionByName(spanRemovalFold(fresh, id, text, indexPath, n))
   }
 
-  /** Fold ONE MORE batch against the persisted manifest from a prior
-    * [[spanRemovalIncremental]] / [[spanRemovalFold]] call — history
-    * is read as the span-index file only, never re-tokenized. Same
-    * id-monotonicity precondition (every new id exceeds every indexed
-    * id). Returns removal rows for the fresh batch ONLY (history rows
-    * were already emitted by the call that indexed them) and writes
-    * manifest version k+1 (merged, unfiltered). */
+  /** Fold ONE MORE batch against the span index a prior
+    * [[spanRemovalIncremental]] / [[spanRemovalFold]] call committed:
+    * merge the fresh batch's span index into it (df sums, keeper =
+    * coalesce(old, new) = min under the id-monotonicity precondition:
+    * every new id exceeds every indexed id), commit the FULL merge,
+    * and mark the fresh batch against the merged index read back FROM
+    * THAT COMMIT — so the marking provably uses the index the next
+    * batch will fold from. History is read as the span-index table
+    * only, never re-tokenized. Returns removal rows for the fresh
+    * batch ONLY (history rows were already emitted by the call that
+    * indexed them). */
   def spanRemovalFold(fresh: DataFrame, id: Column, text: Column,
                       indexPath: String, n: Int = 20): DataFrame = {
-    // enumerate versions through the Hadoop FileSystem API, not
-    // java.io.File: the nightly-fold deployment writes the manifest
-    // wherever Spark writes (HDFS/S3/local) and discovery must read
-    // from the same filesystem (r11 advice)
-    val hPath = new org.apache.hadoop.fs.Path(indexPath)
-    val hFs = hPath.getFileSystem(
-      fresh.sparkSession.sessionState.newHadoopConf())
-    val latest = (if (hFs.exists(hPath)) hFs.listStatus(hPath).toSeq
-                  else Seq.empty)
-      .map(_.getPath.getName)
-      .filter(_.matches("v\\d+")).map(_.drop(1).toInt)
-      .reduceOption(_ max _)
-      .getOrElse(throw new IllegalStateException(
-        s"no manifest versions under $indexPath"))
-    foldAgainstManifest(fresh, id, text, indexPath, latest, n)
-  }
-
-  /** Shared fold step: read manifest v`prevVersion`, merge the fresh
-    * batch's span index into it (df sums, keeper = coalesce(old, new)
-    * = min under the id-monotonicity precondition), persist the FULL
-    * merge as v`prevVersion+1`, and mark the fresh batch against the
-    * merged index read back FROM THE PERSISTED FILE — so the marking
-    * provably uses the same manifest the next batch will fold from. */
-  private def foldAgainstManifest(fresh: DataFrame, id: Column,
-                                  text: Column, indexPath: String,
-                                  prevVersion: Int, n: Int): DataFrame = {
     val spark = fresh.sparkSession
-    val idx = spark.read.parquet(s"$indexPath/v$prevVersion")
+    val idx = Sinks.read(spark, indexPath)
     val (bn, sn) = spanStarts(fresh, id, text, n)
     val newIdx = sn.select(col("doc_id"), col("g")).distinct()
       .groupBy(col("g"))
       .agg(count(lit(1)).as("__dfn"), min(col("doc_id")).as("__kn"))
-    newIdx.join(idx, Seq("g"), "full_outer")
+    Sinks.replace(newIdx.join(idx, Seq("g"), "full_outer")
       .select(col("g"),
         (coalesce(col("__dfn"), lit(0L)) +
           coalesce(col("__df"), lit(0L))).as("__df"),
-        coalesce(col("__keeper"), col("__kn")).as("__keeper"))
-      .write.mode("overwrite").parquet(s"$indexPath/v${prevVersion + 1}")
-    val merged = spark.read.parquet(s"$indexPath/v${prevVersion + 1}")
+        coalesce(col("__keeper"), col("__kn")).as("__keeper")),
+      indexPath)
+    val merged = Sinks.read(spark, indexPath)
     val marked = sn.join(merged.filter(col("__df") >= 2), Seq("g"))
       .filter(col("doc_id") =!= col("__keeper"))
     removalRows(bn, marked, n)

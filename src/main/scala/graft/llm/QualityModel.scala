@@ -38,11 +38,6 @@ object QualityModel {
       case (acc, (f, w)) => acc + lit(w) * f
     }
 
-  /** Stopword membership count from the token-hash kernel. */
-  def swHitCount(text: Column): Column =
-    size(filter(graft.functions.token_hashes(text),
-      h => array_contains(lit(TextAnalysis.EnStopwordHashes), h)))
-
   /** The named feature columns over PRECOMPUTED kernel outputs (`ts` =
     * text_stats array, `swHits` = stopword hit count):
     * len_feat   = min(n_chars/500, 1)        (longer is better, capped)
@@ -70,7 +65,8 @@ object QualityModel {
   /** One-shot Column form (inlines the kernels; fine for single use —
     * [[classify]] stages them instead, see its note). */
   def features(text: Column): Seq[(String, Column)] =
-    featuresFromStats(graft.functions.text_stats(text), swHitCount(text))
+    featuresFromStats(graft.functions.text_stats(text),
+      TextAnalysis.swHitCount(text))
 
   /** Demonstration coefficients (hand-set, plausible signs: length and
     * stopwords up-weight prose; punctuation/caps walls and extreme word
@@ -101,7 +97,7 @@ object QualityModel {
       : DataFrame = {
     val withKernels = df
       .withColumn("__ts", graft.functions.text_stats(text))
-      .withColumn("__sw", swHitCount(text))
+      .withColumn("__sw", TextAnalysis.swHitCount(text))
     val withFeats = featuresFromStats(col("__ts"), col("__sw"))
       .foldLeft(withKernels) { case (d, (n, c)) =>
         d.withColumn("__f_" + n, c)

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.operators.Lifecycle
+import graft.sources.Sinks
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
@@ -152,7 +153,7 @@ object SemDedup {
                             newEmb: DataFrame, id: Column, vec: Column,
                             indexPath: String, threshold: Double,
                             nlist: Int = 16): DataFrame = {
-    val index = spark.read.parquet(indexPath)
+    val index = Sinks.read(spark, indexPath)
     val cents = Similarity.indexCentroids(spark, indexPath, index, nlist)
     val fresh = newEmb.select(id.as("vec_id"),
       vec.cast("array<double>").as("cv"))
@@ -194,15 +195,16 @@ object SemDedup {
   }
 
   /** Append a batch's SURVIVORS to a persisted assignment index: the
-    * rows land under their `cell=` directories (append mode, one file
-    * per touched cell), so the index [[incrementalDuplicates]] and the
-    * ANN probes read keeps growing in place — the mutation half of the
-    * continuous-dedup loop. The quantizer sidecar is untouched: cells
-    * are FROZEN at fit time (re-fitting would re-shuffle history). */
+    * rows land under their `cell=` directories (one file per touched
+    * cell) in one [[graft.sources.TableLog]] commit, so the index
+    * [[incrementalDuplicates]] and the ANN probes read keeps growing
+    * in place — the mutation half of the continuous-dedup loop. The
+    * quantizer sidecar is untouched: cells are FROZEN at fit time
+    * (re-fitting would re-shuffle history). */
   def appendToIndex(assignedSurvivors: DataFrame, path: String): Unit =
-    assignedSurvivors.select(col("vec_id"), col("cv"), col("cell"))
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(path)
+    Sinks.writeBlocks(assignedSurvivors
+      .select(col("vec_id"), col("cv"), col("cell"))
+      .repartition(col("cell")), path, Seq("cell"))
 
   /** CONTINUOUS semantic dedup over a stream: each micro-batch is
     * deduped against the persisted index with [[incrementalDuplicates]]
@@ -224,40 +226,34 @@ object SemDedup {
                      indexPath: String, dupsOutDir: String,
                      checkpointDir: String, threshold: Double,
                      nlist: Int = 16): DataFrame = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val index = spark.read.parquet(indexPath)
-        val cents = Similarity.indexCentroids(spark, indexPath, index,
-          nlist)
-        val assigned = Similarity.assignCells(
-            batch.select(id.as("vec_id"),
-              vec.cast("array<double>").as("cv")),
-            cents, "cv", "cell", 1)
+    graft.streaming.EventStream.foldBatches(stream, checkpointDir) { batch =>
+      val index = Sinks.read(spark, indexPath)
+      val cents = Similarity.indexCentroids(spark, indexPath, index,
+        nlist)
+      val assigned = Similarity.assignCells(
+          batch.select(id.as("vec_id"),
+            vec.cast("array<double>").as("cv")),
+          cents, "cv", "cell", 1)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // materialize the duplicates BEFORE mutating the index they
+      // were computed against (the parquet write is the barrier);
+      // the batch's dups are cached so the survivors filter neither
+      // recomputes the pair join nor re-reads the dups table — which
+      // GROWS with stream lifetime (only THIS batch's ids can be this
+      // batch's dups, so the historical dups are irrelevant to the
+      // anti join)
+      try {
+        val dupsB = pairsAgainstIndex(index, assigned, threshold)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // materialize the duplicates BEFORE mutating the index they
-        // were computed against (the parquet write is the barrier);
-        // the batch's dups are cached so the survivors filter neither
-        // recomputes the pair join nor re-reads the dups directory —
-        // which GROWS with stream lifetime (only THIS batch's ids can
-        // be this batch's dups, so the historical dups are irrelevant
-        // to the anti join)
         try {
-          val dupsB = pairsAgainstIndex(index, assigned, threshold)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            dupsB.write.mode("append").parquet(dupsOutDir)
-            val survivors = assigned.join(dupsB.select(col("dup_id")),
-              col("vec_id") === col("dup_id"), "left_anti")
-            appendToIndex(survivors, indexPath)
-          } finally dupsB.unpersist(blocking = false)
-        } finally assigned.unpersist(blocking = false)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(dupsOutDir)
+          Sinks.writeBlocks(dupsB, dupsOutDir, Nil)
+          val survivors = assigned.join(dupsB.select(col("dup_id")),
+            col("vec_id") === col("dup_id"), "left_anti")
+          appendToIndex(survivors, indexPath)
+        } finally dupsB.unpersist(blocking = false)
+      } finally assigned.unpersist(blocking = false)
+    }
+    Sinks.read(spark, dupsOutDir)
   }
 
   /** Re-key cells that exceed `cap` rows by a PORTABLE secondary hash

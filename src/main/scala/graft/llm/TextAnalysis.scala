@@ -111,8 +111,7 @@ object TextAnalysis {
     val punct = when(nc > 0, np / nc).otherwise(lit(0.0))
     val punctScore = when(punct < 0.1, lit(1.0))
       .otherwise(greatest(lit(1.0) - (punct - lit(0.1)) * 5, lit(0.0)))
-    val swHits = size(filter(graft.functions.token_hashes(text),
-      h => array_contains(lit(EnStopwordHashes), h))).cast(DoubleType)
+    val swHits = swHitCount(text).cast(DoubleType)
     val sw = when(nt > 0, swHits / nt).otherwise(lit(0.0))
     val swScore = least(sw * 4, lit(1.0))
     val mwl = when(nt > 0, stl / nt).otherwise(lit(0.0))
@@ -120,7 +119,14 @@ object TextAnalysis {
     round((lenScore + punctScore + swScore + mwlScore) / 4, 6)
   }
 
-  private[llm] lazy val EnStopwordHashes: Array[Long] =
+  /** English stopword tokens in `text`, counted on the token-hash
+    * kernel: the stopword signal of [[qualityScore]] and of
+    * [[QualityModel]]'s features. */
+  def swHitCount(text: Column): Column =
+    size(filter(graft.functions.token_hashes(text),
+      h => array_contains(lit(EnStopwordHashes), h)))
+
+  private lazy val EnStopwordHashes: Array[Long] =
     EnStopwords.map(hashOf).toArray
 
   private def hashOf(w: String): Long = {
@@ -142,33 +148,11 @@ object TextAnalysis {
 
   /** Heuristic language ID: CJK script detection first, then argmax of
     * per-language stopword hits; "und" (undetermined) when no signal.
-    * Pure column math — at scale this is a narrow projection, no shuffle.
-    *
-    * `toks` should be a PRECOMPUTED token column (see [[withLangId]]) —
-    * the scorer references it once per language, so tokenizing inline
-    * would re-split the text per language. */
-  def langIdFromTokens(text: Column, toks: Column): Column = {
-    val cjk = length(regexp_replace(text, "[^\\x{4E00}-\\x{9FFF}]", ""))
-    val hits = StopwordsByLang.toSeq.sortBy(_._1).map { case (lang, words) =>
-      val sw = array(words.map(lit): _*)
-      struct(size(filter(toks, t => array_contains(sw, t))).as("hits"),
-             lit(lang).as("lang"))
-    }
-    val best = array_max(array(hits: _*))
-    when(cjk > 0 && cjk * 2 >= length(text), lit("zh"))
-      .when(best.getField("hits") > 0, best.getField("lang"))
-      .otherwise(lit("und"))
-  }
-
-  /** Single-expression language ID (tokenizes inline; for one-off use —
-    * pipelines should stage tokens once via [[withLangId]]). */
-  def langId(text: Column): Column = langIdFromTokens(text, tokens(text))
-
-  /** Hash-set language scorer: stopword HITS computed as
-    * array_intersect of the native token-hash array against
-    * driver-precomputed stopword hashes — no per-token string lambdas at
-    * all (array_intersect on longs is a native set op). Distinct-hit
-    * counting, which is what the argmax needs. */
+    * Hits are the array_intersect of the native token-hash array with
+    * driver-precomputed stopword hashes — no per-token string lambdas
+    * (array_intersect on longs is a native set op). Distinct-hit
+    * counting, which is what the argmax needs. Pure column math — at
+    * scale this is a narrow projection, no shuffle. */
   def langIdFast(text: Column): Column = {
     import graft.functions.token_hashes
     val cjk = length(regexp_replace(text, "[^\\x{4E00}-\\x{9FFF}]", ""))

@@ -147,18 +147,13 @@ object Scd {
                           attr: Column, dimPath: String,
                           checkpointDir: String): DataFrame = {
     import graft.sources.{Sinks, TableLog}
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val merged =
-          if (TableLog.live(dimPath).nonEmpty)
-            mergeType2(Sinks.read(spark, dimPath), batch, entity, ts, attr)
-          else buildType2(batch, entity, ts, attr)
-        Sinks.replace(merged, dimPath)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    graft.streaming.EventStream.foldBatches(stream, checkpointDir) { batch =>
+      val merged =
+        if (TableLog.live(dimPath).nonEmpty)
+          mergeType2(Sinks.read(spark, dimPath), batch, entity, ts, attr)
+        else buildType2(batch, entity, ts, attr)
+      Sinks.replace(merged, dimPath)
+    }
     Sinks.read(spark, dimPath)
   }
 

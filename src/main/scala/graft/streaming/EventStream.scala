@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
+import graft.sources.Sinks
 
 /** Structured Streaming layer (SURVEY.md §2l).
   *
@@ -70,44 +71,43 @@ object EventStream {
   private def asEventTime(tsCol: String): Column =
     col(tsCol).cast(TimestampType)
 
-  /** Write a sequence of frames as ONE parquet file each into `dir`,
-    * with sequenced names AND strictly ascending mtimes — so a file
-    * stream over `dir` with `maxFilesPerTrigger=1` replays them as
-    * micro-batches in exactly this order. Replaces the sleep-between-
-    * writes trick (the file source orders by (mtime, path); stamping
-    * both explicitly costs nothing and drops the wall time).
-    *
-    * `startIndex` lets a LATER call append more batches to the same
-    * source dir (distinct file names) — the arrives-while-stopped half
-    * of a checkpoint-resume drain. Appended stamps are FLOORED at
-    * max(existing mtime) + 1 s (r10 advice): without the floor, a
-    * large appended batch written shortly after the first call could
-    * back-date its fresh `now − 1000·size` base below the original
-    * files' stamps and interleave the (mtime, path) order for a reader
-    * that had not yet consumed the earlier files. */
-  def writeOrderedBatches(parts: Seq[DataFrame], dir: String,
-                          startIndex: Int = 0): Unit = {
+  /** Replay `parts` as a file stream over `dir`, one micro-batch per
+    * part, in order: each part is written as ONE parquet file after
+    * whatever `dir` already holds, with the next sequenced name and a
+    * strictly later mtime (the file source orders by (mtime, path);
+    * stamping both replaces a sleep between writes). The mtimes start
+    * at max(now − 1000·size, newest existing file + 1 s), so a later
+    * call — the arrives-while-stopped half of a checkpoint-resume
+    * drain — never back-dates below the files an earlier call wrote.
+    * The stream reads one file per trigger and is typed from the first
+    * file's footer ([[graft.sources.TableLog.footerSchema]]), so
+    * building it starts no Spark job. */
+  def replay(parts: Seq[DataFrame], dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
+    require(parts.nonEmpty, "replay needs at least one part")
+    def name(i: Int) = f"part-$i%05d.parquet"
     Files.createDirectories(Paths.get(dir))
     val existing = Option(new java.io.File(dir).listFiles()).toSeq
       .flatten.filter(_.getName.endsWith(".parquet"))
-      .map(_.lastModified())
-    val floor = existing.reduceOption(_ max _).map(_ + 1000L)
-      .getOrElse(Long.MinValue)
-    val t0 = math.max(
-      System.currentTimeMillis() - 1000L * parts.size, floor)
-    parts.zipWithIndex.foreach { case (p, i0) =>
-      val i = startIndex + i0
-      val stage = s"$dir/.stage$i"
+    val t0 = math.max(System.currentTimeMillis() - 1000L * parts.size,
+      existing.map(_.lastModified() + 1000L).maxOption
+        .getOrElse(Long.MinValue))
+    parts.zipWithIndex.foreach { case (p, k) =>
+      val stage = s"$dir/.stage$k"
       p.coalesce(1).write.parquet(stage)
       val f = new java.io.File(stage).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
-      val dst = Paths.get(dir, f"part-$i%05d.parquet")
+      val dst = Paths.get(dir, name(existing.size + k))
       Files.move(f.toPath, dst)
-      dst.toFile.setLastModified(t0 + i0 * 1000L)
+      dst.toFile.setLastModified(t0 + k * 1000L)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(stage))
     }
+    val spark = parts.head.sparkSession
+    val (schema, nanos) = graft.sources.TableLog.footerSchema(spark,
+      Paths.get(dir, name(0)))
+    graft.sources.TableLog.micros(spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir), nanos)
   }
 
   /** The single-file parquet table `dir/name.parquet` as a file stream,
@@ -293,7 +293,7 @@ object EventStream {
     * fold (q157). State per key is just (n, s); each batch's rows
     * sort by (event time, id) within the key before folding, so the
     * result is exact as long as batches arrive time-ordered per key
-    * (the [[writeOrderedBatches]] discipline — chronological blocks).
+    * (the [[replay]] discipline — chronological blocks).
     * A late cross-batch event would need the full merge-and-replay
     * state of [[streamingFunnel]]; this operator states the cheaper
     * contract instead of silently approximating. Emits (key, n, ewma)
@@ -567,40 +567,25 @@ object EventStream {
     * drain-the-queue batch mode; on a cluster the same query runs
     * continuously with a real sink. NOTE the memory/complete pair holds
     * the whole aggregate on the driver — correct for bounded local
-    * parity checks only; unbounded outputs go through [[runToSink]]. */
-  def runToCompletion(spark: SparkSession, agg: DataFrame,
-                      mode: String = "complete",
-                      statePartitions: Int = 8): DataFrame =
-    withStatePartitions(spark, statePartitions) {
-      val name = s"graft_stream_${runIds.incrementAndGet()}"
-      val q = agg.writeStream
-        .format("memory").queryName(name)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-    }
-
-  /** [[runToCompletion]] with per-batch pipeline observability: the
-    * observer's listener folds every micro-batch's stage metrics as
-    * it commits and STOPS the query mid-stream on a kept-floor
-    * violation, which this helper then rethrows as
+    * parity checks only; unbounded outputs go through [[runToSink]].
+    *
+    * With an `observer`, its listener folds every micro-batch's stage
+    * metrics as it commits and STOPS the query mid-stream on a
+    * kept-floor violation, which is then rethrown as
     * [[graft.llm.CurationAborted]]. Listener delivery is async, so
     * after termination the query's own progress log is re-ingested
     * (idempotent) — a violation on the FINAL batch is caught even if
-    * its event hasn't reached the bus yet. Returns the rows the sink
-    * received BEFORE the stop — the at-least-once contract: on abort,
-    * inspect `observer.history`, fix the floor or the stage, and
-    * re-run; committed batches are replayed from the source, not
-    * trusted from the aborted sink. */
-  def runToCompletionObserved(spark: SparkSession, agg: DataFrame,
-                              observer: StreamPipelineObserver,
-                              mode: String = "complete",
-                              statePartitions: Int = 8): DataFrame =
+    * its event hasn't reached the bus yet. On abort, inspect
+    * `observer.history`, fix the floor or the stage, and re-run:
+    * committed batches are replayed from the source, not trusted from
+    * the aborted sink (the at-least-once contract). */
+  def runToCompletion(spark: SparkSession, agg: DataFrame,
+                      mode: String = "complete",
+                      observer: Option[StreamPipelineObserver] = None,
+                      statePartitions: Int = 8): DataFrame =
     withStatePartitions(spark, statePartitions) {
-      val l = observer.listener(spark)
-      spark.streams.addListener(l)
+      val l = observer.map(_.listener(spark))
+      l.foreach(spark.streams.addListener)
       try {
         val name = s"graft_stream_${runIds.incrementAndGet()}"
         val q = agg.writeStream
@@ -609,11 +594,31 @@ object EventStream {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        q.recentProgress.foreach(observer.ingest)
-        observer.violation.foreach(throw _)
+        observer.foreach { o =>
+          q.recentProgress.foreach(o.ingest)
+          o.violation.foreach(throw _)
+        }
         spark.table(name)
-      } finally spark.streams.removeListener(l)
+      } finally l.foreach(spark.streams.removeListener)
     }
+
+  /** Drain `stream` through `perBatch`, one call per micro-batch
+    * (Trigger.AvailableNow, progress checkpointed at `checkpointDir`):
+    * the loop every per-batch fold below shares, and
+    * [[graft.llm.SemDedup.streamingDedup]] and
+    * [[graft.operators.Scd.streamingMergeType2]] with them. Each fold
+    * appends a batch's rows with [[Sinks.writeBlocks]] (one
+    * [[graft.sources.TableLog]] commit) and reads its store back with
+    * [[Sinks.read]]. A batch redelivered after a restart runs
+    * `perBatch` again. */
+  private[graft] def foldBatches(stream: DataFrame, checkpointDir: String)
+      (perBatch: DataFrame => Unit): Unit =
+    stream.writeStream
+      .foreachBatch((bdf: DataFrame, _: Long) => perBatch(bdf))
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
 
   /** Stateful-operator parallelism for a LOCAL drain: every stateful
     * streaming op creates `spark.sql.shuffle.partitions` state-store
@@ -657,6 +662,9 @@ object EventStream {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
+      // Spark's own reader, not TableLog: the file sink commits through
+      // `outDir/_spark_metadata`, and only spark.read honours that log —
+      // a restarted drain's exactly-once handoff (q313) rests on it
       spark.read.parquet(outDir)
     }
 
@@ -718,25 +726,19 @@ object EventStream {
     withStatePartitions(spark, 8) {
       val pk = graft.operators.Packing
       val total = new java.util.concurrent.atomic.AtomicLong(0L)
-      val q = docsStream.writeStream
-        .foreachBatch { (bdf: DataFrame, _: Long) =>
-          val spans = pk.spans(
-            bdf.select(col("doc_id"),
-              graft.llm.TextAnalysis.tokenCount(col("text"))
-                .cast("long").as("n_tok")),
-            col("doc_id"), col("n_tok"),
-            baseOffset = total.get()).localCheckpoint()
-          pk.chunkCensus(spans, chunkTokens)
-            .write.mode("append").parquet(censusDir)
-          // bounded scalar pull: one long per micro-batch
-          val mx = spans.agg(max(col("e"))).collect()(0)
-          if (!mx.isNullAt(0)) total.set(mx.getLong(0) + 1)
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val folded = spark.read.parquet(censusDir)
+      foldBatches(docsStream, checkpointDir) { bdf =>
+        val spans = pk.spans(
+          bdf.select(col("doc_id"),
+            graft.llm.TextAnalysis.tokenCount(col("text"))
+              .cast("long").as("n_tok")),
+          col("doc_id"), col("n_tok"),
+          baseOffset = total.get()).localCheckpoint()
+        Sinks.writeBlocks(pk.chunkCensus(spans, chunkTokens), censusDir, Nil)
+        // bounded scalar pull: one long per micro-batch
+        val mx = spans.agg(max(col("e"))).collect()(0)
+        if (!mx.isNullAt(0)) total.set(mx.getLong(0) + 1)
+      }
+      val folded = Sinks.read(spark, censusDir)
         .groupBy(col("chunk"))
         .agg(sum(col("n_docs")).as("n_docs"),
           sum(col("n_starts")).as("n_starts"))
@@ -756,16 +758,11 @@ object EventStream {
                       manifestDir: String,
                       checkpointDir: String): DataFrame = {
     val dg = graft.operators.Digest
-    val q = docsStream.writeStream
-      .foreachBatch { (bdf: DataFrame, _: Long) =>
-        dg.shardDigests(bdf, col("doc_id"), col("text"))
-          .write.mode("append").parquet(manifestDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    dg.fold(Seq(spark.read.parquet(manifestDir)))
+    foldBatches(docsStream, checkpointDir) { bdf =>
+      Sinks.writeBlocks(dg.shardDigests(bdf, col("doc_id"), col("text")),
+        manifestDir, Nil)
+    }
+    dg.fold(Seq(Sinks.read(spark, manifestDir)))
   }
 
   /** Streaming per-source K-min-hash cap manifest — the CapSample
@@ -782,22 +779,16 @@ object EventStream {
                            docsStream: DataFrame, manifestDir: String,
                            checkpointDir: String, k: Int): DataFrame = {
     val cs = graft.operators.CapSample
-    val q = docsStream.writeStream
-      .foreachBatch { (bdf: DataFrame, _: Long) =>
-        cs.mine(
-            bdf.select(col("doc_id"), col("source"),
-                graft.llm.TextAnalysis.tokenCount(col("text"))
-                  .cast("long").as("n_tok"))
-              .withColumn("h", md5(concat(lit("cap:"),
-                col("doc_id").cast("string")).cast("binary"))),
-            "source", Seq("h", "doc_id"), k)
-          .write.mode("append").parquet(manifestDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    cs.truncate(spark.read.parquet(manifestDir), "source",
+    foldBatches(docsStream, checkpointDir) { bdf =>
+      Sinks.writeBlocks(cs.mine(
+          bdf.select(col("doc_id"), col("source"),
+              graft.llm.TextAnalysis.tokenCount(col("text"))
+                .cast("long").as("n_tok"))
+            .withColumn("h", md5(concat(lit("cap:"),
+              col("doc_id").cast("string")).cast("binary"))),
+          "source", Seq("h", "doc_id"), k), manifestDir, Nil)
+    }
+    cs.truncate(Sinks.read(spark, manifestDir), "source",
       Seq("h", "doc_id"), k)
   }
 
@@ -857,81 +848,64 @@ object EventStream {
     val hashDir = manRoot + "/hash"
     val scoreDir = manRoot + "/score"
     val ta = graft.llm.TextAnalysis
-    val q = docsStream.writeStream
-      .foreachBatch { (bdf: DataFrame, _: Long) =>
-        // one materialization: the five feature extractions below
-        // re-scan the batch from executor memory, not the source
-        val base = bdf.select(col("doc_id"), col("source"),
-          col("text")).localCheckpoint()
-        // the six manifest appends are INDEPENDENT jobs over the
-        // checkpointed batch, each a ~single-partition write whose
-        // wall is dominated by job + commit overhead — submit them
-        // from the shared pool so the drain pays max, not sum, of the
-        // six (guide §2.6 "overlap independent jobs"; appends target
-        // six distinct dirs, so results are byte-identical)
-        val fCap = onPool {
-          graft.operators.CapSample.mine(
-              base.select(col("doc_id"), col("source"),
-                  ta.tokenCount(col("text")).cast("long").as("n_tok"))
-                .withColumn("h", md5(concat(lit("cap:"),
-                  col("doc_id").cast("string")).cast("binary"))),
-              "source", Seq("h", "doc_id"), k)
-            .write.mode("append").parquet(capDir)
-        }
-        val toks = ta.tokens(col("text"))
-        // doc_id < 1000000: the batch chain's eval-set guard mirrored
-        // (a no-op when real ids sit below the variant band)
-        val fEval = onPool {
-          base.filter(col("doc_id") < 1000000L &&
-              pmod(col("doc_id"), lit(97)) === 0)
-            .select(array_join(
-              when(size(toks) >= 8,
-                slice(toks, size(toks) - 7, lit(8)))
-                .otherwise(toks), " ").as("etext"))
-            .select(explode(ta.shingleHashes(col("etext"), 8)).as("g"))
-            .write.mode("append").parquet(evalDir)
-        }
-        val fHash = onPool {
-          base.select(col("doc_id"),
-              graft.operators.Digest.contentHash(col("text")).as("h"))
-            .write.mode("append").parquet(hashDir)
-        }
-        val fScore = onPool {
-          base.select(col("doc_id"),
-              size(array_distinct(ta.tokens(col("text"))))
-                .cast("long").as("score"))
-            .write.mode("append").parquet(scoreDir)
-        }
-        val corpus = base.select(col("doc_id"), col("text"))
-          .unionByName(base
-            .filter(pmod(col("doc_id"), lit(3)) === 0)
-            .select((col("doc_id") + 1000000L).as("doc_id"),
-              col("text").substr(lit(1),
-                greatest(length(col("text")) - 20, lit(1)))
-                .as("text")))
-          .localCheckpoint() // scanned twice: sh3 + g8
-        val fSh3 = onPool {
-          corpus.select(col("doc_id").as("id"),
-              ta.shingleHashes(col("text"), 3).as("s"))
-            .write.mode("append").parquet(sh3Dir)
-        }
-        val fG8 = onPool {
-          corpus.select(col("doc_id"),
-              explode(ta.shingleHashes(col("text"), 8)).as("g"))
-            .write.mode("append").parquet(g8Dir)
-        }
-        awaitAll(Seq(fCap, fEval, fHash, fScore, fSh3, fG8))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    (spark.read.parquet(capDir),
-      spark.read.parquet(sh3Dir).dropDuplicates("id"),
-      spark.read.parquet(g8Dir).dropDuplicates("doc_id", "g"),
-      spark.read.parquet(evalDir).dropDuplicates("g"),
-      spark.read.parquet(hashDir).dropDuplicates("doc_id"),
-      spark.read.parquet(scoreDir).dropDuplicates("doc_id"))
+    foldBatches(docsStream, checkpointDir) { bdf =>
+      // one materialization: the five feature extractions below
+      // re-scan the batch from executor memory, not the source
+      val base = bdf.select(col("doc_id"), col("source"),
+        col("text")).localCheckpoint()
+      // the six manifest appends are INDEPENDENT jobs over the
+      // checkpointed batch, each a ~single-partition write whose
+      // wall is dominated by job + commit overhead — submit them
+      // from the shared pool so the drain pays max, not sum, of the
+      // six (guide §2.6 "overlap independent jobs"; appends target
+      // six distinct tables, so results are byte-identical)
+      def append(df: => DataFrame, dir: String) =
+        onPool(Sinks.writeBlocks(df, dir, Nil))
+      val fCap = append(graft.operators.CapSample.mine(
+          base.select(col("doc_id"), col("source"),
+              ta.tokenCount(col("text")).cast("long").as("n_tok"))
+            .withColumn("h", md5(concat(lit("cap:"),
+              col("doc_id").cast("string")).cast("binary"))),
+          "source", Seq("h", "doc_id"), k), capDir)
+      val toks = ta.tokens(col("text"))
+      // doc_id < 1000000: the batch chain's eval-set guard mirrored
+      // (a no-op when real ids sit below the variant band)
+      val fEval = append(base.filter(col("doc_id") < 1000000L &&
+          pmod(col("doc_id"), lit(97)) === 0)
+        .select(array_join(
+          when(size(toks) >= 8,
+            slice(toks, size(toks) - 7, lit(8)))
+            .otherwise(toks), " ").as("etext"))
+        .select(explode(ta.shingleHashes(col("etext"), 8)).as("g")),
+        evalDir)
+      val fHash = append(base.select(col("doc_id"),
+          graft.operators.Digest.contentHash(col("text")).as("h")),
+        hashDir)
+      val fScore = append(base.select(col("doc_id"),
+          size(array_distinct(ta.tokens(col("text"))))
+            .cast("long").as("score")),
+        scoreDir)
+      val corpus = base.select(col("doc_id"), col("text"))
+        .unionByName(base
+          .filter(pmod(col("doc_id"), lit(3)) === 0)
+          .select((col("doc_id") + 1000000L).as("doc_id"),
+            col("text").substr(lit(1),
+              greatest(length(col("text")) - 20, lit(1)))
+              .as("text")))
+        .localCheckpoint() // scanned twice: sh3 + g8
+      val fSh3 = append(corpus.select(col("doc_id").as("id"),
+          ta.shingleHashes(col("text"), 3).as("s")), sh3Dir)
+      val fG8 = append(corpus.select(col("doc_id"),
+          explode(ta.shingleHashes(col("text"), 8)).as("g")), g8Dir)
+      awaitAll(Seq(fCap, fEval, fHash, fScore, fSh3, fG8))
+    }
+    def read(dir: String) = Sinks.read(spark, dir)
+    (read(capDir),
+      read(sh3Dir).dropDuplicates("id"),
+      read(g8Dir).dropDuplicates("doc_id", "g"),
+      read(evalDir).dropDuplicates("g"),
+      read(hashDir).dropDuplicates("doc_id"),
+      read(scoreDir).dropDuplicates("doc_id"))
   }
 
   /** Streaming takedown-notice manifest — the incremental takedown
@@ -949,17 +923,12 @@ object EventStream {
                                 spansManifest: DataFrame,
                                 manifestDir: String,
                                 checkpointDir: String): DataFrame = {
-    val q = noticeStream.writeStream
-      .foreachBatch { (bdf: DataFrame, _: Long) =>
-        spansManifest
-          .join(bdf.select(col("doc_id")).distinct(), Seq("doc_id"))
-          .write.mode("append").parquet(manifestDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(manifestDir).dropDuplicates("doc_id")
+    foldBatches(noticeStream, checkpointDir) { bdf =>
+      Sinks.writeBlocks(spansManifest
+        .join(bdf.select(col("doc_id")).distinct(), Seq("doc_id")),
+        manifestDir, Nil)
+    }
+    Sinks.read(spark, manifestDir).dropDuplicates("doc_id")
   }
 
   /** Streaming per-source token census — the q362 mixture fold's
@@ -971,18 +940,12 @@ object EventStream {
   def streamingSourceCensus(spark: SparkSession,
                             docsStream: DataFrame, censusDir: String,
                             checkpointDir: String): DataFrame = {
-    val q = docsStream.writeStream
-      .foreachBatch { (bdf: DataFrame, _: Long) =>
-        bdf.groupBy(col("source"))
-          .agg(sum(graft.llm.TextAnalysis.tokenCount(col("text"))
-            .cast("long")).as("sz_tok"))
-          .write.mode("append").parquet(censusDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(censusDir)
+    foldBatches(docsStream, checkpointDir) { bdf =>
+      Sinks.writeBlocks(bdf.groupBy(col("source"))
+        .agg(sum(graft.llm.TextAnalysis.tokenCount(col("text"))
+          .cast("long")).as("sz_tok")), censusDir, Nil)
+    }
+    Sinks.read(spark, censusDir)
       .groupBy(col("source"))
       .agg(sum(col("sz_tok")).as("sz_tok"))
   }

@@ -18,8 +18,8 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener,
   *
   * Usage mirrors the batch observer: wrap each stage boundary of the
   * STREAMING frame (first checkpoint = raw input), then drain via
-  * [[EventStream.runToCompletionObserved]] (or register [[listener]]
-  * around any start/await of your own). After (or during) the run,
+  * [[EventStream.runToCompletion]] with `observer = Some(this)` (or
+  * register [[listener]] around any start/await of your own). After (or during) the run,
   * [[history]] holds (batch_id, stage, n_in, n_kept, kept_frac) rows
   * and a floor violation stops the query mid-stream and rethrows as
   * [[CurationAborted]].
@@ -103,7 +103,7 @@ final class StreamPipelineObserver(keptFloor: Option[Double] = None) {
   /** A listener that folds every progress event into [[history]] and,
     * on a floor violation, records it and STOPS the violating query —
     * the mid-stream circuit breaker. Register/deregister around the
-    * drain (runToCompletionObserved does both). */
+    * drain (runToCompletion with an observer does both). */
   def listener(spark: SparkSession): StreamingQueryListener =
     new StreamingQueryListener {
       override def onQueryStarted(

@@ -442,9 +442,13 @@ class DedupSpec extends SparkSpec {
     assert(foldRows(20L) === ((7L, 7L, 0L)))
     assert(foldRows(21L) === ((8L, 8L, 0L)))
     assert(foldRows(22L) === ((5L, 0L, 5L)))
-    // versions are append-only: v0 (hist), v1 (hist∪f1), v2 (∪f2)
-    assert(new java.io.File(idxPath).list().toSet ===
-      Set("v0", "v1", "v2"))
+    // manifests are append-only: 0 bootstraps the empty table, then
+    // hist, hist∪f1, ∪f2; the hist∪f1 files the last commit dropped
+    // stay on disk for lazy readers planned over them
+    val log = graft.sources.TableLog
+    assert(log.generation(idxPath) === 3L)
+    assert(log.files(idxPath, 2).forall(f =>
+      java.nio.file.Files.exists(java.nio.file.Paths.get(idxPath, f))))
   }
 
   test("prefixFilterJaccardPairs: randomized lossless law — seeded " +

@@ -139,19 +139,15 @@ class SemDedupSpec extends SparkSpec {
     val hist = Seq((0L, Seq(1.0f, 0.0f))).toDF("vec_id", "embedding")
     val idx = graft.Scratch.dir("graft_stream_sem").toString + "/idx"
     Similarity.ivfWriteIndex(hist, $"vec_id", $"embedding", idx, nlist = 1)
-    val srcDir = graft.Scratch.dir("graft_stream_sem_src").toString
-    // batch 1: a survivor orthogonal to history
-    Seq((10L, Seq(0.0f, 1.0f))).toDF("vec_id", "embedding")
-      .coalesce(1).write.mode("append").parquet(srcDir)
-    Thread.sleep(1100) // distinct mtime seconds => deterministic order
-    // batch 2: a near-dup of batch 1's SURVIVOR (catchable only
-    // because the survivor was appended to the index) + one of history
-    Seq((20L, Seq(0.001f, 0.9999f)), (21L, Seq(0.999f, 0.01f)))
-      .toDF("vec_id", "embedding")
-      .coalesce(1).write.mode("append").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
+    val stream = graft.streaming.EventStream.replay(Seq(
+      // batch 1: a survivor orthogonal to history
+      Seq((10L, Seq(0.0f, 1.0f))),
+      // batch 2: a near-dup of batch 1's SURVIVOR (catchable only
+      // because the survivor was appended to the index) + one of
+      // history
+      Seq((20L, Seq(0.001f, 0.9999f)), (21L, Seq(0.999f, 0.01f))))
+      .map(_.toDF("vec_id", "embedding")),
+      graft.Scratch.dir("graft_stream_sem_src").toString)
     val out = graft.Scratch.dir("graft_stream_sem_out").toString
     val dups = SemDedup.streamingDedup(spark, stream, $"vec_id",
       $"embedding", idx, out + "/dups", out + "/cp",
@@ -161,7 +157,7 @@ class SemDedupSpec extends SparkSpec {
     assert(got === Map(20L -> 10L, 21L -> 0L),
       s"got $got — 20 must dedup against the APPENDED survivor 10")
     // and the index now holds exactly history + the two survivors
-    val ids = spark.read.parquet(idx)
+    val ids = graft.sources.Sinks.read(spark, idx)
       .select("vec_id").as[Long].collect().toSet
     assert(ids === Set(0L, 10L))
   }

@@ -43,7 +43,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("language id: stopword argmax + CJK script") {
-    val preds = df.select($"id", TextAnalysis.langId($"text").as("l"))
+    val preds = df.select($"id", TextAnalysis.langIdFast($"text").as("l"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(preds(1L) === "en")
     assert(preds(2L) === "es")

@@ -3,11 +3,8 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.FileTime
 
-import scala.jdk.CollectionConverters._
-
 import graft.{Scratch, SparkSpec}
 import graft.tables.Catalog
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 class TableLogSpec extends SparkSpec {
@@ -97,42 +94,6 @@ class TableLogSpec extends SparkSpec {
       "only the newest manifest and its predecessor stay")
     assert(catalog.table("t").count() === 40L)
     assert(cached === 1)
-  }
-
-  /** Spark jobs started by `run`'s tagged bodies, per tag: a listener
-    * counts the jobs each tag's thread-local property marks, and a
-    * sentinel job, which the listener bus delivers after every earlier
-    * job start, ends the count. */
-  private def jobsPerTag(run: (String => (=> Unit) => Unit) => Unit)
-      : Map[String, Int] = {
-    val sc = spark.sparkContext
-    val mark = "graft.spec.tablelog"
-    val jobs = new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.concurrent.atomic.AtomicInteger]()
-    @volatile var sentinel = false
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p => Option(p.getProperty(mark)))
-          .foreach { tag =>
-            if (tag == "sentinel") sentinel = true
-            else jobs.computeIfAbsent(tag,
-              _ => new java.util.concurrent.atomic.AtomicInteger())
-              .incrementAndGet()
-          }
-    }
-    def tagged(tag: String)(body: => Unit): Unit = {
-      sc.setLocalProperty(mark, tag)
-      try body finally sc.setLocalProperty(mark, null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      run(tagged)
-      tagged("sentinel")(sc.parallelize(Seq(1), 1).count())
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!sentinel && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(sentinel, "listener never saw the sentinel")
-    } finally sc.removeSparkListener(listener)
-    jobs.asScala.map { case (t, n) => t -> n.get }.toMap.withDefaultValue(0)
   }
 
   test("reading a manifest table starts no more Spark jobs than " +

@@ -201,7 +201,7 @@ class EventStreamSpec extends SparkSpec {
       (u, new java.sql.Timestamp(t), "view")
     def purchase(u: Long, t: Long) =
       (u, new java.sql.Timestamp(t + 600000L), "purchase")
-    val chunks: Seq[Seq[(Long, java.sql.Timestamp, String)]] = Seq(
+    val chunks = Seq[Seq[(Long, java.sql.Timestamp, String)]](
       // file 1 (days 10/11): complete pairs — advances the watermark
       Seq(view(1L, base(10)), purchase(1L, base(10)),
           view(2L, base(11)), purchase(2L, base(11))),
@@ -209,13 +209,9 @@ class EventStreamSpec extends SparkSpec {
       Seq(view(1L, base(0)), view(2L, base(0))),
       // file 3 (day 0): the matching purchases, one batch later
       Seq(purchase(1L, base(0)), purchase(2L, base(0))))
-    chunks.foreach { rows =>
-      rows.toDF("user_id", "ts", "event_type")
-        .coalesce(1).write.mode("append").parquet(dir)
-      // distinct modification seconds => deterministic file order
-      Thread.sleep(1100)
-    }
-    val batchDf = spark.read.parquet(dir)
+      .map(_.toDF("user_id", "ts", "event_type"))
+    val stream = EventStream.replay(chunks, dir)
+    val batchDf = chunks.reduce(_ unionByName _)
     val batchPairs = batchDf.filter(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("a_ts"))
       .join(batchDf.filter(col("event_type") === "purchase")
@@ -227,21 +223,20 @@ class EventStreamSpec extends SparkSpec {
     assert(batchPairs === 4L,
       "precondition: 2 same-batch pairs + 2 cross-batch day-0 pairs")
     // the hazard is real: a 1-hour watermark late-drops file 2's rows
-    val short = drainedWithFilesPerTrigger(dir, batchDf, "1 hour")
+    val short = drained(stream, "1 hour")
     assert(short < batchPairs,
       s"expected the short watermark to drop pairs, got $short")
     // the derived span watermark restores exact batch parity
     val span = EventStream.backlogSpanWatermark(batchDf, "ts")
-    val safe = drainedWithFilesPerTrigger(dir, batchDf, span)
+    val safe = drained(stream, span)
     assert(safe === batchPairs)
   }
 
-  /** Drain the dir's backlog one file per micro-batch through the
-    * interval join at the given watermark; returns emitted pair count. */
-  private def drainedWithFilesPerTrigger(dir: String,
-      batchDf: org.apache.spark.sql.DataFrame, watermark: String): Long = {
-    val stream = spark.readStream.schema(batchDf.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
+  /** Drain the replayed backlog (one file per micro-batch) through
+    * the interval join at the given watermark; returns emitted pair
+    * count. */
+  private def drained(stream: org.apache.spark.sql.DataFrame,
+                      watermark: String): Long = {
     val views = stream.filter(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("a_ts"))
     val purchases = stream.filter(col("event_type") === "purchase")
@@ -261,15 +256,10 @@ class EventStreamSpec extends SparkSpec {
     import spark.implicits._
     val dir = graft.Scratch.dir("graft_loj").toString
     def t(m: Int) = new java.sql.Timestamp(1700000000000L + m * 60000L)
-    // ONE real batch: user 1 matches inside 30 min, user 2 never does
-    Seq((1L, t(0), "view"), (1L, t(10), "purchase"), (2L, t(5), "view"))
-      .toDF("user_id", "ts", "event_type")
-      .coalesce(1).write.mode("append").parquet(dir)
-    Thread.sleep(1100)
-    val schema = spark.read.parquet(dir).schema
-    def drain(): Seq[(Long, Boolean)] = {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
+    // drain the whole source after `arrived` lands behind what it holds
+    def drain(arrived: org.apache.spark.sql.DataFrame)
+        : Seq[(Long, Boolean)] = {
+      val stream = EventStream.replay(Seq(arrived), dir)
       val views = stream.filter(col("event_type") === "view")
         .select(col("user_id").as("a_user"), col("ts").as("a_ts"))
       val purchases = stream.filter(col("event_type") === "purchase")
@@ -288,15 +278,17 @@ class EventStreamSpec extends SparkSpec {
     // without a sentinel: the match emits, the unmatched view is
     // STILL IN STATE at stream end (its interval never passed the
     // watermark) — this is the trap the sentinel exists for
-    val without = drain()
+    // ONE real batch: user 1 matches inside 30 min, user 2 never does
+    val without = drain(
+      Seq((1L, t(0), "view"), (1L, t(10), "purchase"), (2L, t(5), "view"))
+        .toDF("user_id", "ts", "event_type"))
     assert(without === Seq((1L, true)),
       s"only the inner match should emit without a sentinel: $without")
     // sentinel file (far future, one row per side, negative users):
     // final watermark passes every real interval -> outer rows flush
-    Seq((-1L, t(100000), "view"), (-2L, t(100000), "purchase"))
-      .toDF("user_id", "ts", "event_type")
-      .coalesce(1).write.mode("append").parquet(dir)
-    val withSentinel = drain().sortBy(_._1)
+    val withSentinel = drain(
+      Seq((-1L, t(100000), "view"), (-2L, t(100000), "purchase"))
+        .toDF("user_id", "ts", "event_type")).sortBy(_._1)
     assert(withSentinel === Seq((1L, true), (2L, false)),
       s"sentinel must flush user 2 as unmatched: $withSentinel")
   }
@@ -307,17 +299,11 @@ class EventStreamSpec extends SparkSpec {
     val dir = graft.Scratch.dir("graft_foj").toString
     def t(m: Int) = new java.sql.Timestamp(1700000000000L + m * 60000L)
     // user 1 matches; user 2: view only; user 3: purchase only
-    Seq((1L, t(0), "view"), (1L, t(10), "purchase"),
-        (2L, t(5), "view"), (3L, t(7), "purchase"))
-      .toDF("user_id", "ts", "event_type")
-      .coalesce(1).write.mode("append").parquet(dir)
-    Thread.sleep(1100)
-    Seq((-1L, t(100000), "view"), (-2L, t(100000), "purchase"))
-      .toDF("user_id", "ts", "event_type")
-      .coalesce(1).write.mode("append").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
+    val stream = EventStream.replay(Seq(
+      Seq((1L, t(0), "view"), (1L, t(10), "purchase"),
+        (2L, t(5), "view"), (3L, t(7), "purchase")),
+      Seq((-1L, t(100000), "view"), (-2L, t(100000), "purchase")))
+      .map(_.toDF("user_id", "ts", "event_type")), dir)
     val views = stream.filter(col("event_type") === "view")
       .select(col("user_id").as("a_user"), col("ts").as("a_ts"))
     val purchases = stream.filter(col("event_type") === "purchase")
@@ -345,19 +331,13 @@ class EventStreamSpec extends SparkSpec {
     import spark.implicits._
     val dir = graft.Scratch.dir("graft_funnel_ooo").toString + "/ev"
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    // file 1: the user's click and purchase arrive FIRST
-    Seq((1L, ts("2024-01-01 10:10:00"), "click"),
-        (1L, ts("2024-01-01 10:20:00"), "purchase"))
-      .toDF("user_id", "ts", "event_type")
-      .coalesce(1).write.mode("append").parquet(dir)
-    Thread.sleep(1100) // distinct mtime second => deterministic order
-    // file 2: the view that STARTED the funnel arrives late
-    Seq((1L, ts("2024-01-01 10:00:00"), "view"))
-      .toDF("user_id", "ts", "event_type")
-      .coalesce(1).write.mode("append").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
+    val stream = EventStream.replay(Seq(
+      // file 1: the user's click and purchase arrive FIRST
+      Seq((1L, ts("2024-01-01 10:10:00"), "click"),
+        (1L, ts("2024-01-01 10:20:00"), "purchase")),
+      // file 2: the view that STARTED the funnel arrives late
+      Seq((1L, ts("2024-01-01 10:00:00"), "view")))
+      .map(_.toDF("user_id", "ts", "event_type")), dir)
     val reached = EventStream.streamingFunnel(stream, "user_id", "ts",
       "event_type", Seq("view", "click", "purchase"))
     val updates = EventStream.runToCompletion(spark, reached,
@@ -417,9 +397,7 @@ class EventStreamSpec extends SparkSpec {
     // normalizes at its own boundary) — via a real streaming source
     val dir = graft.Scratch.dir("graft_ntz")
       .toString + "/events"
-    ntz.coalesce(1).write.parquet(dir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(dir).schema).parquet(dir)
+    val stream = EventStream.replay(Seq(ntz), dir)
     assert(stream.schema("ts").dataType ==
       org.apache.spark.sql.types.TimestampNTZType)
     val tumbled = EventStream.runToCompletion(spark,
@@ -442,13 +420,14 @@ class EventStreamSpec extends SparkSpec {
     assert(batchSessions === Map(1L -> 1L, 2L -> 1L))
   }
 
-  test("writeOrderedBatches: appended batches never back-date below " +
-      "existing files — the mtime floor keeps (mtime, path) replay " +
-      "order even when the earlier files carry later stamps") {
+  test("replay: a second call into the same dir continues the file " +
+      "numbering and never back-dates below the existing files — the " +
+      "mtime floor keeps (mtime, path) replay order even when the " +
+      "earlier files carry later stamps") {
     import spark.implicits._
-    val dir = graft.Scratch.dir("graft_wob_floor").toString + "/src"
+    val dir = graft.Scratch.dir("graft_replay_floor").toString + "/src"
     val mk = (i: Long) => Seq((i, i)).toDF("a", "b")
-    EventStream.writeOrderedBatches(Seq(mk(0), mk(1)), dir)
+    EventStream.replay(Seq(mk(0), mk(1)), dir)
     // simulate the hazard: the existing files carry stamps LATER than
     // the fresh t0 = now − 1000·size an append would compute
     val future = System.currentTimeMillis() + 3600L * 1000L
@@ -456,8 +435,7 @@ class EventStreamSpec extends SparkSpec {
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
       .zipWithIndex
       .foreach { case (f, i) => f.setLastModified(future + i * 1000L) }
-    EventStream.writeOrderedBatches(Seq(mk(2), mk(3), mk(4)), dir,
-      startIndex = 2)
+    val stream = EventStream.replay(Seq(mk(2), mk(3), mk(4)), dir)
     val all = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
     assert(all.map(_.getName).toSeq === (0 until 5)
@@ -465,6 +443,33 @@ class EventStreamSpec extends SparkSpec {
     val stamps = all.map(_.lastModified()).toSeq
     assert(stamps.zip(stamps.tail).forall { case (a, b) => a < b },
       s"mtimes must ascend strictly in name order: $stamps")
+    // the stream replays both calls' parts, one per micro-batch
+    val q = stream.writeStream.format("noop")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    assert(q.recentProgress.map(_.numInputRows).toSeq === Seq.fill(5)(1L))
+  }
+
+  test("replay returns its stream without starting a Spark job: the " +
+      "schema comes from the first file's footer") {
+    import spark.implicits._
+    val scratch = graft.Scratch.dir("graft_replay_jobs").toString
+    val part = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
+    var stream: org.apache.spark.sql.DataFrame = null
+    val n = jobsPerTag { tagged =>
+      tagged("write")(part.coalesce(1).write.parquet(s"$scratch/plain"))
+      tagged("replay") {
+        stream = EventStream.replay(Seq(part), s"$scratch/src")
+      }
+    }
+    info(s"jobs: write ${n("write")}, replay ${n("replay")}")
+    assert(n("write") >= 1)
+    assert(n("replay") === n("write"),
+      "building the stream must add no job to the part's own write")
+    assert(stream.isStreaming)
+    assert(stream.schema.map(f => (f.name, f.dataType)) ===
+      part.schema.map(f => (f.name, f.dataType)))
   }
 
   test("streaming pipeline observability: per-batch stage metrics " +
@@ -476,15 +481,13 @@ class EventStreamSpec extends SparkSpec {
     val mk = (base: Long) => (0L until 10L)
       .map(i => (base + i, if (i % 2 == 0) 1L else -1L, "en"))
       .toDF("doc_id", "v", "lang")
-    EventStream.writeOrderedBatches(Seq(mk(0), mk(100), mk(200)), dir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", 1).parquet(dir)
+    val stream = EventStream.replay(Seq(mk(0), mk(100), mk(200)), dir)
     val obs = new StreamPipelineObserver(keptFloor = Some(0.2))
     val kept = obs.checkpoint("quality",
       obs.checkpoint("raw", stream).filter(col("v") > 0))
-    val out = EventStream.runToCompletionObserved(spark,
-      kept.groupBy(col("lang")).agg(count(lit(1)).as("n")), obs)
+    val out = EventStream.runToCompletion(spark,
+      kept.groupBy(col("lang")).agg(count(lit(1)).as("n")),
+      observer = Some(obs))
     assert(out.select(max(col("n"))).collect().head.getLong(0) === 15L)
     // one (quality) stage row per micro-batch, each 10 -> 5
     val h = obs.history
@@ -503,17 +506,14 @@ class EventStreamSpec extends SparkSpec {
       .map(i => (base + i, 1L, "en")).toDF("doc_id", "v", "lang")
     val poison = (100L until 110L)
       .map(i => (i, -1L, "en")).toDF("doc_id", "v", "lang")
-    EventStream.writeOrderedBatches(
-      Seq(good(0), poison, good(200)), dir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", 1).parquet(dir)
+    val stream = EventStream.replay(Seq(good(0), poison, good(200)), dir)
     val obs = new StreamPipelineObserver(keptFloor = Some(0.2))
     val kept = obs.checkpoint("quality",
       obs.checkpoint("raw", stream).filter(col("v") > 0))
     val e = intercept[graft.llm.CurationAborted] {
-      EventStream.runToCompletionObserved(spark,
-        kept.groupBy(col("lang")).agg(count(lit(1)).as("n")), obs)
+      EventStream.runToCompletion(spark,
+        kept.groupBy(col("lang")).agg(count(lit(1)).as("n")),
+        observer = Some(obs))
     }
     assert(e.stage.contains("quality") && e.stage.contains("batch 1"),
       e.toString)
@@ -531,13 +531,7 @@ class EventStreamSpec extends SparkSpec {
         (i % 2, (i * 37) % 2147483647L, i % 5 + 1)) // kh collides: 5 distinct
       .toDF("shard", "h", "kh")
     val all = (0L until 40L)
-    val src1 = graft.Scratch.dir("graft_smf1").toString + "/a"
-    EventStream.writeOrderedBatches(
-      Seq(mk(all.take(20)), mk(all.drop(20))), src1)
-    def drain(dir: String) = {
-      val schema = spark.read.parquet(dir).schema
-      val s = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir)
+    def drain(s: org.apache.spark.sql.DataFrame) =
       EventStream.runToCompletion(spark,
           EventStream.streamingManifest(s, k = 3), mode = "update")
         .groupBy(col("shard"))
@@ -546,16 +540,16 @@ class EventStreamSpec extends SparkSpec {
         .select(col("shard"), col("f.n_rows"), col("f.fp"),
           col("f.k_count"), col("f.h_k"))
         .as[(Long, Long, Long, Long, Long)].collect().toSet
-    }
-    val streamed = drain(src1)
+    val streamed = drain(EventStream.replay(
+      Seq(mk(all.take(20)), mk(all.drop(20))),
+      graft.Scratch.dir("graft_smf1").toString + "/a"))
     // only 5 distinct kh values exist but k=3 caps the sketch
     assert(streamed.forall(_._4 == 3L))
     // same rows as ONE batch -> identical manifest (order-independent
     // set functions; this is the law the q309 oracle proves on real
     // data against DuckDB)
-    val src2 = graft.Scratch.dir("graft_smf2").toString + "/b"
-    EventStream.writeOrderedBatches(Seq(mk(all)), src2)
-    assert(drain(src2) === streamed)
+    assert(drain(EventStream.replay(Seq(mk(all)),
+      graft.Scratch.dir("graft_smf2").toString + "/b")) === streamed)
   }
 
   test("observer ingest skips a batch missing any registered metric " +
@@ -606,10 +600,8 @@ class EventStreamSpec extends SparkSpec {
     val b1 = mkDocs(15L to 29L)
     def ingest(tag: String, batches: Seq[org.apache.spark.sql.DataFrame]) = {
       val src = graft.Scratch.dir(s"graft_sta_$tag").toString + "/docs"
-      EventStream.writeOrderedBatches(batches, src)
-      val stream = spark.readStream.schema(b0.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      EventStream.streamingTrainingArtifacts(spark, stream,
+      EventStream.streamingTrainingArtifacts(spark,
+        EventStream.replay(batches, src),
         graft.Scratch.dir(s"graft_sta_${tag}m").toString,
         graft.Scratch.dir(s"graft_sta_${tag}c").toString, k = 4)
     }
@@ -636,5 +628,42 @@ class EventStreamSpec extends SparkSpec {
     assert(clean._6.count() === 30L)
     assert(clean._6.select("score").distinct().collect()
       .map(_.getLong(0)).toSet === Set(6L))
+  }
+
+  test("streamingTrainingArtifacts commits each batch's appends through " +
+      "TableLog: every store has a manifest per batch, and reading the " +
+      "returned frames starts no Spark job") {
+    import spark.implicits._
+    import graft.sources.{Sinks, TableLog}
+    val docs = (0L until 12L).map(i =>
+        (i, s"s${i % 2}", s"alpha beta w$i gamma delta w$i tail"))
+      .toDF("doc_id", "source", "text")
+    val man = graft.Scratch.dir("graft_sta_log").toString
+    val out = EventStream.streamingTrainingArtifacts(spark,
+      EventStream.replay(
+        Seq(docs.filter($"doc_id" < 6L), docs.filter($"doc_id" >= 6L)),
+        graft.Scratch.dir("graft_sta_log_src").toString + "/docs"),
+      man, graft.Scratch.dir("graft_sta_log_ck").toString, k = 4)
+    val stores = Seq("cap", "sh3", "g8", "evalg", "hash", "score")
+      .map(d => s"$man/$d")
+    stores.foreach { st =>
+      assert(java.nio.file.Files.isDirectory(
+        java.nio.file.Paths.get(st, TableLog.Dir)), st)
+      // manifest 0 is the empty table's bootstrap, then one per batch
+      assert(TableLog.generation(st) === 2L, st)
+    }
+    val frames = out.productIterator.map {
+      case df: org.apache.spark.sql.DataFrame => df }.toSeq
+    def names(fs: Seq[String]) =
+      fs.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
+    // each returned frame reads exactly its store's committed files
+    val n = jobsPerTag { tagged =>
+      tagged("read")(frames.zip(stores).foreach { case (df, st) =>
+        Sinks.read(spark, st)
+        assert(names(df.inputFiles.toSeq) === names(TableLog.live(st)), st)
+      })
+    }
+    assert(n("read") === 0, "reading the committed stores started a job")
+    assert(frames(4).count() === 12L)
   }
 }

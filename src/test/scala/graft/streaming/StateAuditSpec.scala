@@ -15,10 +15,7 @@ class StateAuditSpec extends SparkSpec {
         .withColumn("ts", timestamp_micros(lit(1700000000000000L) +
           col("event_id") * 1000000L))
     val src = graft.Scratch.dir("graft_sas").toString + "/ev"
-    EventStream.writeOrderedBatches(Seq(mk(0), mk(100), mk(200)), src)
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
+    val stream = EventStream.replay(Seq(mk(0), mk(100), mk(200)), src)
     val updates = EventStream.streamingTokenBucket(stream, "user_id",
       "ts", "event_id", capacity = 100L)
     val cp = graft.Scratch.dir("graft_sas_cp").toString

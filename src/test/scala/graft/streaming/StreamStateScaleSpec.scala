@@ -23,7 +23,7 @@ class StreamStateScaleSpec extends SparkSpec {
   private val nUsers = 50
   private val baseRows = 2000L
 
-  private def backlog(density: Int): String = {
+  private def backlog(density: Int): DataFrame = {
     val dir = graft.Scratch.dir(s"graft_sss_${density}x")
       .toString + "/ev"
     val epoch = 1700000000L // 2023-11-14, seconds
@@ -34,18 +34,14 @@ class StreamStateScaleSpec extends SparkSpec {
       col("id").as("event_id"))
     val parts = (0 until 4).map(k =>
       all.filter(sec >= k * 500 && sec < (k + 1) * 500))
-    es.writeOrderedBatches(parts, dir)
-    dir
+    es.replay(parts, dir)
   }
 
-  private lazy val dir1 = backlog(1)
-  private lazy val dir2 = backlog(2)
+  private lazy val stream1 = backlog(1)
+  private lazy val stream2 = backlog(2)
 
-  private def peakState(dir: String, mode: String)
+  private def peakState(s: DataFrame, mode: String)
       (build: DataFrame => DataFrame): Long = {
-    val schema = spark.read.parquet(dir).schema
-    val s = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(dir)
     val q = build(s).writeStream.format("noop").outputMode(mode)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
@@ -56,10 +52,10 @@ class StreamStateScaleSpec extends SparkSpec {
 
   test("keyed state is |keys|-FLAT: token-bucket peak state rows == " +
       "|users| exactly, unchanged when event volume doubles") {
-    val peak1 = peakState(dir1, "update")(s =>
+    val peak1 = peakState(stream1, "update")(s =>
       es.streamingTokenBucket(s, "user_id", "ts", "event_id",
         capacity = 3L))
-    val peak2 = peakState(dir2, "update")(s =>
+    val peak2 = peakState(stream2, "update")(s =>
       es.streamingTokenBucket(s, "user_id", "ts", "event_id",
         capacity = 3L))
     assert(peak1 === nUsers.toLong)
@@ -75,11 +71,11 @@ class StreamStateScaleSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state." +
         "RocksDBStateStoreProvider")
     try {
-      def run(dir: String): Long = peakState(dir, "update")(s =>
+      def run(stream: DataFrame): Long = peakState(stream, "update")(s =>
         es.runningCountsTws(s, "user_id", "ts", watermark = "1 day",
           ttlMs = 3650L * 24 * 3600 * 1000))
-      val peak1 = run(dir1)
-      val peak2 = run(dir2)
+      val peak1 = run(stream1)
+      val peak2 = run(stream2)
       // numRowsTotal spans the operator's column families (value
       // state + timer index) — the invariant is per-key flatness:
       // identical at both densities, bounded by a small per-key
@@ -97,9 +93,9 @@ class StreamStateScaleSpec extends SparkSpec {
   test("watermark-evicted state scales with rows-per-batch, not with " +
       "total events: doubling density ~doubles dedup state while " +
       "staying far below the id count") {
-    val peak1 = peakState(dir1, "append")(s =>
+    val peak1 = peakState(stream1, "append")(s =>
       es.dedupByKeyWithinWatermark(s, "ts", "60 seconds", "event_id"))
-    val peak2 = peakState(dir2, "append")(s =>
+    val peak2 = peakState(stream2, "append")(s =>
       es.dedupByKeyWithinWatermark(s, "ts", "60 seconds", "event_id"))
     // eviction actually engaged: peak is a small fraction of the ids
     assert(peak1 < baseRows / 2,
@@ -112,9 +108,9 @@ class StreamStateScaleSpec extends SparkSpec {
   test("CONTROL — the measurement catches unbounded state: a " +
       "span-sized watermark never evicts, so peak state == every id " +
       "seen and doubles with the events") {
-    val peak1 = peakState(dir1, "append")(s =>
+    val peak1 = peakState(stream1, "append")(s =>
       es.dedupByKey(s, "ts", "5000 seconds", "event_id"))
-    val peak2 = peakState(dir2, "append")(s =>
+    val peak2 = peakState(stream2, "append")(s =>
       es.dedupByKey(s, "ts", "5000 seconds", "event_id"))
     assert(peak1 === baseRows)
     assert(peak2 === baseRows * 2)

@@ -203,9 +203,9 @@ private[graft] object QueriesEtl {
         df => df.write.mode("overwrite").parquet(d1),
         df => df.filter(col("event_type") =!= "error")
           .write.mode("overwrite").parquet(d2)))
-      val a = spark.read.parquet(d1).groupBy(col("event_type"))
+      val a = graft.sources.Sinks.read(spark, d1).groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_all"))
-      val b = spark.read.parquet(d2).groupBy(col("event_type"))
+      val b = graft.sources.Sinks.read(spark, d2).groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_filtered"))
       a.join(b, Seq("event_type"), "left")
         .select(col("event_type"), col("n_all"),

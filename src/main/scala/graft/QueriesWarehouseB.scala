@@ -573,7 +573,7 @@ private[graft] object QueriesWarehouseB {
       val tmp = Scratch.dir("graft_q234").toString
       graft.llm.Relevance.termStats(hist, col("doc_id"), col("text"))
         .write.parquet(tmp + "/stats")
-      val base = spark.read.parquet(tmp + "/stats")
+      val base = graft.sources.Sinks.read(spark, tmp + "/stats")
       graft.llm.Relevance.mergeTermStats(base,
           graft.llm.Relevance.termStats(batch, col("doc_id"),
             col("text")))
@@ -641,7 +641,7 @@ private[graft] object QueriesWarehouseB {
         .filter(col("__rn") <= k)
         .select(col("day"), col("h"))
         .write.parquet(tmp + "/sketches")
-      val persisted = spark.read.parquet(tmp + "/sketches")
+      val persisted = graft.sources.Sinks.read(spark, tmp + "/sketches")
       val merged = graft.operators.Kmv.merge(
         Seq(persisted.select(col("h"))), k)
       val exact = ev.agg(countDistinct(col("user_id")).cast("double")

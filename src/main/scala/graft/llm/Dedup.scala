@@ -742,7 +742,7 @@ object Dedup {
       .select(col("new_id"),
         graft.functions.minhash_sig(col("sh"), numHashes).as("sig"))
       .localCheckpoint()
-    val index = spark.read.parquet(indexPath)
+    val index = Sinks.read(spark, indexPath)
     val cand = banded(newSig, "new_id")
       .join(banded(index.select(col("id").as("old_id"), col("sig")),
         "old_id"), Seq("band", "bh"))

@@ -108,16 +108,18 @@ object Staged {
     target
   }
 
-  /** DataFrame-shaped artifact: build + write on first request for
-    * `key`, read-from-parquet on every request. The returned frame is
-    * always the parquet read ([[graft.sources.TableLog.read]] of the
-    * artifact dir: its listing and first footer, no schema job), so
-    * first and later callers get the identical (materialized,
-    * re-scannable) plan shape. */
+  /** DataFrame-shaped artifact: build + write (through
+    * [[graft.sources.Sinks.writer]], like every table the engine owns)
+    * on first request for `key`, read-from-parquet on every request.
+    * The returned frame is always the parquet read
+    * ([[graft.sources.TableLog.read]] of the artifact dir: its listing
+    * and first footer, no schema job), so first and later callers get
+    * the identical (materialized, re-scannable) plan shape. */
   def getOrBuild(spark: SparkSession, key: String)
                 (build: => DataFrame): DataFrame = {
     val dir = getOrBuildDir(key, "_SUCCESS")(tmp =>
-      build.write.mode("overwrite").parquet(tmp.toString))
+      graft.sources.Sinks.writer(build).mode("overwrite")
+        .parquet(tmp.toString))
     graft.sources.TableLog.read(spark, dir.toString)._1
   }
 

@@ -2,7 +2,8 @@ package graft.sources
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sink layer (SURVEY.md §2a). The reference's sinks are S3 gzipped
@@ -16,8 +17,8 @@ import org.apache.spark.sql.functions._
   *  - rollover -> `partitionBy(date_col)`: writers append to the day's
   *    partition, readers prune by date — retention is dropping partition
   *    directories, and "too-old" docs are filtered at write;
-  *  - split -> cache once, write N times (each sink sees identical data
-  *    without recomputing the pipeline).
+  *  - split -> checkpoint once, write N times (each sink sees identical
+  *    data without recomputing the pipeline).
   *
   * Every write to a sink table is one [[TableLog]] commit: the new files
   * are staged, moved in, and published with the next manifest, so a
@@ -31,7 +32,7 @@ object Sinks {
   def writeBlocks(df: DataFrame, path: String, partitionCols: Seq[String],
                   format: String = "parquet"): Unit =
     append(path)(dst =>
-      df.write.partitionBy(partitionCols: _*).format(format).save(dst))
+      writer(df).partitionBy(partitionCols: _*).format(format).save(dst))
 
   /** S6: time-rolled sink — route rows to `date=YYYY-MM-DD` partitions,
     * dropping docs older than `retainDays` relative to `now`. */
@@ -39,15 +40,15 @@ object Sinks {
                     retainDays: Int, now: java.sql.Timestamp): Unit = {
     val cutoff = new java.sql.Timestamp(
       now.getTime - retainDays * 86400000L)
-    append(path)(dst => df.filter(ts >= lit(cutoff))
-      .withColumn("__date", date_format(ts, "yyyy-MM-dd"))
-      .write.partitionBy("__date").parquet(dst))
+    append(path)(dst => writer(df.filter(ts >= lit(cutoff))
+      .withColumn("__date", date_format(ts, "yyyy-MM-dd")))
+      .partitionBy("__date").parquet(dst))
   }
 
   /** Replace a sink table's content with `df` in one commit; the old
     * files stay readable by requests already planned over them. */
   def replace(df: DataFrame, path: String): Unit = {
-    val added = TableLog.stage(path)(dst => df.write.parquet(dst))
+    val added = TableLog.stage(path)(dst => writer(df).parquet(dst))
     TableLog.commit(path)(_ => added)
   }
 
@@ -57,12 +58,24 @@ object Sinks {
   }
 
   /** S7: fan one computed frame out to several sinks, computing it
-    * once; each sink commits on its own. */
+    * once; each sink commits on its own. The frame is checkpointed,
+    * not persisted: a cached plan keeps its shuffle partitioning, so
+    * each sink would write one file per shuffle partition, where the
+    * checkpoint holds the partitions AQE coalesced the frame to. */
   def split(df: DataFrame, sinks: Seq[DataFrame => Unit]): Unit = {
-    val cached = df.persist()
-    try sinks.foreach(_(cached))
-    finally cached.unpersist()
+    val computed = df.localCheckpoint()
+    try sinks.foreach(_(computed))
+    finally graft.operators.Lifecycle.release(computed)
   }
+
+  /** `df.write` for a table the engine owns: its files and directories
+    * are created through [[NioLocalFileSystem]], which sets their modes
+    * in-process instead of forking `chmod` for each. The file system is
+    * selected per write and uncached, because the JVM's cached
+    * `file://` instance exists before any write could configure it. */
+  private[graft] def writer(df: DataFrame): DataFrameWriter[Row] =
+    df.write.option("fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .option("fs.file.impl.disable.cache", "true")
 
   /** The sink table at `path` as of its newest commit (a directory no
     * commit has touched reads as its listing), by [[TableLog.read]]. */
@@ -159,7 +172,7 @@ object Sinks {
       files.groupBy(dirOf).foreach { case (dir, fs) =>
         val in = TableLog.scan(spark, Paths.get(path, dir),
           fs.map(Paths.get(path, _)))
-        f(dir, in).write.parquet(Paths.get(dst, dir).toString)
+        writer(f(dir, in)).parquet(Paths.get(dst, dir).toString)
       }
     }
 }

@@ -50,6 +50,32 @@ class SinksSpec extends SparkSpec {
     val b = spark.read.parquet(s"$out2/b")
     assert(a.count() === df.count())
     assert(b.agg(sum("count")).collect().head.getLong(0) === df.count())
+
+    // once: the input's projection evaluates each row exactly once
+    // across both sinks; a shuffled frame (4 shuffle partitions, AQE
+    // on) reaches each sink as the one partition AQE coalesced it to
+    val evaluated = spark.sparkContext.longAccumulator("split.evaluated")
+    val touch = udf { (id: Long) => evaluated.add(1); id }
+      .asNondeterministic()
+    val conf = spark.conf
+    val saved = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.enabled").map(k => k -> conf.get(k))
+    conf.set("spark.sql.shuffle.partitions", "4")
+    conf.set("spark.sql.adaptive.enabled", "true")
+    val blocks = tmpDir() + "/blocks"; val json = tmpDir() + "/json"
+    try {
+      val grouped = spark.range(0, 200, 1, 4).select(touch(col("id")).as("id"))
+        .groupBy((col("id") % 7).as("k")).agg(count(lit(1)).as("n"))
+      Sinks.split(grouped, Seq(
+        d => Sinks.writeBlocks(d, blocks, Nil),
+        d => Sinks.writeBlocks(d, json, Nil, "json")))
+    } finally saved.foreach { case (k, v) => conf.set(k, v) }
+    assert(evaluated.value === 200L)
+    assert(TableLog.live(blocks).size === 1 && TableLog.live(json).size === 1,
+      s"one file per sink, got ${TableLog.live(blocks)} and " +
+        s"${TableLog.live(json)}")
+    assert(Sinks.read(spark, blocks).agg(sum("n")).head().getLong(0) === 200L)
+    assert(TableLog.read(spark, json, "json")._1.count() === 7L)
   }
 
   test("json-lines block interop (S1/S2 format roundtrip)") {

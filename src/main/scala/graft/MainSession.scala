@@ -29,14 +29,10 @@ object MainSession {
 
   /** Release what the last query left behind, once its result has been
     * consumed: persisted intermediates (so cached blocks don't pile up
-    * across hundreds of queries), the streaming queries' memory-sink
-    * temp views (which `clearCache` does not release) and the scratch
-    * dirs the query registered. */
+    * across hundreds of queries) and the scratch dirs the query
+    * registered. */
   def cleanup(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    spark.catalog.listTables().collect()
-      .filter(_.name.startsWith("graft_stream_"))
-      .foreach(t => spark.catalog.dropTempView(t.name))
     Scratch.sweep()
   }
 }

@@ -200,9 +200,9 @@ private[graft] object QueriesEtl {
       val d2 = Scratch.dir("graft_q62b")
         .toString
       graft.sources.Sinks.split(events, Seq(
-        df => df.write.mode("overwrite").parquet(d1),
-        df => df.filter(col("event_type") =!= "error")
-          .write.mode("overwrite").parquet(d2)))
+        df => graft.sources.Sinks.replace(df, d1),
+        df => graft.sources.Sinks.replace(
+          df.filter(col("event_type") =!= "error"), d2)))
       val a = graft.sources.Sinks.read(spark, d1).groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_all"))
       val b = graft.sources.Sinks.read(spark, d2).groupBy(col("event_type"))

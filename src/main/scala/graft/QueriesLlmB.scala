@@ -419,13 +419,12 @@ private[graft] object QueriesLlmB {
       val obsIn = Observation()
       val obsKept = Observation()
       val tmp = Scratch.dir("graft_q242").toString
-      docs
+      graft.sources.Sinks.writeBlocks(docs
         .observe(obsIn, count(lit(1)).as("rows"),
           sum(col("n_chars")).as("chars"))
         .filter(col("n_chars") >= 200)
         .observe(obsKept, count(lit(1)).as("rows"),
-          sum(col("n_chars")).as("chars"))
-        .write.parquet(tmp + "/kept")
+          sum(col("n_chars")).as("chars")), tmp + "/kept", Nil)
       val in = obsIn.get
       val kept = obsKept.get
       import spark.implicits._
@@ -475,8 +474,8 @@ private[graft] object QueriesLlmB {
       val kept = po.checkpoint("token_budget",
         Pipelines.sampleToTokenBudget(s3t, col("doc_id"),
           col("source"), col("n_tok"), budgetTokens = 10000L))
-      kept.write.mode("overwrite")
-        .parquet(Scratch.dir("graft_q245").toString + "/out")
+      graft.sources.Sinks.replace(kept,
+        Scratch.dir("graft_q245").toString + "/out")
       po.metricsDF(spark).orderBy(col("stage_ix"))
     },
 

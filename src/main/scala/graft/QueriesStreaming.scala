@@ -895,8 +895,8 @@ private[graft] object QueriesStreaming {
           .agg(min(col("doc_id")).as("keeper_id"),
             count(lit(1)).as("n_copies"))
       val store = Scratch.dir("graft_q283").toString + "/store"
-      curate(docs.filter(col("doc_id") * 2 <= mx))
-        .write.parquet(store)
+      graft.sources.Sinks.writeBlocks(
+        curate(docs.filter(col("doc_id") * 2 <= mx)), store, Nil)
       graft.sources.Sinks.read(spark, store)
         .unionByName(curate(docs.filter(col("doc_id") * 2 > mx)))
         .groupBy(col("fp"), col("lang"))

@@ -283,7 +283,7 @@ private[graft] object QueriesWarehouseA {
       val docs = tbl(spark, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
       val tmp = Scratch.dir("graft_q128").toString + "/frag"
-      docs.repartition(32).write.parquet(tmp)
+      graft.sources.Sinks.writeBlocks(docs.repartition(32), tmp, Nil)
       graft.sources.Sinks.compact(spark, tmp, targetRowsPerFile = 1000)
       graft.sources.Sinks.read(spark, tmp).orderBy(col("doc_id"))
     },
@@ -322,7 +322,8 @@ private[graft] object QueriesWarehouseA {
       val docs = tbl(spark, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
       val tmp = Scratch.dir("graft_q136").toString + "/tbl"
-      docs.repartitionByRange(16, col("doc_id")).write.parquet(tmp)
+      graft.sources.Sinks.writeBlocks(
+        docs.repartitionByRange(16, col("doc_id")), tmp, Nil)
       graft.sources.Sinks.deleteByKey(spark, tmp, "doc_id",
         docs.filter(pmod(col("doc_id"), lit(7)) === 3)
           .select(col("doc_id")))

@@ -571,8 +571,9 @@ private[graft] object QueriesWarehouseB {
       val hist = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
       val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
       val tmp = Scratch.dir("graft_q234").toString
-      graft.llm.Relevance.termStats(hist, col("doc_id"), col("text"))
-        .write.parquet(tmp + "/stats")
+      graft.sources.Sinks.writeBlocks(
+        graft.llm.Relevance.termStats(hist, col("doc_id"), col("text")),
+        tmp + "/stats", Nil)
       val base = graft.sources.Sinks.read(spark, tmp + "/stats")
       graft.llm.Relevance.mergeTermStats(base,
           graft.llm.Relevance.termStats(batch, col("doc_id"),
@@ -634,13 +635,12 @@ private[graft] object QueriesWarehouseB {
       val tmp = Scratch.dir("graft_q238").toString
       val wd = org.apache.spark.sql.expressions.Window
         .partitionBy(col("day")).orderBy(col("h"))
-      ev.select(col("day"),
+      graft.sources.Sinks.writeBlocks(ev.select(col("day"),
           graft.operators.Kmv.h48(col("user_id")).as("h"))
         .distinct()
         .withColumn("__rn", row_number().over(wd))
         .filter(col("__rn") <= k)
-        .select(col("day"), col("h"))
-        .write.parquet(tmp + "/sketches")
+        .select(col("day"), col("h")), tmp + "/sketches", Nil)
       val persisted = graft.sources.Sinks.read(spark, tmp + "/sketches")
       val merged = graft.operators.Kmv.merge(
         Seq(persisted.select(col("h"))), k)

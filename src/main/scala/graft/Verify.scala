@@ -29,7 +29,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // the result parquet is fully written at this point, so the
-      // query's cached blocks, stream views and scratch dirs can go
+      // query's cached blocks and scratch dirs can go
       MainSession.cleanup(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -701,12 +701,11 @@ object Dedup {
   def writeMinhashIndex(docs: DataFrame, id: Column, text: Column,
                         path: String, numHashes: Int = 64,
                         shingleN: Int = 3): Unit =
-    docs.select(id.as("id"),
+    Sinks.replace(docs.select(id.as("id"),
         TextAnalysis.shingleHashes(text, shingleN).as("sh"))
       .filter(size(col("sh")) > 0)
       .select(col("id"),
-        graft.functions.minhash_sig(col("sh"), numHashes).as("sig"))
-      .write.mode("overwrite").parquet(path)
+        graft.functions.minhash_sig(col("sh"), numHashes).as("sig")), path)
 
   /** Near-dup pairs of a NEW batch against a persisted signature index
     * ([[writeMinhashIndex]]) — [[incrementalExact]]'s near-duplicate

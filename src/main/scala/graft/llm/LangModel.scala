@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.sources.Sinks
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -63,17 +64,16 @@ object LangModel {
       .agg(sum(col("c")).as("c"))
 
   /** Persist a trained model (unigram + bigram count tables) as two
-    * parquet directories under `dir`. */
+    * sink tables under `dir`, each replaced in one commit. */
   def writeModel(uni: DataFrame, bi: DataFrame, dir: String): Unit = {
-    uni.write.mode("overwrite").parquet(dir + "/unigrams")
-    bi.write.mode("overwrite").parquet(dir + "/bigrams")
+    Sinks.replace(uni, dir + "/unigrams")
+    Sinks.replace(bi, dir + "/bigrams")
   }
 
   /** Read a persisted model back: (unigrams, bigrams). */
   def readModel(spark: org.apache.spark.sql.SparkSession, dir: String)
       : (DataFrame, DataFrame) =
-    (spark.read.parquet(dir + "/unigrams"),
-      spark.read.parquet(dir + "/bigrams"))
+    (Sinks.read(spark, dir + "/unigrams"), Sinks.read(spark, dir + "/bigrams"))
 
   /** Per-doc (doc_id, n_scored, avg_logprob): every token transition
     * of `score` docs scored under the interpolated model trained from

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.operators.Lifecycle
+import graft.sources.Sinks
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -75,7 +76,7 @@ object Pipelines {
       exact.count()
       val fin = po.checkpoint("near_dedup",
         removeNearDups(exact, id, text, nearDupJaccard))
-      fin.write.mode("overwrite").parquet(outPath)
+      Sinks.replace(fin, outPath)
     } finally exact.unpersist()
     po.assertKeptFloor(abortBelowKeptFrac)
     po.metricsDF(docs.sparkSession)
@@ -111,7 +112,7 @@ object Pipelines {
   /** Write the prepared corpus partitioned by predicted language —
     * downstream per-language training reads prune to one partition. */
   def writeByLanguage(prepared: DataFrame, path: String): Unit =
-    prepared.write.mode("overwrite").partitionBy("lang_pred").parquet(path)
+    Sinks.replace(prepared, path, Seq("lang_pred"))
 
   /** Deterministic hash bucket in [0, nBuckets) from an id column: the
     * first 4 hex chars of md5(id) read as an integer, mod nBuckets.

@@ -153,8 +153,7 @@ object SemDedup {
                             newEmb: DataFrame, id: Column, vec: Column,
                             indexPath: String, threshold: Double,
                             nlist: Int = 16): DataFrame = {
-    val index = Sinks.read(spark, indexPath)
-    val cents = Similarity.indexCentroids(spark, indexPath, index, nlist)
+    val (index, cents) = Similarity.readIndex(spark, indexPath, nlist)
     val fresh = newEmb.select(id.as("vec_id"),
       vec.cast("array<double>").as("cv"))
     val assigned = Similarity.assignCells(fresh, cents, "cv", "cell", 1)
@@ -227,9 +226,7 @@ object SemDedup {
                      checkpointDir: String, threshold: Double,
                      nlist: Int = 16): DataFrame = {
     graft.streaming.EventStream.foldBatches(stream, checkpointDir) { batch =>
-      val index = Sinks.read(spark, indexPath)
-      val cents = Similarity.indexCentroids(spark, indexPath, index,
-        nlist)
+      val (index, cents) = Similarity.readIndex(spark, indexPath, nlist)
       val assigned = Similarity.assignCells(
           batch.select(id.as("vec_id"),
             vec.cast("array<double>").as("cv")),

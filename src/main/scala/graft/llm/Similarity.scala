@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.sources.Sinks
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -128,14 +129,12 @@ object Similarity {
                              path: String): Unit = {
     val assigned = assignCells(c, cents, "cv", "cell", 1)
     // one file per cell, not (tasks × cells) small files
-    assigned.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-    // centroid SIDECAR (after the overwrite above, which would wipe
-    // it): probes must not pay a full-index orderBy+limit just to
-    // rebuild nlist rows the writer already had. The underscore
-    // prefix hides the subdir from Spark's file index, so reading the
-    // cell-partitioned table is unaffected.
-    cents.write.mode("overwrite").parquet(path + "/_centroids")
+    Sinks.replace(assigned.repartition(col("cell")), path, Seq("cell"))
+    // centroid SIDECAR: probes must not pay a full-index orderBy+limit
+    // just to rebuild nlist rows the writer already had. The
+    // underscore prefix keeps the subdir out of the index's listing,
+    // so it is its own table and reading the index is unaffected.
+    Sinks.replace(cents, path + "/_centroids")
   }
 
   /** Probe a materialized IVF index: per query, score only the rows of
@@ -148,8 +147,7 @@ object Similarity {
                       queries: DataFrame, queryId: Column, queryVec: Column,
                       k: Int, nlist: Int = 16, nprobe: Int = 4)
       : DataFrame = {
-    val index = spark.read.parquet(path)
-    val cents = indexCentroids(spark, path, index, nlist)
+    val (index, cents) = readIndex(spark, path, nlist)
     val q = assignCells(
       queries.select(queryId.as("query_id"),
         queryVec.cast("array<double>").as("qv")),
@@ -170,32 +168,35 @@ object Similarity {
               round(col("cosine"), 6).as("cosine"))
   }
 
-  /** The quantizer of a materialized index: the centroid sidecar
-    * written at index-build time — WITHOUT it a probe would re-derive
-    * the quantizer with an orderBy+limit over the whole index (a
-    * full-corpus scan before the pruned scan even starts, breaking
-    * the nprobe/nlist cost claim). Indexes written BEFORE the sidecar
-    * existed (or whose sidecar was deleted) fall back to that
+  /** A materialized index and its quantizer, both read with
+    * [[Sinks.read]] (no Spark job). The quantizer is the centroid
+    * sidecar written at index-build time — WITHOUT it a probe would
+    * re-derive the quantizer with an orderBy+limit over the whole
+    * index (a full-corpus scan before the pruned scan even starts,
+    * breaking the nprobe/nlist cost claim). Indexes written BEFORE the
+    * sidecar existed (or whose sidecar was deleted) fall back to that
     * derivation — every pre-sidecar index used the lowest-id
     * quantizer, so the rebuilt centroids match the cells on disk; the
     * warning flags the one-off full scan. Shared by [[ivfProbeIndexed]]
-    * and [[SemDedup.incrementalDuplicates]]. */
-  private[llm] def indexCentroids(spark: org.apache.spark.sql.SparkSession,
-                                  path: String, index: DataFrame,
-                                  nlist: Int): DataFrame = {
+    * and [[SemDedup]]'s incremental paths. */
+  private[llm] def readIndex(spark: org.apache.spark.sql.SparkSession,
+                             path: String, nlist: Int)
+      : (DataFrame, DataFrame) = {
+    val index = Sinks.read(spark, path)
     // test for the sidecar instead of letting the read fail: a failed
     // read is a failed query every execution listener reports
-    val sidecar = new org.apache.hadoop.fs.Path(path, "_centroids")
-    if (sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(sidecar))
-      spark.read.parquet(sidecar.toString)
-    else {
-      System.err.println(
-        s"[graft] no _centroids sidecar under $path — rebuilding " +
-          "the lowest-id quantizer with a full-index scan (rewrite " +
-          "the index to restore partition-pruned probe cost)")
-      centroids(index.select(col("vec_id"), col("cv")), nlist)
-    }
+    val sidecar = java.nio.file.Paths.get(path, "_centroids")
+    val cents =
+      if (java.nio.file.Files.isDirectory(sidecar))
+        Sinks.read(spark, sidecar.toString)
+      else {
+        System.err.println(
+          s"[graft] no _centroids sidecar under $path — rebuilding " +
+            "the lowest-id quantizer with a full-index scan (rewrite " +
+            "the index to restore partition-pruned probe cost)")
+        centroids(index.select(col("vec_id"), col("cv")), nlist)
+      }
+    (index, cents)
   }
 
   /** Single-row DF holding the ordered centroid (id, vector) structs —

@@ -27,11 +27,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    (`_SUCCESS` for frames, `_STAGED_DONE` for paths) means
   *    "built". A key is built once and served until [[clear]] or JVM
   *    exit — the key set is bounded by the queries that stage.
-  *  - Builds are ATOMIC: every build writes into a fresh `.tmp`
-  *    sibling and renames into place only on success, so a builder
-  *    that throws partway leaves no dirty dir for the retry to
-  *    append into — the retry starts from nothing. A dir whose marker
-  *    was lost is rebuilt the same way, in place.
+  *  - A build runs IN PLACE under its key's lock, which keeps other
+  *    requests for the key out: a marker-less dir is deleted, the
+  *    builder writes the dir and its marker last, and a dir without
+  *    its marker is never served. A builder that throws partway has
+  *    its dir deleted, so the retry starts from nothing.
   *  - Locking is PER KEY: two unrelated staged lookups never
   *    serialize on each other; only concurrent requests for the SAME
   *    key wait for the single build.
@@ -77,10 +77,10 @@ object Staged {
     s"${safe.take(120)}_$h"
   }
 
-  /** The artifact dir for `key`, built by `buildInto(tmp)` unless its
-    * `marker` is present: the build writes a fresh tmp sibling that
-    * replaces the target (and any marker-less leftover) by an atomic
-    * rename; a failed build leaves nothing behind. */
+  /** The artifact dir for `key`, built by `buildInto(dir)` unless its
+    * `marker` is present: a marker-less leftover is deleted, the build
+    * writes the (fresh, empty) dir and must write `marker` last; a
+    * failed build leaves nothing behind. */
   private def getOrBuildDir(key: String, marker: String)
                            (buildInto: Path => Unit): Path = {
     val name = sanitize(key)
@@ -88,21 +88,15 @@ object Staged {
     locks.computeIfAbsent(name, _ => new Object).synchronized {
       if (!Files.exists(target.resolve(marker))) {
         val t0 = System.nanoTime()
-        val tmp = target.resolveSibling(name + ".tmp")
-        FileUtils.deleteDirectory(tmp.toFile)
+        FileUtils.deleteDirectory(target.toFile)
         try {
-          buildInto(tmp)
-          FileUtils.deleteDirectory(target.toFile)
-          try Files.move(tmp, target,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-            Files.move(tmp, target)
-          }
-        } finally {
+          Files.createDirectories(target)
+          buildInto(target)
+        } catch { case e: Throwable =>
           // failed build: leave NOTHING — the retry must start clean
-          FileUtils.deleteDirectory(tmp.toFile)
-          buildNanosTotal.addAndGet(System.nanoTime() - t0)
-        }
+          FileUtils.deleteDirectory(target.toFile)
+          throw e
+        } finally buildNanosTotal.addAndGet(System.nanoTime() - t0)
       }
     }
     target
@@ -117,22 +111,22 @@ object Staged {
     * the identical (materialized, re-scannable) plan shape. */
   def getOrBuild(spark: SparkSession, key: String)
                 (build: => DataFrame): DataFrame = {
-    val dir = getOrBuildDir(key, "_SUCCESS")(tmp =>
+    // Spark's job commit writes `_SUCCESS` after the data files
+    val dir = getOrBuildDir(key, "_SUCCESS")(dir =>
       graft.sources.Sinks.writer(build).mode("overwrite")
-        .parquet(tmp.toString))
+        .parquet(dir.toString))
     graft.sources.TableLog.read(spark, dir.toString)._1
   }
 
   /** Path-shaped artifact (multi-file indexes with sidecars — the
     * q109 IVF shape): `buildTo(path)` must write the artifact under
-    * the given directory; the dir appears at the returned path only
-    * after `buildTo` completes. Returns the artifact path; builds only
-    * on the first request for `key`. */
+    * the given directory, which is the returned path; it is served
+    * only after `buildTo` completes. Returns the artifact path; builds
+    * only on the first request for `key`. */
   def getOrBuildPath(key: String)(buildTo: String => Unit): String =
-    getOrBuildDir(key, "_STAGED_DONE") { tmp =>
-      Files.createDirectories(tmp)
-      buildTo(tmp.toString)
-      Files.write(tmp.resolve("_STAGED_DONE"), Array.emptyByteArray)
+    getOrBuildDir(key, "_STAGED_DONE") { dir =>
+      buildTo(dir.toString)
+      Files.write(dir.resolve("_STAGED_DONE"), Array.emptyByteArray)
     }.toString
 
   /** Drop every staged artifact, deleting its files (the root survives

@@ -38,12 +38,13 @@ object ZOrder {
     * range-partition on the z-value (one shuffle — the layout cost,
     * paid once per table), sort within partitions, write `nFiles`
     * files. Per-file min/max on both columns are then ~sqrt-factor
-    * narrow, which is what parquet scan pruning consumes. */
+    * narrow, which is what parquet scan pruning consumes. The files
+    * replace the table at `path` in one [[graft.sources.Sinks.replace]]
+    * commit. */
   def writeZOrdered(df: DataFrame, path: String, a: Column, b: Column,
                     bits: Int = 16, nFiles: Int = 32): Unit =
-    df.withColumn("__z", zValue(a, b, bits))
+    graft.sources.Sinks.replace(df.withColumn("__z", zValue(a, b, bits))
       .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
+      .drop("__z"), path)
 }

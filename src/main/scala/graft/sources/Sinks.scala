@@ -24,7 +24,9 @@ import org.apache.spark.sql.functions._
   * are staged, moved in, and published with the next manifest, so a
   * reader through [[graft.tables.Catalog]] or [[read]] sees the table
   * before or after the write and nothing in between, and picks up the
-  * new generation by itself.
+  * new generation by itself. Every table the engine owns is written
+  * here: [[writeBlocks]] adds files, [[replace]] rewrites the table,
+  * and both take partition columns.
   */
 object Sinks {
 
@@ -45,10 +47,13 @@ object Sinks {
       .partitionBy("__date").parquet(dst))
   }
 
-  /** Replace a sink table's content with `df` in one commit; the old
-    * files stay readable by requests already planned over them. */
-  def replace(df: DataFrame, path: String): Unit = {
-    val added = TableLog.stage(path)(dst => writer(df).parquet(dst))
+  /** Replace a sink table's content with `df` in one commit,
+    * partitioned by `partitionCols` like [[writeBlocks]]; the old files
+    * stay readable by requests already planned over them. */
+  def replace(df: DataFrame, path: String,
+              partitionCols: Seq[String] = Nil): Unit = {
+    val added = TableLog.stage(path)(dst =>
+      writer(df).partitionBy(partitionCols: _*).parquet(dst))
     TableLog.commit(path)(_ => added)
   }
 

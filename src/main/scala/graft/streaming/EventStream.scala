@@ -94,7 +94,7 @@ object EventStream {
         .getOrElse(Long.MinValue))
     parts.zipWithIndex.foreach { case (p, k) =>
       val stage = s"$dir/.stage$k"
-      p.coalesce(1).write.parquet(stage)
+      Sinks.writer(p.coalesce(1)).parquet(stage)
       val f = new java.io.File(stage).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       val dst = Paths.get(dir, name(existing.size + k))
@@ -588,17 +588,21 @@ object EventStream {
       l.foreach(spark.streams.addListener)
       try {
         val name = s"graft_stream_${runIds.incrementAndGet()}"
-        val q = agg.writeStream
-          .format("memory").queryName(name)
-          .outputMode(mode)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        observer.foreach { o =>
-          q.recentProgress.foreach(o.ingest)
-          o.violation.foreach(throw _)
-        }
-        spark.table(name)
+        // the analyzed frame holds the sink's rows; the view `start`
+        // registers would pin them, after a failed drain too
+        try {
+          val q = agg.writeStream
+            .format("memory").queryName(name)
+            .outputMode(mode)
+            .trigger(Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+          observer.foreach { o =>
+            q.recentProgress.foreach(o.ingest)
+            o.violation.foreach(throw _)
+          }
+          spark.table(name)
+        } finally spark.catalog.dropTempView(name)
       } finally l.foreach(spark.streams.removeListener)
     }
 

@@ -178,7 +178,7 @@ class SimilaritySpec extends SparkSpec {
       nlist = 8)
     // simulate a pre-sidecar index (or a deleted sidecar)
     val sc = new java.io.File(path, "_centroids")
-    sc.listFiles().foreach(_.delete()); assert(sc.delete())
+    org.apache.commons.io.FileUtils.deleteDirectory(sc); assert(!sc.exists())
     // the missing sidecar is detected without running a failing query
     val failed = new java.util.concurrent.atomic.AtomicInteger()
     val flushed = new java.util.concurrent.CountDownLatch(1)

@@ -29,18 +29,43 @@ class NioLocalFileSystemSpec extends SparkSpec {
         .map(mode).toSet, dirs.map(mode).toSet)
     }
 
-  /** Process starts JFR records while `body` runs in this JVM. */
-  private def processStarts(body: => Unit): Int = {
+  /** Spark's own background deletions, which fork `rm -rf` at times no
+    * writer controls: the artifact dir of a garbage-collected session
+    * (every streaming query runs in a cloned one) and the local dirs
+    * of a stopped query's state stores, closed by the periodic
+    * maintenance task. */
+  private val sparkCleanups = Set(
+    "org.apache.spark.sql.artifact.ArtifactManager$StateCleanupRunner.run",
+    "org.apache.spark.sql.execution.streaming.state.StateStore$" +
+      ".removeFromLoadedProvidersAndClose")
+
+  /** Process starts JFR records in this JVM while `body` runs, but for
+    * [[sparkCleanups]]: each as its thread, command line and innermost
+    * frames, so a failed check names what forked. */
+  private def processStarts(body: => Unit): Seq[String] = {
+    // the executor heartbeat's first metrics read forks `getconf
+    // PAGESIZE` once per JVM, in this class's initializer: run it now
+    Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$", true,
+      getClass.getClassLoader)
     val file = Files.createTempFile(Scratch.dir("graft_jfr"), "rec", ".jfr")
     val rec = new jdk.jfr.Recording()
     try {
-      rec.enable("jdk.ProcessStart")
+      rec.enable("jdk.ProcessStart").withStackTrace()
       rec.start()
       body
       rec.stop()
       rec.dump(file)
-      jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala
-        .count(_.getEventType.getName == "jdk.ProcessStart")
+      jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map { e =>
+          val frames = Option(e.getStackTrace).toSeq
+            .flatMap(_.getFrames.asScala).map { f =>
+              s"${f.getMethod.getType.getName}.${f.getMethod.getName}"
+            }
+          (frames, s"[${Option(e.getThread).map(_.getJavaName).orNull}] " +
+            s"${e.getString("command")} at ${frames.take(12).mkString(" < ")}")
+        }
+        .collect { case (frames, s) if !frames.exists(sparkCleanups) => s }
     } finally rec.close()
   }
 
@@ -75,11 +100,11 @@ class NioLocalFileSystemSpec extends SparkSpec {
       fs.setPermission(new HPath(dir.toUri), new FsPermission(
         octal("750").toShort))
     }
-    assert(inProcess === 0)
+    assert(inProcess.isEmpty, inProcess.mkString("\n"))
     assert(mode(file) === octal("640") && mode(dir) === octal("750"))
     val sticky = processStarts(fs.setPermission(new HPath(dir.toUri),
       new FsPermission(octal("1777").toShort)))
-    assert(sticky > 0, "NIO cannot set the sticky bit: chmod must run")
+    assert(sticky.nonEmpty, "NIO cannot set the sticky bit: chmod must run")
     assert(mode(dir) === octal("1777"))
   }
 
@@ -87,9 +112,39 @@ class NioLocalFileSystemSpec extends SparkSpec {
     val root = Scratch.dir("graft_niofs").toString
     // warm up: the first write loads classes whose initializers may fork
     Sinks.writeBlocks(rows, s"$root/warm", Seq("part"))
-    val starts = processStarts(
-      Sinks.writeBlocks(rows, s"$root/t", Seq("part")))
-    assert(starts === 0, s"$starts process starts during one sink write")
-    assert(Sinks.read(spark, s"$root/t").count() === 60L)
+    val docs = rows.select(col("id").as("doc_id"),
+      concat_ws(" ", col("payload"), lit("shared words in every row"))
+        .as("text"))
+    val vecs = rows.select(col("id").as("vec_id"),
+      array(col("id").cast("double"), col("part").cast("double"))
+        .as("embedding"))
+    val means = graft.llm.KMeans.fit(vecs, col("vec_id"), col("embedding"),
+      k = 2, iters = 1)
+    val writers: Seq[(String, String => Unit)] = Seq(
+      "Sinks.writeBlocks" -> (out =>
+        Sinks.writeBlocks(rows, out, Seq("part"))),
+      "Dedup.writeMinhashIndex" -> (out => graft.llm.Dedup
+        .writeMinhashIndex(docs, col("doc_id"), col("text"), out)),
+      "Similarity.ivfWriteIndexFitted" -> (out => graft.llm.Similarity
+        .ivfWriteIndexFitted(vecs, col("vec_id"), col("embedding"), out,
+          means)),
+      "LangModel.writeModel" -> (out => graft.llm.LangModel.writeModel(
+        graft.llm.LangModel.unigrams(docs, col("text")),
+        graft.llm.LangModel.bigrams(docs, col("text")), out)),
+      "ZOrder.writeZOrdered" -> (out => graft.operators.ZOrder
+        .writeZOrdered(rows, out, col("id"), col("part"), nFiles = 3)),
+      "EventStream.replay" -> (out => graft.streaming.EventStream.replay(
+        Seq(rows.filter(col("part") === 0), rows.filter(col("part") > 0)),
+        out)))
+    try writers.foreach { case (name, write) =>
+      val out = s"$root/${name.replace('.', '_')}"
+      val starts = processStarts(write(out))
+      assert(starts.isEmpty, s"${starts.size} process starts during " +
+        s"$name:\n${starts.mkString("\n")}")
+      val crc = Using.resource(Files.walk(Paths.get(out)))(
+        _.iterator.asScala.filter(_.toString.endsWith(".crc")).toVector)
+      assert(crc.isEmpty, s"$name left checksum files: $crc")
+    } finally graft.operators.Lifecycle.release(means)
+    assert(Sinks.read(spark, s"$root/Sinks_writeBlocks").count() === 60L)
   }
 }

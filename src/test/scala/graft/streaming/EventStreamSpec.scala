@@ -451,6 +451,25 @@ class EventStreamSpec extends SparkSpec {
     assert(q.recentProgress.map(_.numInputRows).toSeq === Seq.fill(5)(1L))
   }
 
+  test("a drain leaves no temp view behind, and its frame still " +
+      "collects the drained rows") {
+    import spark.implicits._
+    val scratch = graft.Scratch.dir("graft_drain_views").toString
+    val frames = (1 to 3).map { i =>
+      val parts = Seq((0L until i.toLong).map(k => (k, k * 10)).toDF("a", "b"))
+      EventStream.runToCompletion(spark,
+        EventStream.replay(parts, s"$scratch/src$i").groupBy($"a")
+          .agg(sum($"b").as("s")))
+    }
+    val views = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_stream_"))
+    assert(views.isEmpty, s"drains left views: ${views.toSeq}")
+    frames.zipWithIndex.foreach { case (df, i) =>
+      assert(df.as[(Long, Long)].collect().sorted.toSeq ===
+        (0L to i.toLong).map(k => (k, k * 10)))
+    }
+  }
+
   test("replay returns its stream without starting a Spark job: the " +
       "schema comes from the first file's footer") {
     import spark.implicits._
@@ -522,6 +541,10 @@ class EventStreamSpec extends SparkSpec {
     assert(obs.history.exists { case (b, _, nIn, nKept, _) =>
       b == 0L && nIn == 10L && nKept == 10L })
     assert(obs.violation.nonEmpty)
+    // the aborted drain leaves no memory-sink view behind either
+    val views = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_stream_"))
+    assert(views.isEmpty, s"the aborted drain left views: ${views.toSeq}")
   }
 
   test("streamingManifest: k-cap holds, duplicate KMV hashes dedup, " +

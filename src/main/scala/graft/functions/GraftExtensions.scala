@@ -34,7 +34,8 @@ object GraftExtensions {
     ("graft_cosine", "cosine similarity of two float/double arrays",
       es => CosineSim(es.head, es(1))),
     ("graft_text_stats",
-      "[n_chars, n_tokens, n_punct, n_upper, sum_token_len] in one pass",
+      "[n_chars, n_tokens, n_punct, n_upper, sum_token_len, en_stop, " +
+        "n_cjk, de/en/es/fr distinct stop] in one pass",
       es => TextStats(es.head)),
     ("graft_lsh_buckets",
       "multi-table random-hyperplane LSH bucket ids (planes=4, tables=8)",

@@ -121,8 +121,9 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   override def prettyName: String = "graft_simhash64"
 }
 
-/** text -> [n_chars, n_tokens, n_punct, n_upper, sum_token_len] in one
-  * pass (the quality-signal kernel). */
+/** text -> [n_chars, n_tokens, n_punct, n_upper, sum_token_len,
+  * en_stop, n_cjk, de/en/es/fr distinct stop] in one pass: the kernel
+  * behind every scoring signal (see [[HashOps.textStats]]). */
 case class TextStats(child: Expression) extends HashCallExpr {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def staticCall = "graft.functions.HashOps.textStats"

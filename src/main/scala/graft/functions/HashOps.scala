@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Tight-loop kernels behind the graft native expressions (called from
@@ -33,25 +34,34 @@ object HashOps {
   @inline private def isWs(c: Char): Boolean =
     c == ' ' || (c >= '\t' && c <= '\r' && c != '\u000B')
 
-  /** xxhash64 of each lowercased whitespace token, in order. */
+  /** [[isWs]] on one UTF-8 byte: whitespace is ASCII, so a byte of a
+    * multi-byte sequence (negative as a signed byte) is never one. */
+  @inline private def isWsByte(b: Byte): Boolean =
+    b == ' ' || (b >= '\t' && b <= '\r' && b != '\u000B')
+
+  /** xxhash64 of each lowercased whitespace token, in order. Each token
+    * is hashed where it lies in the lowercased UTF-8 bytes: whitespace
+    * is ASCII, so no multi-byte sequence straddles a token boundary and
+    * the bytes hashed are exactly the token's UTF-8 encoding. */
   def tokenHashes(text: UTF8String): Array[Long] = {
-    val s = text.toLowerCase.toString
-    val n = s.length
-    val out = new scala.collection.mutable.ArrayBuffer[Long]()
+    val low = text.toLowerCase
+    val base = low.getBaseObject
+    val off = low.getBaseOffset
+    val n = low.numBytes
+    var out = new Array[Long](16)
+    var k = 0
     var i = 0
     while (i < n) {
-      while (i < n && isWs(s.charAt(i))) i += 1
+      while (i < n && isWsByte(Platform.getByte(base, off + i))) i += 1
       val start = i
-      while (i < n && !isWs(s.charAt(i))) i += 1
+      while (i < n && !isWsByte(Platform.getByte(base, off + i))) i += 1
       if (i > start) {
-        val bytes = s.substring(start, i)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        out += XXH64.hashUnsafeBytes(bytes,
-          org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-          bytes.length, Seed)
+        if (k == out.length) out = java.util.Arrays.copyOf(out, 2 * k)
+        out(k) = XXH64.hashUnsafeBytes(base, off + start, i - start, Seed)
+        k += 1
       }
     }
-    out.toArray
+    java.util.Arrays.copyOf(out, k)
   }
 
   @inline private def rotl(x: Long, b: Int): Long =
@@ -90,7 +100,7 @@ object HashOps {
   }
 
   def shingleHashes(text: UTF8String, n: Int): ArrayData =
-    new GenericArrayData(shingleHashArray(text, n))
+    UnsafeArrayData.fromPrimitiveArray(shingleHashArray(text, n))
 
   /** MinHash signature: for permutation i, min over shingles of
     * rotl(h, i) ^ mix(h). Single pass per shingle, numHashes longs out. */
@@ -110,7 +120,7 @@ object HashOps {
       }
       j += 1
     }
-    new GenericArrayData(sig)
+    UnsafeArrayData.fromPrimitiveArray(sig)
   }
 
   /** 64-bit SimHash over token hashes; Long.MinValue marks "no tokens"
@@ -139,41 +149,121 @@ object HashOps {
   }
 
   def tokenHashesData(text: UTF8String): ArrayData =
-    new GenericArrayData(tokenHashes(text))
+    UnsafeArrayData.fromPrimitiveArray(tokenHashes(text))
 
-  /** Single-pass text statistics: one scan over the characters computes
-    * everything the quality signals need. The higher-order / regex
-    * column forms scan the text once PER SIGNAL (and regex per row is
-    * the 100 TB cost center); this is one pass total. Output order:
-    * [n_chars, n_tokens, n_punct, n_upper, sum_token_len]. */
+  /** English stopwords of the quality signal: `text_stats` counts
+    * their tokens in slot 5. */
+  val EnStopwords: Seq[String] = Seq(
+    "the", "a", "an", "and", "or", "of", "to", "in", "is", "it", "that",
+    "for", "on", "with", "as", "was", "at", "by", "be", "this")
+
+  /** Stopwords of language id, in `text_stats` slot order (7-10). */
+  val LangStopwords: Seq[(String, Seq[String])] = Seq(
+    "de" -> Seq("der", "die", "und", "das", "ist", "von", "den", "mit",
+                "nicht", "ein"),
+    "en" -> Seq("the", "and", "of", "to", "in", "is", "that", "it", "was",
+                "for"),
+    "es" -> Seq("el", "la", "de", "que", "y", "en", "un", "los", "del",
+                "las"),
+    "fr" -> Seq("le", "la", "les", "de", "et", "est", "un", "une", "dans",
+                "que"))
+
+  // xxhash64 of a word's UTF-8 bytes, as tokenHashes hashes a token
+  private def wordHash(w: String): Long = {
+    val b = w.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, b.length, Seed)
+  }
+
+  // every distinct stopword hash, sorted for binary search; a token's
+  // index into it is its bit in the per-language "seen" masks
+  private val StopHashes: Array[Long] =
+    (EnStopwords ++ LangStopwords.flatMap(_._2)).map(wordHash)
+      .distinct.sorted.toArray
+  require(StopHashes.length <= 64, "stopword masks are one long")
+  private val EnStop: Array[Boolean] = {
+    val en = EnStopwords.map(wordHash).toSet
+    StopHashes.map(en.contains)
+  }
+  private val LangMasks: Array[Long] = LangStopwords.map { case (_, ws) =>
+    ws.map(w => 1L << java.util.Arrays.binarySearch(StopHashes, wordHash(w)))
+      .reduce(_ | _)
+  }.toArray
+
+  /** Bytes of the UTF-8 sequence a lead byte starts: the widths Spark's
+    * `length()` steps by, so the counts below are its code points. */
+  @inline private def utf8Width(b: Byte): Int = {
+    val u = b & 0xFF
+    if (u < 0xC0) 1 else if (u < 0xE0) 2 else if (u < 0xF0) 3
+    else if (u < 0xF8) 4 else 1
+  }
+
+  /** Every scoring signal of a document in one call: one scan over the
+    * text's UTF-8 bytes and one over its [[tokenHashes]]. The regex and
+    * higher-order column forms scan the text once PER SIGNAL, and their
+    * lambdas run interpreted. Output order (0-based; `element_at` is
+    * 1-based):
+    *   - 0 n_chars, 1 n_tokens, 2 n_punct (ASCII `\p{Punct}`),
+    *     3 n_upper (A-Z), 4 sum_token_len — code points, tokens split
+    *     on [[isWs]];
+    *   - 5 English stopword tokens ([[EnStopwords]], with multiplicity);
+    *   - 6 CJK code points (U+4E00-U+9FFF);
+    *   - 7-10 distinct stopwords of de, en, es, fr ([[LangStopwords]]).
+    * Stopwords match by token hash, as `token_hashes` membership did. */
   def textStats(text: UTF8String): ArrayData = {
-    val s = text.toString
-    val n = s.length
-    // counts are CODE POINTS, not UTF-16 units: SQL length() (the
-    // differential oracles' denominator) counts code points, so an
-    // astral char (emoji) must count 1 here too, not 2
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    val n = text.numBytes
+    // counts are CODE POINTS, not bytes or UTF-16 units: SQL length()
+    // (the differential oracles' denominator) counts code points, so an
+    // astral char (emoji) must count 1 here too
     var chars = 0L
     var tokens = 0L
     var punct = 0L
     var upper = 0L
     var tokenChars = 0L
+    var cjk = 0L
     var inTok = false
     var i = 0
     while (i < n) {
-      val cp = s.codePointAt(i)
+      val b = Platform.getByte(base, off + i)
       chars += 1
-      if (cp < 0x80 && isWs(cp.toChar)) inTok = false
+      if (isWsByte(b)) inTok = false
       else {
         if (!inTok) { tokens += 1; inTok = true }
         tokenChars += 1
-        // ASCII punct, matching \p{Punct}
-        if (cp >= '!' && cp <= '~' &&
-            !Character.isLetterOrDigit(cp)) punct += 1
-        if (cp >= 'A' && cp <= 'Z') upper += 1
+        if (b >= '!' && b <= '~' && !Character.isLetterOrDigit(b)) punct += 1
+        if (b >= 'A' && b <= 'Z') upper += 1
       }
-      i += Character.charCount(cp)
+      val w = utf8Width(b)
+      if (w == 3 && i + 2 < n) {
+        val cp = ((b & 0x0F) << 12) |
+          ((Platform.getByte(base, off + i + 1) & 0x3F) << 6) |
+          (Platform.getByte(base, off + i + 2) & 0x3F)
+        if (cp >= 0x4E00 && cp <= 0x9FFF) cjk += 1
+      }
+      i += w
     }
-    new GenericArrayData(Array(chars, tokens, punct, upper, tokenChars))
+    val th = tokenHashes(text)
+    var enHits = 0L
+    var seen = 0L
+    var j = 0
+    while (j < th.length) {
+      val k = java.util.Arrays.binarySearch(StopHashes, th(j))
+      if (k >= 0) {
+        if (EnStop(k)) enHits += 1
+        seen |= 1L << k
+      }
+      j += 1
+    }
+    val out = new Array[Long](7 + LangMasks.length)
+    out(0) = chars; out(1) = tokens; out(2) = punct; out(3) = upper
+    out(4) = tokenChars; out(5) = enHits; out(6) = cjk
+    var l = 0
+    while (l < LangMasks.length) {
+      out(7 + l) = java.lang.Long.bitCount(seen & LangMasks(l))
+      l += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   /** Cosine similarity kernels: single fused loop (dot + both norms),

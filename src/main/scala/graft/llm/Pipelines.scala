@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   *
   * {{{
   * raw documents
-  *   -> language id + quality scoring        (projection, no shuffle)
-  *   -> quality floor filter                 (pushable predicate)
+  *   -> language id + quality scoring        (one kernel call per row)
   *   -> exact dedup on md5(text)             (one hash shuffle)
+  *   -> quality floor filter                 (over the scored column)
   *   -> near-dup removal via MinHash LSH     (band equi-join)
   *   -> partitioned write by language        (rollover-style sink)
   * }}}
@@ -25,13 +25,19 @@ object Pipelines {
   def prepareCorpus(docs: DataFrame, id: Column, text: Column,
                     minQuality: Double = 0.3,
                     nearDupJaccard: Double = 0.8): DataFrame = {
-    val scored = scoreCorpus(docs, text, minQuality)
-    // exact dedup: identical text keeps lowest id. Checkpointed — it
-    // feeds BOTH the near-dup pair mining and the returned anti-join,
-    // so recomputing it would re-run the whole scoring projection; a
-    // checkpoint (unlike a persist) leaves no cache entry a later read
-    // of the same path could match, and its blocks go with the frame.
-    val exact = Dedup.exactByKey(scored, Seq(col("fingerprint")), id)
+    // exact dedup: identical text keeps lowest id. The quality floor
+    // comes after it and keeps the same documents (equal md5 means
+    // equal text, so every copy has the quality of the one kept); below
+    // the dedup Window it would be pushed into the scoring projection as
+    // a Filter, which runs the kernel again for every reference to it.
+    // Checkpointed — it feeds BOTH the near-dup pair mining and the
+    // returned anti-join, so recomputing it would re-run the whole
+    // scoring projection; a checkpoint (unlike a persist) leaves no
+    // cache entry a later read of the same path could match, and its
+    // blocks go with the frame.
+    val exact = Dedup.exactByKey(scoreColumns(docs, text),
+        Seq(col("fingerprint")), id)
+      .filter(col("quality") >= minQuality)
       .localCheckpoint()
     removeNearDups(exact, id, text, nearDupJaccard)
   }
@@ -89,10 +95,18 @@ object Pipelines {
     * re-running the pipeline. */
   def scoreCorpus(docs: DataFrame, text: Column,
                   minQuality: Double = 0.3): DataFrame =
-    TextAnalysis.withLangId(docs, text, "lang_pred")
-      .withColumn("quality", TextAnalysis.qualityScore(text))
+    scoreColumns(docs, text).filter(col("quality") >= minQuality)
+
+  /** `lang_pred`, `quality` and `fingerprint` added to `docs`, with the
+    * text_stats kernel staged as a column both scores read, so a row
+    * runs it once (CollapseProject keeps a multiply-referenced
+    * non-cheap alias in its own projection). */
+  private def scoreColumns(docs: DataFrame, text: Column): DataFrame =
+    docs.withColumn("__ts", graft.functions.text_stats(text))
+      .withColumn("lang_pred", TextAnalysis.langIdFromStats(col("__ts")))
+      .withColumn("quality", TextAnalysis.qualityFromStats(col("__ts")))
       .withColumn("fingerprint", TextAnalysis.fingerprint(text))
-      .filter(col("quality") >= minQuality)
+      .drop("__ts")
 
   /** Stage 3: near-dup removal with TRANSITIVE cluster semantics:
     * pairs -> connected components -> keep the min-id member per

@@ -38,35 +38,34 @@ object QualityModel {
       case (acc, (f, w)) => acc + lit(w) * f
     }
 
-  /** The named feature columns over PRECOMPUTED kernel outputs (`ts` =
-    * text_stats array, `swHits` = stopword hit count):
+  /** The named feature columns over a PRECOMPUTED text_stats array
+    * `ts` (the stopword hit count is its slot 6):
     * len_feat   = min(n_chars/500, 1)        (longer is better, capped)
     * punct_ratio, upper_ratio                (per non-ws char signals)
     * stopword_ratio                          (natural-language signal)
     * mean_word_len                           (gibberish detector)
     * Division-by-zero guards return 0.0 (not null): a model scores
     * every document. */
-  def featuresFromStats(ts: Column, swHits: Column)
-      : Seq[(String, Column)] = {
+  def featuresFromStats(ts: Column): Seq[(String, Column)] = {
     val nc = element_at(ts, 1).cast(DoubleType)
     val nt = element_at(ts, 2).cast(DoubleType)
     val np = element_at(ts, 3).cast(DoubleType)
     val nu = element_at(ts, 4).cast(DoubleType)
     val stl = element_at(ts, 5).cast(DoubleType)
+    val swHits = element_at(ts, 6).cast(DoubleType)
     Seq(
       "len_feat" -> least(nc / lit(500.0), lit(1.0)),
       "punct_ratio" -> when(nc > 0, np / nc).otherwise(lit(0.0)),
       "upper_ratio" -> when(nc > 0, nu / nc).otherwise(lit(0.0)),
-      "stopword_ratio" -> when(nt > 0, swHits.cast(DoubleType) / nt)
+      "stopword_ratio" -> when(nt > 0, swHits / nt)
         .otherwise(lit(0.0)),
       "mean_word_len" -> when(nt > 0, stl / nt).otherwise(lit(0.0)))
   }
 
-  /** One-shot Column form (inlines the kernels; fine for single use —
-    * [[classify]] stages them instead, see its note). */
+  /** One-shot Column form (inlines the kernel; fine for single use —
+    * [[classify]] stages it instead, see its note). */
   def features(text: Column): Seq[(String, Column)] =
-    featuresFromStats(graft.functions.text_stats(text),
-      TextAnalysis.swHitCount(text))
+    featuresFromStats(graft.functions.text_stats(text))
 
   /** Demonstration coefficients (hand-set, plausible signs: length and
     * stopwords up-weight prose; punctuation/caps walls and extreme word
@@ -88,18 +87,16 @@ object QualityModel {
     squash(linear(bias, weights.map { case (n, w) => (f(n), w) }))
   }
 
-  /** Stage kernels + features + logit/score as named columns (the
-    * CollapseProject discipline [[classify]] documents): each kernel
-    * and each feature appears in the plan exactly once no matter how
-    * many downstream expressions reference it. */
+  /** Stage the kernel + features + logit/score as named columns (the
+    * CollapseProject discipline [[classify]] documents): the kernel
+    * and each feature appear in the plan exactly once no matter how
+    * many downstream expressions reference them. */
   private def staged(df: DataFrame, text: Column,
                      bias: Double, weights: Seq[(String, Double)])
       : DataFrame = {
-    val withKernels = df
-      .withColumn("__ts", graft.functions.text_stats(text))
-      .withColumn("__sw", TextAnalysis.swHitCount(text))
-    val withFeats = featuresFromStats(col("__ts"), col("__sw"))
-      .foldLeft(withKernels) { case (d, (n, c)) =>
+    val withKernel = df.withColumn("__ts", graft.functions.text_stats(text))
+    val withFeats = featuresFromStats(col("__ts"))
+      .foldLeft(withKernel) { case (d, (n, c)) =>
         d.withColumn("__f_" + n, c)
       }
     withFeats
@@ -115,7 +112,7 @@ object QualityModel {
     * (the training counterpart of [[classify]]'s determinism choices).
     * Returns one (feature, g) row per weight plus the `bias` row.
     *
-    * Shape for 100 TB: ONE pass — kernels and features staged
+    * Shape for 100 TB: ONE pass — the kernel and features staged
     * row-local, then a single global aggregate whose map-side partials
     * reduce each task to (numFeatures+1) doubles before the (one-row)
     * exchange. The corpus is never collected; the model state that
@@ -185,13 +182,13 @@ object QualityModel {
   /** df + (score, keep) — narrow projections, no shuffle; the
     * downstream filter on `keep` pushes to the scan at 100 TB.
     *
-    * The kernel outputs are STAGED as intermediate columns rather than
+    * The kernel output is STAGED as an intermediate column rather than
     * inlined into every feature: `score` references the logit twice
     * (squash) and `keep` references `score` again, so the inlined form
     * plants ~24 copies of the text_stats subtree in the plan and bets
     * on codegen CSE to deduplicate them. Staged behind projection
     * boundaries (CollapseProject keeps a multiply-referenced non-cheap
-    * alias), each kernel appears in the plan exactly once —
+    * alias), the kernel appears in the plan exactly once —
     * PlanShapeSpec asserts it. */
   def classify(df: DataFrame, text: Column,
                threshold: Double = 0.5,
@@ -201,6 +198,6 @@ object QualityModel {
     staged(df, text, bias, weights)
       .withColumn("score", col("__score"))
       .withColumn("keep", col("score") >= threshold)
-      .drop(Seq("__ts", "__sw", "__logit", "__score") ++
+      .drop(Seq("__ts", "__logit", "__score") ++
         weights.map("__f_" + _._1): _*)
 }

@@ -6,9 +6,14 @@ import org.apache.spark.sql.types._
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, quality scoring, language ID, fingerprinting. All are
-  * pure `Column` compositions (codegen'd, no UDFs) so they stay inside
-  * whole-stage codegen and scale linearly with no shuffle — the per-row
-  * cost IS the total cost at 100 TB.
+  * pure `Column` compositions (no UDFs), row-local with no shuffle — the
+  * per-row cost IS the total cost at 100 TB. Quality, language id and
+  * the stopword count are arithmetic over one native
+  * [[graft.functions.text_stats]] call and stay inside whole-stage
+  * codegen; the signals written with lambdas (`filter`, `transform`,
+  * `aggregate`: the repetition signals, [[topToken]], [[stopwordRatio]],
+  * [[meanWordLen]], [[bpeishTokenCount]]) are interpreted and take their
+  * operator out of it.
   */
 object TextAnalysis {
 
@@ -16,9 +21,11 @@ object TextAnalysis {
   // explicit [ \t\n\f\r]+, NOT \s+: Java \s includes \x0B (vertical
   // tab) but DuckDB/RE2 \s does not — the explicit class makes the
   // engine, the native kernels (HashOps.isWs), and every oracle agree
-  // on text containing a vertical tab
+  // on text containing a vertical tab. split never yields a null
+  // element, so removing "" drops exactly the empty tokens, without a
+  // lambda
   def tokens(text: Column): Column =
-    filter(split(lower(trim(text)), "[ \t\n\f\r]+"), t => length(t) > 0)
+    array_remove(split(lower(trim(text)), "[ \t\n\f\r]+"), "")
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
@@ -40,13 +47,10 @@ object TextAnalysis {
         n.cast(DoubleType)).otherwise(lit(null))
   }
 
-  val EnStopwords: Seq[String] = Seq(
-    "the", "a", "an", "and", "or", "of", "to", "in", "is", "it", "that",
-    "for", "on", "with", "as", "was", "at", "by", "be", "this")
-
   /** Fraction of tokens that are (EN) stopwords — a classic fluency
     * signal: natural text ~0.3-0.5, keyword soup / boilerplate much less. */
-  def stopwordRatio(text: Column, stopwords: Seq[String] = EnStopwords)
+  def stopwordRatio(text: Column,
+                    stopwords: Seq[String] = graft.functions.HashOps.EnStopwords)
       : Column = {
     val toks = tokens(text)
     val sw = array(stopwords.map(lit): _*)
@@ -95,23 +99,28 @@ object TextAnalysis {
     * stopword and word-length signals (heuristic in the spirit of
     * C4/Gopher quality filters — public recipes, re-derived).
     *
-    * All counting signals come from ONE pass of the native
-    * [[graft.functions.text_stats]] kernel plus a token-hash membership
-    * count — the equivalent regex/HOF formulation re-scanned the text
-    * per signal and measured ~10× slower. The arithmetic is identical
-    * (same integer counts, same division order), so differential
-    * oracles that replicate the formula are unaffected. */
-  def qualityScore(text: Column): Column = {
-    val ts = graft.functions.text_stats(text)
+    * All counting signals, the stopword hits included, come from ONE
+    * call of the native [[graft.functions.text_stats]] kernel — the
+    * equivalent regex/HOF formulation re-scanned the text per signal
+    * and measured ~10× slower. The arithmetic is identical (same
+    * integer counts, same division order), so differential oracles
+    * that replicate the formula are unaffected. */
+  def qualityScore(text: Column): Column =
+    qualityFromStats(graft.functions.text_stats(text))
+
+  /** [[qualityScore]] over a `text_stats` array already computed —
+    * stage the kernel as a column and derive several signals from it,
+    * so each row runs it once. */
+  def qualityFromStats(ts: Column): Column = {
     val nc = element_at(ts, 1).cast(DoubleType) // n_chars
     val nt = element_at(ts, 2).cast(DoubleType) // n_tokens
     val np = element_at(ts, 3).cast(DoubleType) // n_punct
     val stl = element_at(ts, 5).cast(DoubleType) // sum token len
+    val swHits = element_at(ts, 6).cast(DoubleType) // en stopword hits
     val lenScore = least(nc / lit(500.0), lit(1.0))
     val punct = when(nc > 0, np / nc).otherwise(lit(0.0))
     val punctScore = when(punct < 0.1, lit(1.0))
       .otherwise(greatest(lit(1.0) - (punct - lit(0.1)) * 5, lit(0.0)))
-    val swHits = swHitCount(text).cast(DoubleType)
     val sw = when(nt > 0, swHits / nt).otherwise(lit(0.0))
     val swScore = least(sw * 4, lit(1.0))
     val mwl = when(nt > 0, stl / nt).otherwise(lit(0.0))
@@ -119,59 +128,44 @@ object TextAnalysis {
     round((lenScore + punctScore + swScore + mwlScore) / 4, 6)
   }
 
-  /** English stopword tokens in `text`, counted on the token-hash
-    * kernel: the stopword signal of [[qualityScore]] and of
-    * [[QualityModel]]'s features. */
+  /** English stopword tokens in `text` (with multiplicity), a slot of
+    * the [[graft.functions.text_stats]] kernel: the stopword signal of
+    * [[qualityScore]] and of [[QualityModel]]'s features. */
   def swHitCount(text: Column): Column =
-    size(filter(graft.functions.token_hashes(text),
-      h => array_contains(lit(EnStopwordHashes), h)))
-
-  private lazy val EnStopwordHashes: Array[Long] =
-    EnStopwords.map(hashOf).toArray
-
-  private def hashOf(w: String): Long = {
-    val b = w.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length,
-      graft.functions.HashOps.Seed)
-  }
-
-  private val StopwordsByLang: Map[String, Seq[String]] = Map(
-    "en" -> Seq("the", "and", "of", "to", "in", "is", "that", "it", "was",
-                "for"),
-    "es" -> Seq("el", "la", "de", "que", "y", "en", "un", "los", "del",
-                "las"),
-    "de" -> Seq("der", "die", "und", "das", "ist", "von", "den", "mit",
-                "nicht", "ein"),
-    "fr" -> Seq("le", "la", "les", "de", "et", "est", "un", "une", "dans",
-                "que"))
+    element_at(graft.functions.text_stats(text), 6).cast(IntegerType)
 
   /** Heuristic language ID: CJK script detection first, then argmax of
-    * per-language stopword hits; "und" (undetermined) when no signal.
-    * Hits are the array_intersect of the native token-hash array with
-    * driver-precomputed stopword hashes — no per-token string lambdas
-    * (array_intersect on longs is a native set op). Distinct-hit
-    * counting, which is what the argmax needs. Pure column math — at
-    * scale this is a narrow projection, no shuffle. */
-  def langIdFast(text: Column): Column = {
-    import graft.functions.token_hashes
-    val cjk = length(regexp_replace(text, "[^\\x{4E00}-\\x{9FFF}]", ""))
-    val th = token_hashes(text)
-    val hits = StopwordsByLang.toSeq.sortBy(_._1).map { case (lang, words) =>
-      struct(size(array_intersect(th, lit(words.map(hashOf).toArray)))
-        .as("hits"), lit(lang).as("lang"))
-    }
+    * per-language distinct stopword hits (ties to the later language
+    * code); "und" (undetermined) when no signal. Every count is a slot
+    * of the native [[graft.functions.text_stats]] kernel — no regex, no
+    * per-token lambda. Pure column math — at scale this is a narrow
+    * projection, no shuffle. */
+  def langIdFast(text: Column): Column =
+    langIdFromStats(graft.functions.text_stats(text))
+
+  /** [[langIdFast]] over a `text_stats` array already computed. */
+  def langIdFromStats(ts: Column): Column = {
+    val nc = element_at(ts, 1) // n_chars
+    val cjk = element_at(ts, 7) // CJK code points
+    // slots 8-11: distinct stopword hits of de, en, es, fr
+    val hits = graft.functions.HashOps.LangStopwords.map(_._1).zipWithIndex
+      .map { case (lang, i) =>
+        struct(element_at(ts, 8 + i).as("hits"), lit(lang).as("lang"))
+      }
     val best = array_max(array(hits: _*))
-    when(cjk > 0 && cjk * 2 >= length(text), lit("zh"))
+    when(cjk > 0 && cjk * 2 >= nc, lit("zh"))
       .when(best.getField("hits") > 0, best.getField("lang"))
       .otherwise(lit("und"))
   }
 
-  /** Staged language-ID: token hashes computed once (native), scored by
-    * hash-set intersection. */
+  /** `df` plus language id as column `out`, the kernel staged as a
+    * column: [[langIdFromStats]] reads it eleven times, and inlined each
+    * read is a kernel call. */
   def withLangId(df: org.apache.spark.sql.DataFrame, text: Column,
                  out: String): org.apache.spark.sql.DataFrame =
-    df.withColumn(out, langIdFast(text))
+    df.withColumn("__ts", graft.functions.text_stats(text))
+      .withColumn(out, langIdFromStats(col("__ts")))
+      .drop("__ts")
 
   // --- repetition signals (Gopher-style quality rules — Rae et al.
   // 2021 "Scaling Language Models" §A1.1, public recipe re-derived).

@@ -114,18 +114,58 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("Join"))
     assert(countOf(p, "Exchange") <= 1) // output sort only
     assert(countOf(p, "graft_text_stats") == 1 &&
-           countOf(p, "graft_token_hashes") == 1,
-      "all features must come from ONE pass of each kernel (staged " +
-        "columns, not per-feature re-inlining)")
+           countOf(p, "graft_token_hashes") == 0,
+      "all features, the stopword hits included, must come from ONE " +
+        "text_stats pass (a staged column, not per-feature re-inlining)")
   }
 
   test("q110 gradient step: one pass, no join, each kernel staged once") {
     val p = plan("q110_quality_grad")
     assert(!p.contains("Join"), "a batch gradient is one corpus pass")
     assert(countOf(p, "graft_text_stats") == 1 &&
-           countOf(p, "graft_token_hashes") == 1,
-      "features must come from ONE pass of each kernel (staged " +
-        "columns, not per-term re-inlining)")
+           countOf(p, "graft_token_hashes") == 0,
+      "features, the stopword hits included, must come from ONE " +
+        "text_stats pass (a staged column, not per-term re-inlining)")
+  }
+
+  test("prepareCorpus scores each document with one codegen'd kernel " +
+      "call: no CodegenFallback operator, one graft_text_stats") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object walk extends AdaptiveSparkPlanHelper
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+                    qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "graft_sentinel"))
+          flushed.countDown()
+        else plans.add(qe.executedPlan)
+      def onFailure(f: String,
+                    qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = plans.add(qe.executedPlan)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      graft.llm.Pipelines.prepareCorpus(catalog.table("documents"),
+        org.apache.spark.sql.functions.col("doc_id"),
+        org.apache.spark.sql.functions.col("text")).collect()
+      // events arrive in order: the sentinel's success follows them all
+      spark.range(1).toDF("graft_sentinel").collect()
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val ops = plans.asScala.toSeq.flatMap(p => walk.collect(p) { case n => n })
+    val fallback = ops.filter(_.expressions.exists(
+      _.exists(_.isInstanceOf[CodegenFallback])))
+    assert(fallback.isEmpty, "interpreted expressions take their operator " +
+      "out of whole-stage codegen: " + fallback.map(_.nodeName).mkString(", "))
+    val kernels = ops.map(_.expressions.map(_.collect {
+      case t: graft.functions.TextStats => t }.size).sum).sum
+    assert(kernels == 1, s"$kernels text_stats calls in the executed " +
+      "plans: the floor must not re-run the kernel in a pushed Filter")
   }
 
   test("q98 chunking: row-local explode, no shuffle before the sort") {

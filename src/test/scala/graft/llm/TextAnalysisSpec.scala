@@ -1,7 +1,9 @@
 package graft.llm
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 class TextAnalysisSpec extends SparkSpec {
   import spark.implicits._
@@ -115,6 +117,96 @@ class TextAnalysisSpec extends SparkSpec {
         case other => assert(m === m2, s"mwl doc $id: $other")
       }
     }
+  }
+
+  // --- the column forms the kernel slots replaced (lambda and regex),
+  // kept as references: the scores must stay bit-identical to them ---
+
+  private def refHashes(ws: Seq[String]): Array[Long] = ws.map { w =>
+    val b = w.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(b,
+      org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length,
+      graft.functions.HashOps.Seed)
+  }.toArray
+
+  private def refSwHitCount(text: Column): Column =
+    size(filter(graft.functions.token_hashes(text), h =>
+      array_contains(lit(refHashes(Seq("the", "a", "an", "and", "or",
+        "of", "to", "in", "is", "it", "that", "for", "on", "with", "as",
+        "was", "at", "by", "be", "this"))), h)))
+
+  private def refQualityScore(text: Column): Column = {
+    val ts = graft.functions.text_stats(text)
+    val nc = element_at(ts, 1).cast(DoubleType)
+    val nt = element_at(ts, 2).cast(DoubleType)
+    val np = element_at(ts, 3).cast(DoubleType)
+    val stl = element_at(ts, 5).cast(DoubleType)
+    val lenScore = least(nc / lit(500.0), lit(1.0))
+    val punct = when(nc > 0, np / nc).otherwise(lit(0.0))
+    val punctScore = when(punct < 0.1, lit(1.0))
+      .otherwise(greatest(lit(1.0) - (punct - lit(0.1)) * 5, lit(0.0)))
+    val sw = when(nt > 0, refSwHitCount(text).cast(DoubleType) / nt)
+      .otherwise(lit(0.0))
+    val swScore = least(sw * 4, lit(1.0))
+    val mwl = when(nt > 0, stl / nt).otherwise(lit(0.0))
+    val mwlScore = when(mwl.between(3.0, 10.0), lit(1.0)).otherwise(lit(0.5))
+    round((lenScore + punctScore + swScore + mwlScore) / 4, 6)
+  }
+
+  private def refLangId(text: Column): Column = {
+    val cjk = length(regexp_replace(text, "[^\\x{4E00}-\\x{9FFF}]", ""))
+    val th = graft.functions.token_hashes(text)
+    val hits = Seq(
+      "de" -> Seq("der", "die", "und", "das", "ist", "von", "den", "mit",
+                  "nicht", "ein"),
+      "en" -> Seq("the", "and", "of", "to", "in", "is", "that", "it",
+                  "was", "for"),
+      "es" -> Seq("el", "la", "de", "que", "y", "en", "un", "los", "del",
+                  "las"),
+      "fr" -> Seq("le", "la", "les", "de", "et", "est", "un", "une",
+                  "dans", "que")).map { case (lang, words) =>
+      struct(size(array_intersect(th, lit(refHashes(words)))).as("hits"),
+        lit(lang).as("lang"))
+    }
+    val best = array_max(array(hits: _*))
+    when(cjk > 0 && cjk * 2 >= length(text), lit("zh"))
+      .when(best.getField("hits") > 0, best.getField("lang"))
+      .otherwise(lit("und"))
+  }
+
+  test("qualityScore, langIdFast and swHitCount == their lambda/regex " +
+      "forms, bit for bit") {
+    val edge = Seq[String](null, "", "   ",
+      "中文文本处理测试 中文 the",             // CJK majority
+      "中文 and English text with 中 in it", // mixed script, CJK minority
+      "Ελληνικά καὶ русский и the end",      // mixed script, no CJK
+      "the the the THE The and and of of to a a a",  // repeated stopwords
+      "!!! ??? ... ;;; ::: --- ,,, ((( ))) ***",       // punctuation wall
+      "la la la de de que un un",            // es/fr tie -> later code
+      "İS İT ẞ the WAS \u000B of\u000Bthe")
+    val docs = edge.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("id", "text")
+      .unionByName(catalog.table("documents").limit(200)
+        .select($"doc_id".cast("long").as("id"), $"text"))
+    val rows = docs.select($"id", $"text",
+        TextAnalysis.qualityScore($"text"), refQualityScore($"text"),
+        TextAnalysis.langIdFast($"text"), refLangId($"text"),
+        TextAnalysis.swHitCount($"text"), refSwHitCount($"text"))
+      .collect()
+    assert(rows.length === edge.length + 200)
+    rows.foreach { r =>
+      val what = s"doc ${r.getLong(0)} '${r.getString(1)}'"
+      assert(java.lang.Double.doubleToRawLongBits(r.getDouble(2)) ===
+        java.lang.Double.doubleToRawLongBits(r.getDouble(3)), s"quality $what")
+      assert(r.getString(4) === r.getString(5), s"lang $what")
+      // a null text has no hit count; the old form's size() of a null
+      // array said -1 (both only feed when(n_tokens > 0) branches)
+      if (r.isNullAt(1)) assert(r.isNullAt(6) && r.getInt(7) === -1)
+      else assert(r.getInt(6) === r.getInt(7), s"stopword hits $what")
+    }
+    // the edge texts reach every branch of the language id
+    assert(rows.take(edge.length).map(_.getString(4)).toSet ===
+      Set("und", "zh", "en", "fr"))
   }
 
   test("bpeish token count >= word count for long words") {

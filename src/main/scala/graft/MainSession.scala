@@ -28,11 +28,17 @@ object MainSession {
   }
 
   /** Release what the last query left behind, once its result has been
-    * consumed: persisted intermediates (so cached blocks don't pile up
-    * across hundreds of queries) and the scratch dirs the query
-    * registered. */
+    * consumed: the blocks of every persistent RDD in the context (the
+    * checkpoints its operators and its result still hold, which would
+    * otherwise stay until a driver GC lets the context cleaner find
+    * them, and pile up across hundreds of queries) and the scratch
+    * dirs the query registered. The blocks are gone when it returns,
+    * so their removal never overlaps the next query. Nothing may read
+    * a frame of an earlier query afterwards: a released checkpoint
+    * does not recompute. */
   def cleanup(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
     Scratch.sweep()
   }
 }

@@ -102,7 +102,7 @@ private[graft] object QueriesLlmA {
       // LSH path and its exact twin otherwise each re-hash the corpus
       val staged = corpus.select(col("doc_id").as("id"),
           TextAnalysis.shingleHashes(col("text"), 3).as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(false)
       val found = Dedup.minhashPairsFromShingles(staged,
           numHashes = 64, bands = 16, threshold = 0.5)
         .select(col("id_a"), col("id_b"))
@@ -284,13 +284,14 @@ private[graft] object QueriesLlmA {
       val docs = tbl(spark, dir, "documents")
       // ONE pipeline, audited per stage: the staged Pipelines API
       // (scoreCorpus -> exactByKey -> removeNearDups) lets the query
-      // count each stage without re-running the whole preparation
+      // count each stage without re-running the whole preparation —
+      // each counted stage is a lazy checkpoint its consumer fills
       val scored = graft.llm.Pipelines.scoreCorpus(docs, col("text"),
           minQuality = 0.3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(false)
       val exact = Dedup.exactByKey(scored, Seq(col("fingerprint")),
           col("doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(false)
       val prepared = graft.llm.Pipelines.removeNearDups(exact,
         col("doc_id"), col("text"), nearDupJaccard = 0.8)
       scored.agg(count(lit(1)).as("n_quality"))

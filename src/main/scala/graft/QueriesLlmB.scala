@@ -444,16 +444,17 @@ private[graft] object QueriesLlmB {
     //     token budget), all riding the single terminal write as
     //     accumulators — no re-scan per stage. Boundaries the
     //     downstream consumes twice (decontaminate's n-gram mine +
-    //     anti-join; the budget's census + join) are persisted above
-    //     the checkpoint so each counter fires exactly once. The
-    //     oracle replays every stage count relationally from the
-    //     q127 CTE chain. ---
+    //     anti-join; the budget's census + join) are checkpointed
+    //     eagerly above the observation, so each counter fires
+    //     exactly once, in full, on the checkpoint's job. The oracle
+    //     replays every stage count relationally from the q127 CTE
+    //     chain. ---
     "q245_pipeline_metrics" -> { (spark, dir) =>
       val po = new graft.llm.PipelineObserver
       val docs0 = tbl(spark, dir, "documents")
       val raw = po.checkpoint("raw",
           docs0.select(col("doc_id"), col("source"), col("text")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
       val fp = raw.withColumn("fp", md5(col("text")))
       val keepIds = fp.groupBy(col("fp"))
         .agg(min(col("doc_id")).as("doc_id")).select(col("doc_id"))
@@ -463,12 +464,12 @@ private[graft] object QueriesLlmB {
           graft.llm.QualityModel.classify(s1, col("text"))
             .filter(col("keep"))
             .select(col("doc_id"), col("source"), col("text")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
       val evalSet = docs0.filter(pmod(col("doc_id"), lit(97)) === 0)
       val s3 = po.checkpoint("decontaminate",
           graft.llm.Contamination.decontaminate(s2, col("doc_id"),
             col("text"), evalSet, col("text"), n = 8))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
       val s3t = s3.withColumn("n_tok",
         graft.llm.TextAnalysis.tokenCount(col("text")))
       val kept = po.checkpoint("token_budget",

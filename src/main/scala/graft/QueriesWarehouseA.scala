@@ -143,7 +143,7 @@ private[graft] object QueriesWarehouseA {
       val staged = hist.unionByName(fresh)
         .select(col("doc_id").as("id"),
           TextAnalysis.shingleHashes(col("text"), 3).as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(false)
       def isHist(c: Column): Column =
         c < 1000000L && pmod(c, lit(10)) < 7
       val exact = Dedup.ngramJaccardPairsFromShingles(

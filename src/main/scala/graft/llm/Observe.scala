@@ -23,11 +23,13 @@ final case class CurationAborted(stage: String, nIn: Long, nKept: Long,
   *
   * Usage: wrap each stage boundary (first call = raw input), run ONE
   * terminal action (write/count) over the final frame, then read
-  * [[stageMetrics]] / [[assertKeptFloor]]. Boundaries that are
+  * [[stageMetrics]] / [[assertKeptFloor]]. A boundary that is
   * consumed more than once downstream (self-joins like decontaminate's
-  * n-gram mine + anti-join) must be persisted ABOVE the checkpoint —
-  * `po.checkpoint("x", df).persist(...)` — so the CollectMetrics node
-  * executes exactly once, at cache materialization. */
+  * n-gram mine + anti-join) is checkpointed: an eager
+  * `po.checkpoint("x", df).localCheckpoint()` executes the
+  * CollectMetrics node once, in full, and the Observation latches on
+  * that job; later reads hit the checkpoint's blocks, so a consumer
+  * that short-circuits (take/limit) cannot latch a partial count. */
 final class PipelineObserver {
   private val points =
     scala.collection.mutable.ArrayBuffer.empty[(String, Observation)]

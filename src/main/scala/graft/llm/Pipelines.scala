@@ -65,44 +65,47 @@ object Pipelines {
     val raw = po.checkpoint("raw", docs)
     val scored = scoreCorpus(raw, text, minQuality)
     val q = po.checkpoint("quality_floor", scored)
-    // persist ABOVE the checkpoint: near-dup removal consumes this
-    // frame twice (pair mining + survivor anti-join); the cache makes
-    // the CollectMetrics node execute exactly once, at materialization
+    // checkpoint the boundary, eagerly: near-dup removal reads this
+    // frame twice (pair mining + survivor anti-join), and an
+    // Observation latches the FIRST execution containing its node,
+    // while connected components' checks short-circuit (take/limit).
+    // The eager checkpoint is that first execution, a full one, so
+    // every observation below it latches its full count.
     val exact = po.checkpoint("exact_dedup",
         Dedup.exactByKey(q, Seq(col("fingerprint")), id))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     try {
-      // materialize the cache with ONE full scan before the iterative
-      // near-dup consumer touches it: an Observation latches the FIRST
-      // execution containing its node, and connected-components'
-      // convergence checks short-circuit (take/limit) — a partial scan
-      // would latch partial counts for every checkpoint below the
-      // cache. This is the same materialization scan the first
-      // consumer would trigger anyway, so no extra pass over the corpus.
-      exact.count()
       val fin = po.checkpoint("near_dedup",
         removeNearDups(exact, id, text, nearDupJaccard))
       Sinks.replace(fin, outPath)
-    } finally exact.unpersist()
+    } finally Lifecycle.release(exact)
     po.assertKeptFloor(abortBelowKeptFrac)
     po.metricsDF(docs.sparkSession)
   }
 
   /** Stage 1: language id + quality + content fingerprint
     * ([[TextAnalysis.fingerprint]], md5 of the text), quality floor
-    * applied. Pure projection + pushable filter — callers that also
-    * need audit counts persist THIS frame and reuse it instead of
-    * re-running the pipeline. */
+    * applied. Row-local, no shuffle — callers that also need audit
+    * counts checkpoint THIS frame and reuse it instead of re-running
+    * the pipeline.
+    *
+    * The kernel's struct is the output of a one-element `explode`: a
+    * Filter is pushed below a Project by substituting its aliases, so
+    * over a projected kernel column the floor would call the kernel
+    * once per reference to it; it cannot be pushed below a Generate
+    * whose output it reads, so it reads the struct. */
   def scoreCorpus(docs: DataFrame, text: Column,
                   minQuality: Double = 0.3): DataFrame =
-    scoreColumns(docs, text).filter(col("quality") >= minQuality)
+    scoreColumns(docs, text, ts => explode(array(ts)))
+      .filter(col("quality") >= minQuality)
 
   /** `lang_pred`, `quality` and `fingerprint` added to `docs`, with the
-    * text_stats kernel staged as a column both scores read, so a row
-    * runs it once (CollapseProject keeps a multiply-referenced
-    * non-cheap alias in its own projection). */
-  private def scoreColumns(docs: DataFrame, text: Column): DataFrame =
-    docs.withColumn("__ts", graft.functions.text_stats(text))
+    * text_stats kernel staged (by `stage`) as a column both scores
+    * read, so a row runs it once (CollapseProject keeps a
+    * multiply-referenced non-cheap alias in its own projection). */
+  private def scoreColumns(docs: DataFrame, text: Column,
+                           stage: Column => Column = identity): DataFrame =
+    docs.withColumn("__ts", stage(graft.functions.text_stats(text)))
       .withColumn("lang_pred", TextAnalysis.langIdFromStats(col("__ts")))
       .withColumn("quality", TextAnalysis.qualityFromStats(col("__ts")))
       .withColumn("fingerprint", TextAnalysis.fingerprint(text))

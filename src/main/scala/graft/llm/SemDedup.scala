@@ -231,24 +231,24 @@ object SemDedup {
           batch.select(id.as("vec_id"),
             vec.cast("array<double>").as("cv")),
           cents, "cv", "cell", 1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(false)
       // materialize the duplicates BEFORE mutating the index they
       // were computed against (the parquet write is the barrier);
-      // the batch's dups are cached so the survivors filter neither
-      // recomputes the pair join nor re-reads the dups table — which
-      // GROWS with stream lifetime (only THIS batch's ids can be this
-      // batch's dups, so the historical dups are irrelevant to the
-      // anti join)
+      // the batch's dups are checkpointed so the survivors filter
+      // neither recomputes the pair join nor re-reads the dups table —
+      // which GROWS with stream lifetime (only THIS batch's ids can be
+      // this batch's dups, so the historical dups are irrelevant to
+      // the anti join)
+      val dupsB = pairsAgainstIndex(index, assigned, threshold)
+        .localCheckpoint(false)
       try {
-        val dupsB = pairsAgainstIndex(index, assigned, threshold)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          Sinks.writeBlocks(dupsB, dupsOutDir, Nil)
-          val survivors = assigned.join(dupsB.select(col("dup_id")),
-            col("vec_id") === col("dup_id"), "left_anti")
-          appendToIndex(survivors, indexPath)
-        } finally dupsB.unpersist(blocking = false)
-      } finally assigned.unpersist(blocking = false)
+        Sinks.writeBlocks(dupsB, dupsOutDir, Nil)
+        // the dup ids are some of this batch's ids: broadcast them (a
+        // checkpoint carries its plan's size estimate, not its size)
+        val survivors = assigned.join(broadcast(dupsB.select(col("dup_id"))),
+          col("vec_id") === col("dup_id"), "left_anti")
+        appendToIndex(survivors, indexPath)
+      } finally Seq(dupsB, assigned).foreach(Lifecycle.release)
     }
     Sinks.read(spark, dupsOutDir)
   }

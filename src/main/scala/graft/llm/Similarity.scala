@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.operators.Lifecycle
 import graft.sources.Sinks
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -358,8 +359,8 @@ object Similarity {
     *
     * MMR is sequential BY DEFINITION (each pick conditions on the
     * last), so the driver loops k times — but each round is one
-    * distributed scan of the CACHED candidate frame cross-joined with
-    * the ≤k selected vectors (broadcast, tiny) and a top-1
+    * distributed scan of the CHECKPOINTED candidate frame cross-joined
+    * with the ≤k selected vectors (broadcast, tiny) and a top-1
     * TakeOrdered: cost k·scan with no corpus shuffle, fine for the
     * small k (tens) diversified selection is used with. Candidates
     * can be arbitrarily many rows; only the k winners' vectors ever
@@ -377,7 +378,7 @@ object Similarity {
     import spark.implicits._
     val base = cands.select(id.cast("long").as("id"),
         vec.cast("array<double>").as("v"), rel.cast("double").as("rel"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false) // the first round's top-1 scans it whole
     try {
       // (rank, id, rel, mmr, vector) for each pick so far
       val picked = scala.collection.mutable.ArrayBuffer
@@ -412,6 +413,6 @@ object Similarity {
       }
       picked.toSeq.map(p => (p._1, p._2, p._3, p._4))
         .toDF("rank", "id", "rel", "mmr")
-    } finally base.unpersist()
+    } finally Lifecycle.release(base)
   }
 }

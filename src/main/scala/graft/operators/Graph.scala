@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   * Scale shape: each iteration is ONE edge-by-src equi-join against
   * the k-row rank frame plus one dst-keyed aggregation — both shuffle
   * by node id, and with the edge list bucketed by src the join side
-  * of every iteration is exchange-free. Rank frames are persisted per
-  * round and the previous round is freed, so lineage stays flat (the
+  * of every iteration is exchange-free. Each round's rank frame is a
+  * lazy local checkpoint, so lineage stays flat, and superseded rounds
+  * are released after the next materializing action (the
   * [[graft.llm.KMeans.fit]] loop discipline).
   *
   * Determinism contract (what a SQL oracle can replay): with
@@ -206,7 +207,6 @@ object Graph {
     * per-node counts union the three corners. All joins remain node-
     * id equi-joins AQE can skew-split. */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val canonical = edges.select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -225,7 +225,7 @@ object Graph {
           nodes.toSeq.map(nd => org.apache.spark.sql.Row(nd, tri(nd))),
           longLongSchema("node", "triangles"))
       }
-    val canon = canonical.persist(mad)
+    val canon = canonical.localCheckpoint(false)
     val deg = canon.select(col("a").as("node"))
       .unionAll(canon.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))
@@ -242,7 +242,7 @@ object Graph {
             struct(col("b").as("u"), col("a").as("v"), col("da").as("dv")))
           .as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"), col("e.dv").as("dv"))
-      .persist(mad)
+      .localCheckpoint(false)
     // wedges at the min-(deg,id) corner: out-neighbor pairs ordered by
     // (deg, id) so the closing edge's orientation x→y is determined
     val wedges = oriented.select(col("u"), col("v").as("x"),
@@ -256,12 +256,13 @@ object Graph {
     val perCorner = tris.select(col("u").as("node"))
       .unionAll(tris.select(col("x").as("node")))
       .unionAll(tris.select(col("y").as("node")))
-    // the result outlives the call: checkpoint it, then drop the caches
+    // the result outlives the call: checkpoint it eagerly, then the
+    // frames it was computed from are dead
     val out = perCorner.groupBy(col("node"))
       .agg(count(lit(1)).as("triangles"))
       .localCheckpoint()
-    oriented.unpersist(blocking = false)
-    canon.unpersist(blocking = false)
+    Lifecycle.release(oriented)
+    Lifecycle.release(canon)
     out
   }
 
@@ -334,12 +335,12 @@ object Graph {
     * round's work is bounded by |frontier|·avg-deg, never by path
     * multiplicity (the path-counting blowup stays in the oracle's
     * recursive CTE, not here). Early exit on an empty frontier; the
-    * per-round isEmpty action doubles as the materialization barrier
-    * so lineage stays flat (the [[pageRank]] loop discipline). */
+    * per-round count doubles as the materializing action of the
+    * round's checkpoint, so lineage stays flat (the [[pageRank]] loop
+    * discipline). */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int)
       : DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val distinctEdges = edges.select(col("src"), col("dst")).distinct()
     val seedNodes = seeds.select(col("node")).distinct()
     // DRIVER FAST PATH: min-hop BFS is pure integer frontier
@@ -351,15 +352,14 @@ object Graph {
            sRows <- Local.collectWithin(seedNodes))
         return bfsHopsLocal(edges.sparkSession, eRows,
           sRows.map(_.getLong(0)), maxHops)
-    val e = distinctEdges.persist(mad)
-    val seed = seedNodes.withColumn("hop", lit(0)).persist(mad)
-    seed.count()
-    // visited = lazy union of MATERIALIZED per-hop frontier caches —
-    // each round costs exactly ONE action (the frontier count that
-    // doubles as the lineage barrier); the anti-join unions k cached
-    // frames, never recomputes them
+    val e = distinctEdges.localCheckpoint(false)
+    val seed = seedNodes.withColumn("hop", lit(0)).localCheckpoint()
+    // visited = lazy union of MATERIALIZED per-hop frontier
+    // checkpoints — each round costs exactly ONE action (the frontier
+    // count that materializes its checkpoint); the anti-join unions k
+    // checkpointed frames, never recomputes them
     var visited = seed
-    val cached =
+    val rounds =
       scala.collection.mutable.ArrayBuffer[DataFrame](seed)
     var frontier = seed.select(col("node"))
     var hop = 0
@@ -370,23 +370,23 @@ object Graph {
         .select(col("dst").as("node")).distinct()
         .join(visited, Seq("node"), "left_anti")
         .withColumn("hop", lit(hop))
-        .persist(mad)
+        .localCheckpoint(false)
       if (next.count() == 0L) {
-        next.unpersist(blocking = false); done = true
+        Lifecycle.release(next); done = true
       } else {
         visited = visited.unionByName(next)
-        cached += next
+        rounds += next
         frontier = next.select(col("node"))
         done = hop >= maxHops
       }
     }
-    // detach the result from the per-hop caches (localCheckpoint
-    // materializes the union once) so every intermediate persist can
-    // be released HERE — callers get a self-contained frame and no
-    // MEMORY_AND_DISK residue accumulates across repeated calls
+    // detach the result from the per-hop checkpoints (an eager
+    // checkpoint materializes the union once) so every round can be
+    // released HERE — callers get a self-contained frame and no
+    // blocks accumulate across repeated calls
     val out = visited.localCheckpoint()
-    cached.foreach(_.unpersist(blocking = false))
-    e.unpersist(blocking = false)
+    rounds.foreach(Lifecycle.release)
+    Lifecycle.release(e)
     out
   }
 
@@ -444,7 +444,6 @@ object Graph {
     * surviving pairs count UNCAPPED degrees, so scores are exact. */
   def linkPrediction(edges: DataFrame, topK: Int,
                      maxWedgeDegree: Option[Long] = None): DataFrame = {
-    val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val canonical = edges.select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -465,7 +464,7 @@ object Graph {
         return linkPredictionLocal(edges.sparkSession, rows, dl, topK,
           maxWedgeDegree)
     }
-    val canon = canonical.persist(mad)
+    val canon = canonical.localCheckpoint(false)
     val adj = canon.select(col("a").as("n"), col("b").as("nbr"))
       .unionAll(canon.select(col("b").as("n"), col("a").as("nbr")))
     val deg = adj.groupBy(col("n")).agg(count(lit(1)).as("d"))
@@ -484,7 +483,7 @@ object Graph {
     val out = candidates.orderBy(col("jac_num").desc, col("x"), col("y"))
       .limit(topK)
       .localCheckpoint()
-    canon.unpersist(blocking = false)
+    Lifecycle.release(canon)
     out
   }
 
@@ -556,11 +555,11 @@ object Graph {
     * Scale shape per round: one adjacency-by-neighbor equi-join
     * against the |V|-row label frame + one (node, label) count
     * aggregate + one node-keyed arg-min — all id-keyed shuffles; the
-    * adjacency is staged once. Label frames persist per round with
-    * the [[pageRank]] batched-materialization discipline. */
+    * adjacency is staged once. Each round's label frame is a lazy
+    * checkpoint, released in batches with the [[pageRank]]
+    * discipline. */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val canon = edges.select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -575,10 +574,9 @@ object Graph {
     }
     val adj = canon.select(col("a").as("node"), col("b").as("nbr"))
       .unionAll(canon.select(col("b").as("node"), col("a").as("nbr")))
-      .persist(mad)
+      .localCheckpoint(false)
     var labels = adj.select(col("node")).distinct()
-      .withColumn("label", col("node")).persist(mad)
-    labels.count()
+      .withColumn("label", col("node")).localCheckpoint()
     val pending = scala.collection.mutable.ArrayBuffer[DataFrame]()
     for (i <- 1 to rounds) {
       val counts = adj
@@ -589,19 +587,20 @@ object Graph {
         .agg(min(struct((-col("__c")).as("__nc"), col("label")))
           .as("__m"))
         .select(col("node"), col("__m.label").as("label"))
-        .persist(mad)
+        .localCheckpoint(false)
       pending += labels
       if (i % MatEvery == 0) {
-        next.count()
-        pending.foreach(_.unpersist(blocking = false))
+        next.count() // materialize, then free the superseded rounds
+        pending.foreach(Lifecycle.release)
         pending.clear()
       }
       labels = next
     }
-    // the result outlives the call: checkpoint it, then drop the caches
+    // the result outlives the call: checkpoint it eagerly, then the
+    // rounds it was computed from are dead
     val out = labels.localCheckpoint()
-    (pending :+ labels).foreach(_.unpersist(blocking = false))
-    adj.unpersist(blocking = false)
+    (pending :+ labels).foreach(Lifecycle.release)
+    Lifecycle.release(adj)
     out
   }
 
@@ -677,7 +676,6 @@ object Graph {
                danglingMass: Boolean = false,
                restart: Option[DataFrame] = None): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val edgeList =
       if (weighted) edges.select(col("src"), col("dst"), col("w"))
       else edges.select(col("src"), col("dst"), lit(1L).as("w"))
@@ -701,20 +699,21 @@ object Graph {
         return pageRankLocalDet(edges.sparkSession, rows, iterations,
           damping, danglingMass, seedArr)
       }
-    val e = edgeList.persist(mad)
+    val e = edgeList.localCheckpoint(false)
     // deg/nodes/N are referenced EVERY round — stage them once so no
     // iteration re-shuffles the edge list for its side frames
     val deg = e.groupBy(col("src")).agg(sum(col("w")).as("outdeg"))
-      .persist(mad)
+      .localCheckpoint(false)
     val nodes = (if (danglingMass)
         e.select(col("src").as("node"))
           .unionByName(e.select(col("dst").as("node")))
-      else e.select(col("src").as("node"))).distinct().persist(mad)
+      else e.select(col("src").as("node"))).distinct()
+      .localCheckpoint(false)
     // dangling = ranked nodes with no out-edges; only they can leak
     val dangling = if (danglingMass)
-        nodes.join(deg.withColumnRenamed("src", "node"), Seq("node"),
-          "left_anti").persist(mad)
-      else null
+        Some(nodes.join(deg.withColumnRenamed("src", "node"), Seq("node"),
+          "left_anti").localCheckpoint(false))
+      else None
     // N as a loop constant: one scalar action up front (the KMeans/Bpe
     // loop-constant precedent) instead of a broadcast-crossjoin of a
     // single-row frame EVERY round — the division itself stays the
@@ -731,17 +730,17 @@ object Graph {
         .select(col("node"),
           when(col("__seed").isNotNull, lit(1.0) / lit(sn))
             .otherwise(lit(0.0)).as("r"))
-        .persist(mad)
+        .localCheckpoint(false)
     }
     var pr = nodesR
       .map(_.select(col("node"), col("r").as("pr")))
       .getOrElse(nodes.select(col("node"),
         (lit(1.0) / lit(n)).as("pr")))
-      .persist(mad)
-    // rank frames persist per round but MATERIALIZE in batches: an
+      .localCheckpoint(false)
+    // rank frames are lazy checkpoints that MATERIALIZE in batches: an
     // action per round multiplies per-job overhead on k-row frames,
-    // so lineage runs lazily for a few rounds and a count() cuts it
-    // (freeing the accumulated round caches) every `MatEvery` rounds
+    // so a count() every `MatEvery` rounds materializes the latest
+    // round and frees the superseded ones
     val pending = scala.collection.mutable.ArrayBuffer[DataFrame]()
     for (i <- 1 to iterations) {
       val contribs = e
@@ -765,15 +764,15 @@ object Graph {
       // dangling mass this round, as a driver scalar (the loop-constant
       // discipline): deterministic mode folds the value-sorted list so
       // an oracle replays the sum bit-for-bit
-      val dm = if (danglingMass) {
-        val prd = pr.join(dangling, Seq("node"), "left_semi")
+      val dm = dangling.fold(0.0) { dn =>
+        val prd = pr.join(dn, Seq("node"), "left_semi")
         val r = (if (deterministic)
             prd.agg(aggregate(array_sort(collect_list(col("pr"))),
               lit(0.0), (acc, x) => acc + x))
           else prd.agg(sum(col("pr")))).collect()(0)
         if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-      } else 0.0
-      val next = nodesR match {
+      }
+      val next = (nodesR match {
         case Some(nr) => // personalized: teleport + dangling go to r
           val inner =
             if (danglingMass)
@@ -783,7 +782,6 @@ object Graph {
             .select(col("node"),
               (lit(1.0 - damping) * col("r") + lit(damping) * inner)
                 .as("pr"))
-            .persist(mad)
         case None =>
           nodes.join(sums, Seq("node"), "left")
             .select(col("node"),
@@ -794,24 +792,20 @@ object Graph {
               else
                 lit(1.0 - damping) / lit(n) +
                   lit(damping) * coalesce(col("s"), lit(0.0))).as("pr"))
-            .persist(mad)
-      }
+      }).localCheckpoint(false)
       pending += pr
       if (i % MatEvery == 0) {
         next.count() // materialize, then free the superseded rounds
-        pending.foreach(_.unpersist(blocking = false))
+        pending.foreach(Lifecycle.release)
         pending.clear()
       }
       pr = next
     }
-    // the result outlives the call: checkpoint it, then drop the caches
+    // the result outlives the call: checkpoint it eagerly, then every
+    // frame it was computed from is dead
     val out = pr.localCheckpoint()
-    (pending :+ pr).foreach(_.unpersist(blocking = false))
-    e.unpersist(blocking = false)
-    deg.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    nodesR.foreach(_.unpersist(blocking = false))
-    if (dangling != null) dangling.unpersist(blocking = false)
+    (pending ++ Seq(pr, e, deg, nodes) ++ nodesR ++ dangling)
+      .foreach(Lifecycle.release)
     out
   }
 

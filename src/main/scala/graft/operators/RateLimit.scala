@@ -107,20 +107,24 @@ object RateLimit {
       .groupBy(col("entity"), col("ck"))
       .agg(array_sort(collect_list(
         struct(col("u"), col("i"), col("m")))).as("xs"))
-      .persist()
+      .localCheckpoint(false) // the round-count scan below reads it whole
     // bounded scalar pull: the round count, not data. max() over zero
     // rows is NULL — an empty input must yield the empty result frame
     // (same contract as the unchunked tokenBucket), not a getInt NPE.
     val maxCkRow = chunks.agg(max(col("ck"))).head()
     if (maxCkRow.isNullAt(0)) {
-      chunks.unpersist()
-      // zero-row frame derived from `chunks` so `entity` keeps the
-      // caller's type — same contract as the unchunked tokenBucket
-      return chunks.select(col("entity"), lit(0L).as("n_events"),
+      // zero rows with `chunks`' schema, so `entity` keeps the
+      // caller's type — same contract as the unchunked tokenBucket —
+      // and nothing reads the released checkpoint
+      val schema = chunks.select(col("entity"), lit(0L).as("n_events"),
         lit(0L).as("n_accepted"), lit(0L).as("n_rejected"),
-        lit(0L).as("tokens_left"))
+        lit(0L).as("tokens_left")).schema
+      Lifecycle.release(chunks)
+      return df.sparkSession.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
     }
     val nChunks = maxCkRow.getInt(0) + 1
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // every entity has a chunk 0, so round 0 seeds the state frame
     var state = chunks.filter(col("ck") === 0)
       .select(col("entity"),
@@ -137,12 +141,16 @@ object RateLimit {
           when(col("xs").isNull, col("__st"))
             .otherwise(aggregate(col("xs"), col("__st"),
               step(capacity, refillPerMin, cost))).as("__st"))
-      if (k % 8 == 0) state = state.localCheckpoint()
+      if (k % 8 == 0) {
+        state = state.localCheckpoint()
+        rounds += state
+      }
     }
     // materialize the (one-row-per-entity) final state eagerly so the
-    // chunk cache can be released before the caller's action runs
+    // chunks and the superseded rounds can be released before the
+    // caller's action runs
     val fin = state.localCheckpoint()
-    chunks.unpersist()
+    (rounds :+ chunks).foreach(Lifecycle.release)
     fin.select(col("entity"), col("n_events"),
       col("__st.acc").as("n_accepted"),
       col("__st.rej").as("n_rejected"),

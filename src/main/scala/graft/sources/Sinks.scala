@@ -143,8 +143,8 @@ object Sinks {
   def deleteByKey(spark: SparkSession, path: String,
                   keyCol: String, victims: DataFrame): (Int, Long) = {
     val root = Paths.get(path).toAbsolutePath.normalize
-    val vict = victims.select(col(keyCol)).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // read by the hit census and again by every rewrite
+    val vict = victims.select(col(keyCol)).distinct().localCheckpoint(false)
     try {
       val hits = read(spark, path)
         .withColumn("__file", col("_metadata.file_path"))
@@ -162,7 +162,7 @@ object Sinks {
         TableLog.commit(path)(_.filterNot(hit) ++ added)
         (hitFiles.length, deleted)
       }
-    } finally { vict.unpersist(); () }
+    } finally graft.operators.Lifecycle.release(vict)
   }
 
   private def dirOf(f: String): String =

@@ -99,4 +99,32 @@ class IntermediateStateSpec extends SparkSpec {
     assert((sc.getPersistentRDDs.keySet.toSet -- before).isEmpty,
       "releasing the results must free every block the calls made")
   }
+
+  test("the queries that reuse a frame leave no cache entry: q26, q70, " +
+      "q95 and q245 collected without MainSession.cleanup") {
+    // a known start: earlier suites may have cached frames of their own
+    spark.catalog.clearCache()
+    val names = Seq("q26_dedup_minhash", "q70_corpus_prep",
+      "q95_incremental_neardup", "q245_pipeline_metrics")
+    val n = jobsPerTag { tagged =>
+      names.foreach(q => tagged(q)(assert(
+        SparkEntry.queries(q)(spark, TestSpark.sfDir).collect().nonEmpty)))
+    }
+    assert(cacheManager.isEmpty,
+      "a query left a cache entry behind for cleanup to clear")
+    // with its two stages persisted, q70 started 14
+    assert(n("q70_corpus_prep") === 12)
+  }
+
+  test("MainSession.cleanup frees what the last queries left, whatever " +
+      "its form: after two checkpointing queries no persistent RDD stays") {
+    val sc = spark.sparkContext
+    Seq("q26_dedup_minhash", "q70_corpus_prep").foreach(q =>
+      SparkEntry.queries(q)(spark, TestSpark.sfDir).collect())
+    assert(sc.getPersistentRDDs.nonEmpty,
+      "both queries return frames over checkpoints")
+    MainSession.cleanup(spark)
+    assert(sc.getPersistentRDDs.isEmpty,
+      "cleanup must unpersist every block the queries hold")
+  }
 }

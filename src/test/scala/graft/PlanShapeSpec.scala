@@ -128,9 +128,12 @@ class PlanShapeSpec extends SparkSpec {
         "text_stats pass (a staged column, not per-term re-inlining)")
   }
 
-  test("prepareCorpus scores each document with one codegen'd kernel " +
-      "call: no CodegenFallback operator, one graft_text_stats") {
-    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+  /** Every operator of every plan `body` executes, AQE stages included:
+    * a query-execution listener collects the executed plans, and a
+    * sentinel query, whose success event follows all of theirs, ends
+    * the collection. */
+  private def executedOps(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     object walk extends AdaptiveSparkPlanHelper
@@ -149,23 +152,48 @@ class PlanShapeSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      graft.llm.Pipelines.prepareCorpus(catalog.table("documents"),
-        org.apache.spark.sql.functions.col("doc_id"),
-        org.apache.spark.sql.functions.col("text")).collect()
+      body
       // events arrive in order: the sentinel's success follows them all
       spark.range(1).toDF("graft_sentinel").collect()
       assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS))
     } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._
-    val ops = plans.asScala.toSeq.flatMap(p => walk.collect(p) { case n => n })
+    plans.asScala.toSeq.flatMap(p => walk.collect(p) { case n => n })
+  }
+
+  private def kernelCalls(ops: Seq[org.apache.spark.sql.execution.SparkPlan])
+      : Int =
+    ops.map(_.expressions.map(_.collect {
+      case t: graft.functions.TextStats => t }.size).sum).sum
+
+  test("prepareCorpus scores each document with one codegen'd kernel " +
+      "call: no CodegenFallback operator, one graft_text_stats") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    val ops = executedOps(
+      graft.llm.Pipelines.prepareCorpus(catalog.table("documents"),
+        org.apache.spark.sql.functions.col("doc_id"),
+        org.apache.spark.sql.functions.col("text")).collect())
     val fallback = ops.filter(_.expressions.exists(
       _.exists(_.isInstanceOf[CodegenFallback])))
     assert(fallback.isEmpty, "interpreted expressions take their operator " +
       "out of whole-stage codegen: " + fallback.map(_.nodeName).mkString(", "))
-    val kernels = ops.map(_.expressions.map(_.collect {
-      case t: graft.functions.TextStats => t }.size).sum).sum
+    val kernels = kernelCalls(ops)
     assert(kernels == 1, s"$kernels text_stats calls in the executed " +
       "plans: the floor must not re-run the kernel in a pushed Filter")
+  }
+
+  test("scoreCorpus evaluates the kernel once per row: its quality floor " +
+      "reads the staged struct, never a pushed-down kernel call") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    val ops = executedOps(
+      graft.llm.Pipelines.scoreCorpus(catalog.table("documents"),
+        org.apache.spark.sql.functions.col("text")).collect())
+    val kernels = kernelCalls(ops)
+    assert(kernels == 1, s"$kernels text_stats calls in the executed " +
+      "plans: a Filter pushed below the scoring projection inlines the " +
+      "kernel once per reference")
+    assert(!ops.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[CodegenFallback]))))
   }
 
   test("q98 chunking: row-local explode, no shuffle before the sort") {

@@ -66,6 +66,34 @@ class PipelinesSpec extends SparkSpec {
       new java.io.File(out))
   }
 
+  test("curateObserved checkpoints its exact-dedup boundary eagerly: " +
+      "full stage counts, 8 Spark jobs, no block left behind") {
+    val docs = Seq(
+      (21L, "the quick brown fox jumps over the lazy dog and then it was done for the day"),
+      (22L, "the quick brown fox jumps over the lazy dog and then it was done for the day"),
+      (23L, "the quick brown fox jumps over the lazy dog and then it was done for the"),
+      (24L, "a completely different document that is about the spark engine and its catalyst optimizer for it was a good engine"),
+      (25L, "xq")
+    ).toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val out = graft.Scratch.dir("graft_curobs_jobs").toString
+    var m = Map.empty[String, (Int, String, Long, Long, Double)]
+    val n = jobsPerTag(tagged => tagged("curate") {
+      m = Pipelines.curateObserved(docs, $"doc_id", $"text",
+          out + "/corpus", minQuality = 0.4, nearDupJaccard = 0.6)
+        .as[(Int, String, Long, Long, Double)].collect()
+        .map(r => r._2 -> r).toMap
+    })
+    assert(m.values.map(r => (r._2, r._3, r._4)).toSet === Set(
+      ("quality_floor", 5L, 4L), ("exact_dedup", 4L, 3L),
+      ("near_dedup", 3L, 2L)))
+    // a persisted boundary plus its count started 10
+    assert(n("curate") === 8)
+    assert((sc.getPersistentRDDs.keySet.toSet -- before).isEmpty,
+      "curateObserved must release the checkpoints it made")
+  }
+
   test("writeByLanguage partitions on disk by lang_pred") {
     val tmp = graft.Scratch.dir("graft_corpus")
       .toString

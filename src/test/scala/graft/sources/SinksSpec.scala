@@ -160,4 +160,21 @@ class SinksSpec extends SparkSpec {
     assert(r2 === 0 && d2 === 0L)
     assert(listing() === after)
   }
+
+  test("deleteByKey starts 5 Spark jobs for a hit and 2 for a miss: the " +
+       "victim set is a checkpoint both the census and the rewrite read") {
+    import spark.implicits._
+    val out = tmpDir() + "/cow_jobs"
+    spark.range(1000).select($"id", concat(lit("v"), $"id").as("payload"))
+      .repartitionByRange(10, $"id").write.parquet(out)
+    val n = jobsPerTag { tagged =>
+      tagged("hit")(assert(Sinks.deleteByKey(spark, out, "id",
+        spark.range(100, 150).toDF("id"))._2 === 50L))
+      tagged("miss")(assert(Sinks.deleteByKey(spark, out, "id",
+        spark.range(5000, 5010).toDF("id")) === ((0, 0L))))
+    }
+    // a persisted victim set started 6 and 3
+    assert((n("hit"), n("miss")) === ((5, 2)))
+    assert(Sinks.read(spark, out).count() === 950L)
+  }
 }

@@ -102,19 +102,20 @@ object Staged {
     target
   }
 
-  /** DataFrame-shaped artifact: build + write (through
-    * [[graft.sources.Sinks.writer]], like every table the engine owns)
+  /** DataFrame-shaped artifact: build + commit (with
+    * [[graft.sources.Sinks.replace]], like every table the engine owns)
     * on first request for `key`, read-from-parquet on every request.
     * The returned frame is always the parquet read
-    * ([[graft.sources.TableLog.read]] of the artifact dir: its listing
-    * and first footer, no schema job), so first and later callers get
-    * the identical (materialized, re-scannable) plan shape. */
+    * ([[graft.sources.TableLog.read]] of the artifact dir: its newest
+    * manifest and first footer, no schema job), so first and later
+    * callers get the identical (materialized, re-scannable) plan
+    * shape. */
   def getOrBuild(spark: SparkSession, key: String)
                 (build: => DataFrame): DataFrame = {
-    // Spark's job commit writes `_SUCCESS` after the data files
-    val dir = getOrBuildDir(key, "_SUCCESS")(dir =>
-      graft.sources.Sinks.writer(build).mode("overwrite")
-        .parquet(dir.toString))
+    val dir = getOrBuildDir(key, "_SUCCESS") { dir =>
+      graft.sources.Sinks.replace(build, dir.toString)
+      Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
+    }
     graft.sources.TableLog.read(spark, dir.toString)._1
   }
 

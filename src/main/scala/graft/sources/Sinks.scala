@@ -2,8 +2,7 @@ package graft.sources
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row,
-  SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sink layer (SURVEY.md §2a). The reference's sinks are S3 gzipped
@@ -26,15 +25,17 @@ import org.apache.spark.sql.functions._
   * before or after the write and nothing in between, and picks up the
   * new generation by itself. Every table the engine owns is written
   * here: [[writeBlocks]] adds files, [[replace]] rewrites the table,
-  * and both take partition columns.
+  * and both take partition columns. Each write first installs
+  * [[NioLocalFileSystem]] in the frame's session, so creating the
+  * files forks no process.
   */
 object Sinks {
 
   /** S2: append partitioned columnar blocks. */
   def writeBlocks(df: DataFrame, path: String, partitionCols: Seq[String],
                   format: String = "parquet"): Unit =
-    append(path)(dst =>
-      writer(df).partitionBy(partitionCols: _*).format(format).save(dst))
+    append(df.sparkSession, path)(dst =>
+      df.write.partitionBy(partitionCols: _*).format(format).save(dst))
 
   /** S6: time-rolled sink — route rows to `date=YYYY-MM-DD` partitions,
     * dropping docs older than `retainDays` relative to `now`. */
@@ -42,9 +43,9 @@ object Sinks {
                     retainDays: Int, now: java.sql.Timestamp): Unit = {
     val cutoff = new java.sql.Timestamp(
       now.getTime - retainDays * 86400000L)
-    append(path)(dst => writer(df.filter(ts >= lit(cutoff))
-      .withColumn("__date", date_format(ts, "yyyy-MM-dd")))
-      .partitionBy("__date").parquet(dst))
+    append(df.sparkSession, path)(dst => df.filter(ts >= lit(cutoff))
+      .withColumn("__date", date_format(ts, "yyyy-MM-dd"))
+      .write.partitionBy("__date").parquet(dst))
   }
 
   /** Replace a sink table's content with `df` in one commit,
@@ -52,14 +53,22 @@ object Sinks {
     * stay readable by requests already planned over them. */
   def replace(df: DataFrame, path: String,
               partitionCols: Seq[String] = Nil): Unit = {
-    val added = TableLog.stage(path)(dst =>
-      writer(df).partitionBy(partitionCols: _*).parquet(dst))
+    val added = stage(df.sparkSession, path)(dst =>
+      df.write.partitionBy(partitionCols: _*).parquet(dst))
     TableLog.commit(path)(_ => added)
   }
 
-  private def append(path: String)(write: String => Unit): Unit = {
-    val added = TableLog.stage(path)(write)
+  private def append(spark: SparkSession, path: String)(
+      write: String => Unit): Unit = {
+    val added = stage(spark, path)(write)
     TableLog.commit(path)(_ ++ added)
+  }
+
+  /** [[TableLog.stage]] after installing the session's file system. */
+  private def stage(spark: SparkSession, path: String)(
+      write: String => Unit): Vector[String] = {
+    NioLocalFileSystem.install(spark)
+    TableLog.stage(path)(write)
   }
 
   /** S7: fan one computed frame out to several sinks, computing it
@@ -73,15 +82,6 @@ object Sinks {
     finally graft.operators.Lifecycle.release(computed)
   }
 
-  /** `df.write` for a table the engine owns: its files and directories
-    * are created through [[NioLocalFileSystem]], which sets their modes
-    * in-process instead of forking `chmod` for each. The file system is
-    * selected per write and uncached, because the JVM's cached
-    * `file://` instance exists before any write could configure it. */
-  private[graft] def writer(df: DataFrame): DataFrameWriter[Row] =
-    df.write.option("fs.file.impl", classOf[NioLocalFileSystem].getName)
-      .option("fs.file.impl.disable.cache", "true")
-
   /** The sink table at `path` as of its newest commit (a directory no
     * commit has touched reads as its listing), by [[TableLog.read]]. */
   def read(spark: SparkSession, path: String): DataFrame =
@@ -93,8 +93,13 @@ object Sinks {
     * below `targetRowsPerFile` are bin-packed into
     * ceil(rows / targetRowsPerFile) files per partition directory, and
     * one commit swaps them for the packed ones. Files at or above the
-    * target keep their paths, so the cost follows the new small files,
-    * not the table's history. Content is UNCHANGED — the oracled
+    * target keep their paths. A packed file holds an equal share of its
+    * directory's rows, which is below the target unless the share comes
+    * out exact, so the next compaction packs it again with the new
+    * small files: in an appending table the cost follows the table's
+    * history, and the round-robin `repartition` spreads every batch
+    * over every packed file, where min/max statistics cannot prune it
+    * (ROADMAP, Direction 1). Content is UNCHANGED — the oracled
     * invariant (q128 reads the compacted table back against the
     * original's oracle); fewer, larger files mean fewer scan tasks and
     * healthier row-group sizes. Returns the live file counts
@@ -173,11 +178,11 @@ object Sinks {
     * the same directory, so partition values stay in the path. */
   private def rewrite(spark: SparkSession, path: String, files: Seq[String])(
       f: (String, DataFrame) => DataFrame): Vector[String] =
-    TableLog.stage(path) { dst =>
+    stage(spark, path) { dst =>
       files.groupBy(dirOf).foreach { case (dir, fs) =>
         val in = TableLog.scan(spark, Paths.get(path, dir),
           fs.map(Paths.get(path, _)))
-        writer(f(dir, in)).parquet(Paths.get(dst, dir).toString)
+        f(dir, in).write.parquet(Paths.get(dst, dir).toString)
       }
     }
 }

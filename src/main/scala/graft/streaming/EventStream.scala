@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
+  Trigger}
 import org.apache.spark.sql.types._
-import graft.sources.Sinks
+import graft.sources.{NioLocalFileSystem, Sinks}
 
 /** Structured Streaming layer (SURVEY.md §2l).
   *
@@ -81,7 +82,9 @@ object EventStream {
     * drain — never back-dates below the files an earlier call wrote.
     * The stream reads one file per trigger and is typed from the first
     * file's footer ([[graft.sources.TableLog.footerSchema]]), so
-    * building it starts no Spark job. */
+    * building it starts no Spark job. Each part is written by Spark
+    * into a `.`-prefixed stage dir, through the session's
+    * [[NioLocalFileSystem]], and only its data file is moved out. */
   def replay(parts: Seq[DataFrame], dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
     require(parts.nonEmpty, "replay needs at least one part")
@@ -92,9 +95,11 @@ object EventStream {
     val t0 = math.max(System.currentTimeMillis() - 1000L * parts.size,
       existing.map(_.lastModified() + 1000L).maxOption
         .getOrElse(Long.MinValue))
+    val spark = parts.head.sparkSession
+    NioLocalFileSystem.install(spark)
     parts.zipWithIndex.foreach { case (p, k) =>
       val stage = s"$dir/.stage$k"
-      Sinks.writer(p.coalesce(1)).parquet(stage)
+      p.coalesce(1).write.parquet(stage)
       val f = new java.io.File(stage).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       val dst = Paths.get(dir, name(existing.size + k))
@@ -103,7 +108,6 @@ object EventStream {
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(stage))
     }
-    val spark = parts.head.sparkSession
     val (schema, nanos) = graft.sources.TableLog.footerSchema(spark,
       Paths.get(dir, name(0)))
     graft.sources.TableLog.micros(spark.readStream.schema(schema)
@@ -591,12 +595,8 @@ object EventStream {
         // the analyzed frame holds the sink's rows; the view `start`
         // registers would pin them, after a failed drain too
         try {
-          val q = agg.writeStream
-            .format("memory").queryName(name)
-            .outputMode(mode)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          val q = drain(agg)(
+            _.format("memory").queryName(name).outputMode(mode))
           observer.foreach { o =>
             q.recentProgress.foreach(o.ingest)
             o.violation.foreach(throw _)
@@ -617,12 +617,20 @@ object EventStream {
     * `perBatch` again. */
   private[graft] def foldBatches(stream: DataFrame, checkpointDir: String)
       (perBatch: DataFrame => Unit): Unit =
-    stream.writeStream
-      .foreachBatch((bdf: DataFrame, _: Long) => perBatch(bdf))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
+    drain(stream)(_.foreachBatch((bdf: DataFrame, _: Long) => perBatch(bdf))
+      .option("checkpointLocation", checkpointDir))
+
+  /** Start `df` as a `Trigger.AvailableNow` query, set up by `sink`,
+    * and wait for it to end: the one way every drain here runs. The
+    * session's [[NioLocalFileSystem]] is installed first, so the
+    * query's checkpoint and state-store files fork no process. */
+  private def drain(df: DataFrame)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+    NioLocalFileSystem.install(df.sparkSession)
+    val q = sink(df.writeStream).trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
+  }
 
   /** Stateful-operator parallelism for a LOCAL drain: every stateful
     * streaming op creates `spark.sql.shuffle.partitions` state-store
@@ -658,14 +666,10 @@ object EventStream {
                 outDir: String, checkpointDir: String,
                 statePartitions: Int = 8): DataFrame =
     withStatePartitions(spark, statePartitions) {
-      val q = agg.writeStream
-        .format("parquet")
+      drain(agg)(_.format("parquet")
         .option("path", outDir)
         .option("checkpointLocation", checkpointDir)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .outputMode("append"))
       // Spark's own reader, not TableLog: the file sink commits through
       // `outDir/_spark_metadata`, and only spark.read honours that log —
       // a restarted drain's exactly-once handoff (q313) rests on it
@@ -964,11 +968,8 @@ object EventStream {
                           checkpoint: String, mode: String = "update",
                           statePartitions: Int = 8): Unit =
     withStatePartitions(spark, statePartitions) {
-      val q = agg.writeStream.format("noop")
+      drain(agg)(_.format("noop")
         .option("checkpointLocation", checkpoint)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .outputMode(mode))
     }
 }

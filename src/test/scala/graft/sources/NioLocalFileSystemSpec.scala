@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import graft.{Scratch, SparkSpec}
-import org.apache.hadoop.fs.{Path => HPath}
+import graft.streaming.{EventStream, StateAudit}
+import org.apache.hadoop.fs.{LocalFileSystem, Path => HPath}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions._
 
@@ -39,10 +40,15 @@ class NioLocalFileSystemSpec extends SparkSpec {
     "org.apache.spark.sql.execution.streaming.state.StateStore$" +
       ".removeFromLoadedProvidersAndClose")
 
+  /** A recorded process start: its command line, and that with its
+    * thread and innermost frames, so a failed check names what forked. */
+  private case class Start(command: String, described: String) {
+    override def toString: String = described
+  }
+
   /** Process starts JFR records in this JVM while `body` runs, but for
-    * [[sparkCleanups]]: each as its thread, command line and innermost
-    * frames, so a failed check names what forked. */
-  private def processStarts(body: => Unit): Seq[String] = {
+    * [[sparkCleanups]]. */
+  private def processStarts(body: => Unit): Seq[Start] = {
     // the executor heartbeat's first metrics read forks `getconf
     // PAGESIZE` once per JVM, in this class's initializer: run it now
     Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$", true,
@@ -62,8 +68,10 @@ class NioLocalFileSystemSpec extends SparkSpec {
             .flatMap(_.getFrames.asScala).map { f =>
               s"${f.getMethod.getType.getName}.${f.getMethod.getName}"
             }
-          (frames, s"[${Option(e.getThread).map(_.getJavaName).orNull}] " +
-            s"${e.getString("command")} at ${frames.take(12).mkString(" < ")}")
+          val command = e.getString("command")
+          (frames, Start(command,
+            s"[${Option(e.getThread).map(_.getJavaName).orNull}] " +
+              s"$command at ${frames.take(12).mkString(" < ")}"))
         }
         .collect { case (frames, s) if !frames.exists(sparkCleanups) => s }
     } finally rec.close()
@@ -72,14 +80,15 @@ class NioLocalFileSystemSpec extends SparkSpec {
   test("sink writes leave the modes a write through Hadoop's default " +
        "local file system leaves") {
     val root = Scratch.dir("graft_niofs").toString
-    rows.write.partitionBy("part").parquet(s"$root/plain")
-    Sinks.writer(rows).partitionBy("part").parquet(s"$root/nio")
+    // Hadoop's stock file system, whatever a sink write installed
+    rows.write.option("fs.file.impl", classOf[LocalFileSystem].getName)
+      .option("fs.file.impl.disable.cache", "true")
+      .partitionBy("part").parquet(s"$root/plain")
     Sinks.writeBlocks(rows, s"$root/sink", Seq("part"))
     val (plainFiles, plainDirs) = modes(s"$root/plain")
     assert(plainFiles.size === 1 && plainDirs.size === 1,
       "a plain write leaves one file mode and one dir mode: " +
         s"$plainFiles, $plainDirs")
-    assert(modes(s"$root/nio") === (plainFiles, plainDirs))
     assert(modes(s"$root/sink") === (plainFiles, plainDirs))
     assert(Sinks.read(spark, s"$root/sink").count() === 60L)
   }
@@ -107,6 +116,10 @@ class NioLocalFileSystemSpec extends SparkSpec {
     assert(sticky.nonEmpty, "NIO cannot set the sticky bit: chmod must run")
     assert(mode(dir) === octal("1777"))
   }
+
+  private def crcFiles(dir: String): Vector[Path] =
+    Using.resource(Files.walk(Paths.get(dir)))(
+      _.iterator.asScala.filter(_.toString.endsWith(".crc")).toVector)
 
   test("Sinks.writeBlocks starts no process") {
     val root = Scratch.dir("graft_niofs").toString
@@ -141,10 +154,70 @@ class NioLocalFileSystemSpec extends SparkSpec {
       val starts = processStarts(write(out))
       assert(starts.isEmpty, s"${starts.size} process starts during " +
         s"$name:\n${starts.mkString("\n")}")
-      val crc = Using.resource(Files.walk(Paths.get(out)))(
-        _.iterator.asScala.filter(_.toString.endsWith(".crc")).toVector)
+      val crc = crcFiles(out)
       assert(crc.isEmpty, s"$name left checksum files: $crc")
     } finally graft.operators.Lifecycle.release(means)
     assert(Sinks.read(spark, s"$root/Sinks_writeBlocks").count() === 60L)
+  }
+
+  test("stream drains fork no chmod or readlink and keep their " +
+       "checkpoint checksums") {
+    val root = Scratch.dir("graft_niofs").toString
+    // three micro-batches, one per part, with event times
+    val events = (0 to 2).map(p => rows.filter(col("part") === p)
+      .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("id"))))
+    def stream(name: String) = EventStream.replay(events, s"$root/in_$name")
+    /** `drain(checkpointDir)`, which must fork no `chmod` or `readlink`
+      * and leave `.crc` sidecars under the checkpoint dir. */
+    def checkDrain(name: String)(drain: String => Unit): Unit = {
+      val cp = s"$root/cp_$name"
+      val forks = processStarts(drain(cp)).filter(s =>
+        Seq("chmod", "readlink").exists(s.command.startsWith))
+      assert(forks.isEmpty, s"${forks.size} chmod/readlink starts " +
+        s"during $name:\n${forks.mkString("\n")}")
+      assert(crcFiles(cp).nonEmpty, s"$name's checkpoint has no .crc")
+    }
+    /** `f` with a memory sink's checkpoint kept under `cp`. */
+    def checkpointedAt[T](cp: String)(f: => T): T = {
+      val key = "spark.sql.streaming.checkpointLocation"
+      spark.conf.set(key, cp)
+      try f finally spark.conf.unset(key)
+    }
+    val completed = stream("complete")
+    checkDrain("runToCompletion") { cp =>
+      val counts = checkpointedAt(cp)(EventStream.runToCompletion(spark,
+        completed.groupBy(col("part")).count()))
+      assert(counts.collect().map(r => r.getLong(0) -> r.getLong(1))
+        .toMap === Map(0L -> 20L, 1L -> 20L, 2L -> 20L))
+    }
+    val sunk = stream("sink")
+    checkDrain("runToSink") { cp =>
+      val out = EventStream.runToSink(spark,
+        EventStream.dedupByKey(sunk, "ts", "1 hour", "id"), s"$root/sunk", cp)
+      assert(out.count() === 60L)
+    }
+    val docStream = EventStream.replay(events.map(_.select(
+      col("id").as("doc_id"), col("payload").as("text"))), s"$root/in_docs")
+    checkDrain("streamingDigest") { cp =>
+      val digest = EventStream.streamingDigest(spark, docStream,
+        s"$root/digest", cp)
+      assert(digest.count() === 60L, "one shard per doc id")
+    }
+    val counted = stream("state")
+    checkDrain("drainWithCheckpoint") { cp =>
+      EventStream.drainWithCheckpoint(spark,
+        EventStream.runningCounts(counted, "part"), cp)
+      assert(StateAudit.store(spark, cp).count() === 3L)
+    }
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val tws = stream("tws")
+    spark.conf.set(providerKey, "org.apache.spark.sql.execution." +
+      "streaming.state.RocksDBStateStoreProvider")
+    try checkDrain("runningCountsTws") { cp =>
+      val counts = checkpointedAt(cp)(EventStream.runToCompletion(spark,
+        EventStream.runningCountsTws(tws, "part", "ts", "0 seconds",
+          3600L * 1000), mode = "update"))
+      assert(counts.count() === 3L)
+    } finally spark.conf.unset(providerKey)
   }
 }
